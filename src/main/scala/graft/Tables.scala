@@ -61,31 +61,7 @@ object Tables {
     * reference's psql/DBeaver surface). Views are lazy: registration costs
     * one schema read per table, and every SQL query still gets the full
     * Catalyst pushdown/pruning treatment of the DataFrame path.
-    *
-    * STALENESS CONTRACT: each view captures its table's file listing at
-    * registration. After a rename-based rewrite of a table's directory
-    * ([[graft.etl.Upsert]] merge/compaction swaps), a registered view can
-    * throw FileNotFoundException or serve the pre-swap listing — call
-    * [[refreshViews]] (or re-register) after any mutation of `dir`. This is
-    * the same contract Spark's own catalog tables carry (REFRESH TABLE
-    * after out-of-band file changes); a plain parquet directory gives the
-    * engine no manifest to detect the swap with. Tables that need
-    * stale-proof concurrent reads live in [[graft.etl.SnapshotLake]]
-    * instead: its reads resolve through the newest manifest, every resolved
-    * frame pins immutable generation dirs, and a commit can never tear or
-    * invalidate an in-flight scan.
     */
   def registerViews(spark: SparkSession, dir: String): Unit =
     all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
-
-  /** Re-resolve every registered view's file listing — run after an Upsert
-    * merge/compaction swap of a table under `dir` (see [[registerViews]]'s
-    * staleness contract). Re-registration is the refresh: each view's plan
-    * is rebuilt over the directory's current files; `refreshByPath` also
-    * drops any cached file-index entries for the old listing.
-    */
-  def refreshViews(spark: SparkSession, dir: String): Unit = {
-    spark.catalog.refreshByPath(dir)
-    registerViews(spark, dir)
-  }
 }

@@ -816,9 +816,8 @@ object DedupQueries {
     * three map-only corpus passes total, zero corpus exchanges. Per-fold
     * cost: O(batch + touched clusters) for the CC + those streaming
     * passes — the e12/t19/Scd2 MV discipline applied to graph clustering.
-    * (With a partition-keyed label store, [[graft.etl.Upsert
-    * .mergePartitionedParquet]] turns even that pass into a touched-
-    * partition merge.)
+    * (With a partition-keyed label store, [[graft.etl.SnapshotLake.merge]]
+    * turns even that pass into a touched-partition merge.)
     *
     * Contract: every edge endpoint is either already labeled or in
     * `newDocs` (the admission pipeline guarantees this — pairs are

@@ -5,13 +5,13 @@ import org.apache.hadoop.fs.Path
 
 /** Multi-writer guard for the lake path's rename-based mutations.
   *
-  * [[Upsert.mergeIntoParquet]], [[Upsert.mergePartitionedParquet]],
-  * [[Upsert.compactPartitionedParquet]] and the
-  * [[graft.dedup.IncrementalDedup]] index appends are all SINGLE-WRITER
-  * protocols: their crash contracts reason about one interrupted writer
-  * replaying, not two live writers interleaving park/install renames — two
-  * concurrent jobs targeting one table can each park the other's freshly
-  * installed partition and silently resurrect stale data. The reference
+  * [[SnapshotLake]]'s commits, [[Upsert.mergeIntoParquet]],
+  * [[Upsert.compactParquetDir]] and the [[graft.dedup.IncrementalDedup]]
+  * index appends are all SINGLE-WRITER protocols: their crash contracts
+  * reason about one interrupted writer replaying, not two live writers
+  * interleaving — two concurrent jobs targeting one table can each park
+  * the other's freshly installed directory (or reuse its generation
+  * number) and silently resurrect stale data. The reference
   * never faces this because Postgres serializes its writers with row locks
   * on a single connection (`/root/reference/src/storage/postgres_writer.py:105-112`
   * commit/rollback). A plain filesystem has no lock manager, so the engine
@@ -32,8 +32,9 @@ import org.apache.hadoop.fs.Path
   *    exists to surface).
   *  - takeover = the file exists but its heartbeat is older than `ttlMs`
   *    → the holder crashed without releasing; break the stale lease and
-  *    acquire. The next writer's normal crash-recovery pass
-  *    (`recoverParkedPartitions`) then heals whatever the dead writer left.
+  *    acquire. The next writer's normal crash-recovery pass (the lake's
+  *    orphan-gen GC, the parked-dir rollback) then heals whatever the dead
+  *    writer left.
   *  - release = delete the file in a `finally` — including on failure (the
   *    mutation's own crash contract handles replay; holding the lease after
   *    the JVM is gone would only force every successor through the TTL

@@ -19,25 +19,22 @@ object Pipeline {
   /** Audit metrics collected during the single execution pass. */
   final case class RunMetrics(rows: Long, nullClose: Long, missingRate: Long)
 
-  /** E1→E2→E3 over long-format bars: returns the metrics observed while the
-    * converted, deduped batch was merged into `targetPath`.
-    *
-    * Idempotent: re-running with the same bars converges (the merge sink's
-    * keyed DO-UPDATE, ≙ reference `postgres_writer.py:234-240` +
-    * `README.md:37`).
+  /** E1 standardize → E2 convert, with the audit metrics riding on the
+    * plan: the returned frame carries an observation of row, null-close and
+    * missing-rate counts, and the returned thunk reads them once a sink has
+    * executed the frame (no extra job).
     */
-  def run(
+  private def observedConversion(
       spark: SparkSession,
       bars: DataFrame,
       dim: DataFrame,
       rates: RateProvider,
-      targetPath: String,
-      targetCurrency: String = "USD",
-      sourceTz: Option[String] = None): RunMetrics = {
+      targetCurrency: String,
+      sourceTz: Option[String]): (DataFrame, () => RunMetrics) = {
     val standardized = Standardizer.standardize(bars, dim, sourceTz)
     val converted =
       CurrencyConverter.convertWithProvider(spark, standardized, rates, targetCurrency)
-    val obs = Observation("pipeline_audit")
+    val obs = Observation()
     val observed = converted.observe(
       obs,
       count(lit(1)).as("rows"),
@@ -45,80 +42,13 @@ object Pipeline {
       sum((col("close").isNotNull &&
         col(s"close_${targetCurrency.toLowerCase}").isNull).cast("long"))
         .as("missing_rate"))
-    // timestamp_utc is also a key, so as versionCol alone it orders nothing
-    // within a key group — the value columns tie-break so a batch carrying
-    // an original AND a corrected bar for one key picks a DETERMINISTIC
-    // winner (the reference relies on arrival order, postgres_writer.py:251-259).
-    val tieBreakers = observed.columns.toSeq
-      .filterNot(Seq("ticker", "timestamp_utc").contains)
-    val deduped = Upsert.lastWriteWins(
-      observed, keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
-      tieBreakers = tieBreakers)
-    // Date-partitioned sink: an incremental batch only rewrites the trade
-    // dates it carries; the rest of the (100 TB) table is untouched.
-    // p_date is functionally determined by the timestamp_utc key, as
-    // mergePartitionedParquet's contract requires.
-    migrateToPartitioned(spark, targetPath)
-    Upsert.mergePartitionedParquet(spark, targetPath,
-      deduped.withColumn("p_date", to_date(col("timestamp_utc"))),
-      keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
-      partitionCol = "p_date", tieBreakers = tieBreakers)
-    val m = obs.get
-    RunMetrics(
-      rows = m("rows").asInstanceOf[Long],
-      nullClose = m("null_close").asInstanceOf[Long],
-      missingRate = m("missing_rate").asInstanceOf[Long])
-  }
-
-  /** One-time layout migration: a target written by the pre-round-4
-    * unpartitioned sink has no `p_date` directory structure; the scoped
-    * merge would otherwise fail on it (it throws a clear error rather than
-    * silently ignoring legacy rows). Rewrites the whole table ONCE into the
-    * date-partitioned layout via staging + atomic swap, after which every
-    * incremental batch is partition-scoped. No-op on partitioned or absent
-    * targets.
-    */
-  private def migrateToPartitioned(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(path)
-    // Crash recovery FIRST: a previous migration can die between its two
-    // renames (cur→backup done, staged→cur not), leaving the table path
-    // missing. Without healing, the next run would treat the table as absent
-    // and write ONLY the incremental batch — silently stranding all history
-    // in __premigrate. If the staged copy exists, finish the swap; otherwise
-    // roll the backup straight back.
-    locally {
-      val backup = new org.apache.hadoop.fs.Path(path + "__premigrate")
-      val staged = new org.apache.hadoop.fs.Path(path + "__migrate")
-      if (fs.exists(backup)) {
-        if (!fs.exists(cur)) {
-          val src = if (fs.exists(staged)) staged else backup
-          if (!fs.rename(src, cur))
-            throw new java.io.IOException(s"migration recovery failed for $path")
-        }
-        // cur exists now (recovered or the crash was post-swap): the backup
-        // and any leftover staging are superseded
-        fs.delete(backup, true)
-      }
-      if (fs.exists(staged)) fs.delete(staged, true)
-    }
-    if (!fs.exists(cur)) return
-    val entries = fs.listStatus(cur).map(_.getPath.getName)
-    val legacy = !entries.exists(_.startsWith("p_date=")) &&
-      entries.exists(_.endsWith(".parquet"))
-    if (legacy) {
-      val staged = new org.apache.hadoop.fs.Path(path + "__migrate")
-      if (fs.exists(staged)) fs.delete(staged, true)
-      spark.read.parquet(path)
-        .withColumn("p_date", to_date(col("timestamp_utc")))
-        .write.partitionBy("p_date").parquet(staged.toString)
-      val backup = new org.apache.hadoop.fs.Path(path + "__premigrate")
-      if (fs.exists(backup)) fs.delete(backup, true)
-      if (!fs.rename(cur, backup) || !fs.rename(staged, cur))
-        throw new java.io.IOException(s"migration swap failed for $path")
-      fs.delete(backup, true)
-    }
+    (observed, () => {
+      val m = obs.get
+      RunMetrics(
+        rows = m("rows").asInstanceOf[Long],
+        nullClose = m("null_close").asInstanceOf[Long],
+        missingRate = m("missing_rate").asInstanceOf[Long])
+    })
   }
 
   /** The reference's COMPLETE db load, composed: DDL bootstrap → dim upsert →
@@ -148,25 +78,12 @@ object Pipeline {
       sourceTz: Option[String] = None,
       props: java.util.Properties = new java.util.Properties()): RunMetrics = {
     Ddl.createTables(url, dialect, props)
-    val standardized = Standardizer.standardize(bars, dim, sourceTz)
-    val converted =
-      CurrencyConverter.convertWithProvider(spark, standardized, rates, targetCurrency)
-    val obs = Observation()
-    val observed = converted.observe(
-      obs,
-      count(lit(1)).as("rows"),
-      sum(col("close").isNull.cast("long")).as("null_close"),
-      sum((col("close").isNotNull &&
-        col(s"close_${targetCurrency.toLowerCase}").isNull).cast("long"))
-        .as("missing_rate"))
+    val (observed, metrics) =
+      observedConversion(spark, bars, dim, rates, targetCurrency, sourceTz)
     // 1) dim first (FK target), 2) facts second, FK now satisfiable.
     upsertIndicesJdbc(observed, url, now, dialect, props)
     upsertQuotesJdbc(observed, url, now, dialect, targetCurrency, props)
-    val m = obs.get
-    RunMetrics(
-      rows = m("rows").asInstanceOf[Long],
-      nullClose = m("null_close").asInstanceOf[Long],
-      missingRate = m("missing_rate").asInstanceOf[Long])
+    metrics()
   }
 
   /** The reference's complete two-table load onto TWO SNAPSHOT LAKES —
@@ -210,17 +127,12 @@ object Pipeline {
       quotesLake: String,
       targetCurrency: String = "USD",
       sourceTz: Option[String] = None): RunMetrics = {
-    val standardized = Standardizer.standardize(bars, dim, sourceTz)
-    val converted =
-      CurrencyConverter.convertWithProvider(spark, standardized, rates, targetCurrency)
-    val obs = Observation()
-    val observed = converted.observe(
-      obs,
-      count(lit(1)).as("rows"),
-      sum(col("close").isNull.cast("long")).as("null_close"),
-      sum((col("close").isNotNull &&
-        col(s"close_${targetCurrency.toLowerCase}").isNull).cast("long"))
-        .as("missing_rate"))
+    val (observed, metrics) =
+      observedConversion(spark, bars, dim, rates, targetCurrency, sourceTz)
+    // timestamp_utc is also a key, so as versionCol alone it orders nothing
+    // within a key group — the value columns tie-break so a batch carrying
+    // an original AND a corrected bar for one key picks a DETERMINISTIC
+    // winner (the reference relies on arrival order, postgres_writer.py:251-259).
     val tieBreakers = observed.columns.toSeq
       .filterNot(Seq("ticker", "timestamp_utc").contains)
     val quotes = Upsert.lastWriteWins(
@@ -259,11 +171,7 @@ object Pipeline {
           statsCols = Seq("timestamp_utc"))
       }
     }
-    val m = obs.get
-    RunMetrics(
-      rows = m("rows").asInstanceOf[Long],
-      nullClose = m("null_close").asInstanceOf[Long],
-      missingRate = m("missing_rate").asInstanceOf[Long])
+    metrics()
   }
 
   /** Dim-upsert step of the composed load (≙ `upsert_indices`,
@@ -303,7 +211,7 @@ object Pipeline {
     val suffix = targetCurrency.toLowerCase
     // Value-column tiebreakers: timestamp_utc is a key, so without them the
     // within-batch winner among conflicting duplicates would be arbitrary
-    // (nondeterministic across reruns/retries — see run()'s note).
+    // (nondeterministic across reruns/retries — see runLake's note).
     val deduped = Upsert.lastWriteWins(
       converted, keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
       tieBreakers = converted.columns.toSeq

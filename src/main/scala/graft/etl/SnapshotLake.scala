@@ -7,16 +7,16 @@ import org.apache.spark.sql.functions._
 /** SNAPSHOT-ISOLATED partitioned parquet lake: a manifest-pointer commit
   * protocol over immutable per-partition GENERATION directories.
   *
-  * [[Upsert.mergePartitionedParquet]] installs touched partitions by
-  * sequential per-directory renames — the writer's crash recovery
-  * converges, but a reader listing the table between rename k and k+1 sees
-  * partition A new / partition B old (torn), and a compacted partition is
-  * transiently ABSENT for one rename window. A plain Hive directory cannot
-  * swap atomically; the standard fix (Iceberg/Delta's core idea) is a
-  * MANIFEST: data files are immutable, a tiny metadata file lists exactly
-  * which files form a snapshot, and publishing a commit is ONE atomic
-  * create — readers resolve through the newest manifest and can never
-  * observe a half-installed state.
+  * The engine's one durable format for partitioned keyed tables. A
+  * Hive-layout directory installs touched partitions by sequential
+  * per-directory renames, so a reader listing the table between rename k
+  * and k+1 sees partition A new / partition B old (torn), and a compacted
+  * partition is transiently ABSENT for one rename window. A plain Hive
+  * directory cannot swap atomically; the standard fix (Iceberg/Delta's
+  * core idea) is a MANIFEST: data files are immutable, a tiny metadata
+  * file lists exactly which files form a snapshot, and publishing a commit
+  * is ONE atomic create — readers resolve through the newest manifest and
+  * can never observe a half-installed state.
   *
   * Layout (under the table root):
   * {{{
@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   *    never match back to its staged dir. Dir names are NEVER parsed back — the
   *    partition column is stored IN the data files, so values round-trip
   *    with their exact types (the "string shard '0025' re-emerging as int
-  *    25" class of bug is structurally impossible, where the Hive-layout
-  *    merge needs a pinned schema + escape-safety fallback).
+  *    25" class of bug is structurally impossible, where a Hive layout
+  *    needs a pinned schema + escape-safety fallback).
   *  - A `gen=<n>` dir is written ONCE and never modified; a new commit
   *    writes new gen dirs for the partitions it touches and re-points the
   *    manifest. Install renames happen BEFORE the publish, so readers
@@ -59,11 +59,10 @@ import org.apache.spark.sql.functions._
   * Scale shape (100 TB): a commit's metadata cost is O(#partitions) manifest
   * lines + one file create — no recursive listing anywhere (the manifest IS
   * the listing, the same reason table formats beat raw Hive layouts at
-  * scale). Data cost is partition-scoped exactly like the Hive-layout
-  * merge: untouched partitions are not read, not rewritten, and their gen
-  * dirs stay byte-identical. Reader-side partition pruning happens at
-  * manifest resolution ([[read]]'s `partitionValues` overload) before Spark
-  * ever lists a file.
+  * scale). Data cost is partition-scoped: untouched partitions are not
+  * read, not rewritten, and their gen dirs stay byte-identical.
+  * Reader-side partition pruning happens at manifest resolution
+  * ([[read]]'s `partitionValues` overload) before Spark ever lists a file.
   *
   * Single-writer protocol via [[LakeLease]], as for every lake mutator.
   * Readers take no lock: they race only the atomic manifest create.
@@ -473,10 +472,12 @@ object SnapshotLake {
     Upsert.renameOrThrow(fs, tmp, p)
   }
 
-  /** Keyed LWW merge into the lake — [[Upsert.mergePartitionedParquet]]'s
-    * semantics (same CONTRACT: `partitionCol` functionally determined by
-    * `keys`; on key collision the update wins, then LWW on `versionCol` +
-    * `tieBreakers`) with a snapshot-isolated commit.
+  /** Keyed LWW merge into the lake, with a snapshot-isolated commit.
+    * CONTRACT: `partitionCol` is functionally determined by `keys` (e.g.
+    * key = (ticker, ts), partition = date(ts)), so every row of a key lives
+    * in exactly one partition; on key collision the update wins (DO UPDATE,
+    * `postgres_writer.py:234-240`), then LWW on `versionCol` +
+    * `tieBreakers` inside each side.
     *
     * `statsCols` (opt-in): range-CLUSTER each partition's files by these
     * columns at write (one extra range exchange) and record per-FILE
@@ -864,12 +865,8 @@ object SnapshotLake {
           "evaluation time (now()/current_timestamp()/current_date() are " +
           "substituted per execution and the rewrite runs in independent " +
           "passes) — bind the timestamp to a literal upstream")
-      val castStr = expr(s"cast(`$partitionCol` as string)")
-      val routeKey = concat(lit("h"), hex(castStr))
-      // bounded collect: one row per partition that CONTAINS an updated row
-      val affected = hits
-        .select(castStr.as("__v"), routeKey.as("__h")).distinct()
-        .collect().map(r => (r.getString(0), r.getString(1)))
+      // one row per partition that CONTAINS an updated row
+      val affected = affectedPartitions(spark, hits, partitionCol, "update")
       if (affected.isEmpty) 0L
       else {
         val affectedValues = affected.map(_._1).toSet
@@ -1017,8 +1014,6 @@ object SnapshotLake {
       gcOrphans(fs, path, m.gen)
       val partitionCol = m.partitionCol
       val full = readManifest(spark, path, m, None)
-      val castStr = expr(s"cast(`$partitionCol` as string)")
-      val routeKey = concat(lit("h"), hex(castStr))
       val hits = hitOf(full)
       // the predicate is evaluated in TWO independent passes (affected-
       // partition discovery here, survivor rewrite below) — a
@@ -1042,10 +1037,8 @@ object SnapshotLake {
           "(now()/current_timestamp()/current_date() are substituted per " +
           "execution and the predicate runs in independent passes) — bind " +
           "the cutoff to a literal timestamp upstream")
-      // bounded collect: one row per partition that LOSES a row
-      val affected = hits
-        .select(castStr.as("__v"), routeKey.as("__h")).distinct()
-        .collect().map(r => (r.getString(0), r.getString(1)))
+      // one row per partition that LOSES a row
+      val affected = affectedPartitions(spark, hits, partitionCol, "delete")
       if (affected.isEmpty) 0L
       else {
         val affectedValues = affected.map(_._1).toSet
@@ -1107,15 +1100,6 @@ object SnapshotLake {
     gcOrphans(fs, path, curGen)
     val staging = new Path(path, "_staging")
     if (fs.exists(staging)) fs.delete(staging, true)
-    // (value-string, hex) computed by SPARK expressions — the same cast +
-    // hex that routes the rows below, so driver and executors can never
-    // disagree on a value's directory. Bounded collect: one row per
-    // affected partition.
-    val castStr = expr(s"cast(`$partitionCol` as string)")
-    // `h` + hex: never empty even for the empty-string value (see layout
-    // scaladoc) — a bare hex('') = '' routing key would partitionBy into
-    // __HIVE_DEFAULT_PARTITION__ and die mid-install unmatchable
-    val routeKey = concat(lit("h"), hex(castStr))
     // Affected-partition detection. When partitionCol is one of the merge
     // keys (the common contract), every key group's LWW winner carries its
     // group's partition value, so the raw batch and its deduped winners
@@ -1127,25 +1111,7 @@ object SnapshotLake {
     val affectedSrc =
       if (keys.contains(partitionCol)) updates
       else Upsert.lastWriteWins(updates, keys, versionCol, tieBreakers)
-    // Bounded collect, with the bound ENFORCED: one row per affected
-    // partition value. The lake contract partitions by low-cardinality
-    // columns, so a batch touching more than `maxAffected` values is a
-    // mis-partitioned table (or a wrong partitionCol) — fail loudly with
-    // the remediation instead of marching on toward a driver OOM at scale.
-    // The check runs AFTER the collect on purpose: a limit() here would
-    // add a single-partition exchange to EVERY commit's affected-value job
-    // (measured on the 10× lake verbs), while the collect of value strings
-    // stays small until the table is already far outside the contract.
-    val maxAffected = spark.conf.getOption("graft.lake.maxAffectedPartitions")
-      .map(_.toInt).getOrElse(100000)
-    val affected = affectedSrc
-      .select(castStr.as("__v"), routeKey.as("__h")).distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    require(affected.length <= maxAffected,
-      s"merge batch touches more than $maxAffected distinct $partitionCol " +
-        "values — the per-partition merge protocol is built for " +
-        "low-cardinality partitioning; repartition the table or raise " +
-        "graft.lake.maxAffectedPartitions")
+    val affected = affectedPartitions(spark, affectedSrc, partitionCol, "merge batch")
     if (affected.isEmpty) return None
     require(affected.forall(_._1 != null),
       s"null $partitionCol in update batch: a null partition value has no " +
@@ -1207,6 +1173,45 @@ object SnapshotLake {
     Some((fs, Manifest(newGen, partitionCol, kept ++ newEntries)))
   }
 
+  /** The distinct (value string, hex dir key) pairs of `partitionCol` in
+    * `rows`: one per partition a merge, update or delete commit rewrites.
+    * Both halves come from SPARK expressions — the same cast + hex that
+    * [[stageInstall]] routes rows by, so driver and executors can never
+    * disagree on a value's directory. `h` + hex is never empty, even for
+    * the empty-string value (see the layout scaladoc): a bare hex('') = ''
+    * routing key would partitionBy into __HIVE_DEFAULT_PARTITION__ and die
+    * mid-install unmatchable.
+    *
+    * Bounded collect, with the bound ENFORCED. The lake contract
+    * partitions by low-cardinality columns, so a commit touching more than
+    * `graft.lake.maxAffectedPartitions` values is a mis-partitioned table
+    * (or a wrong partitionCol) — fail loudly with the remediation instead
+    * of marching on toward a driver OOM at scale. The check runs AFTER the
+    * collect on purpose: a limit() here would add a single-partition
+    * exchange to EVERY commit's affected-value job (measured on the 10×
+    * lake verbs), while the collect of value strings stays small until the
+    * table is already far outside the contract.
+    */
+  private def affectedPartitions(
+      spark: SparkSession,
+      rows: DataFrame,
+      partitionCol: String,
+      verb: String): Array[(String, String)] = {
+    val castStr = expr(s"cast(`$partitionCol` as string)")
+    val routeKey = concat(lit("h"), hex(castStr))
+    val maxAffected = spark.conf.getOption("graft.lake.maxAffectedPartitions")
+      .map(_.toInt).getOrElse(100000)
+    val affected = rows
+      .select(castStr.as("__v"), routeKey.as("__h")).distinct()
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    require(affected.length <= maxAffected,
+      s"$verb touches more than $maxAffected distinct $partitionCol " +
+        "values — the per-partition commit protocol is built for " +
+        "low-cardinality partitioning; repartition the table or raise " +
+        "graft.lake.maxAffectedPartitions")
+    affected
+  }
+
   /** ONE write job for a commit's affected partitions: route `rows` by the
     * hex dir key (a derived column, so `partitionCol` itself STAYS in the
     * files), stage under `_staging`, install each staged dir as its
@@ -1236,28 +1241,16 @@ object SnapshotLake {
     if (fs.exists(staging)) fs.delete(staging, true)
     val castStr = expr(s"cast(`$partitionCol` as string)")
     val routed = rows.withColumn("__pdir", concat(lit("h"), hex(castStr)))
-    // Optional write clustering by the partition dir (guide §6): without
-    // it, `partitionBy` makes EVERY upstream task open a file in every dir
-    // value it holds — up to shuffle-partitions × values files per commit.
-    // `graft.lake.coalesceCommit=true` adds an AQE REBALANCE exchange on
-    // the dir key before the write, so a commit emits ≈ one right-sized
-    // file per affected value (AQE splits an oversized value across tasks
-    // and merges tiny ones) — the layout a 100 TB table wants, where a
-    // fan-out commit writing tasks × values tiny files charges every later
-    // read-back with the listing/open cost and compaction with the rewrite.
-    // The DEFAULT stays the fan-out write: measured at the sf0.1 gate
-    // (round 15, OPTIMIZATION_r15.md), the added exchange cost +0.1–0.4 s
-    // per lake verb while the read-back saved nothing at these file counts
-    // — same verdict as round 14's folded-window probe, so the clustering
-    // is a parameterized production setting, not a local default. The
-    // stats path always range-clusters by (dir, statsCols): its sidecar
-    // pruning NEEDS each file to cover a narrow stats slice.
-    val coalesceCommit = spark.conf.getOption("graft.lake.coalesceCommit")
-      .exists(_.toBoolean)
+    // Without statsCols the write fans out: `partitionBy` makes every
+    // upstream task open a file in every dir value it holds. A REBALANCE on
+    // the dir key (one right-sized file per value) cost +0.1–0.4 s per lake
+    // verb at sf0.1 with no read-back gain at these file counts
+    // (OPTIMIZATION_r15.md §6). The stats path range-clusters by (dir,
+    // statsCols): its sidecar pruning NEEDS each file to cover a narrow
+    // stats slice.
     val clustered =
       if (statsCols.nonEmpty)
         routed.repartitionByRange((col("__pdir") +: statsCols.map(col)): _*)
-      else if (coalesceCommit) routed.hint("rebalance", col("__pdir"))
       else routed
     clustered.write.partitionBy("__pdir").parquet(staging.toString)
     val staged = fs.listStatus(staging)
@@ -1597,9 +1590,8 @@ object SnapshotLake {
     * each fragmented partition's current gen is rewritten (coalesced to
     * `ceil(bytes/targetBytes)` files, floored at `minFilesToCompact`) into
     * a NEW gen, and one publish re-points them all. Readers never see an
-    * absent or half-compacted partition — the window
-    * [[Upsert.compactPartitionedParquet]] documents simply does not exist
-    * here; a reader pinned to the pre-compact snapshot keeps reading the
+    * absent or half-compacted partition (a Hive-layout directory swap
+    * cannot avoid that window); a reader pinned to the pre-compact snapshot keeps reading the
     * old files until [[vacuum]]. Row content is preserved as a multiset.
     * Compacted gens RE-CAPTURE their stats sidecar for whatever columns
     * the replaced gens recorded (coalesced files carry wider — but still
@@ -1631,9 +1623,10 @@ object SnapshotLake {
           if (picked.isEmpty) Nil
           else {
             val newGen = m.gen + 1
-            // independent per-partition rewrites → concurrent jobs (the
-            // compactPartitionedParquet pattern); failures propagate before
-            // any publish, so a partial failure publishes nothing
+            // independent per-partition rewrites → concurrent jobs (a
+            // serial loop over hundreds of fragmented partitions would pay
+            // one scheduler round-trip each); failures propagate before any
+            // publish, so a partial failure publishes nothing
             val pool = java.util.concurrent.Executors.newFixedThreadPool(
               math.min(8, picked.length))
             try {

@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   *     version column — SURVEY.md §7 "What's hard" #2);
   *  2. an idempotent keyed sink (JDBC ON CONFLICT writer, or a
   *     storage-level merge for lake targets).
+  *
+  * Partitioned keyed tables have one durable format, [[SnapshotLake]]
+  * (manifest commits); the parquet writers here are whole-directory ones
+  * for the unpartitioned dedup corpus and admission-index dirs.
   */
 object Upsert {
 
@@ -46,7 +50,9 @@ object Upsert {
     *
     * At lake scale this role is played by a table format's MERGE (Delta /
     * Iceberg); the two-phase directory swap is the local-FS stand-in that
-    * keeps the same contract: readers never observe a partial write.
+    * keeps the same contract: readers never observe a partial write. It
+    * re-reads and re-writes the whole directory per batch, so it serves
+    * unpartitioned tables only; partitioned ones use [[SnapshotLake.merge]].
     */
   def mergeIntoParquet(
       spark: SparkSession,
@@ -104,304 +110,24 @@ object Upsert {
     fs.delete(old, true)
   }
 
-  /** Partition-scoped parquet MERGE — the 100 TB shape of [[mergeIntoParquet]].
-    *
-    * The whole-table variant re-reads and re-writes the ENTIRE table per
-    * batch; at lake scale with a 6-hourly incremental tick that is a
-    * full-corpus I/O pass for a few thousand changed rows. This variant
-    * scopes the merge to the partitions the update batch actually touches
-    * (≙ the reference's row-scoped `ON CONFLICT`,
-    * `postgres_writer.py:234-240`, generalized to files):
-    *
-    *  1. collect the batch's distinct `partitionCol` values (bounded by
-    *     construction — a date or shard column, one value per partition);
-    *  2. read current state ONLY for those partitions — directory-scoped
-    *     reads when the values round-trip as path names (per-batch metadata
-    *     cost = one non-recursive root listing + the affected dirs, not a
-    *     recursive walk of the table), falling back to a full read with a
-    *     partition-pruning filter for values needing Hive path-escaping;
-    *  3. LWW-merge and write the result to a staging dir, then swap each
-    *     affected partition directory into place with renames. Untouched
-    *     partitions' files are not read, not rewritten, and stay
-    *     byte-identical (asserted in EtlSpec).
-    *
-    * CONTRACT: `partitionCol` must be functionally determined by `keys`
-    * (e.g. key = (ticker, ts), partition = date(ts)) so every row of a key
-    * lives in exactly one partition — otherwise a conflicting old row in a
-    * different partition would survive the scoped merge.
-    *
-    * Atomicity is per partition (each directory swap is a rename), not per
-    * batch — a reader listing the table BETWEEN two installs of one batch
-    * can see partition A new / partition B old. Re-running the batch
-    * converges regardless (idempotent LWW); writers are fully crash-safe.
-    * When concurrent readers need a consistent cut, use [[SnapshotLake]]
-    * (same merge semantics, snapshot-isolated manifest commit); this
-    * Hive-layout merge remains for tables that must stay readable by plain
-    * `spark.read.parquet(path)` with no manifest resolution.
-    */
-  def mergePartitionedParquet(
-      spark: SparkSession,
-      path: String,
-      updates: DataFrame,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: String,
-      tieBreakers: Seq[String] = Nil): Unit = {
-    require(updates.columns.contains(partitionCol),
-      s"updates must carry partition column '$partitionCol'")
-    val deduped = lastWriteWins(updates, keys, versionCol, tieBreakers)
-    // Single-writer protocol; see [[LakeLease]] and mergeIntoParquet.
-    LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      mergePartitionedLocked(spark, path, deduped, keys, versionCol,
-        partitionCol, tieBreakers)
-    }
-  }
-
-  private def mergePartitionedLocked(
-      spark: SparkSession,
-      path: String,
-      deduped: DataFrame,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: String,
-      tieBreakers: Seq[String]): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(path)
-    val staging = new Path(path + "__staging")
-    val oldRoot = new Path(path + "__old")
-    // Crash recovery BEFORE anything else: a parked dir left under oldRoot
-    // means a previous swap was interrupted. For each parked partition dir:
-    // destination missing → the install never happened, roll the parked
-    // copy back (without this, a replay would read an EMPTY partition and
-    // silently drop every key the batch didn't carry); destination present
-    // → the install completed, drop the parked copy.
-    recoverParkedPartitions(fs, cur, oldRoot)
-    if (fs.exists(staging)) fs.delete(staging, true)
-    if (!fs.exists(cur)) {
-      deduped.write.partitionBy(partitionCol).parquet(path)
-      return
-    }
-    // Bounded driver collect: one value per affected partition.
-    val affected = deduped.select(col(partitionCol)).distinct().collect().map(_.get(0))
-    if (affected.isEmpty) return
-    require(!affected.contains(null),
-      s"null $partitionCol in update batch: the scoped merge cannot address " +
-        "the null partition (isin() never matches null) — filter or default it upstream")
-    // ONE non-recursive listing of the table root: detects a legacy
-    // unpartitioned layout (data files, no partition dirs) and gives the
-    // existing partition-dir names so the read below opens ONLY affected
-    // directories — the per-batch metadata cost is O(#partitions at root),
-    // never a recursive walk of every file.
-    val rootEntries = fs.listStatus(cur).map(_.getPath.getName)
-    val partDirs = rootEntries.filter(_.startsWith(partitionCol + "=")).toSet
-    if (partDirs.isEmpty && rootEntries.exists(_.endsWith(".parquet")))
-      throw new IllegalStateException(
-        s"$path exists but is not partitioned by $partitionCol — written by the " +
-          "unpartitioned sink? Migrate it once (read, derive the partition " +
-          "column, write partitionBy) before using the scoped merge.")
-    // Values that round-trip verbatim as directory names can be read
-    // dir-scoped; anything needing Hive path-escaping falls back to a
-    // full-table read with a pruning filter (correct, just more listing).
-    val dataSchema = org.apache.spark.sql.types.StructType(deduped.schema.filter(_.name != "__gen"))
-    val safeName = "[A-Za-z0-9_.-]+".r // chars Hive path-escaping leaves verbatim
-    val allSafe = affected.forall(v => safeName.matches(v.toString))
-    val hitDirs =
-      if (allSafe) affected.map(v => s"$partitionCol=$v").filter(partDirs.contains)
-      else Array.empty[String]
-    // Schema pinned to the updates' schema: partition values parse from dir
-    // names WITHOUT type inference (a string shard "0025" must stay "0025",
-    // not become int 25 and re-emerge as a second "25" partition).
-    val existing =
-      if (allSafe && hitDirs.isEmpty) None // every affected partition is new
-      else if (allSafe)
-        Some(spark.read.schema(dataSchema).option("basePath", path)
-          .parquet(hitDirs.map(d => s"$path/$d").toIndexedSeq: _*))
-      else
-        Some(spark.read.schema(dataSchema).parquet(path)
-          .filter(col(partitionCol).isin(affected.toSeq: _*)))
-    // On key collision the update (__gen=1) wins regardless of version —
-    // DO UPDATE semantics — then LWW inside each generation via versionCol.
-    val merged = existing match {
-      case Some(ex) =>
-        lastWriteWins(
-          ex.withColumn("__gen", lit(0L))
-            .unionByName(deduped.withColumn("__gen", lit(1L))),
-          keys, "__gen", versionCol +: tieBreakers).drop("__gen")
-      case None => deduped
-    }
-    merged.write.partitionBy(partitionCol).parquet(staging.toString)
-    // Swap each affected partition dir into place; parked old dirs live
-    // OUTSIDE the table root so a concurrent/crashed read never discovers a
-    // bogus partition value, and the recovery pass above heals any crash
-    // between the park and install renames.
-    installStagedPartitions(fs, cur, staging, oldRoot,
-      _.startsWith(partitionCol + "="))
-  }
-
-  /** Crash recovery for the park/install partition swap (shared by
-    * [[mergePartitionedParquet]] and [[compactPartitionedParquet]]): a
-    * parked dir left under `oldRoot` means a previous swap was interrupted.
-    * Destination missing → the install never happened, roll the parked copy
-    * back (without this a replay would read an EMPTY partition and silently
-    * drop every key the batch didn't carry); destination present → the
-    * install completed, drop the parked copy.
-    */
-  private def recoverParkedPartitions(
-      fs: org.apache.hadoop.fs.FileSystem, cur: Path, oldRoot: Path): Unit =
-    if (fs.exists(oldRoot)) {
-      fs.listStatus(oldRoot).foreach { s =>
-        val dest = new Path(cur, s.getPath.getName)
-        if (!fs.exists(dest)) renameOrThrow(fs, s.getPath, dest)
-      }
-      fs.delete(oldRoot, true)
-    }
-
-  /** Park-then-install every staged partition dir matching `pick`, then
-    * clean up both roots. Atomicity is per partition-dir rename; a crash in
-    * the window is healed by [[recoverParkedPartitions]] on the next writer.
-    */
-  private def installStagedPartitions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      cur: Path,
-      staging: Path,
-      oldRoot: Path,
-      pick: String => Boolean): Unit = {
-    fs.mkdirs(oldRoot)
-    fs.listStatus(staging).iterator
-      .filter(s => s.isDirectory && pick(s.getPath.getName))
-      .foreach { s =>
-        val dest = new Path(cur, s.getPath.getName)
-        if (fs.exists(dest))
-          renameOrThrow(fs, dest, new Path(oldRoot, s.getPath.getName))
-        renameOrThrow(fs, s.getPath, dest)
-      }
-    fs.delete(oldRoot, true)
-    fs.delete(staging, true)
-  }
-
-  /** Small-file compaction for a partitioned parquet sink — the operational
-    * complement of [[mergePartitionedParquet]]: every incremental batch
-    * writes at least one file per affected partition, so a 6-hourly tick
-    * leaves hot partitions with hundreds of tiny files and every reader
-    * paying their open cost. At 100 TB the fix must be partition-scoped and
-    * metadata-cheap, exactly like the merge:
-    *
-    *  1. ONE non-recursive root listing finds the partition dirs;
-    *  2. a partition is compacted only when it holds more files than its
-    *     bytes need (`ceil(bytes / targetBytes)`, floored at
-    *     `minFilesToCompact` so near-right-sized partitions aren't churned);
-    *  3. each picked partition's FILES are read directly (the dir name is
-    *     never parsed into a value, so Hive-escaped or type-ambiguous
-    *     partition values round-trip verbatim), coalesced to the target
-    *     file count, written to staging, and swapped in with the same
-    *     park/install renames + crash recovery the merge uses.
-    *
-    * Row content is byte-for-byte preserved (no dedup, no reorder
-    * semantics — compaction is pure file-layout maintenance); untouched
-    * partitions are never read and stay byte-identical. Single-writer
-    * assumption as for the merge (shared staging/park roots).
-    *
-    * READER CAVEAT: the park/install swap makes each compacted partition
-    * transiently ABSENT (one rename window) — a concurrent reader listing
-    * the root in that window silently misses the partition's rows. The
-    * merge has the same window, but there the partition's content is
-    * changing anyway; compaction introduces it for data that is logically
-    * unchanged. Run compaction in a maintenance window, or use
-    * [[SnapshotLake]] — the engine's manifest-pointer lake, where commits
-    * publish with ONE atomic manifest create and the gap structurally
-    * cannot exist (a plain Hive parquet directory cannot swap atomically;
-    * a manifest can).
-    *
-    * Returns (partitionDir, filesBefore, filesAfter) per compacted
-    * partition, newest state; empty when nothing crossed the threshold.
-    */
-  def compactPartitionedParquet(
-      spark: SparkSession,
-      path: String,
-      partitionCol: String,
-      targetBytes: Long = 128L * 1024 * 1024,
-      minFilesToCompact: Int = 4): Seq[(String, Int, Int)] =
-    // Single-writer protocol; see [[LakeLease]] and mergeIntoParquet.
-    LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      compactPartitionedLocked(spark, path, partitionCol, targetBytes,
-        minFilesToCompact)
-    }
-
-  private def compactPartitionedLocked(
-      spark: SparkSession,
-      path: String,
-      partitionCol: String,
-      targetBytes: Long,
-      minFilesToCompact: Int): Seq[(String, Int, Int)] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(path)
-    if (!fs.exists(cur)) return Nil
-    val staging = new Path(path + "__staging")
-    val oldRoot = new Path(path + "__old")
-    recoverParkedPartitions(fs, cur, oldRoot)
-    if (fs.exists(staging)) fs.delete(staging, true)
-    val partDirs = fs.listStatus(cur)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-    val picked = partDirs.flatMap { d =>
-      val files = fs.listStatus(d.getPath)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-      val bytes = files.map(_.getLen).sum
-      val want = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      if (files.length > math.max(want, minFilesToCompact))
-        Some((d.getPath.getName, files.length, want))
-      else None
-    }
-    // The per-partition rewrites are independent — submit them as
-    // CONCURRENT Spark jobs (a serial loop over hundreds of fragmented
-    // partitions would cost one scheduler round-trip each while the
-    // cluster idles). Bounded pool; failures propagate before any swap.
-    if (picked.nonEmpty) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, picked.length))
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val jobs = picked.toSeq.map { case (dirName, _, want) =>
-          scala.concurrent.Future {
-            spark.read.parquet(s"$path/$dirName")
-              .coalesce(want)
-              .write.parquet(s"$staging/$dirName")
-          }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(jobs),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-      val pickedNames = picked.map(_._1).toSet
-      installStagedPartitions(fs, cur, staging, oldRoot, pickedNames.contains)
-    }
-    picked.toSeq.map { case (dir, before, _) =>
-      val after = fs.listStatus(new Path(cur, dir))
-        .count(f => f.isFile && !f.getPath.getName.startsWith("_"))
-      (dir, before, after)
-    }
-  }
-
   /** Small-file compaction for a FLAT (non-partitioned) parquet dir — the
     * operational complement of the admission indexes' blind appends
     * ([[graft.dedup.IncrementalDedup]]): a standing ingest loop appends ≥ 1
     * file per batch to the hash index and up to one file per admitted doc
     * group to the bucket index, so a long-lived gate accumulates thousands
     * of small files and every novelty probe pays their open cost. Same
-    * picking rule as [[compactPartitionedParquet]]
-    * (`ceil(bytes/targetBytes)` floored at `minFilesToCompact`), same
-    * single-writer lease, same park/install swap — here the unit is the
-    * whole dir, parked at `<path>__old` for the one rename window. Crash
-    * recovery runs at entry: a parked dir with no live dir means the
+    * picking rule as [[SnapshotLake.compact]] (`ceil(bytes/targetBytes)`
+    * floored at `minFilesToCompact`) and the same single-writer lease; the
+    * whole dir is swapped, parked at `<path>__old` for one rename window.
+    * Crash recovery runs at entry: a parked dir with no live dir means the
     * install never happened — roll it back; with a live dir, the install
     * completed — drop it. Row content is preserved as a multiset
     * (`coalesce` merges whole partitions, so rows co-located in one input
     * file stay co-located); compaction is pure file-layout maintenance.
     *
-    * READER CAVEAT: as with the partitioned compactor, the swap makes the
-    * dir transiently absent for one rename window. The admission gates
-    * never race this (they take the same lease), but run external readers
-    * in a maintenance window.
+    * READER CAVEAT: the swap makes the dir transiently absent for one
+    * rename window. The admission gates never race this (they take the
+    * same lease), but run external readers in a maintenance window.
     *
     * Returns Some((filesBefore, filesAfter)) when compacted, None when the
     * dir is absent or already right-sized.

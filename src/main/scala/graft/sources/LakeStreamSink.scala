@@ -24,9 +24,9 @@ import graft.etl.SnapshotLake
   * contract — the SAME semantics, snapshot isolation, lease, widen-only
   * evolution check, and stats sidecars as every batch and SQL write face,
   * so a streaming producer and an `INSERT INTO` land indistinguishable
-  * commits. This retires `foreachBatch` + hand-rolled idempotence
-  * ([[graft.streaming.StreamingIngest.upsertAvailableNow]]) for the
-  * common shape: exactly-once comes from the in-lake per-sink batch
+  * commits. Unlike `foreachBatch` into a keyed merge
+  * ([[graft.streaming.StreamingIngest.snapshotMergeAvailableNow]],
+  * at-least-once and converging), exactly-once comes from the in-lake per-sink batch
   * marker (checked inside the commit's lease; replays skip without
   * reading the batch) plus keyed LWW convergence for the one
   * crash-between window — see mergeStreamBatch's scaladoc for the full

@@ -19,10 +19,9 @@ import graft.etl.{LakeLease, SnapshotLake}
   * faces use (≙ one cron tick: drain everything available, then stop):
   *
   *  - consumer position is DURABLE state beside the checkpoint — one marker
-  *    file per consumed generation under `consumerDir` (the
-  *    [[StreamingIngest.applyMergeBatchOnce]] marker-ledger pattern), so a
-  *    restarted consumer resumes after the last marker and a replayed tick
-  *    re-emits nothing;
+  *    file per consumed generation under `consumerDir` (a file-system
+  *    marker ledger), so a restarted consumer resumes after the last
+  *    marker and a replayed tick re-emits nothing;
   *  - a fresh consumer BOOTSTRAPS from the oldest retained snapshot,
   *    delivered as one all-`insert` batch (the standard CDC
   *    initial-snapshot semantics — Delta CDF / Debezium do the same), then
@@ -38,14 +37,13 @@ import graft.etl.{LakeLease, SnapshotLake}
   *    silently skipping commits — size retention to the slowest consumer's
   *    lag, exactly the [[graft.etl.SnapshotLake.vacuum]] contract.
   *
-  * Exactly-once analysis (the applyMergeBatchOnce contract, verbatim): the
-  * marker is created AFTER `f` returns, so a crash inside `f` replays that
-  * one batch on the next tick — at-least-once delivery with replay
-  * suppression once markered. `f` over an idempotent sink (keyed LWW
-  * merge) therefore converges; a NON-idempotent fold must commit its
-  * effect atomically with its own ledger, which is exactly what
-  * [[StreamingIngest.foldStateBatchOnce]] provides — compose them with the
-  * generation as the batch id:
+  * Exactly-once analysis: the marker is created AFTER `f` returns, so a
+  * crash inside `f` replays that one batch on the next tick —
+  * at-least-once delivery with replay suppression once markered. `f` over
+  * an idempotent sink (keyed LWW merge) therefore converges; a
+  * NON-idempotent fold must commit its effect atomically with its own
+  * ledger, which is exactly what [[StreamingIngest.foldStateBatchOnce]]
+  * provides — compose them with the generation as the batch id:
   * {{{
   *   LakeChangeFeed.followAvailableNow(spark, lake, stateDir, (delta, gen) =>
   *     StreamingIngest.foldStateBatchOnce(delta, gen, mvPath, "cdc-mv", ...))
@@ -86,8 +84,7 @@ object LakeChangeFeed {
     val p = new Path(consumerDir, f"gen-$gen%020d")
     fs.mkdirs(p.getParent)
     // a duplicate marker means a concurrent duplicate tick of the SAME gen
-    // already delivered the identical batch — benign, like the
-    // applyMergeBatchOnce race note
+    // already delivered the identical batch — benign
     try fs.create(p, false).close()
     catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
   }

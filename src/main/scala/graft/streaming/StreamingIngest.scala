@@ -87,8 +87,8 @@ object StreamingIngest {
     * so suppression within it is the whole contract. Re-deliveries arriving
     * AFTER the horizon re-emit by design (StreamingSpec pins all three
     * behaviors); absorbing those is the keyed sink's job
-    * ([[upsertAvailableNow]]) — and the admission index's, for content
-    * identity.
+    * ([[snapshotMergeAvailableNow]]) — and the admission index's, for
+    * content identity.
     */
   def dedupedStateBounded(
       events: DataFrame,
@@ -273,46 +273,17 @@ object StreamingIngest {
   }
 
   /** Drain everything currently in the landing dir through the keyed
-    * parquet-merge upsert sink, then stop (AvailableNow ≙ one cron tick).
-    * Running the same tick twice converges — the sink is idempotent.
-    *
-    * With `partitionCol` set the sink is the partition-scoped merge: a
-    * micro-batch only rewrites the partitions it touches (the scale path —
-    * the column must be functionally determined by `keys`, see
-    * [[Upsert.mergePartitionedParquet]]).
-    */
-  def upsertAvailableNow(
-      deduped: DataFrame,
-      targetPath: String,
-      checkpoint: String,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: Option[String] = None): StreamingQuery =
-    deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        partitionCol match {
-          case Some(p) =>
-            Upsert.mergePartitionedParquet(
-              batch.sparkSession, targetPath, batch, keys, versionCol, p)
-          case None =>
-            Upsert.mergeIntoParquet(batch.sparkSession, targetPath, batch, keys, versionCol)
-        }
-      }
-      .start()
-
-  /** Streaming upsert into the SNAPSHOT-ISOLATED lake
-    * ([[graft.etl.SnapshotLake]]) — [[upsertAvailableNow]] with manifest
-    * commits instead of directory swaps: every micro-batch LWW-merges into
-    * new partition generations and publishes ONE atomic manifest, so
+    * upsert into the SNAPSHOT-ISOLATED lake ([[graft.etl.SnapshotLake]]),
+    * then stop (AvailableNow ≙ one cron tick). Every micro-batch LWW-merges
+    * into new partition generations and publishes ONE atomic manifest, so
     * concurrent readers of the maintained table always resolve a
-    * consistent snapshot (never the torn window the Hive-layout sink
-    * documents), an in-flight scan is never invalidated by the next batch,
-    * and a crash mid-batch leaves the previous snapshot readable. Replay
-    * safety is convergence, as for the Hive sink: the merge is idempotent
-    * LWW, so a re-delivered batch publishes a gen with identical content
-    * (no ledger needed — unlike the sum-fold MV lanes).
+    * consistent snapshot, an in-flight scan is never invalidated by the
+    * next batch, and a crash mid-batch leaves the previous snapshot
+    * readable. Replay safety is convergence: the merge is idempotent LWW,
+    * so a re-delivered batch publishes a gen with identical content (no
+    * ledger needed — unlike the sum-fold MV lanes). For exactly-once
+    * (a replayed batch id skipped even if its bytes changed) write through
+    * `writeStream.format("graft-lake")` ([[graft.sources.LakeStreamSink]]).
     */
   def snapshotMergeAvailableNow(
       deduped: DataFrame,
@@ -419,83 +390,12 @@ object StreamingIngest {
       }
       .start()
 
-  /** One micro-batch through the ledgered parquet-merge sink — the lake
-    * face of [[applyJdbcBatchOnce]]: marker files under
-    * `<targetPath>__batches/<sinkId>/` record applied batch ids (the
-    * file-system stand-in for the ledger table; on a real deployment this
-    * directory lives on the same shared storage as the table). Same crash
-    * analysis as the JDBC path: unmarkered replay re-merges and converges;
-    * markered replay is skipped even if the source bytes changed.
-    */
-  def applyMergeBatchOnce(
-      batch: DataFrame,
-      batchId: Long,
-      targetPath: String,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: Option[String] = None,
-      sinkId: String = "default"): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(targetPath)
-      .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(
-      s"${targetPath}__batches/$sinkId/$batchId")
-    if (fs.exists(marker)) false
-    else {
-      partitionCol match {
-        case Some(p) =>
-          Upsert.mergePartitionedParquet(
-            batch.sparkSession, targetPath, batch, keys, versionCol, p)
-        case None =>
-          Upsert.mergeIntoParquet(
-            batch.sparkSession, targetPath, batch, keys, versionCol)
-      }
-      fs.mkdirs(marker.getParent)
-      // A concurrent duplicate attempt of the SAME batch may have markered
-      // between our exists-check and here — both applied identical data
-      // through the idempotent merge, so the race is benign (mirrors
-      // BatchLedger.record's duplicate-key guard).
-      try fs.create(marker, false).close()
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
-      true
-    }
-  }
-
-  /** [[upsertAvailableNow]] with the marker-file replay guard — exactly-once
-    * observable semantics for the lake sink.
-    */
-  def upsertExactlyOnceAvailableNow(
-      deduped: DataFrame,
-      targetPath: String,
-      checkpoint: String,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: Option[String] = None,
-      sinkId: Option[String] = None): StreamingQuery = {
-    // Default identity encodes the FULL checkpoint path (sanitized for use
-    // as a directory name) — a truncated hash could collide two different
-    // streams into one marker namespace and silently suppress each other's
-    // batches. The appended hex of the raw string disambiguates paths whose
-    // sanitized forms coincide ("a/b" vs "a_b").
-    val sid = sinkId.getOrElse(
-      checkpoint.replaceAll("[^A-Za-z0-9_.-]", "_") + "-" +
-        java.lang.Integer.toHexString(checkpoint.hashCode))
-    deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMergeBatchOnce(batch, batchId, targetPath, keys, versionCol,
-          partitionCol, sid)
-        ()
-      }
-      .start()
-  }
-
   /** One micro-batch folded into t19's persisted vocab-state MV (the
     * streaming face of the text lane's e12; see
     * [[graft.text.TextQueries.t19IncrementalVocab]]). Sum-merge is NOT
     * idempotent — re-folding a batch double-counts — so the replay marker
-    * cannot be written AFTER the data commit the way [[applyMergeBatchOnce]]'s
-    * can (that crash window is benign only under idempotent LWW merges).
+    * cannot be written AFTER the data commit the way an idempotent LWW
+    * sink's can (that crash window is benign only under idempotent merges).
     * Here the marker is written INTO the staged state directory and
     * published by the SAME atomic rename that publishes the merged counts:
     * state and fold-ledger commit together, so a replay after any crash

@@ -173,38 +173,41 @@ class EtlSpec extends SparkSuite {
       ("k1", "2025-01-01", 1L, 10.0),
       ("k2", "2025-01-02", 1L, 20.0),
       ("k3", "2025-01-03", 1L, 30.0)).toDF("key", "dt", "v", "price")
-    Upsert.mergePartitionedParquet(spark, dir, b1, Seq("key"), "v", "dt")
+    SnapshotLake.merge(spark, dir, b1, Seq("key"), "v", "dt")
 
-    // Byte-level snapshot of a partition directory: name -> file bytes.
-    def snapshot(part: String): Map[String, Seq[Byte]] =
-      JFiles.walk(Paths.get(dir, part)).iterator.asScala
+    // Byte-level snapshot of the gen dir serving one partition value:
+    // file path -> file bytes (a new gen would change every path).
+    def snapshot(value: String): Map[String, Seq[Byte]] = {
+      val e = SnapshotLake.currentManifest(spark, dir).get.entries
+        .find(_.value == value).get
+      JFiles.walk(Paths.get(dir, "data", e.dirName, s"gen=${e.gen}")).iterator.asScala
         .filter(JFiles.isRegularFile(_))
         .map(p => p.toString -> JFiles.readAllBytes(p).toSeq).toMap
-    val dt2Before = snapshot("dt=2025-01-02")
-    val dt3Before = snapshot("dt=2025-01-03")
+    }
+    val dt2Before = snapshot("2025-01-02")
+    val dt3Before = snapshot("2025-01-03")
     assert(dt2Before.nonEmpty && dt3Before.nonEmpty)
 
     // Batch touching only dt=2025-01-01 (update) and dt=2025-01-04 (insert).
     val b2 = Seq(
       ("k1", "2025-01-01", 2L, 15.0),
       ("k4", "2025-01-04", 1L, 40.0)).toDF("key", "dt", "v", "price")
-    Upsert.mergePartitionedParquet(spark, dir, b2, Seq("key"), "v", "dt")
+    SnapshotLake.merge(spark, dir, b2, Seq("key"), "v", "dt")
 
-    // Untouched partitions: same files, byte-identical.
-    assert(snapshot("dt=2025-01-02") == dt2Before)
-    assert(snapshot("dt=2025-01-03") == dt3Before)
+    // Untouched partitions: same gen dirs, byte-identical.
+    assert(snapshot("2025-01-02") == dt2Before)
+    assert(snapshot("2025-01-03") == dt3Before)
     // Merged state: k1 updated, k4 inserted, k2/k3 untouched.
-    val state = spark.read.parquet(dir).collect()
+    val state = SnapshotLake.read(spark, dir).collect()
       .map(r => r.getAs[String]("key") -> r.getAs[Double]("price")).toMap
     assert(state == Map("k1" -> 15.0, "k2" -> 20.0, "k3" -> 30.0, "k4" -> 40.0))
     // Idempotent: replaying the batch converges.
-    Upsert.mergePartitionedParquet(spark, dir, b2, Seq("key"), "v", "dt")
-    val state2 = spark.read.parquet(dir).collect()
+    SnapshotLake.merge(spark, dir, b2, Seq("key"), "v", "dt")
+    val state2 = SnapshotLake.read(spark, dir).collect()
       .map(r => r.getAs[String]("key") -> r.getAs[Double]("price")).toMap
     assert(state2 == state)
-    // No staging/parked leftovers beside the table root.
-    assert(!JFiles.exists(Paths.get(dir + "__staging")))
-    assert(!JFiles.exists(Paths.get(dir + "__old")))
+    // No staging leftovers under the table root.
+    assert(!JFiles.exists(Paths.get(dir, "_staging")))
   }
 
   test("flat-dir compaction collapses an append-fragmented index, preserves rows, heals a parked crash") {
@@ -254,188 +257,77 @@ class EtlSpec extends SparkSuite {
     import java.nio.file.{Files => JFiles, Paths}
     import scala.jdk.CollectionConverters._
     val dir = Files.createTempDirectory("graft_compact").toString + "/quotes"
-    // dt=2025-01-01: fragmented (8 files); dt=2025-01-02: healthy (1 file)
+    // dt=2025-01-01: fragmented (the key-spread batch writes one file per
+    // upstream task); dt=2025-01-02: healthy (one row, one file)
     val frag = (1 to 64).map(i => (s"k$i", "2025-01-01", 1L, i.toDouble))
-      .toDF("key", "dt", "v", "price").repartition(8)
-    frag.write.parquet(s"$dir/dt=2025-01-01")
-    Seq(("h1", 1L, 99.0)).toDF("key", "v", "price")
-      .coalesce(1).write.parquet(s"$dir/dt=2025-01-02")
-    def files(part: String): Seq[String] =
-      JFiles.list(Paths.get(dir, part)).iterator.asScala
-        .map(_.getFileName.toString)
-        .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSeq
-    def snapshot(part: String): Map[String, Seq[Byte]] =
-      JFiles.walk(Paths.get(dir, part)).iterator.asScala
+      .toDF("key", "dt", "v", "price").repartition(8, col("key"))
+    SnapshotLake.merge(spark, dir, frag, Seq("key"), "v", "dt")
+    SnapshotLake.merge(spark, dir,
+      Seq(("h1", "2025-01-02", 1L, 99.0)).toDF("key", "dt", "v", "price"),
+      Seq("key"), "v", "dt")
+    def genDir(value: String) = {
+      val e = SnapshotLake.currentManifest(spark, dir).get.entries
+        .find(_.value == value).get
+      Paths.get(dir, "data", e.dirName, s"gen=${e.gen}")
+    }
+    def files(value: String): Int =
+      JFiles.list(genDir(value)).iterator.asScala.map(_.getFileName.toString)
+        .count(n => n.endsWith(".parquet"))
+    def snapshot(value: String): Map[String, Seq[Byte]] =
+      JFiles.walk(genDir(value)).iterator.asScala
         .filter(JFiles.isRegularFile(_))
         .map(p => p.toString -> JFiles.readAllBytes(p).toSeq).toMap
-    assert(files("dt=2025-01-01").size == 8)
-    val healthyBefore = snapshot("dt=2025-01-02")
-    val before = spark.read.parquet(s"$dir/dt=2025-01-01").collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[Long]("v"), r.getAs[Double]("price"))).toSet
+    def rows(value: String): Set[(String, Long, Double)] =
+      SnapshotLake.read(spark, dir, Seq(value)).collect()
+        .map(r => (r.getAs[String]("key"), r.getAs[Long]("v"), r.getAs[Double]("price"))).toSet
+    val fragFiles = files("2025-01-01")
+    assert(fragFiles > 2, s"expected a fragmented partition, got $fragFiles files")
+    val healthyBefore = snapshot("2025-01-02")
+    val before = rows("2025-01-01")
+    val fragDir = genDir("2025-01-01").getParent.getFileName.toString
 
-    val report = Upsert.compactPartitionedParquet(spark, dir, "dt",
+    val report = SnapshotLake.compact(spark, dir,
       targetBytes = 1L << 30, minFilesToCompact = 2)
-    assert(report.map(r => (r._1, r._2, r._3)) == Seq(("dt=2025-01-01", 8, 1)),
-      s"unexpected report: $report")
-    assert(files("dt=2025-01-01").size == 1)
-    // content preserved byte-for-row, healthy partition untouched byte-for-byte
-    val after = spark.read.parquet(s"$dir/dt=2025-01-01").collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[Long]("v"), r.getAs[Double]("price"))).toSet
-    assert(after == before)
-    assert(snapshot("dt=2025-01-02") == healthyBefore)
-    // second run: nothing left to compact; no staging/park leftovers
-    assert(Upsert.compactPartitionedParquet(spark, dir, "dt",
+    assert(report == Seq((fragDir, fragFiles, 1)), s"unexpected report: $report")
+    assert(files("2025-01-01") == 1)
+    // content preserved row-for-row, healthy partition untouched byte-for-byte
+    assert(rows("2025-01-01") == before)
+    assert(snapshot("2025-01-02") == healthyBefore)
+    // second run: nothing left to compact; no staging leftovers
+    assert(SnapshotLake.compact(spark, dir,
       targetBytes = 1L << 30, minFilesToCompact = 2).isEmpty)
-    assert(!JFiles.exists(Paths.get(dir + "__staging")))
-    assert(!JFiles.exists(Paths.get(dir + "__old")))
+    assert(!JFiles.exists(Paths.get(dir, "_staging")))
     // and the merge still composes with the compacted layout
     val b = Seq(("k1", "2025-01-01", 2L, 111.0)).toDF("key", "dt", "v", "price")
-    Upsert.mergePartitionedParquet(spark, dir, b, Seq("key"), "v", "dt")
-    val k1 = spark.read.parquet(dir).filter(col("key") === "k1")
+    SnapshotLake.merge(spark, dir, b, Seq("key"), "v", "dt")
+    val k1 = SnapshotLake.read(spark, dir).filter(col("key") === "k1")
       .collect().map(_.getAs[Double]("price")).toSeq
     assert(k1 == Seq(111.0))
   }
 
-  test("E3: partition merge recovers an interrupted swap without losing rows") {
-    import java.nio.file.{Files => JFiles, Paths}
-    val root = Files.createTempDirectory("graft_pcrash").toString
-    val dir = root + "/quotes"
-    // dt=2025-01-01 holds TWO keys; the batch will update only one of them.
-    val b1 = Seq(
-      ("k1", "2025-01-01", 1L, 10.0),
-      ("k9", "2025-01-01", 1L, 90.0),
-      ("k2", "2025-01-02", 1L, 20.0)).toDF("key", "dt", "v", "price")
-    Upsert.mergePartitionedParquet(spark, dir, b1, Seq("key"), "v", "dt")
-    // Simulate a crash between the park-rename and the install-rename: the
-    // partition dir sits parked under __old, missing from the table.
-    JFiles.createDirectories(Paths.get(dir + "__old"))
-    JFiles.move(Paths.get(dir, "dt=2025-01-01"),
-      Paths.get(dir + "__old", "dt=2025-01-01"))
-    assert(!JFiles.exists(Paths.get(dir, "dt=2025-01-01")))
-    // Replay of the same batch: recovery must restore the parked partition
-    // FIRST, so k9 (not carried by any later batch) survives the merge.
-    val b2 = Seq(("k1", "2025-01-01", 2L, 15.0)).toDF("key", "dt", "v", "price")
-    Upsert.mergePartitionedParquet(spark, dir, b2, Seq("key"), "v", "dt")
-    val state = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[String]("key") -> r.getAs[Double]("price")).toMap
-    assert(state == Map("k1" -> 15.0, "k9" -> 90.0, "k2" -> 20.0),
-      "interrupted-swap recovery must not drop rows the batch didn't carry")
-    assert(!JFiles.exists(Paths.get(dir + "__old")))
-  }
-
-  test("E3: partition merge rejects legacy unpartitioned layout; preserves string shards") {
-    import java.nio.file.{Files => JFiles, Paths}
-    val root = Files.createTempDirectory("graft_pmisc").toString
-    // legacy layout: parquet files at the root, no partition dirs
-    val legacy = root + "/legacy"
-    Seq(("k1", "2025-01-01", 1L, 10.0)).toDF("key", "dt", "v", "price")
-      .write.parquet(legacy)
-    val e = intercept[IllegalStateException] {
-      Upsert.mergePartitionedParquet(spark, legacy,
-        Seq(("k1", "2025-01-01", 2L, 11.0)).toDF("key", "dt", "v", "price"),
-        Seq("key"), "v", "dt")
-    }
-    assert(e.getMessage.contains("not partitioned"))
-    // numeric-looking STRING partition values must round-trip verbatim
-    // (type inference would turn "0025" into int 25 and fork the partition)
-    val shards = root + "/shards"
-    val s1 = Seq(("k1", "0025", 1L, 1.0), ("k2", "0007", 1L, 2.0))
-      .toDF("key", "shard", "v", "price")
-    Upsert.mergePartitionedParquet(spark, shards, s1, Seq("key"), "v", "shard")
-    Upsert.mergePartitionedParquet(spark, shards,
-      Seq(("k1", "0025", 2L, 9.0)).toDF("key", "shard", "v", "price"),
-      Seq("key"), "v", "shard")
-    val dirs = new java.io.File(shards).listFiles().map(_.getName)
-      .filter(_.startsWith("shard=")).sorted.toSeq
-    assert(dirs == Seq("shard=0007", "shard=0025"), s"got $dirs")
-    val state = spark.read.parquet(shards).collect()
-      .map(r => r.getAs[String]("key") -> r.getAs[Double]("price")).toMap
-    assert(state == Map("k1" -> 9.0, "k2" -> 2.0))
-    // null partition values are rejected loudly, not silently mismatched
-    val npe = intercept[IllegalArgumentException] {
-      Upsert.mergePartitionedParquet(spark, shards,
-        Seq(("k3", null: String, 1L, 3.0)).toDF("key", "shard", "v", "price"),
-        Seq("key"), "v", "shard")
-    }
-    assert(npe.getMessage.contains("null"))
-    assert(JFiles.exists(Paths.get(shards))) // table unharmed
-  }
-
-  test("Pipeline: legacy unpartitioned target migrates once, then scoped merge works") {
-    val dir = Files.createTempDirectory("graft_migrate").toString + "/quotes"
-    val rates = new StaticRateProvider(Map(
-      ("EUR", d("2025-04-17")) -> 1.14,
-      ("GBP", d("2025-04-17")) -> 1.33,
-      ("EUR", d("2025-04-18")) -> 1.15))
-    // Write the OLD layout: run the standardize+convert plan and sink it
-    // unpartitioned, exactly what the pre-round-4 Pipeline.run produced.
-    val converted = CurrencyConverter.convertWithProvider(
-      spark, Standardizer.standardize(bars, dim), rates, "USD")
-    converted.write.parquet(dir)
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("p_date=")))
-    // New Pipeline.run against the legacy table: migrates, merges, converges.
-    val m = Pipeline.run(spark, bars, dim, rates, dir)
-    assert(m.rows == 7)
-    val state = spark.read.parquet(dir)
-    assert(state.count() == 7)
-    assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("p_date=")))
-    assert(state.filter($"ticker" === "^GDAXI" &&
-      $"timestamp_utc" === ts("2025-04-17 07:00:00"))
-      .select($"close_usd").head.getDouble(0) == 21000.5 * 1.14)
-  }
-
-  test("Pipeline: interrupted migration swap heals on the next run (no silent history loss)") {
-    val dir = Files.createTempDirectory("graft_migrate_crash").toString + "/quotes"
-    val rates = new StaticRateProvider(Map(
-      ("EUR", d("2025-04-17")) -> 1.14,
-      ("GBP", d("2025-04-17")) -> 1.33,
-      ("EUR", d("2025-04-18")) -> 1.15))
-    val converted = CurrencyConverter.convertWithProvider(
-      spark, Standardizer.standardize(bars, dim), rates, "USD")
-    converted.write.parquet(dir)
-    // Simulate a crash BETWEEN the migration's two renames: the legacy table
-    // was parked at __premigrate, the staged partitioned copy exists, and
-    // the table path itself is GONE.
-    val staged = converted.withColumn("p_date", to_date($"timestamp_utc"))
-    staged.write.partitionBy("p_date").parquet(dir + "__migrate")
-    assert(new java.io.File(dir).renameTo(new java.io.File(dir + "__premigrate")))
-    assert(!new java.io.File(dir).exists())
-    // Next run must finish the swap and keep ALL history, not just the batch.
-    val m = Pipeline.run(spark, bars, dim, rates, dir)
-    assert(m.rows == 7)
-    val state = spark.read.parquet(dir)
-    assert(state.count() == 7, "healed table must carry the full history")
-    assert(!new java.io.File(dir + "__premigrate").exists(), "backup cleaned up")
-    assert(!new java.io.File(dir + "__migrate").exists(), "staging cleaned up")
-    // And the roll-BACK face: table gone, backup parked, NO staged copy.
-    val dir2 = Files.createTempDirectory("graft_migrate_crash2").toString + "/quotes"
-    converted.write.parquet(dir2)
-    assert(new java.io.File(dir2).renameTo(new java.io.File(dir2 + "__premigrate")))
-    val m2 = Pipeline.run(spark, bars, dim, rates, dir2)
-    assert(m2.rows == 7)
-    assert(spark.read.parquet(dir2).count() == 7,
-      "rolled-back table must carry the full history")
-  }
-
   test("Pipeline: E1→E2→E3 end-to-end with observed audit metrics, idempotent") {
-    val dir = Files.createTempDirectory("graft_pipeline").toString + "/quotes"
+    val root = Files.createTempDirectory("graft_pipeline").toString
+    val indices = s"$root/indices"; val quotes = s"$root/quotes"
     val rates = new StaticRateProvider(Map(
       ("EUR", d("2025-04-17")) -> 1.14,
       ("GBP", d("2025-04-17")) -> 1.33,
       ("EUR", d("2025-04-18")) -> 1.15))
-    val m1 = Pipeline.run(spark, bars, dim, rates, dir)
-    assert(m1.rows == 7)
+    // ^MISSING has no dimension row: the lake load refuses it by design
+    // (FK gate, PipelineLakeSpec), so the fixture runs without it
+    val known = bars.filter($"ticker" =!= "^MISSING")
+    val m1 = Pipeline.runLake(spark, known, dim, rates, indices, quotes)
+    assert(m1.rows == 6)
     assert(m1.nullClose == 1) // the non-trading NaN row
-    assert(m1.missingRate == 2) // JPY 04-17 + ^MISSING's null currency
-    val state1 = spark.read.parquet(dir)
-    assert(state1.count() == 7)
+    assert(m1.missingRate == 1) // JPY 04-17 has no rate
+    val state1 = SnapshotLake.read(spark, quotes)
+    assert(state1.count() == 6)
     assert(state1.filter($"ticker" === "^GDAXI" &&
       $"timestamp_utc" === ts("2025-04-17 07:00:00"))
       .select($"close_usd").head.getDouble(0) == 21000.5 * 1.14)
     // re-run ≙ the reference's 6-hourly overlap re-fetch: converges
-    val m2 = Pipeline.run(spark, bars, dim, rates, dir)
-    assert(m2.rows == 7)
-    assert(spark.read.parquet(dir).count() == 7)
+    val m2 = Pipeline.runLake(spark, known, dim, rates, indices, quotes)
+    assert(m2.rows == 6)
+    assert(SnapshotLake.read(spark, quotes).count() == 6)
   }
 
   test("S1: BarSource seam — wide fetch → validate → standardize round trip") {

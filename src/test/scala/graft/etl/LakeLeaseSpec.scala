@@ -9,22 +9,25 @@ class LakeLeaseSpec extends SparkSuite {
     import spark.implicits._
     val table = java.nio.file.Files.createTempDirectory("graft_lease").toString + "/t"
     val b1 = Seq((1L, "2024-01-01", 1L)).toDF("k", "p_date", "v")
-    Upsert.mergePartitionedParquet(spark, table, b1, Seq("k"), "v", "p_date")
-    val before = spark.read.parquet(table).collect().map(_.toString).sorted.toSeq
+    SnapshotLake.merge(spark, table, b1, Seq("k"), "v", "p_date")
+    def rows() = SnapshotLake.read(spark, table).collect().map(_.toString).sorted.toSeq
+    val before = rows()
+    val genBefore = SnapshotLake.currentManifest(spark, table).get.gen
     // writer A holds the lease (simulated: a fresh lease file)
     val lease = new java.io.File(table + "__lease")
     assert(lease.createNewFile())
     val b2 = Seq((2L, "2024-01-02", 1L)).toDF("k", "p_date", "v")
     intercept[LakeLease.LeaseHeldException] {
-      Upsert.mergePartitionedParquet(spark, table, b2, Seq("k"), "v", "p_date")
+      SnapshotLake.merge(spark, table, b2, Seq("k"), "v", "p_date")
     }
-    assert(spark.read.parquet(table).collect().map(_.toString).sorted.toSeq == before,
-      "aborted writer must not have touched the table")
+    assert(rows() == before, "aborted writer must not have touched the table")
+    assert(SnapshotLake.currentManifest(spark, table).get.gen == genBefore,
+      "aborted writer must not have published a snapshot")
     // holder crashed long ago: the stale lease is broken and the write runs
     assert(lease.setLastModified(
       System.currentTimeMillis() - 2 * LakeLease.DefaultTtlMs))
-    Upsert.mergePartitionedParquet(spark, table, b2, Seq("k"), "v", "p_date")
-    assert(spark.read.parquet(table).count() == 2)
+    SnapshotLake.merge(spark, table, b2, Seq("k"), "v", "p_date")
+    assert(SnapshotLake.read(spark, table).count() == 2)
     assert(!lease.exists(), "lease must be released after the write")
   }
 
@@ -37,7 +40,7 @@ class LakeLeaseSpec extends SparkSuite {
       // writer B interleaves while A holds — from another thread (the lease
       // is thread-scoped by design: two threads are two writers)
       val t = new Thread(() => {
-        try Upsert.mergePartitionedParquet(spark, table,
+        try SnapshotLake.merge(spark, table,
           Seq((9L, "2024-01-09", 1L)).toDF("k", "p_date", "v"),
           Seq("k"), "v", "p_date")
         catch { case e: Throwable => secondFailed = Some(e) }
@@ -45,13 +48,13 @@ class LakeLeaseSpec extends SparkSuite {
       })
       t.start(); done.await()
       // A's own write inside its hold still works (reentrant per thread)
-      Upsert.mergePartitionedParquet(spark, table,
+      SnapshotLake.merge(spark, table,
         Seq((1L, "2024-01-01", 1L)).toDF("k", "p_date", "v"),
         Seq("k"), "v", "p_date")
     }
     assert(secondFailed.exists(_.isInstanceOf[LakeLease.LeaseHeldException]),
       s"contender should have aborted with LeaseHeldException, got $secondFailed")
-    assert(spark.read.parquet(table).select("k").collect().map(_.getLong(0)).toSet
+    assert(SnapshotLake.read(spark, table).select("k").collect().map(_.getLong(0)).toSet
       == Set(1L), "only the lease holder's write may land")
     assert(!new java.io.File(table + "__lease").exists(),
       "lease released after the holder's block exits")

@@ -10,14 +10,21 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
 /** Seeded generative tests for the ETL laws SURVEY §5 commits to:
-  * upsert idempotency, last-write-wins order-independence, conversion
-  * identity/null-propagation, and unpivot size/content laws. Each property
-  * runs over randomized batches from a fixed seed, so failures reproduce.
+  * upsert idempotency, last-write-wins order-independence, lake merge ≡ an
+  * in-memory LWW model, conversion identity/null-propagation, and unpivot
+  * size/content laws. Each property runs over randomized batches from a
+  * fixed seed, so failures reproduce.
   */
 class PropertySpec extends SparkSuite {
   import spark.implicits._
 
   private val rnd = new Random(42)
+
+  /** A lake row (key, dt, v, price): dt is a function of key (the merge
+    * contract), v the version, price the tie-breaker (null sorts lowest,
+    * as in lastWriteWins' DESC NULLS LAST order).
+    */
+  private type Rec = (String, String, Long, Option[Double])
 
   private def randomBatch(n: Int): Seq[(String, Long, Double)] =
     (1 to n).map { _ =>
@@ -53,6 +60,43 @@ class PropertySpec extends SparkSuite {
       val after = SnapshotLake.read(spark, dir).collect().map(_.toString).toSet
       assert(after == kept, s"trial $trial: delete broke the WHERE-complement law")
       assert(n == before.size - kept.size, s"trial $trial: deleted-count drifted")
+    }
+  }
+
+  test("property: lake merge equals an in-memory LWW model over random batch sequences") {
+    val order = Ordering[(Long, Option[Double])]
+    def newer(a: Rec, b: Rec): Rec = if (order.gteq((a._3, a._4), (b._3, b._4))) a else b
+    val seeded = new Random(7)
+    (1 to 3).foreach { trial =>
+      val dir = Files.createTempDirectory(s"graft_proplww$trial").toString + "/t"
+      var model = Map.empty[String, Rec]
+      var sent = Vector.empty[Seq[Rec]]
+      (1 to 5).foreach { step =>
+        // a re-delivered earlier batch, or a fresh one whose small key,
+        // version and price domains force in-batch duplicate keys, keys
+        // re-delivered across batches (at lower versions too) and version
+        // ties that only the tie-breaker settles
+        val batch =
+          if (sent.nonEmpty && seeded.nextInt(4) == 0) sent(seeded.nextInt(sent.size))
+          else Seq.fill(1 + seeded.nextInt(10)) {
+            val k = seeded.nextInt(10)
+            (s"k$k", s"d${k % 3}", seeded.nextInt(3).toLong,
+              if (seeded.nextInt(8) == 0) None else Some(seeded.nextInt(4) * 1.5))
+          }
+        sent :+= batch
+        // the model: LWW inside the batch, then the batch's winner replaces
+        // any stored row for its key regardless of version (DO UPDATE)
+        model ++= batch.groupBy(_._1).map { case (k, rs) => k -> rs.reduce(newer) }
+        SnapshotLake.merge(spark, dir, batch.toDF("key", "dt", "v", "price"),
+          Seq("key"), "v", "dt", Seq("price"))
+        val lake = SnapshotLake.read(spark, dir).select("key", "dt", "v", "price")
+          .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+            if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+        assert(lake.map(_._1).distinct.length == lake.length,
+          s"trial $trial step $step: duplicate keys in the lake")
+        assert(lake.map(r => r._1 -> r).toMap == model,
+          s"trial $trial step $step: lake diverged from the LWW model after $batch")
+      }
     }
   }
 

@@ -9,8 +9,9 @@ import graft.SparkSuite
 
 /** The manifest-pointer lake: snapshot isolation (no torn reads between a
   * commit's installs and its publish), crash recovery before the publish,
-  * LWW-equivalence with the Hive-layout merge, shared compaction commit,
-  * exact-type round-trips, time travel, and vacuum retention.
+  * shared compaction commit, exact-type round-trips, time travel, and
+  * vacuum retention. LWW equivalence with an in-memory model over random
+  * batch sequences is PropertySpec's.
   */
 class SnapshotLakeSpec extends SparkSuite {
   import spark.implicits._
@@ -30,16 +31,11 @@ class SnapshotLakeSpec extends SparkSuite {
     ("k1", "2025-01-01", 2L, 15.0),
     ("k4", "2025-01-04", 1L, 40.0)).toDF("key", "dt", "v", "price")
 
-  test("merge → read round-trip; LWW semantics equal the Hive-layout merge") {
+  test("merge → read round-trip: LWW state, partition type, replay") {
     val dir = tmp()
     SnapshotLake.merge(spark, dir, b1, Seq("key"), "v", "dt")
     SnapshotLake.merge(spark, dir, b2, Seq("key"), "v", "dt")
     val got = state(SnapshotLake.read(spark, dir))
-    // the Hive-layout merge over the same batches is the semantic twin
-    val hive = Files.createTempDirectory("graft_snaplake_twin").toString + "/t"
-    Upsert.mergePartitionedParquet(spark, hive, b1, Seq("key"), "v", "dt")
-    Upsert.mergePartitionedParquet(spark, hive, b2, Seq("key"), "v", "dt")
-    assert(got == state(spark.read.parquet(hive)), s"diverged from Hive-layout merge: $got")
     assert(got == Map("k1" -> ((2L, 15.0)), "k2" -> ((1L, 20.0)),
       "k3" -> ((1L, 30.0)), "k4" -> ((1L, 40.0))))
     // partition column kept its exact value and type (stored IN the files)
@@ -77,7 +73,11 @@ class SnapshotLakeSpec extends SparkSuite {
 
   test("crash before publish: old snapshot readable, re-run converges") {
     val dir = tmp()
-    SnapshotLake.merge(spark, dir, b1, Seq("key"), "v", "dt")
+    // k9 shares k1's partition but no later batch carries it: the re-run
+    // must merge against the published gen, not lose the untouched key
+    SnapshotLake.merge(spark, dir,
+      b1.unionByName(Seq(("k9", "2025-01-01", 1L, 90.0)).toDF("key", "dt", "v", "price")),
+      Seq("key"), "v", "dt")
     val before = state(SnapshotLake.read(spark, dir))
     // simulate the crash: prepare (stage + install) and DROP the manifest
     val deduped = Upsert.lastWriteWins(b2, Seq("key"), "v", Nil)
@@ -88,7 +88,8 @@ class SnapshotLakeSpec extends SparkSuite {
     SnapshotLake.merge(spark, dir, b2, Seq("key"), "v", "dt")
     assert(state(SnapshotLake.read(spark, dir)) ==
       Map("k1" -> ((2L, 15.0)), "k2" -> ((1L, 20.0)),
-        "k3" -> ((1L, 30.0)), "k4" -> ((1L, 40.0))))
+        "k3" -> ((1L, 30.0)), "k4" -> ((1L, 40.0)), "k9" -> ((1L, 90.0))),
+      "recovery must not drop rows the batch didn't carry")
   }
 
   test("compaction commits through the same manifest; readers never see a gap") {
@@ -116,30 +117,6 @@ class SnapshotLakeSpec extends SparkSuite {
     assert(SnapshotLake.compact(spark, dir, 1L << 30, 2).isEmpty)
   }
 
-  test("coalesced commit writes one file per partition value (round-15 knob)") {
-    val dir = tmp()
-    // a spread-out batch: each dt value spans 3 of the 6 upstream tasks, so
-    // the default fan-out write emits up to 3 files per gen dir; under the
-    // production layout knob the commit REBALANCE-clusters by the partition
-    // dir first, so every gen dir lands exactly ONE parquet file and
-    // compaction finds nothing to do
-    val wide = (1 to 6).map(i => (s"k$i", s"d${i % 2}", 1L, i.toDouble))
-      .toDF("key", "dt", "v", "price").repartition(6, col("key"))
-    spark.conf.set("graft.lake.coalesceCommit", "true")
-    try SnapshotLake.merge(spark, dir, wide, Seq("key"), "v", "dt")
-    finally spark.conf.unset("graft.lake.coalesceCommit")
-    val m = SnapshotLake.currentManifest(spark, dir).get
-    val files = m.entries.map { e =>
-      val gd = new java.io.File(s"$dir/data/${e.dirName}/gen=${e.gen}")
-      e.value -> gd.listFiles().count(_.getName.endsWith(".parquet"))
-    }.toMap
-    assert(files.nonEmpty && files.values.forall(_ == 1),
-      s"expected one file per partition value, got $files")
-    assert(state(SnapshotLake.read(spark, dir)).keySet ==
-      (1 to 6).map(i => s"k$i").toSet)
-    assert(SnapshotLake.compact(spark, dir, 1L << 30, 2).isEmpty)
-  }
-
   test("guard: a batch touching too many partition values fails loudly") {
     val dir = tmp()
     spark.conf.set("graft.lake.maxAffectedPartitions", "3")
@@ -157,6 +134,45 @@ class SnapshotLakeSpec extends SparkSuite {
       assert(state(SnapshotLake.read(spark, dir)).keySet ==
         (1 to 5).map(i => s"k$i").toSet)
     } finally spark.conf.unset("graft.lake.maxAffectedPartitions")
+  }
+
+  /** A 5-partition lake, then `commit` under a bound of 3 affected values:
+    * it must refuse with `verb`'s guard message before publishing, and
+    * `commitOne` (a single-partition commit) must still land.
+    */
+  private def checkCommitGuard(verb: String, commit: String => Long,
+      commitOne: String => Long): Unit = {
+    val dir = tmp()
+    val wide = (1 to 5).map(i => (s"k$i", s"d$i", 1L, i.toDouble))
+      .toDF("key", "dt", "v", "price")
+    SnapshotLake.merge(spark, dir, wide, Seq("key"), "v", "dt")
+    val before = state(SnapshotLake.read(spark, dir))
+    val gen = SnapshotLake.currentManifest(spark, dir).get.gen
+    spark.conf.set("graft.lake.maxAffectedPartitions", "3")
+    try {
+      val e = intercept[IllegalArgumentException](commit(dir))
+      assert(e.getMessage.contains(s"$verb touches more than 3 distinct dt"),
+        s"expected the affected-partition guard, got: ${e.getMessage}")
+      // refused before any write: no snapshot published, rows intact
+      assert(SnapshotLake.currentManifest(spark, dir).get.gen == gen)
+      assert(state(SnapshotLake.read(spark, dir)) == before)
+      // a commit inside the bound still lands
+      assert(commitOne(dir) == 1L)
+      assert(SnapshotLake.currentManifest(spark, dir).get.gen == gen + 1)
+    } finally spark.conf.unset("graft.lake.maxAffectedPartitions")
+  }
+
+  test("guard: an update touching too many partition values fails loudly") {
+    val bump = Map("price" -> (col("price") + 1))
+    checkCommitGuard("update",
+      dir => SnapshotLake.update(spark, dir, col("price") > 0, bump),
+      dir => SnapshotLake.update(spark, dir, col("key") === "k1", bump))
+  }
+
+  test("guard: a delete touching too many partition values fails loudly") {
+    checkCommitGuard("delete",
+      dir => SnapshotLake.delete(spark, dir, col("price") > 0),
+      dir => SnapshotLake.delete(spark, dir, col("key") === "k1"))
   }
 
   test("exact-type partitions: string '0025' never collides with int-ish '25'") {

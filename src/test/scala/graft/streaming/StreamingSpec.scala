@@ -507,17 +507,19 @@ class StreamingSpec extends SparkSuite {
       val stream = StreamingIngest.readLanding(spark, landing, schema)
       val deduped = StreamingIngest.dedupedWithinWatermark(
         stream, "ts", "2 days", Seq("event_id"))
-      val q = StreamingIngest.upsertAvailableNow(
-        deduped, target, s"$work/ckpt_upsert_$n", Seq("event_id"), "ts")
+        // lake partition derived from the key, as the merge contract requires
+        .withColumn("p", pmod(col("event_id"), lit(8)))
+      val q = StreamingIngest.snapshotMergeAvailableNow(
+        deduped, target, s"$work/ckpt_upsert_$n", Seq("event_id"), "ts", "p")
       q.awaitTermination()
     }
 
     tick(1)
-    val after1 = spark.read.parquet(target).count()
+    val after1 = graft.etl.SnapshotLake.read(spark, target).count()
     // fresh checkpoint ⇒ full re-delivery of the same landing data ≙ the
     // reference's overlapping 2-day refetch; the keyed sink absorbs it
     tick(2)
-    val after2 = spark.read.parquet(target).count()
+    val after2 = graft.etl.SnapshotLake.read(spark, target).count()
     val expected = spark.read.parquet(landing).select("event_id").distinct().count()
     assert(after1 == expected)
     assert(after2 == expected, "re-delivered tick must converge, not duplicate")
@@ -569,33 +571,6 @@ class StreamingSpec extends SparkSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byKey(1L) == 2, s"post-horizon re-delivery must re-emit: $byKey")
     assert(byKey(2L) == 1 && byKey(3L) == 1 && byKey(4L) == 1, byKey.toString)
-  }
-
-  test("exactly-once parquet sink: marker files suppress re-applied batches") {
-    import spark.implicits._
-    val target = s"$work/xo_lake"
-    def batch(rows: Seq[(String, Long, Double)]) =
-      rows.toDF("key", "v", "price")
-    // batch 0 applies and is markered
-    assert(StreamingIngest.applyMergeBatchOnce(
-      batch(Seq(("k1", 1L, 10.0), ("k2", 1L, 20.0))), 0L, target,
-      Seq("key"), "v", sinkId = "lake"))
-    // a replay of batch 0 with CHANGED bytes must be suppressed
-    assert(!StreamingIngest.applyMergeBatchOnce(
-      batch(Seq(("k1", 1L, 99.0))), 0L, target, Seq("key"), "v", sinkId = "lake"))
-    val s1 = spark.read.parquet(target).collect()
-      .map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(s1 == Map("k1" -> 10.0, "k2" -> 20.0))
-    // a NEW batch id applies normally
-    assert(StreamingIngest.applyMergeBatchOnce(
-      batch(Seq(("k2", 2L, 25.0), ("k3", 1L, 30.0))), 1L, target,
-      Seq("key"), "v", sinkId = "lake"))
-    val s2 = spark.read.parquet(target).collect()
-      .map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(s2 == Map("k1" -> 10.0, "k2" -> 25.0, "k3" -> 30.0))
-    // a different sink id has its own ledger namespace
-    assert(StreamingIngest.applyMergeBatchOnce(
-      batch(Seq(("k4", 1L, 40.0))), 0L, target, Seq("key"), "v", sinkId = "other"))
   }
 
   test("exactly-once JDBC sink: batch replayed after commit-log loss is skipped") {
