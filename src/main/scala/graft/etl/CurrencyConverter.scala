@@ -35,17 +35,27 @@ final class StaticRateProvider(table: Map[(String, java.sql.Date), Double]) exte
   */
 object CurrencyConverter {
 
+  /** The most (currency, date) pairs one conversion asks the provider for:
+    * the rate table is broadcast, so it must stay driver-sized. 100,000
+    * pairs is 40 years of daily rates for 10 currencies.
+    */
+  private val MaxPairs = 100000
+
   /** T8 — distinct (currency, date) pairs that actually need a rate: skips
     * the target currency and null currencies (reference
-    * `currency_converter.py:149-161`). The distinct() is a partial-agg
-    * shuffle over a tiny key space; the collect is bounded, not data-sized.
+    * `currency_converter.py:149-161`). The pairs come from one map-side
+    * job ([[BoundedDistinct]]: task-local dedup, no shuffle), and a batch
+    * spanning more than [[MaxPairs]] pairs is refused before any fetch.
     */
   def distinctPairs(quotes: DataFrame, target: String): Seq[(String, java.sql.Date)] =
-    quotes
-      .filter(col("original_currency").isNotNull && col("original_currency") =!= target)
-      .select(col("original_currency"), to_date(col("timestamp_utc")).as("rate_date"))
-      .distinct()
-      .collect()
+    BoundedDistinct.collect(
+      quotes
+        .filter(col("original_currency").isNotNull && col("original_currency") =!= target)
+        .select(col("original_currency"), to_date(col("timestamp_utc")).as("rate_date")),
+      MaxPairs,
+      s"batch needs more than $MaxPairs distinct (currency, date) FX pairs — " +
+        "the rate table is broadcast and must stay driver-sized; convert " +
+        "the batch in shorter date windows")
       .map(r => (r.getString(0), r.getDate(1)))
       .toSeq
 

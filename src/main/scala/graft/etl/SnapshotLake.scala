@@ -681,11 +681,7 @@ object SnapshotLake {
     require(field.nullable,
       s"ADD COLUMN ${field.name} must be nullable — existing rows have no " +
         "value for it; add it nullable, backfill, then constrain upstream")
-    LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      val fs = fsOf(spark, path)
-      val m = currentManifest(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"$path has no published snapshot — nothing to alter"))
+    commitMetadataOnly(spark, path) { m =>
       val cur = snapshotSchema(spark, path, m).getOrElse(
         throw new UnsupportedOperationException(
           s"lake at $path predates schema sidecars — evolve it by merging " +
@@ -693,11 +689,32 @@ object SnapshotLake {
       require(!cur.fieldNames.exists(_.equalsIgnoreCase(field.name)),
         s"column ${field.name} already exists in $path " +
           s"(${cur.fieldNames.mkString(", ")})")
-      writeSchemaSidecar(fs, path, m.gen + 1,
-        org.apache.spark.sql.types.StructType(cur.fields :+ field))
-      publish(fs, path, Manifest(m.gen + 1, m.partitionCol, m.entries))
+      org.apache.spark.sql.types.StructType(cur.fields :+ field)
     }
   }
+
+  /** The one METADATA-ONLY commit: under the lease, publish generation
+    * `gen+1` with the current snapshot's entries unchanged and
+    * `schemaOf(current)` as its schema sidecar. No data file is written,
+    * every gen dir (and its stats sidecar) stays shared with the previous
+    * snapshot, and the [[changes]] delta across the commit is empty.
+    * `schemaOf` runs inside the lease, so its checks see the snapshot the
+    * commit publishes over; it may refuse by throwing. Serves [[addColumn]]
+    * (a widened schema) and [[Pipeline.runLake]]'s unchanged dim (the
+    * same schema).
+    */
+  private[etl] def commitMetadataOnly(spark: SparkSession, path: String)(
+      schemaOf: Manifest => org.apache.spark.sql.types.StructType): Unit =
+    LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
+      val fs = fsOf(spark, path)
+      val m = currentManifest(spark, path).getOrElse(
+        throw new IllegalStateException(
+          s"$path has no published snapshot — nothing to commit over"))
+      val schema = schemaOf(m)
+      gcOrphans(fs, path, m.gen)
+      writeSchemaSidecar(fs, path, m.gen + 1, schema)
+      publish(fs, path, Manifest(m.gen + 1, m.partitionCol, m.entries))
+    }
 
   /** The commit body shared by [[merge]] and [[mergeViaSpec]]; the caller
     * holds the lease. `updates` is the RAW batch — [[prepareMerge]] owns
@@ -1182,15 +1199,14 @@ object SnapshotLake {
     * routing key would partitionBy into __HIVE_DEFAULT_PARTITION__ and die
     * mid-install unmatchable.
     *
-    * Bounded collect, with the bound ENFORCED. The lake contract
-    * partitions by low-cardinality columns, so a commit touching more than
-    * `graft.lake.maxAffectedPartitions` values is a mis-partitioned table
-    * (or a wrong partitionCol) — fail loudly with the remediation instead
-    * of marching on toward a driver OOM at scale. The check runs AFTER the
-    * collect on purpose: a limit() here would add a single-partition
-    * exchange to EVERY commit's affected-value job (measured on the 10×
-    * lake verbs), while the collect of value strings stays small until the
-    * table is already far outside the contract.
+    * Bounded collect, with the bound ENFORCED on the fetch itself. The
+    * lake contract partitions by low-cardinality columns, so a commit
+    * touching more than `graft.lake.maxAffectedPartitions` values is a
+    * mis-partitioned table (or a wrong partitionCol) — fail loudly with the
+    * remediation instead of marching on toward a driver OOM at scale.
+    * [[BoundedDistinct]] runs it as one map-side job: each task ships at
+    * most max + 1 values, so the driver never fetches more than
+    * tasks × (max + 1) rows, with no shuffle and no `limit()` exchange.
     */
   private def affectedPartitions(
       spark: SparkSession,
@@ -1199,18 +1215,19 @@ object SnapshotLake {
       verb: String): Array[(String, String)] = {
     val castStr = expr(s"cast(`$partitionCol` as string)")
     val routeKey = concat(lit("h"), hex(castStr))
-    val maxAffected = spark.conf.getOption("graft.lake.maxAffectedPartitions")
-      .map(_.toInt).getOrElse(100000)
-    val affected = rows
-      .select(castStr.as("__v"), routeKey.as("__h")).distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    require(affected.length <= maxAffected,
-      s"$verb touches more than $maxAffected distinct $partitionCol " +
+    val max = maxAffectedPartitions(spark)
+    BoundedDistinct.collect(rows.select(castStr.as("__v"), routeKey.as("__h")), max,
+      s"$verb touches more than $max distinct $partitionCol " +
         "values — the per-partition commit protocol is built for " +
         "low-cardinality partitioning; repartition the table or raise " +
         "graft.lake.maxAffectedPartitions")
-    affected
+      .map(r => (r.getString(0), r.getString(1)))
   }
+
+  /** The bound on the partition values one commit may touch. */
+  private[etl] def maxAffectedPartitions(spark: SparkSession): Int =
+    spark.conf.getOption("graft.lake.maxAffectedPartitions")
+      .map(_.toInt).getOrElse(100000)
 
   /** ONE write job for a commit's affected partitions: route `rows` by the
     * hex dir key (a derived column, so `partitionCol` itself STAYS in the
@@ -1285,10 +1302,11 @@ object SnapshotLake {
   private def dec(s: String): String =
     if (s.isEmpty) null else java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** The monotone string form a column's per-file min/max is recorded in:
-    * TIMESTAMP goes through `unix_micros` (session-timezone-free and
-    * truncation-free); everything else through Spark's own string cast
-    * (exact round-trips for decimal/date/integral/double/string/ntz).
+  /** The string form a column's per-file min/max is recorded in, applied
+    * AFTER the typed min/max: TIMESTAMP goes through `unix_micros`
+    * (session-timezone-free and truncation-free); everything else through
+    * Spark's own string cast (exact round-trips for
+    * decimal/date/integral/double/string/ntz).
     */
   private def statForm(c: org.apache.spark.sql.Column,
       dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.Column =
@@ -1313,10 +1331,14 @@ object SnapshotLake {
     val dirs = entries.map(e => genDirOf(path, e).toString)
     if (dirs.isEmpty) return
     val df = spark.read.schema(schema).parquet(dirs: _*)
+    // min/max run on the TYPED column, then take the string form: the
+    // string order of a number is not its value order (Long 1..250 would
+    // record [1, 99]), and pruning casts the recorded forms back to the
+    // column's type
     val aggs = statsCols.zipWithIndex.flatMap { case (c, i) =>
       val dt = schema(c).dataType
-      Seq(min(statForm(col(c), dt)).as(s"__mn$i"),
-        max(statForm(col(c), dt)).as(s"__mx$i"))
+      Seq(statForm(min(col(c)), dt).as(s"__mn$i"),
+        statForm(max(col(c)), dt).as(s"__mx$i"))
     }
     val rows = df.groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*).collect()
@@ -1324,7 +1346,10 @@ object SnapshotLake {
     val sb = new StringBuilder
     sb.append(s"graft-stats-v1\t$gen\t${statsCols.map(enc).mkString(",")}\n")
     rows.foreach { r =>
-      val f = r.getString(0)
+      // input_file_name() is a URI string (`file:///…`, percent-encoded);
+      // qualify it through the filesystem so it takes the same form as
+      // dataPrefix and as the listing pruneFilesMulti matches against
+      val f = fs.makeQualified(new Path(new java.net.URI(r.getString(0)))).toString
       // stats are keyed by the file's path RELATIVE to data/ so the lake
       // can be relocated; a file whose URI does not share the expected
       // prefix is simply not recorded (readSlice keeps unrecorded files)

@@ -89,6 +89,85 @@ class PipelineLakeSpec extends SparkSuite {
     }
   }
 
+  /** Every data file under the lake's `data/` dir. */
+  private def dataFiles(lake: String): Set[String] = {
+    val root = java.nio.file.Paths.get(lake, "data")
+    val walk = Files.walk(root)
+    try walk.filter(Files.isRegularFile(_)).toArray.map(_.toString).toSet
+    finally walk.close()
+  }
+
+  test("dim no-op: an unchanged dim commits metadata-only, still before the facts") {
+    val root = tmp()
+    val indices = s"$root/indices"; val quotes = s"$root/quotes"
+    Pipeline.runLake(spark, bars, dim, rates, indices, quotes)
+    val g1 = SnapshotLake.currentManifest(spark, indices).get
+    val files1 = dataFiles(indices)
+    // a re-delivery with one corrected close and the same dim
+    val bars2 = mkBars(Seq(
+      ("2025-04-17 07:00:00", "^GDAXI", 21001.5),
+      ("2025-04-18 07:00:00", "^GDAXI", 21100.0),
+      ("2025-04-17 13:30:00", "^GSPC", 5300.75)))
+    Pipeline.runLake(spark, bars2, dim, rates, indices, quotes)
+    val g2 = SnapshotLake.currentManifest(spark, indices).get
+    // one new generation, the same entries, not one data file added
+    assert(g2.gen == g1.gen + 1 && g2.entries == g1.entries)
+    assert(dataFiles(indices) == files1)
+    assert(SnapshotLake.changes(spark, indices, g1.gen, g2.gen).isEmpty)
+    assert(SnapshotLake.read(spark, indices).count() == 2)
+    // the facts still merged, and the dim generation still published first
+    assert(SnapshotLake.read(spark, quotes).filter($"close" === 21001.5).count() == 1)
+    val dimAt = SnapshotLake.manifestAt(spark, indices, g2.gen).publishedAtMs
+    val factAt = SnapshotLake.manifestAt(spark, quotes, g2.gen).publishedAtMs
+    assert(dimAt.isDefined && factAt.isDefined && dimAt.get <= factAt.get,
+      s"dim must publish before facts ($dimAt vs $factAt)")
+    // an empty delivery publishes in neither lake: generations stay aligned
+    // (landed as parquet, so the optimizer cannot fold the plan away)
+    bars.filter($"Close" < 0).write.parquet(s"$root/empty")
+    Pipeline.runLake(spark, spark.read.parquet(s"$root/empty"), dim, rates,
+      indices, quotes)
+    assert(SnapshotLake.currentManifest(spark, indices).get.gen == g2.gen &&
+      SnapshotLake.currentManifest(spark, quotes).get.gen == g2.gen)
+  }
+
+  test("dim no-op: a renamed index takes the merge path and the new name lands") {
+    val root = tmp()
+    val indices = s"$root/indices"; val quotes = s"$root/quotes"
+    Pipeline.runLake(spark, bars, dim, rates, indices, quotes)
+    val g1 = SnapshotLake.currentManifest(spark, indices).get.gen
+    val files1 = dataFiles(indices)
+    val renamed = Seq(
+      IndexMeta("^GDAXI", "DAX 40", "Germany", "XETRA", "EUR"),
+      IndexMeta("^GSPC", "S&P 500", "USA", "NYSE", "USD")).toDF()
+    Pipeline.runLake(spark, bars, renamed, rates, indices, quotes)
+    val names = SnapshotLake.read(spark, indices).collect()
+      .map(r => r.getAs[String]("ticker") -> r.getAs[String]("name")).toMap
+    assert(names == Map("^GDAXI" -> "DAX 40", "^GSPC" -> "S&P 500"))
+    assert(dataFiles(indices).diff(files1).nonEmpty, "the merge path writes data")
+    val delta = SnapshotLake.changes(spark, indices, g1, g1 + 1).collect()
+    assert(delta.map(r => (r.getAs[String]("ticker"), r.getAs[String]("_change_type")))
+      .toSeq == Seq(("^GDAXI", "update")))
+  }
+
+  test("dim no-op: a widened dim lake is not republished; the widen-only refusal fires") {
+    val root = tmp()
+    val indices = s"$root/indices"; val quotes = s"$root/quotes"
+    Pipeline.runLake(spark, bars, dim, rates, indices, quotes)
+    SnapshotLake.addColumn(spark, indices,
+      org.apache.spark.sql.types.StructField("sector",
+        org.apache.spark.sql.types.StringType))
+    val dimGen = SnapshotLake.currentManifest(spark, indices).get.gen
+    val factGen = SnapshotLake.currentManifest(spark, quotes).get.gen
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.runLake(spark, bars, dim, rates, indices, quotes)
+    }
+    assert(e.getMessage.contains("missing table column(s) sector"),
+      s"expected the widen-only refusal, got: ${e.getMessage}")
+    assert(SnapshotLake.currentManifest(spark, indices).get.gen == dimGen &&
+      SnapshotLake.currentManifest(spark, quotes).get.gen == factGen,
+      "a refused dim must publish nothing in either lake")
+  }
+
   test("FK gate is all-or-nothing: a rogue ticker lands NOTHING in either lake") {
     val root = tmp()
     val indices = s"$root/indices"; val quotes = s"$root/quotes"

@@ -333,7 +333,7 @@ class SnapshotLakeSpec extends SparkSuite {
     assert(totalFiles > 3, s"need a fragmented partition to prove skipping, got $totalFiles")
     // a narrow v-slice must READ fewer files than the partition holds...
     val sliced = SnapshotLake.readSlice(spark, dir, "v", Some(100L), Some(200L))
-    val readFiles = sliced.select(input_file_name()).distinct().count()
+    val readFiles = sliced.inputFiles.length
     assert(readFiles < totalFiles, s"no files skipped: $readFiles of $totalFiles")
     // ...with results byte-identical to the unpruned read + filter
     def keyset(df: org.apache.spark.sql.DataFrame) =
@@ -347,7 +347,7 @@ class SnapshotLakeSpec extends SparkSuite {
     val tsLo = java.sql.Timestamp.valueOf("2025-01-01 00:05:00")
     val tsHi = java.sql.Timestamp.valueOf("2025-01-01 00:06:40")
     val tsSliced = SnapshotLake.readSlice(spark, dir, "ts", Some(tsLo), Some(tsHi))
-    assert(tsSliced.select(input_file_name()).distinct().count() < totalFiles)
+    assert(tsSliced.inputFiles.length < totalFiles)
     assert(keyset(tsSliced) == keyset(SnapshotLake.read(spark, dir)
       .filter(col("ts") >= tsLo && col("ts") <= tsHi)))
     // half-open slices work; an unbounded slice is the plain read
@@ -362,6 +362,32 @@ class SnapshotLakeSpec extends SparkSuite {
     // vacuum keeps sidecars of still-referenced gens, drops expired ones
     SnapshotLake.vacuum(spark, dir)
     assert(SnapshotLake.readSlice(spark, dir, "v", Some(100L), Some(200L)).count() == 101)
+  }
+
+  test("stats sidecar ranges follow value order, not string order") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmp()
+    // Long 1..1000 range-clustered into 4 files: in string order the first
+    // file's range would read [1, 99] and the last one's [1000, 999], and
+    // both slices below would prune away every row they should return
+    val rows = (1 to 1000).map(i => (s"k$i", "p", i.toLong, i.toDouble))
+      .toDF("key", "dt", "v", "price")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try SnapshotLake.merge(spark, dir, rows, Seq("key"), "v", "dt",
+      statsCols = Seq("v"))
+    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m = SnapshotLake.currentManifest(spark, dir).get
+    val totalFiles = fs.listStatus(new Path(new Path(dir, "data"),
+      m.entries.head.dirName + s"/gen=${m.entries.head.gen}"))
+      .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
+    assert(totalFiles > 3, s"need a fragmented partition, got $totalFiles")
+    Seq((100L, 200L, 101L), (751L, 998L, 248L)).foreach { case (lo, hi, want) =>
+      val sliced = SnapshotLake.readSlice(spark, dir, "v", Some(lo), Some(hi))
+      assert(sliced.count() == want, s"slice [$lo, $hi] lost rows")
+      assert(sliced.inputFiles.length < totalFiles,
+        s"slice [$lo, $hi] read all $totalFiles files — the sidecar pruned nothing")
+    }
   }
 
   test("compaction re-captures stats sidecars; readSlices conjuncts prune") {
@@ -393,7 +419,7 @@ class SnapshotLakeSpec extends SparkSuite {
       .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
     assert(filesAfter >= 2 && filesAfter < files0.length)
     val sliced = SnapshotLake.readSlice(spark, dir, "v", Some(50L), Some(150L))
-    assert(sliced.select(input_file_name()).distinct().count() < filesAfter,
+    assert(sliced.inputFiles.length < filesAfter,
       "post-compact slice read every file — the re-captured sidecar is dead")
     assert(sliced.count() == 101)
     // multi-column conjunct: each slice may prune on its own column
