@@ -332,6 +332,24 @@ object IncrementalDedup {
       Seq("doc_id"), "left_semi")
   }
 
+  /** Corpus partitions: `doc_bucket = pmod(doc_id, CorpusBuckets)`. */
+  private val CorpusBuckets = 16
+
+  /** The corpus writer — the idempotent sink every admission loop persists
+    * through, and the one owner of the corpus layout: a [[graft.etl.SnapshotLake]]
+    * keyed on `doc_id` (last write wins, `doc_id` also the version),
+    * partitioned by the derived `doc_bucket`. Each call with rows publishes
+    * ONE manifest generation that rewrites only the buckets the batch
+    * touches (all of them at worst), so a reader never sees the corpus
+    * absent or half-written, and `readAt` at the previous generation is the
+    * pre-admit corpus. Read it back with [[graft.etl.SnapshotLake.read]]; an
+    * empty batch publishes nothing.
+    */
+  def mergeIntoCorpus(spark: SparkSession, corpusPath: String, docs: DataFrame): Unit =
+    graft.etl.SnapshotLake.merge(spark, corpusPath,
+      docs.withColumn("doc_bucket", pmod(col("doc_id"), lit(CorpusBuckets))),
+      keys = Seq("doc_id"), versionCol = "doc_id", partitionCol = "doc_bucket")
+
   /** Admit the batch's content-novel documents: persist them through the
     * caller's idempotent sink, then append their hashes to the index —
     * returns the number admitted. Replaying the same batch after ANY crash

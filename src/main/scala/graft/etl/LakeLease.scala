@@ -5,10 +5,10 @@ import org.apache.hadoop.fs.Path
 
 /** Multi-writer guard for the lake path's rename-based mutations.
   *
-  * [[SnapshotLake]]'s commits, [[Upsert.mergeIntoParquet]],
-  * [[Upsert.compactParquetDir]] and the [[graft.dedup.IncrementalDedup]]
-  * index appends are all SINGLE-WRITER protocols: their crash contracts
-  * reason about one interrupted writer replaying, not two live writers
+  * [[SnapshotLake]]'s commits, [[Upsert.compactParquetDir]] and the
+  * [[graft.dedup.IncrementalDedup]] index appends are all SINGLE-WRITER
+  * protocols: their crash contracts reason about one interrupted writer
+  * replaying, not two live writers
   * interleaving — two concurrent jobs targeting one table can each park
   * the other's freshly installed directory (or reuse its generation
   * number) and silently resurrect stale data. The reference

@@ -47,7 +47,10 @@ object Pipeline {
         .as("missing_rate"))
     (observed, () => {
       val m = obs.get
-      RunMetrics(
+      // a batch the optimizer folds to an empty relation (`limit(0)` over a
+      // local frame) never runs the observed plan: no metrics, zero rows
+      if (m.isEmpty) RunMetrics(0, 0, 0)
+      else RunMetrics(
         rows = m("rows").asInstanceOf[Long],
         nullClose = m("null_close").asInstanceOf[Long],
         missingRate = m("missing_rate").asInstanceOf[Long])

@@ -313,7 +313,7 @@ object SnapshotLake {
   }
 
   /** Every RETAINED snapshot generation, ascending — the manifest chain an
-    * incremental consumer ([[graft.streaming.LakeChangeFeed]]) follows.
+    * incremental consumer ([[graft.sources.LakeCdcSource]]) follows.
     * Gens are contiguous by construction (each commit publishes
     * `current + 1`), so after a [[vacuum]] the retained chain is a suffix.
     * Driver-side listing of `_manifests/` only: O(#retained) names, no

@@ -20,9 +20,11 @@ import org.apache.spark.sql.functions._
   *  2. an idempotent keyed sink (JDBC ON CONFLICT writer, or a
   *     storage-level merge for lake targets).
   *
-  * Partitioned keyed tables have one durable format, [[SnapshotLake]]
-  * (manifest commits); the parquet writers here are whole-directory ones
-  * for the unpartitioned dedup corpus and admission-index dirs.
+  * Keyed lake tables have one durable format, [[SnapshotLake]] (manifest
+  * commits; the dedup corpus included, see
+  * [[graft.dedup.IncrementalDedup.mergeIntoCorpus]]). The one parquet
+  * writer left here, [[compactParquetDir]], maintains the blind-append
+  * admission-index dirs.
   */
 object Upsert {
 
@@ -41,73 +43,6 @@ object Upsert {
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  /** Parquet-backed MERGE: read current state (if any), union the deduped
-    * updates, keep the newest version per key, atomically swap directories.
-    * Running it twice with the same batch is a no-op (idempotency ≙ the
-    * reference's re-fetch-overlap tolerance, `README.md:37,166`).
-    *
-    * At lake scale this role is played by a table format's MERGE (Delta /
-    * Iceberg); the two-phase directory swap is the local-FS stand-in that
-    * keeps the same contract: readers never observe a partial write. It
-    * re-reads and re-writes the whole directory per batch, so it serves
-    * unpartitioned tables only; partitioned ones use [[SnapshotLake.merge]].
-    */
-  def mergeIntoParquet(
-      spark: SparkSession,
-      path: String,
-      updates: DataFrame,
-      keys: Seq[String],
-      versionCol: String,
-      tieBreakers: Seq[String] = Nil): Unit = {
-    val deduped = lastWriteWins(updates, keys, versionCol, tieBreakers)
-      .withColumn("__gen", lit(1L))
-    // Writer serialization: the recover/read/stage/swap sequence below is a
-    // single-writer protocol — the lease makes a second concurrent writer
-    // fail loudly instead of interleaving renames (see [[LakeLease]]).
-    LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      mergeIntoParquetLocked(spark, path, deduped, keys, versionCol, tieBreakers)
-    }
-  }
-
-  private def mergeIntoParquetLocked(
-      spark: SparkSession,
-      path: String,
-      deduped: DataFrame,
-      keys: Seq[String],
-      versionCol: String,
-      tieBreakers: Seq[String]): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(path)
-    // Crash recovery FIRST: a previous run that died between its two swap
-    // renames leaves the ONLY copy of the table parked at __old with `cur`
-    // missing — without this rollback, the replay would read empty state,
-    // merge just the batch, and then DELETE the parked copy (silent loss of
-    // every previously merged row). Parked + destination present = the
-    // install completed; drop the stale park.
-    locally {
-      val parked = new Path(path + "__old")
-      if (fs.exists(parked)) {
-        if (!fs.exists(cur)) renameOrThrow(fs, parked, cur)
-        else fs.delete(parked, true)
-      }
-    }
-    val merged =
-      if (fs.exists(cur)) {
-        val existing = spark.read.parquet(path).withColumn("__gen", lit(0L))
-        // On key collision the update (__gen=1) wins regardless of version —
-        // DO UPDATE semantics (postgres_writer.py:234-240), then LWW inside
-        // each generation via versionCol.
-        lastWriteWins(existing.unionByName(deduped), keys, "__gen", versionCol +: tieBreakers)
-      } else deduped
-    val tmp = new Path(path + "__staging")
-    merged.drop("__gen").write.mode("overwrite").parquet(tmp.toString)
-    val old = new Path(path + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(cur)) renameOrThrow(fs, cur, old)
-    renameOrThrow(fs, tmp, cur)
-    fs.delete(old, true)
   }
 
   /** Small-file compaction for a FLAT (non-partitioned) parquet dir — the

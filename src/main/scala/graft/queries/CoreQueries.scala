@@ -353,33 +353,34 @@ object CoreQueries {
       .orderBy("user_id", "event_type")
   }
 
-  /** E3i — the STANDING CDC consumer loop ([[graft.streaming.LakeChangeFeed
-    * .followAvailableNow]]): e3h's point read (`changes(from, to)`) turned
-    * into the production shape — follow the manifest chain, receive each
-    * commit's delta exactly once (position = durable markers beside the
-    * checkpoint; replay-suppressed across restarts; vacuum outrunning the
-    * consumer fails LOUDLY naming the missing snapshot — LakeCdcSpec pins
-    * all three). History: gen 1 = even-id batch (delivered as the
-    * bootstrap all-insert snapshot), gen 2 = odd-id LWW merge, gen 3 = key
-    * takedown, each arriving as its own delta. The gate FOLDS the deltas
-    * in order into a downstream replica (keys replaced, deletes dropped —
-    * what a real consumer's keyed sink does), so the oracle-checked law is
-    * "per-commit consumption reconstructs the final snapshot": the folded
-    * replica must equal the two-batch LWW state minus the deleted keys.
+  /** E3i — the STANDING CDC consumer loop: e3h's point read
+    * (`changes(from, to)`) turned into the production shape — a
+    * `graft-lake-cdc` stream ([[graft.sources.LakeCdcSource]]) drained with
+    * `Trigger.AvailableNow` into `foreachBatch`, one commit per micro-batch
+    * (`maxGensPerBatch = 1`). Position lives in the query's own checkpoint:
+    * each commit's delta arrives exactly once across restarts, and a vacuum
+    * or reset under the consumer fails the stream LOUDLY naming the
+    * snapshot (LakeCdcSpec pins all three). History: gen 1 = even-id batch
+    * (delivered as the bootstrap all-insert snapshot), gen 2 = odd-id LWW
+    * merge, gen 3 = key takedown, each arriving as its own delta. The gate
+    * FOLDS the deltas in order into a downstream replica (keys replaced,
+    * deletes dropped — what a real consumer's keyed sink does), so the
+    * oracle-checked law is "per-commit consumption reconstructs the final
+    * snapshot": the folded replica must equal the two-batch LWW state minus
+    * the deleted keys. e3l consumes the same stream through the file sink
+    * and folds it set-based (last commit per key); this is the sequential
+    * fold.
     *
-    * NOTE for long-history consumers: this gate's per-commit
-    * `left_anti` + `union` fold grows an unchained lineage per generation
-    * — fine for the gate's 3 commits, wrong for a standing consumer over
-    * hundreds. Production folds should compose the follower with
-    * [[graft.streaming.StreamingIngest.foldStateBatchOnce]] (gen as the
-    * batch id — the LakeChangeFeed scaladoc shows the composition), which
-    * checkpoints state per fold, or consume through the streaming face
-    * (e3l / [[graft.sources.LakeCdcSource]]) whose sink owns the state.
+    * The replica is materialized (`localCheckpoint`) inside each
+    * micro-batch, so no frame outlives its batch and the lineage stays one
+    * fold deep. A standing consumer over hundreds of commits should fold
+    * into durable state instead: [[graft.streaming.StreamingIngest
+    * .foldStateBatchOnce]] with the commit generation as the batch id
+    * (LakeCdcSpec shows the composition).
     */
   def e3iLakeCdcFollow(s: SparkSession, dir: String): DataFrame = {
     val root = ScratchLakes.fresh("e3i")
     val lake = s"$root/events"
-    val consumer = s"$root/consumer"
     val ev = t(s, dir, "events")
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts"), col("value"))
@@ -393,23 +394,26 @@ object CoreQueries {
     // the consumer's fold: per delta, every key it mentions is replaced —
     // non-deletes re-land (post-image), deletes just drop. NULL-SAFE key
     // match, the lake's own LWW identity.
-    var replica: DataFrame = null
-    graft.streaming.LakeChangeFeed.followAvailableNow(s, lake, consumer,
-      (delta, _) => {
-        val survivors =
-          delta.filter(col("_change_type") =!= "delete").drop("_change_type")
-        replica =
-          if (replica == null) survivors
-          else {
-            val cond = keys.map(k =>
-              col(s"__t.`$k`") <=> col(s"__d.`$k`")).reduce(_ && _)
-            replica.alias("__t")
-              .join(delta.select(keys.map(col): _*).distinct().alias("__d"),
-                cond, "left_anti")
-              .unionByName(survivors)
-          }
-      })
-    replica
+    var replica: Option[DataFrame] = None
+    s.readStream.format("graft-lake-cdc").option("maxGensPerBatch", 1L).load(lake)
+      .writeStream
+      .option("checkpointLocation", s"$root/cdc_ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (delta: DataFrame, _: Long) =>
+        val survivors = delta.filter(col("_change_type") =!= "delete")
+          .drop("_change_type", "_commit_gen")
+        val folded = replica.fold(survivors) { cur =>
+          val cond = keys.map(k =>
+            col(s"__t.`$k`") <=> col(s"__d.`$k`")).reduce(_ && _)
+          cur.alias("__t")
+            .join(delta.select(keys.map(col): _*).alias("__d"), cond, "left_anti")
+            .unionByName(survivors)
+        }
+        replica = Some(folded.localCheckpoint())
+      }
+      .start()
+      .awaitTermination()
+    replica.get
       .select(col("user_id"), col("event_type"), col("event_id"),
         ntz(col("ts")).as("timestamp_utc"), col("value"))
       .orderBy("user_id", "event_type")
@@ -459,7 +463,7 @@ object CoreQueries {
     * [[org.apache.spark.sql.catalyst.plans.logical.UpdateTable]] and
     * re-binds condition + SET expressions by name. Only partitions
     * CONTAINING a matching row rewrite (untouched gens stay byte-identical
-    * and keep their generations — LakeCdcSpec pins it); assigning the
+    * and keep their generations — SnapshotLakeSpec pins it); assigning the
     * partition column or a merge key refuses loudly. Oracle = the LWW
     * winners with the assignment applied under the predicate (`value * 2`
     * is float-exact, so the hash gate holds bitwise).
@@ -486,12 +490,12 @@ object CoreQueries {
   }
 
   /** E3l — the lake's `spark.readStream` face
-    * ([[graft.sources.LakeCdcSource]]): e3i's standing consumer loop
-    * re-expressed as a Structured Streaming SOURCE — offsets are manifest
+    * ([[graft.sources.LakeCdcSource]]) into a stock file sink: the source
+    * e3i folds through `foreachBatch` — offsets are manifest
     * generations, each micro-batch is the partition-scoped
     * [[graft.etl.SnapshotLake.changes]] delta (+ the bootstrap snapshot as
     * one all-insert batch), and position lives in the query's OWN
-    * checkpoint instead of a bespoke marker ledger, so
+    * checkpoint, so
     * `spark.readStream.format("graft-lake-cdc")` feeds any stock sink with
     * the engine's exactly-once contract (LakeCdcStreamSpec pins restart
     * resume, admission control, and the vacuum/reset guardrails). Same
@@ -804,7 +808,7 @@ object CoreQueries {
     * double arithmetic is bit-identical to the oracle's. Built-in `corr`
     * would not match (float accumulation order).
     *
-    * Cost note (measured, `tools/ProfileMisc`): the runtime is the
+    * Cost note (measured at sf0.1): the runtime is the
     * pairs×shared-days product stream through the decimal aggregation —
     * inherent to exact pairwise stats — PLUS, until round 15, a second
     * full events scan+aggregate: the pushed-down watchlist filter makes
@@ -3008,9 +3012,9 @@ object CoreQueries {
          WHERE user_id NOT IN (2, 3, 5, 7, 11, 13)
          ORDER BY user_id, event_type""",
     "e3l_lake_stream_cdc" ->
-      // e3i's oracle verbatim — the streaming face must fold to the same
-      // final snapshot the batch follower reconstructs: two-batch LWW
-      // state minus the deleted keys
+      // e3i's oracle verbatim — the file-sink consumer must fold to the
+      // same final snapshot e3i's sequential fold reconstructs: two-batch
+      // LWW state minus the deleted keys
       """WITH b0 AS (
            SELECT user_id, event_type, event_id, ts, value
            FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type

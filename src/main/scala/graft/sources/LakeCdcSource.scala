@@ -32,17 +32,21 @@ import graft.etl.SnapshotLake
   *     .writeStream …                       // any stock sink
   * }}}
   *
-  * [[graft.streaming.LakeChangeFeed.followAvailableNow]] is the same loop
-  * with a bespoke marker ledger; this face retires that ledger for
-  * consumers that already run a streaming query: position lives in the
-  * query's OWN checkpoint (Spark's offset/commit WAL), so restart/resume,
+  * It is the engine's one way to follow a lake's commits: position lives
+  * in the query's OWN checkpoint (Spark's offset/commit WAL), so restart/resume,
   * exactly-once delivery into idempotent or transactional sinks,
   * `Trigger.AvailableNow` draining, and composition with watermarks and
   * stateful operators all come from the engine instead of hand-rolled
   * state (≙ the reference's 6-hour incremental tick generalized,
   * `airflow/dags/market_data_dag.py:13-37`).
   *
-  * Semantics (the CDC contract, identical to the batch follower's):
+  * A consumer that folds each commit in order (e3i) reads with
+  * `maxGensPerBatch = 1` into `foreachBatch`; a non-idempotent fold keys
+  * its own ledger on `_commit_gen` ([[graft.streaming.StreamingIngest
+  * .foldStateBatchOnce]]), so even a lost checkpoint cannot fold a commit
+  * twice.
+  *
+  * Semantics (the CDC contract):
   *  - OFFSETS ARE MANIFEST GENERATIONS: offset `{"gen": n}` means "every
   *    commit ≤ n consumed". A micro-batch `(start, end]` delivers each
   *    commit's delta — [[graft.etl.SnapshotLake.changes]]`(g-1, g)` — as
@@ -315,8 +319,7 @@ private[sources] class LakeCdcMicroBatchStream(
       case Some(_) => (e.gen, None) // empty range before the bootstrap
       case None =>
         // the per-commit chain anchors on the START snapshot — it must
-        // still be retained to diff against (the batch follower's exact
-        // guardrail)
+        // still be retained to diff against
         if (e.gen > s.gen && !gens.contains(s.gen)) missing(s.gen, "diff base")
         (s.gen, None)
     }

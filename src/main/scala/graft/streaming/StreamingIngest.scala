@@ -309,8 +309,12 @@ object StreamingIngest {
     * uncommitted micro-batch (at-least-once), and `admitAndCommit` replays
     * to convergence (idempotent corpus sink first, blind index append
     * second), so the corpus never holds two copies of one content hash.
-    * This is the standing ingest loop of a training-data pipeline: crawl →
-    * landing dir → admit-if-novel → dedup'd corpus.
+    * The corpus is a snapshot lake written by
+    * [[graft.dedup.IncrementalDedup.mergeIntoCorpus]]: each admitting batch
+    * publishes one generation, a batch that admits nothing publishes none;
+    * read it with [[graft.etl.SnapshotLake.read]]. This is the standing
+    * ingest loop of a training-data pipeline: crawl → landing dir →
+    * admit-if-novel → dedup'd corpus.
     */
   def admitDocumentsAvailableNow(
       docs: DataFrame,
@@ -323,8 +327,7 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.dedup.IncrementalDedup.admitAndCommit(
           batch.sparkSession, indexPath, batch,
-          novel => Upsert.mergeIntoParquet(
-            novel.sparkSession, corpusPath, novel, Seq("doc_id"), "doc_id"))
+          graft.dedup.IncrementalDedup.mergeIntoCorpus(batch.sparkSession, corpusPath, _))
         ()
       }
       .start()
@@ -340,8 +343,9 @@ object StreamingIngest {
     * lanes match a collided doc's — banding false positives rescued with
     * zero text passes); <= 0 runs the RECALL mode (suspects dropped
     * outright, the cheapest gate). Same crash-contract composition as the
-    * exact gate: engine replay (at-least-once) × sink-first admit
-    * (idempotent MERGE, blind per-doc-atomic index append) ⇒ replay
+    * exact gate and the same corpus writer: engine replay (at-least-once)
+    * × sink-first admit (idempotent corpus merge, blind per-doc-atomic
+    * index append) ⇒ replay
     * converges and the corpus never holds two near-dup admits of one gate
     * decision. Docs too short to shingle are EXCLUDED by the gate — route
     * them through [[admitDocumentsAvailableNow]]'s exact gate.
@@ -356,8 +360,8 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sink = (novel: DataFrame) => Upsert.mergeIntoParquet(
-          novel.sparkSession, corpusPath, novel, Seq("doc_id"), "doc_id")
+        val sink: DataFrame => Unit =
+          graft.dedup.IncrementalDedup.mergeIntoCorpus(batch.sparkSession, corpusPath, _)
         if (minLanes > 0)
           graft.dedup.IncrementalDedup.admitAndCommitMinhashEstimated(
             batch.sparkSession, bucketIndexPath, batch, sink, minLanes)
@@ -504,6 +508,12 @@ object StreamingIngest {
     * state × state merge), and publish state + fold-ledger in one atomic
     * rename (see the replay analysis on [[foldVocabBatchOnce]]'s scaladoc
     * header above — it applies verbatim to every lane riding this).
+    *
+    * A lake CDC consumer composes it with the `graft-lake-cdc` stream
+    * ([[graft.sources.LakeCdcSource]]): inside `foreachBatch`, fold each
+    * commit's rows with its `_commit_gen` as `batchId`. The ledger is then
+    * keyed on the lake's own history, not on the query's checkpoint, so a
+    * re-delivery from a fresh checkpoint folds nothing twice.
     */
   def foldStateBatchOnce(
       batch: DataFrame,

@@ -669,8 +669,8 @@ object VerifySf1 {
       // e3l: the spark.readStream CDC face (bootstrap + per-commit deltas
       // through Structured Streaming's own checkpointing, folded by
       // last-commit-per-key) ↔ the same lake-free LWW algebra as e3i —
-      // the streaming source must reconstruct the final snapshot at 1.5M
-      // events exactly as the batch follower does
+      // the file-sink consumer must reconstruct the final snapshot at 1.5M
+      // events exactly as e3i's foreachBatch fold does
       ("e3l_lake_stream_cdc",
         () => CoreQueries.e3lLakeStreamCdc(spark, work),
         () => {

@@ -246,8 +246,8 @@ class DedupSpec extends SparkSuite {
     val index = s"$root/buckets"
     val corpus = s"$root/corpus"
     def sink(df: org.apache.spark.sql.DataFrame): Unit =
-      graft.etl.Upsert.mergeIntoParquet(spark, corpus, df, Seq("doc_id"), "doc_id")
-    def corpusDf = spark.read.parquet(corpus).select("doc_id", "text")
+      IncrementalDedup.mergeIntoCorpus(spark, corpus, df)
+    def corpusDf = graft.etl.SnapshotLake.read(spark, corpus).select("doc_id", "text")
     def corpusIds = corpusDf.select("doc_id").collect().map(_.getLong(0)).toSet
 
     // batch 1 admits the base (verified mode, empty corpus/index)
@@ -360,9 +360,10 @@ class DedupSpec extends SparkSuite {
     val index = s"$root/index"
     val corpus = s"$root/corpus"
     def sink(df: org.apache.spark.sql.DataFrame): Unit =
-      graft.etl.Upsert.mergeIntoParquet(spark, corpus, df, Seq("doc_id"), "doc_id")
+      IncrementalDedup.mergeIntoCorpus(spark, corpus, df)
     def corpusIds: Set[Long] =
-      spark.read.parquet(corpus).select("doc_id").collect().map(_.getLong(0)).toSet
+      graft.etl.SnapshotLake.read(spark, corpus).select("doc_id").collect()
+        .map(_.getLong(0)).toSet
 
     // the index dir EXISTS but holds no data files (≙ a crash during the
     // very first append) — the pinned-schema read must treat it as empty,
@@ -399,15 +400,48 @@ class DedupSpec extends SparkSuite {
     assert(IncrementalDedup.admitAndCommit(spark, index, b3, sink) == 0L)
   }
 
+  test("corpus admission: one generation per admitting batch; readAt keeps the pre-admit corpus") {
+    import spark.implicits._
+    import graft.etl.SnapshotLake
+    val root = java.nio.file.Files.createTempDirectory("graft_admit_gen").toString
+    val index = s"$root/index"
+    val corpus = s"$root/corpus"
+    def sink(df: org.apache.spark.sql.DataFrame): Unit =
+      IncrementalDedup.mergeIntoCorpus(spark, corpus, df)
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    def current = SnapshotLake.currentManifest(spark, corpus)
+
+    val b1 = Seq((1L, "alpha beta"), (2L, "gamma delta")).toDF("doc_id", "text")
+    assert(IncrementalDedup.admitAndCommit(spark, index, b1, sink) == 2L)
+    assert(current.map(_.gen).contains(1L))
+    // doc 3 duplicates doc 1's text; 17 shares doc 1's bucket, 19 opens bucket 3
+    val b2 = Seq((3L, "alpha beta"), (17L, "epsilon zeta"), (19L, "eta theta"))
+      .toDF("doc_id", "text")
+    assert(IncrementalDedup.admitAndCommit(spark, index, b2, sink) == 2L)
+    val g2 = current.get
+    assert(g2.gen == 2L, "one admitting batch publishes exactly one generation")
+    assert(ids(SnapshotLake.read(spark, corpus)) == Set(1L, 2L, 17L, 19L))
+    assert(ids(SnapshotLake.readAt(spark, corpus, 1L)) == Set(1L, 2L),
+      "the previous generation is the pre-admit corpus")
+    // only the touched buckets were rewritten: doc 2's bucket keeps gen 1
+    assert(g2.entries.map(e => e.value -> e.gen).toMap ==
+      Map("1" -> 2L, "2" -> 1L, "3" -> 2L))
+    // a replay admits 0 and publishes nothing
+    assert(IncrementalDedup.admitAndCommit(spark, index, b2, sink) == 0L)
+    assert(current.map(_.gen).contains(2L))
+  }
+
   test("minhash admission: near-dups blocked across batches, distinct text admitted") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_admit_lsh").toString
     val index = s"$root/buckets"
     val corpus = s"$root/corpus"
     def sink(df: org.apache.spark.sql.DataFrame): Unit =
-      graft.etl.Upsert.mergeIntoParquet(spark, corpus, df, Seq("doc_id"), "doc_id")
+      IncrementalDedup.mergeIntoCorpus(spark, corpus, df)
     def corpusIds: Set[Long] =
-      spark.read.parquet(corpus).select("doc_id").collect().map(_.getLong(0)).toSet
+      graft.etl.SnapshotLake.read(spark, corpus).select("doc_id").collect()
+        .map(_.getLong(0)).toSet
 
     val base = (1 to 60).map(i => s"tok$i").mkString(" ")
     val nearDup = ((1 to 60).map(i => s"tok$i").updated(29, "CHANGED")).mkString(" ")

@@ -131,37 +131,17 @@ class EtlSpec extends SparkSuite {
 
   test("E3: parquet merge sink is idempotent and upserts") {
     val dir = Files.createTempDirectory("graft_upsert").toString + "/quotes"
+    def state = SnapshotLake.read(spark, dir).collect()
+      .map(r => r.getAs[String]("key") -> r.getAs[Double]("price")).toMap
     val b1 = Seq(("k1", 1L, 10.0), ("k2", 1L, 20.0)).toDF("key", "v", "price")
-    Upsert.mergeIntoParquet(spark, dir, b1, Seq("key"), "v")
+    SnapshotLake.merge(spark, dir, b1, Seq("key"), "v", "key")
     // re-running the same batch changes nothing (idempotency, README.md:37)
-    Upsert.mergeIntoParquet(spark, dir, b1, Seq("key"), "v")
-    assert(spark.read.parquet(dir).count() == 2)
+    SnapshotLake.merge(spark, dir, b1, Seq("key"), "v", "key")
+    assert(state == Map("k1" -> 10.0, "k2" -> 20.0))
     // overlapping re-delivery with updated values: DO UPDATE wins
     val b2 = Seq(("k2", 2L, 25.0), ("k3", 1L, 30.0)).toDF("key", "v", "price")
-    Upsert.mergeIntoParquet(spark, dir, b2, Seq("key"), "v")
-    val state = spark.read.parquet(dir).collect()
-      .map(r => r.getString(0) -> r.getDouble(2)).toMap
+    SnapshotLake.merge(spark, dir, b2, Seq("key"), "v", "key")
     assert(state == Map("k1" -> 10.0, "k2" -> 25.0, "k3" -> 30.0))
-  }
-
-  test("E3: whole-table merge recovers the parked copy after an interrupted swap") {
-    import java.nio.file.{Files => JFiles, Paths}
-    val dir = Files.createTempDirectory("graft_mcrash").toString + "/quotes"
-    val b1 = Seq(("k1", 1L, 10.0), ("k2", 1L, 20.0)).toDF("key", "v", "price")
-    Upsert.mergeIntoParquet(spark, dir, b1, Seq("key"), "v")
-    // simulate a crash between the two swap renames: the ONLY copy of the
-    // table is parked at __old and the live path is gone
-    JFiles.move(Paths.get(dir), Paths.get(dir + "__old"))
-    assert(!JFiles.exists(Paths.get(dir)))
-    // replaying a merge must roll the parked copy back, not read empty
-    // state and then delete it
-    val b2 = Seq(("k3", 1L, 30.0)).toDF("key", "v", "price")
-    Upsert.mergeIntoParquet(spark, dir, b2, Seq("key"), "v")
-    val state = spark.read.parquet(dir).collect()
-      .map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(state == Map("k1" -> 10.0, "k2" -> 20.0, "k3" -> 30.0),
-      s"previously merged rows lost: $state")
-    assert(!JFiles.exists(Paths.get(dir + "__old")))
   }
 
   test("E3: partition-scoped merge rewrites only affected partitions") {

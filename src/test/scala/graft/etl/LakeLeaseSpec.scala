@@ -107,7 +107,7 @@ class LakeLeaseSpec extends SparkSuite {
     val index = s"$root/index"
     val corpus = s"$root/corpus"
     def sink(df: org.apache.spark.sql.DataFrame): Unit =
-      Upsert.mergeIntoParquet(spark, corpus, df, Seq("doc_id"), "doc_id")
+      graft.dedup.IncrementalDedup.mergeIntoCorpus(spark, corpus, df)
     val b = Seq((1L, "alpha beta")).toDF("doc_id", "text")
     val lease = new java.io.File(index + "__lease")
     assert(lease.createNewFile())

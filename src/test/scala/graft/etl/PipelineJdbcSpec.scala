@@ -115,4 +115,18 @@ class PipelineJdbcSpec extends SparkSuite {
     assert(queryRows(
       """SELECT COUNT(*) FROM indices WHERE "ticker" = '^ROGUE'""")(_.getLong(1)) == Seq(0L))
   }
+
+  test("an empty batch the optimizer folds away: zero metrics, no row written") {
+    val emptyUrl = "jdbc:derby:memory:graft_pipeline_jdbc_empty;create=true"
+    // limit(0) over a local frame folds the whole plan to an empty relation,
+    // so the observed plan never runs
+    val m = Pipeline.runJdbc(spark, bars.limit(0), dim, rates, emptyUrl,
+      ts("2025-05-01 00:00:00"))
+    assert(m == Pipeline.RunMetrics(0, 0, 0))
+    val c = DriverManager.getConnection(emptyUrl)
+    try Seq("indices", "quotes").foreach { t =>
+      val rs = c.createStatement().executeQuery(s"SELECT COUNT(*) FROM $t")
+      assert(rs.next() && rs.getLong(1) == 0L, s"$t must stay empty")
+    } finally c.close()
+  }
 }

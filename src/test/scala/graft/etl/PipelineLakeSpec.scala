@@ -130,6 +130,22 @@ class PipelineLakeSpec extends SparkSuite {
       SnapshotLake.currentManifest(spark, quotes).get.gen == g2.gen)
   }
 
+  test("an empty batch the optimizer folds away: zero metrics, nothing committed") {
+    val root = tmp()
+    val indices = s"$root/indices"; val quotes = s"$root/quotes"
+    // limit(0) over a local frame folds the whole plan to an empty relation,
+    // so the observed plan never runs
+    val empty = Pipeline.runLake(spark, bars.limit(0), dim, rates, indices, quotes)
+    assert(empty == Pipeline.RunMetrics(0, 0, 0))
+    assert(SnapshotLake.currentManifest(spark, indices).isEmpty &&
+      SnapshotLake.currentManifest(spark, quotes).isEmpty)
+    Pipeline.runLake(spark, bars, dim, rates, indices, quotes)
+    assert(Pipeline.runLake(spark, bars.limit(0), dim, rates, indices, quotes) ==
+      Pipeline.RunMetrics(0, 0, 0))
+    assert(SnapshotLake.currentManifest(spark, indices).get.gen == 1 &&
+      SnapshotLake.currentManifest(spark, quotes).get.gen == 1)
+  }
+
   test("dim no-op: a renamed index takes the merge path and the new name lands") {
     val root = tmp()
     val indices = s"$root/indices"; val quotes = s"$root/quotes"

@@ -35,10 +35,10 @@ class PropertySpec extends SparkSuite {
     (1 to 5).foreach { trial =>
       val dir = Files.createTempDirectory(s"graft_prop$trial").toString + "/t"
       val b = randomBatch(50).toDF("key", "v", "price")
-      Upsert.mergeIntoParquet(spark, dir, b, Seq("key"), "v", Seq("price"))
-      val once = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-      Upsert.mergeIntoParquet(spark, dir, b, Seq("key"), "v", Seq("price"))
-      val twice = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+      SnapshotLake.merge(spark, dir, b, Seq("key"), "v", "key", Seq("price"))
+      val once = SnapshotLake.read(spark, dir).collect().map(_.toString).sorted.toSeq
+      SnapshotLake.merge(spark, dir, b, Seq("key"), "v", "key", Seq("price"))
+      val twice = SnapshotLake.read(spark, dir).collect().map(_.toString).sorted.toSeq
       assert(once == twice, s"trial $trial not idempotent")
     }
   }

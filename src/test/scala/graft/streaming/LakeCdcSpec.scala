@@ -4,14 +4,19 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSuite
 import graft.etl.SnapshotLake
 
-/** The standing CDC consumer ([[LakeChangeFeed]]): multi-commit history
-  * delivered in order and exactly once across restarts, the bootstrap
-  * snapshot, crash-replay suppression, the vacuum guardrail, and the
-  * exactly-once composition with the fold ledger.
+/** The standing CDC consumer: a `graft-lake-cdc` stream
+  * ([[graft.sources.LakeCdcSource]]) drained with `Trigger.AvailableNow`
+  * into `foreachBatch`, one commit per micro-batch — multi-commit history
+  * delivered in order and exactly once across restarts (position = the
+  * query's checkpoint), the bootstrap snapshot, replay of a failed batch,
+  * the vacuum and reset guardrails, and the exactly-once composition with
+  * the fold ledger. LakeCdcStreamSpec covers the source through the file
+  * sink.
   */
 class LakeCdcSpec extends SparkSuite {
   import spark.implicits._
@@ -30,86 +35,106 @@ class LakeCdcSpec extends SparkSuite {
     df.collect().map(r =>
       r.getAs[String]("key") -> r.getAs[String]("_change_type")).toMap
 
+  /** One consumer tick: every commit not yet in `ckpt`'s commit log goes to
+    * `f(delta, generation)`, one commit per micro-batch, in generation
+    * order; then the query stops. Returns the generations delivered.
+    */
+  private def follow(lake: String, ckpt: String)(f: (DataFrame, Long) => Unit): Seq[Long] = {
+    var delivered = Vector.empty[Long]
+    spark.readStream.format("graft-lake-cdc").option("maxGensPerBatch", 1L).load(lake)
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (delta: DataFrame, _: Long) =>
+        val gen = delta.select(max(col("_commit_gen"))).head().getLong(0)
+        f(delta.drop("_commit_gen"), gen)
+        delivered :+= gen
+      }
+      .start()
+      .awaitTermination()
+    delivered
+  }
+
+  /** Micro-batches the query's commit log records as done. */
+  private def committedBatches(ckpt: String): Int =
+    Option(new java.io.File(s"$ckpt/commits").list()).fold(0)(_.count(_.forall(_.isDigit)))
+
   test("follow: bootstrap + per-commit deltas, in order, exactly once across restarts") {
     val root = tmp("follow")
-    val lake = s"$root/t"; val consumer = s"$root/c"
+    val lake = s"$root/t"; val ckpt = s"$root/c"
     SnapshotLake.merge(spark, lake, b1, Seq("key"), "v", "dt") // gen 1
     SnapshotLake.merge(spark, lake, b2, Seq("key"), "v", "dt") // gen 2
     SnapshotLake.delete(spark, lake, col("key") === "k2")      // gen 3
     var got = List.empty[(Long, Map[String, String])]
     val f = (df: DataFrame, g: Long) => { got :+= ((g, types(df))); () }
     // tick 1: bootstrap (gen 1 as all-insert) + the two later deltas
-    assert(LakeChangeFeed.followAvailableNow(spark, lake, consumer, f)
-      == Seq(1L, 2L, 3L))
+    assert(follow(lake, ckpt)(f) == Seq(1L, 2L, 3L))
     assert(got == List(
       (1L, Map("k1" -> "insert", "k2" -> "insert")),
       (2L, Map("k1" -> "update", "k3" -> "insert")),
       (3L, Map("k2" -> "delete"))))
-    // tick 2 (a "restart" — position is durable markers, not process state):
+    // tick 2 (a restart — position is the checkpoint, not process state):
     // caught up, nothing re-delivered
-    assert(LakeChangeFeed.followAvailableNow(spark, lake, consumer, f).isEmpty)
+    assert(follow(lake, ckpt)(f).isEmpty)
     assert(got.length == 3)
     // a new commit arrives: exactly its delta is delivered
     SnapshotLake.merge(spark, lake,
       Seq(("k4", "2025-01-04", 1L, 40.0)).toDF("key", "dt", "v", "price"),
       Seq("key"), "v", "dt") // gen 4
-    assert(LakeChangeFeed.followAvailableNow(spark, lake, consumer, f)
-      == Seq(4L))
+    assert(follow(lake, ckpt)(f) == Seq(4L))
     assert(got.last == ((4L, Map("k4" -> "insert"))))
-    assert(LakeChangeFeed.lastConsumedGen(spark, consumer).contains(4L))
+    assert(committedBatches(ckpt) == 4)
   }
 
   test("crash inside f: the unmarkered batch replays once, then suppression holds") {
     val root = tmp("crash")
-    val lake = s"$root/t"; val consumer = s"$root/c"
+    val lake = s"$root/t"; val ckpt = s"$root/c"
     SnapshotLake.merge(spark, lake, b1, Seq("key"), "v", "dt") // gen 1
     SnapshotLake.merge(spark, lake, b2, Seq("key"), "v", "dt") // gen 2
     var seen = List.empty[Long]
-    // consumer dies mid-gen-2 (after the bootstrap markered)
-    intercept[RuntimeException] {
-      LakeChangeFeed.followAvailableNow(spark, lake, consumer, (_, g) => {
+    // the consumer dies mid-gen-2 (after the bootstrap batch committed)
+    intercept[StreamingQueryException] {
+      follow(lake, ckpt) { (_, g) =>
         seen :+= g
-        if (g == 2L) throw new RuntimeException("crash before marker")
-      })
+        if (g == 2L) throw new RuntimeException("crash before commit")
+      }
     }
     assert(seen == List(1L, 2L))
-    assert(LakeChangeFeed.lastConsumedGen(spark, consumer).contains(1L),
-      "the crashed batch must NOT be markered")
+    assert(committedBatches(ckpt) == 1, "the crashed batch must NOT be committed")
     // the restarted tick re-delivers ONLY gen 2 (bootstrap suppressed)
-    assert(LakeChangeFeed.followAvailableNow(spark, lake, consumer,
-      (_, g) => seen :+= g) == Seq(2L))
+    assert(follow(lake, ckpt)((_, g) => seen :+= g) == Seq(2L))
     assert(seen == List(1L, 2L, 2L))
+    assert(follow(lake, ckpt)((_, g) => seen :+= g).isEmpty)
   }
 
   test("vacuum guardrail: a consumer outrun by retention fails loudly, naming the gen") {
     val root = tmp("vac")
-    val lake = s"$root/t"; val consumer = s"$root/c"
+    val lake = s"$root/t"; val ckpt = s"$root/c"
     SnapshotLake.merge(spark, lake, b1, Seq("key"), "v", "dt") // gen 1
     // consume up to gen 1
-    LakeChangeFeed.followAvailableNow(spark, lake, consumer, (_, _) => ())
+    follow(lake, ckpt)((_, _) => ())
     SnapshotLake.merge(spark, lake, b2, Seq("key"), "v", "dt") // gen 2
     SnapshotLake.delete(spark, lake, col("key") === "k2")      // gen 3
     SnapshotLake.vacuum(spark, lake, keepManifests = 1)        // only gen 3 left
-    val e = intercept[IllegalStateException] {
-      LakeChangeFeed.followAvailableNow(spark, lake, consumer, (_, _) => ())
+    val e = intercept[StreamingQueryException] {
+      follow(lake, ckpt)((_, _) => ())
     }
-    assert(e.getMessage.contains("snapshot 1") &&
-      e.getMessage.contains("no longer retained"),
-      s"error must name the missing snapshot, got: ${e.getMessage}")
-    // a RESET consumer re-bootstraps from the oldest retained snapshot
-    val consumer2 = s"$root/c2"
+    val msg = e.getCause.getMessage
+    assert(msg.contains("snapshot 1") && msg.contains("no longer retained"),
+      s"error must name the missing snapshot, got: $msg")
+    // a RESET consumer (fresh checkpoint) re-bootstraps from the oldest
+    // retained snapshot
     var got = List.empty[(Long, Long)]
-    assert(LakeChangeFeed.followAvailableNow(spark, lake, consumer2,
-      (df, g) => got :+= ((g, df.count()))) == Seq(3L))
+    assert(follow(lake, s"$root/c2")((df, g) => got :+= ((g, df.count()))) == Seq(3L))
     assert(got == List((3L, 2L))) // k1 + k3 as the bootstrap inserts
   }
 
   test("reset guardrail: a re-created lake fails the follower instead of silently skipping") {
     val root = tmp("reset")
-    val lake = s"$root/t"; val consumer = s"$root/c"
+    val lake = s"$root/t"; val ckpt = s"$root/c"
     SnapshotLake.merge(spark, lake, b1, Seq("key"), "v", "dt") // gen 1
     SnapshotLake.merge(spark, lake, b2, Seq("key"), "v", "dt") // gen 2
-    LakeChangeFeed.followAvailableNow(spark, lake, consumer, (_, _) => ())
+    follow(lake, ckpt)((_, _) => ())
     // the lake is deleted and re-created at the same path: its generation
     // counter resets BELOW the consumer's position — "caught up" would be
     // a silent skip of the new table's entire history
@@ -117,21 +142,22 @@ class LakeCdcSpec extends SparkSuite {
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(lake), true)
     SnapshotLake.merge(spark, lake, b1, Seq("key"), "v", "dt") // gen 1 again
-    val e = intercept[IllegalStateException] {
-      LakeChangeFeed.followAvailableNow(spark, lake, consumer, (_, _) => ())
+    val e = intercept[StreamingQueryException] {
+      follow(lake, ckpt)((_, _) => ())
     }
-    assert(e.getMessage.contains("reset"),
-      s"error must name the lake reset, got: ${e.getMessage}")
+    assert(e.getCause.getMessage.contains("reset"),
+      s"error must name the lake reset, got: ${e.getCause.getMessage}")
   }
 
   test("exactly-once end-to-end: follower composed with the atomic fold ledger") {
     val root = tmp("fold")
-    val lake = s"$root/t"; val consumer = s"$root/c"
+    val lake = s"$root/t"; val ckpt = s"$root/c"
     val mv = s"$root/mv"
     SnapshotLake.merge(spark, lake, b1, Seq("key"), "v", "dt") // gen 1
     SnapshotLake.merge(spark, lake, b2, Seq("key"), "v", "dt") // gen 2
     // MV: running SUM of post-image prices per key (sum-merge — NOT
-    // idempotent, so replay suppression must be the fold ledger's)
+    // idempotent, so replay suppression must be the fold ledger's, keyed
+    // on the commit generation)
     def fold(delta: DataFrame, gen: Long): Unit = {
       StreamingIngest.foldStateBatchOnce(
         delta.filter(col("_change_type") =!= "delete"), gen, mv, "cdc-mv",
@@ -140,42 +166,19 @@ class LakeCdcSpec extends SparkSuite {
           .groupBy(col("key")).agg(sum(col("s")).as("s")))
       ()
     }
-    LakeChangeFeed.followAvailableNow(spark, lake, consumer, fold)
+    follow(lake, ckpt)(fold)
     val once = spark.read.parquet(mv).collect()
       .map(r => r.getAs[String]("key") -> r.getAs[Double]("s")).toMap
     assert(once == Map("k1" -> 25.0, "k2" -> 20.0, "k3" -> 30.0))
-    // simulate a LOST consumer position (markers wiped): the re-delivered
+    // simulate a LOST consumer position (checkpoint wiped): the re-delivered
     // generations land in the SAME fold-ledger namespace and are suppressed
     // — the MV never double-counts
-    val fs = new org.apache.hadoop.fs.Path(consumer).getFileSystem(
+    val fs = new org.apache.hadoop.fs.Path(ckpt).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(consumer), true)
-    assert(LakeChangeFeed.followAvailableNow(spark, lake, consumer, fold)
-      == Seq(1L, 2L))
+    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    assert(follow(lake, ckpt)(fold) == Seq(1L, 2L))
     val twice = spark.read.parquet(mv).collect()
       .map(r => r.getAs[String]("key") -> r.getAs[Double]("s")).toMap
     assert(twice == once, "replayed generations must not re-fold")
-  }
-
-  test("concurrent ticks on one consumer dir: the second aborts on the lease") {
-    val root = tmp("lease")
-    val lake = s"$root/t"; val consumer = s"$root/c"
-    SnapshotLake.merge(spark, lake, b1, Seq("key"), "v", "dt")
-    @volatile var second: Option[Throwable] = None
-    val inF = new java.util.concurrent.CountDownLatch(1)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    val t = new Thread(() => {
-      try LakeChangeFeed.followAvailableNow(spark, lake, consumer, (_, _) => {
-        inF.countDown(); release.await()
-      })
-      catch { case e: Throwable => second = Some(e) }
-    })
-    t.start(); inF.await()
-    val e = intercept[graft.etl.LakeLease.LeaseHeldException] {
-      LakeChangeFeed.followAvailableNow(spark, lake, consumer, (_, _) => ())
-    }
-    assert(e.getMessage.contains("single-writer"))
-    release.countDown(); t.join()
-    assert(second.isEmpty)
   }
 }

@@ -692,7 +692,7 @@ class StreamingSpec extends SparkSuite {
           "about winter storms gathering strength across northern mountain ranges tonight"))
       .toDF("doc_id", "text").write.parquet(land)
     run(s"$root/ckpt")
-    def admitted: Set[Long] = spark.read.parquet(corpus).collect()
+    def admitted: Set[Long] = graft.etl.SnapshotLake.read(spark, corpus).collect()
       .map(_.getAs[Long]("doc_id")).toSet
     assert(admitted == Set(1L, 2L))
     // drop 2 AFTER the first query stopped: a re-encoded near-dup of doc 1
@@ -730,7 +730,7 @@ class StreamingSpec extends SparkSuite {
     Seq((1L, "alpha beta"), (2L, "alpha beta"), (3L, "gamma delta"))
       .toDF("doc_id", "text").write.parquet(land)
     run()
-    def state: Map[Long, String] = spark.read.parquet(corpus).collect()
+    def state: Map[Long, String] = graft.etl.SnapshotLake.read(spark, corpus).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
     assert(state == Map(1L -> "alpha beta", 3L -> "gamma delta"))
     // drop 2 lands AFTER the first query stopped: a cross-batch duplicate
