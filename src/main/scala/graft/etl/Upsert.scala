@@ -1,9 +1,9 @@
 package graft.etl
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -199,22 +199,17 @@ object Upsert {
       keys ++ updatable(cols, keys, noUpdate) ++ cols
   }
 
-  /** JDBC drivers want java.sql datetime types; Spark Rows carry java.time
-    * under the (default) java8 datetime API.
-    */
-  private def jdbcValue(v: Any): Any = v match {
-    case i: java.time.Instant       => java.sql.Timestamp.from(i)
-    case d: java.time.LocalDate     => java.sql.Date.valueOf(d)
-    case t: java.time.LocalDateTime => java.sql.Timestamp.valueOf(t)
-    case x                          => x
-  }
-
   /** L2/L3 — distributed JDBC upsert: each partition opens one connection,
     * writes batches of `batchSize` (the reference pages at 1000,
     * `postgres_writer.py:259`), and commits per partition. Global atomicity
     * is *not* promised (SURVEY.md §7 #1) — instead the statement itself is
     * idempotent, so Spark task retries and whole-job re-runs converge, which
     * is the reference's own recovery model (`README.md:37`).
+    *
+    * The write goes through [[graft.sources.JdbcUpsertDataSource]], whose
+    * per-partition writer is the one JDBC upsert loop: `user`/`password`
+    * props become options of the same name, every other prop a
+    * `jdbcprop.<name>` option.
     *
     * Callers must `lastWriteWins` first so a batch never carries two rows
     * for one key (cross-partition write order is nondeterministic).
@@ -228,33 +223,24 @@ object Upsert {
       batchSize: Int = 1000,
       props: java.util.Properties = new java.util.Properties(),
       noUpdate: Seq[String] = Nil): Unit = {
-    val cols = df.columns.toSeq
-    val sql = dialect.upsertSql(table, cols, keys, noUpdate)
-    val bindIdx = dialect.bindOrder(cols, keys, noUpdate).map(cols.indexOf).toArray
-    val width = bindIdx.length
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.nonEmpty) {
-        val conn: Connection = DriverManager.getConnection(url, props)
-        conn.setAutoCommit(false)
-        val st: PreparedStatement = conn.prepareStatement(sql)
-        try {
-          var pending = 0
-          rows.foreach { r =>
-            var i = 0
-            while (i < width) { st.setObject(i + 1, jdbcValue(r.get(bindIdx(i)))); i += 1 }
-            st.addBatch()
-            pending += 1
-            if (pending >= batchSize) { st.executeBatch(); pending = 0 }
-          }
-          if (pending > 0) st.executeBatch()
-          conn.commit()
-        } catch {
-          case e: Throwable => conn.rollback(); throw e
-        } finally {
-          st.close(); conn.close()
-        }
-      }
-    }
+    val propOptions = props.stringPropertyNames.asScala.map {
+      case k @ ("user" | "password") => k -> props.getProperty(k)
+      case k => s"jdbcprop.$k" -> props.getProperty(k)
+    }.toMap
+    df.write.format(classOf[graft.sources.JdbcUpsertDataSource].getName)
+      .option("url", url)
+      .option("dbtable", table)
+      .option("keys", keys.mkString(","))
+      .option("dialect", dialect match {
+        case Postgres => "postgres"
+        case Derby => "derby"
+        case AnsiMerge => "ansi"
+      })
+      .option("batchsize", batchSize.toLong)
+      .option("noupdate", noUpdate.mkString(","))
+      .options(propOptions)
+      .mode("append")
+      .save()
   }
 
   /** L1 parity — keyed upsert with the reference's audit columns

@@ -143,16 +143,14 @@ object GlobalRankFunc {
       extends GlobalRankFunc
 }
 
-/** OPTIMIZER-DRIVEN distributed global ranking: the auto-rewrite face of
-  * [[graft.operators.Ranking]].
+/** OPTIMIZER-DRIVEN distributed global ranking.
   *
   * `row_number() OVER (ORDER BY …)` / `ntile(k) OVER (ORDER BY …)` with no
   * PARTITION BY plans a SINGLE-PARTITION Window — every row of the corpus
   * funnels through one task, the hard scale cliff [[PlanChecks]] lints
-  * against and `Ranking.globalRank/ntile` exist to avoid. But both of
-  * those are opt-in: a raw-SQL user writing the natural global window
-  * still falls off the cliff. [[GlobalRankRule]] closes that gap the way
-  * [[RangeJoinBinningRule]] did for keyless range joins — the cliff shape
+  * against. A user writing the natural global window (raw SQL or the
+  * DataFrame `over`) falls off that cliff. [[GlobalRankRule]] closes it
+  * the way [[RangeJoinBinningRule]] did for keyless range joins — the cliff shape
   * is rewritten in the optimizer, so the SQL text stays the standard SQL
   * everybody writes.
   *
@@ -1473,7 +1471,7 @@ object GlobalRankExec {
 
   /** SQL-standard NTILE over the 0-based global ordinal: the first
     * `total % n` tiles carry `total/n + 1` rows, the rest `total/n` —
-    * bit-identical to Spark's `NTile` and `Ranking.ntile`.
+    * bit-identical to Spark's `NTile`.
     */
   def tileOf(idx: Long, total: Long, n: Int): Int = {
     val bucketSize = total / n

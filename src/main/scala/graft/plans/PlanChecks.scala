@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Glob
   *
   * The one checked today: a `Window` with an EMPTY partition spec funnels
   * every input row through ONE task (Spark itself only warns at runtime,
-  * `WindowExec.doExecute`) — the hard cliff [[graft.operators.Ranking]]
-  * exists to avoid. A global window is fine when its input is provably
+  * `WindowExec.doExecute`) — the hard cliff [[GlobalRankRule]] and its
+  * sibling rules rewrite away. A global window is fine when its input is provably
   * small; the sanctioned shape is "rank the aggregate", where the window
   * input is bounded by a group-key domain (t5's top terms, c2's per-lang
   * counts) or an explicit limit. So the lint flags global windows whose
@@ -30,10 +30,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Glob
   * RANGE over row_number, then the rules above). Remaining flags:
   *  - fp (double) sliding sum/avg — the AUTO-rewrite stays vetoed on
   *    subtraction-cancellation grounds; cast to DECIMAL for the exact
-  *    rules, or OPT IN to the explicitly non-bit-stable distributed face
-  *    [[graft.operators.RangeWindows.rangeSlidingSumDouble]] /
-  *    `rangeSlidingAvgDouble` (value-compatible, tolerance-spec'd, never
-  *    hash-gate eligible);
+  *    rules;
   *  - multi-argument aggregates (covar/corr): native `COVAR_POP OVER`
   *    stays stock BY DOCTRINE (double Welford accumulation is
   *    order-dependent fp — no bit-compatible rewrite exists); compose

@@ -18,8 +18,7 @@ import org.apache.spark.sql.types.LongType
   * BETWEEN n PRECEDING AND CURRENT ROW | m FOLLOWING)` — extrema have no
   * inverse, so [[RangeSlidingRule]]'s ghost-probe SUBTRACTION cannot carry
   * them; this rule applies the classic SPARSE-BLOCK decomposition in key
-  * space instead (the same algebra as
-  * [[graft.operators.RangeWindows.rangeSlidingMinMax]], join-free):
+  * space instead (join-free):
   *
   *  1. bucket every key by the frame length `B = n + m + 1` (floor
   *     division, so buckets are fixed key intervals) — a frame

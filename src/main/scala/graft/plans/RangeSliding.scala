@@ -15,10 +15,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType,
   LongType, ShortType}
 
-/** Auto-rewrite for the raw-SQL GLOBAL `RANGE BETWEEN n PRECEDING AND
-  * CURRENT ROW | m FOLLOWING` sliding aggregate — the
-  * [[graft.operators.RangeWindows]] ghost-probe composition, applied in the
-  * optimizer so the natural SQL everybody writes stops falling off the
+/** Auto-rewrite for the GLOBAL `RANGE BETWEEN n PRECEDING AND CURRENT ROW
+  * | m FOLLOWING` sliding aggregate (raw SQL and DataFrame `rangeBetween`
+  * alike) — the ghost-probe composition, applied in the optimizer so the
+  * natural SQL everybody writes stops falling off the
   * single-partition-Window cliff (the [[GlobalRankRule]] mission, extended
   * to the one sliding family its in-exec ring cannot carry: a VALUE-bounded
   * frame reaches back an unbounded ROW count across partition boundaries).
@@ -78,8 +78,8 @@ import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType,
   *
   * RangeSlidingSpec pins bit-equality vs the kill-switched stock Window on
   * randomized tied/null corpora and the scope rejections;
-  * `e19b_range_sliding_sql` / `e19c_range_avg_sql` / `e21b` pin the
-  * raw-SQL faces against DuckDB's native RANGE window engine.
+  * `e19`/`e19b`/`e19c`/`e21`/`e21b` pin the DataFrame and raw-SQL faces
+  * against DuckDB's native RANGE window engine.
   */
 object RangeSlidingRule extends Rule[LogicalPlan] {
 

@@ -1943,17 +1943,19 @@ object CoreQueries {
     * curriculum cut every staged-training pipeline needs, plus per-bin
     * audit stats. The load-bearing part is HOW the tile is computed:
     * Spark's `ntile(k) OVER (ORDER BY ...)` with no PARTITION BY plans a
-    * single-partition Window — the whole corpus through one task — so this
-    * query instead uses [[graft.operators.Ranking.ntile]], the two-phase
-    * distributed rank (range exchange + streamed local ranks + ≤#buckets
-    * offset collect), which reproduces SQL NTILE semantics bit-for-bit
-    * with no single-task stage. The oracle runs DuckDB's native ntile —
-    * agreement proves the distributed rewrite IS the window semantics.
+    * single-partition Window — the whole corpus through one task — so the
+    * face registers [[graft.plans.GlobalRankRule]], which rewrites that
+    * stock window into the distributed two-pass rank
+    * ([[graft.plans.GlobalRankExec]]: range exchange + per-partition
+    * offsets), SQL NTILE semantics bit-for-bit with no single-task stage.
+    * The oracle runs DuckDB's native ntile — agreement proves the
+    * distributed rewrite IS the window semantics.
     */
   def c8CurriculumBins(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val docs = t(s, dir, "documents").select(
-      col("doc_id"), col("n_chars"), col("lang"), col("source"))
-    graft.operators.Ranking.ntile(docs, k, Seq(col("n_chars"), col("doc_id")))
+    graft.plans.GlobalRank.ensureRegistered(s)
+    t(s, dir, "documents").select(
+        col("doc_id"), col("n_chars"), col("lang"), col("source"))
+      .withColumn("bin", ntile(k).over(Window.orderBy(col("n_chars"), col("doc_id"))))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"),
         min(col("n_chars")).as("min_chars"),
@@ -1966,15 +1968,12 @@ object CoreQueries {
 
   /** C8b: the SAME curriculum-bin aggregate as c8, but the ranking is the
     * RAW SQL every user writes — `ntile(10) OVER (ORDER BY n_chars,
-    * doc_id)` with no PARTITION BY — scaled by the optimizer instead of by
-    * API discipline: [[graft.plans.GlobalRankRule]] rewrites the
-    * single-partition Window into the distributed two-pass rank
-    * ([[graft.plans.GlobalRankExec]]: range exchange + per-partition
-    * offsets), so the cliff c8 avoids by calling
-    * [[graft.operators.Ranking.ntile]] explicitly is now unreachable from
-    * SQL too. Oracle: DuckDB's native window ntile — two engines, two
-    * ntile implementations (one single-node, one distributed), one hash.
-    * PlanSpec pins that the plan carries GlobalRank and NO Window.
+    * doc_id)` with no PARTITION BY. [[graft.plans.GlobalRankRule]]
+    * rewrites it exactly as it rewrites c8's DataFrame window, so both
+    * faces plan the same [[graft.plans.GlobalRankExec]]. Oracle: DuckDB's
+    * native window ntile — two engines, two ntile implementations (one
+    * single-node, one distributed), one hash. PlanSpec pins that the plan
+    * carries GlobalRank and NO Window.
     */
   def c8bCurriculumBinsSql(s: SparkSession, dir: String): DataFrame = {
     graft.plans.GlobalRank.ensureRegistered(s)
@@ -2070,28 +2069,38 @@ object CoreQueries {
     * the row count — sparse days shrink the frame, which no ROWS frame can
     * express). Spark's native plan for this shape is the single-partition
     * Window cliff and the value-bounded frame cannot ride the sliding
-    * exec's row-bounded ring, so it runs through
-    * [[graft.operators.RangeWindows]]' ghost-probe subtraction: one
-    * distributed running window over rows ∪ null-valued threshold ghosts,
-    * one id equi-join, exact decimal difference. Oracle = DuckDB's native
-    * RANGE window engine over the identical day numbers.
+    * exec's row-bounded ring, so the stock `rangeBetween` window is
+    * rewritten by [[graft.plans.RangeSlidingRule]]'s ghost-probe
+    * subtraction: one distributed running window over rows ∪ null-valued
+    * threshold ghosts, one keyed window delivering each threshold prefix,
+    * exact decimal difference. e19b is the same window in raw SQL. Oracle
+    * = DuckDB's native RANGE window engine over the identical day numbers.
     */
-  def e19RangeSliding(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_orderkey"),
-      datediff(col("o_orderdate"), to_date(lit("1992-01-01"))).cast("long").as("dnum"),
-      col("o_totalprice").cast("decimal(25,4)").as("px"))
-    graft.operators.RangeWindows.rangeSlidingAvg(o, Seq("o_orderkey"), "dnum", "px", 6L)
-      .select(col("o_orderkey"),
-        col("frame_sum").cast("double").as("frame_total"),
-        col("frame_cnt"), col("frame_avg"))
+  def e19RangeSliding(s: SparkSession, dir: String): DataFrame =
+    rangeSumCount(s, dir, -6L, 0L)
+
+  /** The calendar-frame total/count/average of e19 and e21: `sum`/`count`
+    * over `RANGE BETWEEN lo AND hi` on the order-date day number, with the
+    * average as one IEEE division of the exact total by the exact count.
+    */
+  private def rangeSumCount(s: SparkSession, dir: String, lo: Long, hi: Long): DataFrame = {
+    graft.plans.GlobalRank.ensureRegistered(s)
+    val sw = Window.orderBy(col("dnum")).rangeBetween(lo, hi)
+    t(s, dir, "orders").select(col("o_orderkey"),
+        datediff(col("o_orderdate"), to_date(lit("1992-01-01"))).cast("long").as("dnum"),
+        col("o_totalprice").cast("decimal(25,4)").as("px"))
+      .withColumn("frame_total", sum(col("px")).over(sw).cast("double"))
+      .withColumn("frame_cnt", count(col("px")).over(sw))
+      .withColumn("frame_avg", col("frame_total") / col("frame_cnt").cast("double"))
+      .select("o_orderkey", "frame_total", "frame_cnt", "frame_avg")
       .orderBy("o_orderkey")
   }
 
   /** E19b — the RAW-SQL face of e19: the identical calendar-valued moving
     * window written as the natural SQL (`RANGE BETWEEN 6 PRECEDING AND
     * CURRENT ROW`), auto-rewritten by [[graft.plans.RangeSlidingRule]]
-    * into the ghost-probe composition — no library call, no cliff. Same
-    * oracle discipline as e19.
+    * into the same ghost-probe composition as e19's DataFrame window — no
+    * cliff. Same oracle discipline as e19.
     */
   def e19bRangeSlidingSql(s: SparkSession, dir: String): DataFrame = {
     graft.plans.GlobalRank.ensureRegistered(s)
@@ -2135,24 +2144,24 @@ object CoreQueries {
   }
 
   /** E20: the global VALUE-bounded moving MIN/MAX — extrema have no
-    * inverse, so e19's ghost-probe subtraction cannot carry them;
-    * [[graft.operators.RangeWindows.rangeSlidingMinMax]] runs the classic
-    * SPARSE-BLOCK decomposition instead (bucket keys by the frame length;
-    * per-bucket suffix + prefix extrema as PARTITIONED windows; each
-    * frame = the combine of its two bucket parts — keyed exchanges only,
-    * no single-partition cliff). Oracle = DuckDB's native RANGE window
-    * engine; min/max are raw column reads, so the doubles are
-    * bit-identical by construction.
+    * inverse, so e19's ghost-probe subtraction cannot carry them; the
+    * stock `rangeBetween` window is rewritten by
+    * [[graft.plans.RangeMinMaxRule]]'s SPARSE-BLOCK decomposition instead
+    * (bucket keys by the frame length; per-bucket suffix + prefix extrema
+    * as PARTITIONED windows; each frame = the combine of its two bucket
+    * parts — keyed exchanges only, no single-partition cliff). Oracle =
+    * DuckDB's native RANGE window engine; min/max are raw column reads,
+    * so the doubles are bit-identical by construction.
     */
   def e20RangeMinmax(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_orderkey"),
-      datediff(col("o_orderdate"), to_date(lit("1992-01-01"))).cast("long").as("dnum"),
-      col("o_totalprice").cast("decimal(18,2)").as("px"))
-    graft.operators.RangeWindows
-      .rangeSlidingMinMax(o, Seq("o_orderkey"), "dnum", "px", 6L)
-      .select(col("o_orderkey"),
-        col("frame_min").cast("double").as("frame_min"),
-        col("frame_max").cast("double").as("frame_max"))
+    graft.plans.GlobalRank.ensureRegistered(s)
+    val sw = Window.orderBy(col("dnum")).rangeBetween(-6L, 0L)
+    t(s, dir, "orders").select(col("o_orderkey"),
+        datediff(col("o_orderdate"), to_date(lit("1992-01-01"))).cast("long").as("dnum"),
+        col("o_totalprice").cast("decimal(18,2)").as("px"))
+      .withColumn("frame_min", min(col("px")).over(sw).cast("double"))
+      .withColumn("frame_max", max(col("px")).over(sw).cast("double"))
+      .select("o_orderkey", "frame_min", "frame_max")
       .orderBy("o_orderkey")
   }
 
@@ -2160,7 +2169,7 @@ object CoreQueries {
     * `MIN/MAX OVER (ORDER BY dnum RANGE BETWEEN 6 PRECEDING AND 3
     * FOLLOWING)` is auto-rewritten by [[graft.plans.RangeMinMaxRule]]
     * into the same block decomposition (the prefix side riding a ghost
-    * probe at k + 3) — no library call, no cliff.
+    * probe at k + 3) — no cliff.
     */
   def e20bRangeMinmaxSql(s: SparkSession, dir: String): DataFrame = {
     graft.plans.GlobalRank.ensureRegistered(s)
@@ -2181,23 +2190,13 @@ object CoreQueries {
   /** E21: the CENTERED calendar moving total/average —
     * `RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING` (the pandas
     * `rolling(center=True)` shape; a 7-day window centered on each day).
-    * [[graft.operators.RangeWindows.rangeSlidingSumBetween]] carries the
-    * FOLLOWING end with a SECOND ghost family at the inclusive upper
-    * threshold k + 3: frame = prefix(k + 3, peer-incl) − prefix(k − 4) —
-    * still one distributed running window + one key join. Oracle =
-    * DuckDB's native RANGE window engine.
+    * [[graft.plans.RangeSlidingRule]] carries the FOLLOWING end with a
+    * SECOND ghost family at the inclusive upper threshold k + 3: frame =
+    * prefix(k + 3, peer-incl) − prefix(k − 4) — still one distributed
+    * running window. Oracle = DuckDB's native RANGE window engine.
     */
-  def e21RangeCentered(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_orderkey"),
-      datediff(col("o_orderdate"), to_date(lit("1992-01-01"))).cast("long").as("dnum"),
-      col("o_totalprice").cast("decimal(25,4)").as("px"))
-    graft.operators.RangeWindows
-      .rangeSlidingAvgBetween(o, Seq("o_orderkey"), "dnum", "px", 3L, 3L)
-      .select(col("o_orderkey"),
-        col("frame_sum").cast("double").as("frame_total"),
-        col("frame_cnt"), col("frame_avg"))
-      .orderBy("o_orderkey")
-  }
+  def e21RangeCentered(s: SparkSession, dir: String): DataFrame =
+    rangeSumCount(s, dir, -3L, 3L)
 
   /** E21b — E21's RAW-SQL face plus the decimal AVG lane: the natural
     * centered-window SQL auto-rewritten by
@@ -2286,8 +2285,8 @@ object CoreQueries {
     // The declared query's RESULTS are pinned to the same DuckDB oracle as
     // e23b (value-identical by gate since round 13), so the face now
     // executes through the materialize-once rowsSlidingAll cascade. The
-    // rule composition stays covered by RowsFollowingSpec/RangeWindowsSpec
-    // and the single-family SQL faces (e19b/e20b/e21b/e24/e25).
+    // rule composition stays covered by RowsFollowingSpec and the
+    // single-family SQL faces (e19b/e20b/e21b/e24/e25).
     e23bRowsCenteredLib(s, dir)
 
   /** E23b — e23's PRODUCTION face: the same centered ROWS window through

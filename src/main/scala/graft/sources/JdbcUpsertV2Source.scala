@@ -15,12 +15,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.etl.Upsert
 
 /** Keyed JDBC UPSERT as a DataSourceV2 WRITE — the sink face of the V2
-  * catalog surface ([[BarDataSource]] is the source face). Every existing
-  * consumer of [[graft.etl.Upsert.upsertJdbc]] keeps its semantics (one
-  * connection per partition, `batchsize`-paged executeBatch, the same
+  * catalog surface ([[BarDataSource]] is the source face) and the one JDBC
+  * upsert writer: [[graft.etl.Upsert.upsertJdbc]] (and through it
+  * `Pipeline.runJdbc` and the streaming JDBC sinks) writes through it. One
+  * connection per partition, `batchsize`-paged executeBatch, the
   * per-dialect MERGE/ON CONFLICT statement, idempotent re-runs — the
-  * reference's `postgres_writer.py` contract), but the write now rides
-  * Spark's V2 write protocol:
+  * reference's `postgres_writer.py` contract — riding Spark's V2 write
+  * protocol:
   *
   * {{{
   *   df.write.format("graft.sources.JdbcUpsertDataSource")
@@ -35,7 +36,7 @@ import graft.etl.Upsert
   * by QueryExecutionListeners, and routable through a catalog — instead of
   * an opaque `foreachPartition` lambda.
   *
-  * Contracts carried over verbatim from [[Upsert.upsertJdbc]]:
+  * Contracts:
   *  - the target table must exist (bootstrap via [[graft.etl.Ddl]]);
   *  - callers `lastWriteWins` first, so a batch never holds two rows per
   *    key (cross-partition write order is nondeterministic);
@@ -242,7 +243,7 @@ private[sources] final class JdbcUpsertWriterFactory(
 private[sources] final case class JdbcUpsertCommit(rows: Long)
     extends WriterCommitMessage
 
-/** One partition's writer: the exact `upsertJdbc` loop (one connection,
+/** One partition's writer — the one JDBC upsert loop (one connection,
   * prepared dialect statement, paged executeBatch, commit-or-rollback),
   * reading Catalyst internal rows directly — no Row conversion on the
   * write path.

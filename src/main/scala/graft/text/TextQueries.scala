@@ -613,9 +613,10 @@ object TextQueries {
     * partitions by language over that vocab table; the final aggregate is
     * #langs rows. Nothing downstream of the first aggregate touches
     * corpus-cardinality data. If a single language's vocabulary ever
-    * outgrew one partition's sort, the per-lang `row_number` is exactly
-    * the shape `operators/Ranking`'s two-phase distributed rank (c8)
-    * replaces — the escape hatch is already in the library.
+    * outgrew one partition's sort, the per-lang `row_number` becomes one
+    * global `row_number` over `(lang, …)` minus each language's start
+    * offset — the global rank [[graft.plans.GlobalRankRule]] already
+    * distributes (c8).
     */
   def t18TokenGini(s: SparkSession, dir: String): DataFrame = {
     val counts = t(s, dir, "documents")

@@ -151,7 +151,7 @@ object VerifySf1 {
       ("c8_curriculum_bins",
         () => CoreQueries.c8CurriculumBins(spark, work),
         // dropDuplicates on the unique key bounds the input WITHOUT changing
-        // a row, so GlobalRankRule (registered session-wide once c8b runs)
+        // a row, so GlobalRankRule (registered session-wide by c8 itself)
         // does NOT rewrite this twin — it must stay the stock
         // single-partition Window to be an independent formulation
         () => docs.select(col("doc_id"), col("n_chars"), col("lang"), col("source"))
@@ -166,12 +166,17 @@ object VerifySf1 {
             countDistinct(col("lang")).as("n_langs"),
             countDistinct(col("source")).as("n_sources"))),
       // c8b: the optimizer-rewritten RAW-SQL ntile (GlobalRankExec) ↔ the
-      // explicit Ranking.ntile composition — two distributed rank
-      // implementations, compared at the scale point where the round-7
-      // rank-bound drift class actually bites
+      // same SQL with GlobalRankRule kill-switched (the stock
+      // single-partition Window; c8 plans the same GlobalRankExec, so it
+      // is no independent twin), compared at the scale point where the
+      // round-7 rank-bound drift class actually bites
       ("c8b_curriculum_bins_sql",
         () => CoreQueries.c8bCurriculumBinsSql(spark, work),
-        () => CoreQueries.c8CurriculumBins(spark, work)),
+        () => {
+          spark.conf.set(graft.plans.GlobalRankRule.EnabledKey, "false")
+          try CoreQueries.c8bCurriculumBinsSql(spark, work).localCheckpoint()
+          finally spark.conf.unset(graft.plans.GlobalRankRule.EnabledKey)
+        }),
       ("x9b_clusters_altstar",
         () => DedupQueries.x9bDedupClustersAltStar(spark, work),
         () => DedupQueries.x9DedupClusters(spark, work)),
@@ -332,9 +337,8 @@ object VerifySf1 {
           try CoreQueries.e18FirstLastSql(spark, work).localCheckpoint()
           finally spark.conf.unset(graft.plans.GlobalRankRule.EnabledKey)
         }),
-      // e19: the ghost-probe RANGE-sliding composition ↔ the stock
-      // single-partition rangeBetween Window (naturally independent — the
-      // rule rejects bounded RANGE frames), at the scale point where the
+      // e19: the ghost-probe RANGE-sliding rewrite ↔ the stock
+      // single-partition rangeBetween Window, at the scale point where the
       // union ordering and tie-run stitching actually stress it
       ("e19_range_sliding",
         () => CoreQueries.e19RangeSliding(spark, work),

@@ -7,15 +7,6 @@ import graft.SparkSuite
 class RangeWindowsSpec extends SparkSuite {
   import spark.implicits._
 
-  /** Evaluate with the RANGE-sliding auto-rewrite off, so the stock
-    * single-partition Window is genuinely the INDEPENDENT formulation
-    * (RangeSlidingRule would otherwise rewrite the twin too).
-    */
-  private def stock[A](body: => A): A = {
-    spark.conf.set(graft.plans.RangeSlidingRule.EnabledKey, "false")
-    try body finally spark.conf.unset(graft.plans.RangeSlidingRule.EnabledKey)
-  }
-
   private def corpus(seed: Long, n: Int) = {
     val rnd = new scala.util.Random(seed)
     (1 to n).map { i =>
@@ -24,95 +15,6 @@ class RangeWindowsSpec extends SparkSuite {
       (i.toLong, rnd.nextInt(40).toLong, v)
     }.toDF("id", "k", "x")
       .withColumn("v", col("x").cast("decimal(12,2)")).drop("x")
-  }
-
-  test("RANGE w PRECEDING sum/count match the stock Window bit-for-bit") {
-    // heavy key ties (40 distinct keys over 1200 rows) force peer-inclusive
-    // frames and cross-partition tie runs; null values exercise the count
-    // lane and the all-null-frame NULL
-    for ((seed, w) <- Seq((11L, 0L), (23L, 3L), (37L, 17L), (41L, 200L))) {
-      val df = corpus(seed, 1200)
-      val got = RangeWindows.rangeSlidingSum(df, Seq("id"), "k", "v", w)
-        .select("id", "frame_sum", "frame_cnt").collect()
-        .map(r => r.getLong(0) -> (r.get(1), r.getLong(2))).toMap
-      // stock single-partition RANGE window — GlobalRankRule rejects
-      // bounded RANGE frames, so this is naturally the independent plan
-      val sw = org.apache.spark.sql.expressions.Window
-        .orderBy(col("k")).rangeBetween(-w, 0)
-      val want = stock {
-        val d = df
-          .withColumn("frame_sum", sum(col("v")).over(sw))
-          .withColumn("frame_cnt", count(col("v")).over(sw))
-        assert(!d.queryExecution.executedPlan.toString.contains("GlobalRank"),
-          "the twin must stay the stock Window")
-        d.select("id", "frame_sum", "frame_cnt").collect()
-          .map(r => r.getLong(0) -> (r.get(1), r.getLong(2))).toMap
-      }
-      val bad = got.keys.filter(k => got(k) != want(k)).take(3)
-        .map(k => s"id=$k got=${got(k)} want=${want(k)}")
-      assert(bad.isEmpty, s"seed=$seed w=$w diverged: ${bad.mkString("; ")}")
-    }
-  }
-
-  test("the operator's window plans through GlobalRankExec, not a global Window") {
-    val df = corpus(7L, 300)
-    val out = RangeWindows.rangeSlidingSum(df, Seq("id"), "k", "v", 5L)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("GlobalRank"),
-      "the union running window must ride the distributed exec")
-    assert(!plan.contains("Window "),
-      s"no stock Window may survive in the plan:\n$plan")
-  }
-
-  test("avg face: exact sum / exact count as one double division; null frames stay null") {
-    val df = Seq(
-      (1L, 10L, Some(1.50)), (2L, 11L, None), (3L, 12L, None),
-      (4L, 30L, None), (5L, 31L, None) // frame of id=5 at w=1: all-null
-    ).toDF("id", "k", "x").withColumn("v", col("x").cast("decimal(12,2)")).drop("x")
-    val got = RangeWindows.rangeSlidingAvg(df, Seq("id"), "k", "v", 1L)
-      .select("id", "frame_avg", "frame_cnt").collect()
-      .map(r => r.getLong(0) -> (Option(r.get(1)), r.getLong(2))).toMap
-    assert(got(1L) == (Some(1.5), 1L))
-    assert(got(2L) == (Some(1.5), 1L), "frame [10,11] carries id=1's value")
-    assert(got(3L)._1.isEmpty && got(3L)._2 == 0L, "all-null frame → null avg")
-    assert(got(5L)._1.isEmpty && got(5L)._2 == 0L)
-  }
-
-  test("null order keys: a null-key row's frame is exactly its null peer group") {
-    // nulls sort FIRST (the operator's declared ASC NULLS FIRST scope);
-    // SQL gives null-key rows their own peer-group frame — no ghost is
-    // spawned for them and the left join subtracts nothing
-    val df = Seq(
-      (1L, None, Some(2.00)), (2L, None, Some(3.00)), (3L, None, None),
-      (4L, Some(5L), Some(1.00)), (5L, Some(6L), Some(4.00))
-    ).toDF("id", "kx", "x")
-      .select(col("id"), col("kx").cast("long").as("k"),
-        col("x").cast("decimal(12,2)").as("v"))
-    val got = RangeWindows.rangeSlidingSum(df, Seq("id"), "k", "v", 1L)
-      .select("id", "frame_sum", "frame_cnt").collect()
-      .map(r => r.getLong(0) -> (Option(r.get(1)).map(_.toString), r.getLong(2))).toMap
-    val sw = org.apache.spark.sql.expressions.Window
-      .orderBy(col("k")).rangeBetween(-1L, 0)
-    val want = stock {
-      df.withColumn("frame_sum", sum(col("v")).over(sw))
-        .withColumn("frame_cnt", count(col("v")).over(sw))
-        .select("id", "frame_sum", "frame_cnt").collect()
-        .map(r => r.getLong(0) -> (Option(r.get(1)).map(_.toString), r.getLong(2))).toMap
-    }
-    assert(got == want, s"null-key frames diverged: $got vs $want")
-    assert(got(1L)._2 == 2L, "null peers see each other's non-null values")
-  }
-
-  test("guardrails: non-decimal values and non-long keys are rejected") {
-    val df = Seq((1L, 2L, 3.0)).toDF("id", "k", "v")
-    val e1 = intercept[IllegalArgumentException](
-      RangeWindows.rangeSlidingSum(df, Seq("id"), "k", "v", 5L))
-    assert(e1.getMessage.contains("DECIMAL"))
-    val df2 = df.withColumn("v", col("v").cast("decimal(10,2)"))
-      .withColumn("k", col("k").cast("int"))
-    val e2 = intercept[IllegalArgumentException](
-      RangeWindows.rangeSlidingSum(df2, Seq("id"), "k", "v", 5L))
-    assert(e2.getMessage.contains("BIGINT"))
   }
 
   test("rowsSlidingAll: all five families match the stock ROWS window bit-for-bit") {
@@ -196,42 +98,6 @@ class RangeWindowsSpec extends SparkSuite {
       assert(bad.isEmpty, s"seed=$seed n=$n m=$m diverged: ${bad.mkString("; ")}")
       assert(got.size == want.size)
     }
-  }
-
-  test("rangeSlidingSumDouble: opt-in fp face within 1e-9 × Σ|v| of stock at 1.5M rows") {
-    // deterministic 1.5M-row corpus: heavy key ties, ~1/6 null values
-    val n = 1500000L
-    val df = spark.range(n).select(col("id"),
-      pmod(xxhash64(col("id")), lit(20000L)).as("k"),
-      when(pmod(xxhash64(col("id"), lit(1)), lit(6)) === 0,
-        lit(null).cast("double"))
-        .otherwise((pmod(xxhash64(col("id"), lit(2)), lit(200000L))
-          .cast("double") - 100000.0) / 100.0).as("x"))
-      .localCheckpoint()
-    val got = RangeWindows.rangeSlidingSumDouble(df, Seq("id"), "k", "x", 17L)
-      .select(col("id"), col("frame_sum").as("gs"), col("frame_cnt").as("gc"))
-    assert(graft.plans.PlanChecks.unboundedGlobalWindows(got).isEmpty,
-      "the fp face must distribute (that is its whole point)")
-    val sw = org.apache.spark.sql.expressions.Window
-      .orderBy(col("k")).rangeBetween(-17L, 0L)
-    val want = stock {
-      df.withColumn("ws", sum(col("x")).over(sw))
-        .withColumn("wc", count(col("x")).over(sw))
-        .select(col("id"), col("ws"), col("wc")).localCheckpoint()
-    }
-    val totalAbs = df.agg(sum(abs(col("x")))).head.getDouble(0)
-    val tol = 1e-9 * totalAbs
-    val r = got.join(want, "id")
-      .agg(
-        max(abs(col("gs") - col("ws"))).as("maxd"),
-        sum(when(col("gs").isNull =!= col("ws").isNull, 1L).otherwise(0L)).as("nullmis"),
-        sum(when(col("gc") =!= col("wc"), 1L).otherwise(0L)).as("cntmis"),
-        count(lit(1)).as("n")).head
-    assert(r.getAs[Long]("n") == n)
-    assert(r.getAs[Long]("nullmis") == 0L, "all-null-frame NULLs must agree exactly")
-    assert(r.getAs[Long]("cntmis") == 0L, "counts are integral and must agree exactly")
-    assert(r.getAs[Double]("maxd") <= tol,
-      s"fp face drifted beyond the documented bound: max |Δ| = ${r.getAs[Double]("maxd")}, tol = $tol")
   }
 
   test("rowsSlidingAll: reliableCheckpoint face bit-matches the localCheckpoint default") {

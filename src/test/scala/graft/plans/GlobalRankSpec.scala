@@ -118,9 +118,9 @@ class GlobalRankSpec extends SparkSuite {
     // unsupported functions → untouched (the lint still owns them):
     // RANGE sliding frames need value arithmetic (ROWS sliding rewrites —
     // see the sliding tests), stddev/variance aren't matched
-    val rangeSliding = org.apache.spark.sql.expressions.Window
+    val rangeFrame = org.apache.spark.sql.expressions.Window
       .orderBy(col("score")).rangeBetween(-2, 0)
-    assert(!planOf(df.withColumn("s", sum(col("score")).over(rangeSliding))).contains("GlobalRank"))
+    assert(!planOf(df.withColumn("s", sum(col("score")).over(rangeFrame))).contains("GlobalRank"))
     assert(!planOf(df.withColumn("a", stddev(col("payload")).over(wGlob))).contains("GlobalRank"))
     assert(!planOf(df.withColumn("a", var_samp(col("payload")).over(wGlob))).contains("GlobalRank"))
     // one unsupported sibling vetoes the whole node

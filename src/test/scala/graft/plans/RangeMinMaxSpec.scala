@@ -8,7 +8,7 @@ import graft.SparkSuite
 /** The sparse-block RANGE min/max rewrite: bit-equality vs the
   * kill-switched stock single-partition Window on randomized tied/null
   * corpora (PRECEDING-only and centered frames), the BIGINT domain edges
-  * against unbounded-integer math, the library face, value-type breadth,
+  * against unbounded-integer math, the DataFrame face, value-type breadth,
   * and the scope rejections.
   */
 class RangeMinMaxSpec extends SparkSuite {
@@ -98,8 +98,11 @@ class RangeMinMaxSpec extends SparkSuite {
         val in = rows.collect { case (_, k2, v) if BigInt(k2) >= lo && BigInt(k2) <= hi => v }
         id -> (in.min, in.max)
       }.toMap
-      val out = graft.operators.RangeWindows
-        .rangeSlidingMinMax(df, Seq("id"), "k", "d", w, m)
+      val sw = org.apache.spark.sql.expressions.Window
+        .orderBy(col("k")).rangeBetween(-w, m)
+      val out = df.withColumn("frame_min", min(col("d")).over(sw))
+        .withColumn("frame_max", max(col("d")).over(sw))
+      assert(cliffFree(out), s"w=$w m=$m did not leave the cliff:\n${planOf(out)}")
       val got = out.collect().map(r => r.getAs[Long]("id") ->
         ((BigDecimal(r.getAs[java.math.BigDecimal]("frame_min")),
           BigDecimal(r.getAs[java.math.BigDecimal]("frame_max"))))).toMap
@@ -107,17 +110,17 @@ class RangeMinMaxSpec extends SparkSuite {
     }
   }
 
-  test("library face matches the stock Window; no cliff in its plan") {
+  test("DataFrame rangeBetween min/max matches the stock Window; no cliff in its plan") {
     val df = corpus(71L, 1000)
     for ((w, m) <- Seq((5L, 0L), (3L, 4L))) {
-      val out = graft.operators.RangeWindows
-        .rangeSlidingMinMax(df, Seq("id"), "k", "d", w, m)
-      assert(cliffFree(out))
+      val sw = org.apache.spark.sql.expressions.Window
+        .orderBy(col("k")).rangeBetween(-w, m)
+      val out = df.withColumn("frame_min", min(col("d")).over(sw))
+        .withColumn("frame_max", max(col("d")).over(sw))
+      assert(cliffFree(out), planOf(out))
       val got = out.collect()
         .map(r => r.getAs[Long]("id") ->
           ((r.getAs[Any]("frame_min"), r.getAs[Any]("frame_max")))).toMap
-      val sw = org.apache.spark.sql.expressions.Window
-        .orderBy(col("k")).rangeBetween(-w, m)
       val want = stock {
         df.withColumn("mn", min(col("d")).over(sw))
           .withColumn("mx", max(col("d")).over(sw))

@@ -183,36 +183,35 @@ class RangeSlidingSpec extends SparkSuite {
     }
   }
 
-  test("library sumBetween/avgBetween faces match the stock Window; edges clamp") {
+  test("DataFrame rangeBetween FOLLOWING frames match the stock Window; edges clamp") {
     val df = corpus(63L, 800)
     val (w, m) = (5L, 3L)
-    val out = graft.operators.RangeWindows
-      .rangeSlidingSumBetween(df, Seq("id"), "k", "d", w, m)
-    val got = out.collect()
-      .map(r => r.getAs[Long]("id") ->
-        (String.valueOf(r.getAs[Any]("frame_sum")), r.getAs[Long]("frame_cnt"))).toMap
     val sw = org.apache.spark.sql.expressions.Window
       .orderBy(col("k")).rangeBetween(-w, m)
-    val want = stock {
-      df.withColumn("fs", sum(col("d")).over(sw))
-        .withColumn("fc", count(col("d")).over(sw))
-        .collect().map(r => r.getAs[Long]("id") ->
-          (String.valueOf(r.getAs[Any]("fs")), r.getAs[Long]("fc"))).toMap
-    }
-    assert(got == want, "sumBetween diverged from the stock Window")
+    def shape(d: DataFrame) = d
+      .withColumn("fs", sum(col("d")).over(sw))
+      .withColumn("fc", count(col("d")).over(sw))
+      .withColumn("fa", avg(col("d")).over(sw))
+      .select("id", "fs", "fc", "fa")
+    def rows(d: DataFrame) = d.collect()
+      .map(r => r.getLong(0) -> r.toSeq.drop(1).map(String.valueOf)).toMap
+    val viaRule = shape(df)
+    assert(planOf(viaRule).contains("GlobalRank"), planOf(viaRule))
+    assert(rows(viaRule) == stock(rows(shape(df).localCheckpoint())),
+      "rangeBetween(-w, m) diverged from the stock Window")
     // BIGINT edges: clamped thresholds match unbounded-integer math
     val ks = Seq(Long.MinValue, Long.MinValue + 2, -1L, 3L,
       Long.MaxValue - 4, Long.MaxValue)
-    val rows = ks.zipWithIndex.map { case (k, i) => (i.toLong, k, BigDecimal(i + 1)) }
-    val edf = rows.toDF("id", "k", "d").withColumn("d", col("d").cast("decimal(12,2)"))
-    val expect = rows.map { case (id, k, _) =>
+    val edges = ks.zipWithIndex.map { case (k, i) => (i.toLong, k, BigDecimal(i + 1)) }
+    val edf = edges.toDF("id", "k", "d").withColumn("d", col("d").cast("decimal(12,2)"))
+    val expect = edges.map { case (id, k, _) =>
       val (lo, hi) = (BigInt(k) - w, BigInt(k) + m)
-      id -> rows.collect { case (_, k2, v) if BigInt(k2) >= lo && BigInt(k2) <= hi => v }.sum
+      id -> edges.collect { case (_, k2, v) if BigInt(k2) >= lo && BigInt(k2) <= hi => v }.sum
     }.toMap
-    val egot = graft.operators.RangeWindows
-      .rangeSlidingSumBetween(edf, Seq("id"), "k", "d", w, m)
-      .collect().map(r => r.getAs[Long]("id") ->
-        BigDecimal(r.getAs[java.math.BigDecimal]("frame_sum"))).toMap
+    val edgeRule = edf.withColumn("fs", sum(col("d")).over(sw)).select("id", "fs")
+    assert(planOf(edgeRule).contains("GlobalRank"), planOf(edgeRule))
+    val egot = edgeRule.collect()
+      .map(r => r.getLong(0) -> BigDecimal(r.getDecimal(1))).toMap
     assert(egot == expect, s"edges: got=$egot want=$expect")
   }
 
@@ -236,12 +235,6 @@ class RangeSlidingSpec extends SparkSuite {
     val got = viaRule.collect()
       .map(r => r.getLong(0) -> BigDecimal(r.getDecimal(1))).toMap
     assert(got == expect, s"rule path: got=$got want=$expect")
-    val lib = graft.operators.RangeWindows
-      .rangeSlidingSum(df, Seq("id"), "k", "d", w)
-    val gotLib = lib.collect()
-      .map(r => r.getAs[Long]("id") ->
-        BigDecimal(r.getAs[java.math.BigDecimal]("frame_sum"))).toMap
-    assert(gotLib == expect, s"library path: got=$gotLib want=$expect")
     // a width at the representable edge (w + 1 would overflow) stays stock
     df.createOrReplaceTempView("rs_floor")
     assert(!planOf(spark.sql(

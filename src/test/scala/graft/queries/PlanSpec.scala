@@ -73,20 +73,30 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("Join"), "the rewrite must still be a join:\n" + p)
   }
 
-  test("c8: curriculum ntile plans a bucket-keyed window, never a single-partition one") {
+  test("c8: the DataFrame global ntile plans GlobalRankExec, never a single-partition Window") {
     val df = CoreQueries.c8CurriculumBins(spark, sf001)
     val p = simplePlan(df)
-    assert(p.contains("hashpartitioning(rank_bucket"),
-      "distributed rank must exchange on the literal-derived bucket id:\n" + p)
-    // the rank window must be PARTITIONED (by rank_bucket) — the global
-    // empty-partition Window is the one-task cliff this operator replaces
+    // the global empty-partition Window is the one-task cliff the rewrite
+    // replaces
     assert(graft.plans.PlanChecks.unboundedGlobalWindows(df).isEmpty,
       "global ntile must not fall back to a one-task Window:\n" + p)
-    // the local-rank stage is literal bucket arithmetic + a keyed window —
-    // it must never cross an object/encoder boundary
-    assert(!p.contains("DeserializeToObject") && !p.contains("SerializeFromObject") &&
-      !p.contains("MapPartitions"),
-      "the rank stage must not leave whole-stage codegen:\n" + p)
+    assert(p.contains("GlobalRank"),
+      "the optimizer must rewrite the global window into the distributed rank:\n" + p)
+  }
+
+  test("e19/e20/e21: the DataFrame RANGE faces plan no one-task Window") {
+    for ((name, df, sums) <- Seq(
+        ("e19", CoreQueries.e19RangeSliding(spark, sf001), true),
+        ("e20", CoreQueries.e20RangeMinmax(spark, sf001), false),
+        ("e21", CoreQueries.e21RangeCentered(spark, sf001), true))) {
+      val p = simplePlan(df)
+      assert(graft.plans.PlanChecks.unboundedGlobalWindows(df).isEmpty,
+        s"$name: a RANGE frame fell back to a one-task Window:\n" + p)
+      // sum/count ride the ghost-probe running window (GlobalRankExec);
+      // min/max ride the block decomposition's partitioned windows
+      if (sums) assert(p.contains("GlobalRank"),
+        s"$name: the running window must ride the distributed exec:\n" + p)
+    }
   }
 
   test("c8b: the RAW-SQL global ntile rewrites to GlobalRankExec, no Window anywhere") {
@@ -98,11 +108,13 @@ class PlanSpec extends SparkSuite {
       "no single-partition Window may survive the rewrite:\n" + p)
     assert(p.contains("rangepartitioning"),
       "the rank must ride a range exchange (a global sort's envelope):\n" + p)
-    // and the two lanes agree: optimizer-rewritten SQL ≡ the explicit
-    // Ranking.ntile composition
-    val viaApi = CoreQueries.c8CurriculumBins(spark, sf001).collect().map(_.toString).toSeq
+    // and the rewrite agrees with the stock single-partition Window (c8
+    // plans the same GlobalRankExec, so it is no independent comparator)
     val viaSql = df.collect().map(_.toString).toSeq
-    assert(viaApi == viaSql, "c8 and c8b diverged")
+    spark.conf.set(graft.plans.GlobalRankRule.EnabledKey, "false")
+    val stock = try CoreQueries.c8bCurriculumBinsSql(spark, sf001).collect().map(_.toString).toSeq
+      finally spark.conf.unset(graft.plans.GlobalRankRule.EnabledKey)
+    assert(viaSql == stock, "c8b diverged from the stock Window")
   }
 
   test("c8c/e15/e16: cume_dist + prefix aggregates rewrite to GlobalRankExec, no Window") {
@@ -358,7 +370,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("no global (empty-partition) Window over an unbounded input anywhere in the surface") {
-    // the one-task global-sort cliff Ranking exists to avoid: a Window with
+    // the one-task global-sort cliff the plans/ rules rewrite: a Window with
     // no PARTITION BY is only sanctioned over aggregate/limit-bounded rows
     graft.SparkEntry.queries.foreach { case (name, fn) =>
       val bad = graft.plans.PlanChecks.unboundedGlobalWindows(fn(spark, sf001))

@@ -104,24 +104,33 @@ class QueriesSpec extends SparkSuite {
     assert(got == expected, s"binned rewrite diverged: got=$got expected=$expected")
   }
 
-  test("c8/Ranking: distributed ntile is bit-equal to the window ntile, fat tiles included") {
+  test("c8: distributed ntile is bit-equal to the window ntile, fat tiles included") {
     import org.apache.spark.sql.expressions.Window
+    graft.plans.GlobalRank.ensureRegistered(spark)
     val docs = graft.Tables(spark, sf001, "documents")
       .select(col("doc_id"), col("n_chars"))
+    val order = Window.orderBy(col("n_chars"), col("doc_id"))
     // k=7 does NOT divide the doc count — the first n%k tiles must carry
     // one extra row, exactly as SQL NTILE mandates.
     for (k <- Seq(7, 10)) {
-      val dist = graft.operators.Ranking.ntile(docs, k, Seq(col("n_chars"), col("doc_id")))
-        .select(col("doc_id"), col("bin")).collect()
+      val distDf = docs.withColumn("bin", ntile(k).over(order))
+      assert(distDf.queryExecution.executedPlan.toString.contains("GlobalRank"),
+        s"k=$k: the ntile must ride the distributed rank rewrite")
+      val dist = distDf.select(col("doc_id"), col("bin")).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       // dropDuplicates on the unique key bounds the input without changing
-      // a row, so GlobalRankRule (registered session-wide by other suites)
-      // cannot rewrite this comparator — it must stay Spark's own Window
-      val window = docs.dropDuplicates("doc_id").withColumn("bin",
-          ntile(k).over(Window.orderBy(col("n_chars"), col("doc_id"))))
-        .select(col("doc_id"), col("bin")).collect()
+      // a row, so GlobalRankRule cannot rewrite this comparator — it must
+      // stay Spark's own Window
+      val windowDf = docs.dropDuplicates("doc_id").withColumn("bin", ntile(k).over(order))
+      assert(!windowDf.queryExecution.executedPlan.toString.contains("GlobalRank"))
+      val window = windowDf.select(col("doc_id"), col("bin")).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(dist == window, s"k=$k: distributed ntile diverged from the window ntile")
+      // and the declared face bins exactly those tiles
+      val perBin = window.values.groupBy(identity).map { case (b, bs) => b -> bs.size.toLong }
+      val face = CoreQueries.c8CurriculumBins(spark, sf001, k).collect()
+        .map(r => r.getInt(0) -> r.getAs[Long]("n_docs")).toMap
+      assert(face == perBin, s"k=$k: c8 bin sizes diverged from the window ntile")
     }
   }
 
