@@ -126,7 +126,7 @@ object Pipeline {
     * holds every batch tuple as its ticker's current row — the reference
     * re-upserts the same static dim on every 6-hourly run, so that is the
     * steady state — that generation is METADATA-ONLY: the same entries and
-    * the same schema sidecar, no data file written, an empty [[SnapshotLake.changes]]
+    * the same recorded schema, no data file written, an empty [[SnapshotLake.changes]]
     * delta. Any difference (a renamed index, a new ticker, a widened or
     * re-partitioned lake) takes the keyed merge, with its refusals.
     *

@@ -1,8 +1,14 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, LessThan, Literal}
+import org.apache.spark.sql.execution.datasources.{
+  FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SNAPSHOT-ISOLATED partitioned parquet lake: a manifest-pointer commit
   * protocol over immutable per-partition GENERATION directories.
@@ -20,9 +26,18 @@ import org.apache.spark.sql.functions._
   *
   * Layout (under the table root):
   * {{{
-  *   _manifests/manifest-<zero-padded gen>     one per commit; max = current
+  *   _manifests/manifest-<zero-padded gen>     one per commit; max = current;
+  *                                             its header records the schema
+  *   _manifests/files-<zero-padded gen>        the files commit <gen> wrote
   *   data/<partitionCol>=h<HEX>/gen=<n>/part-….parquet
   * }}}
+  *  - The manifest names every live (partition, generation) entry and the
+  *    snapshot's schema; each generation's `files-<gen>` record names
+  *    every data file that commit wrote, with its bytes and mtime and, for
+  *    tables with stats columns, its row count and typed min/max. Together
+  *    they are the file index: resolving a read lists nothing and starts
+  *    no Spark job (a generation without a record, from an older lake, is
+  *    listed on the driver, one `listStatus` per gen dir).
   *  - Partition dir names carry the value HEX-ENCODED (of its
   *    `cast(v as string)` UTF-8 bytes, computed by the same Spark
   *    expression that routes the rows) behind a constant `h` prefix — the
@@ -43,12 +58,17 @@ import org.apache.spark.sql.functions._
   *  - SNAPSHOT READS: a reader resolving between a commit's installs and
   *    its publish sees the wholly-OLD snapshot; after the publish, the
   *    wholly-NEW one; never a mix. A resolved DataFrame holds concrete
-  *    gen-dir paths, so later commits don't disturb an in-flight scan
+  *    file paths, so later commits don't disturb an in-flight scan
   *    (gen dirs are immutable until [[vacuum]]).
-  *  - CRASH SAFETY: a writer dying after staging/installing but before the
-  *    manifest create leaves the old snapshot fully readable; the next
-  *    writer GCs the unpublished orphan gens (single-writer lease) and
-  *    re-runs to convergence (idempotent LWW).
+  *  - RESOLUTION LISTS NOTHING: [[read]], [[readAt]], [[readSlice]],
+  *    [[readIn]] and the SQL face build their relation from the manifest
+  *    and the file records alone, so planning a read starts no Spark job
+  *    however many partitions it spans.
+  *  - CRASH SAFETY: a writer dying after staging/installing (or after
+  *    writing its file record) but before the manifest create leaves the
+  *    old snapshot fully readable; the next writer GCs the unpublished
+  *    orphan gens and records (single-writer lease) and re-runs to
+  *    convergence (idempotent LWW).
   *  - SHARED MECHANISM: [[merge]] (keyed last-write-wins upsert),
   *    [[delete]]/[[deleteKeys]] (row-level takedown), and [[compact]]
   *    (small-file maintenance) all commit through the same
@@ -57,12 +77,13 @@ import org.apache.spark.sql.functions._
   *    into the CDC frame an incremental consumer wants.
   *
   * Scale shape (100 TB): a commit's metadata cost is O(#partitions) manifest
-  * lines + one file create — no recursive listing anywhere (the manifest IS
-  * the listing, the same reason table formats beat raw Hive layouts at
-  * scale). Data cost is partition-scoped: untouched partitions are not
-  * read, not rewritten, and their gen dirs stay byte-identical.
-  * Reader-side partition pruning happens at manifest resolution
-  * ([[read]]'s `partitionValues` overload) before Spark ever lists a file.
+  * lines + O(#files written) record lines + two file creates — no
+  * recursive listing anywhere (manifest and records ARE the listing, the
+  * same reason table formats beat raw Hive layouts at scale). Data cost
+  * is partition-scoped: untouched partitions are not read, not rewritten,
+  * and their gen dirs stay byte-identical. Reader-side partition pruning
+  * happens at manifest resolution ([[read]]'s `partitionValues`
+  * overload), file pruning over the records' min/max ([[readSlice]]).
   *
   * Single-writer protocol via [[LakeLease]], as for every lake mutator.
   * Readers take no lock: they race only the atomic manifest create.
@@ -80,13 +101,28 @@ object SnapshotLake {
     * a publish time (any copy/rsync/object-store migration rewrites
     * mtimes, silently re-dating every snapshot for `TIMESTAMP AS OF`).
     * None only for legacy manifests written before the stamp existed.
+    *
+    * `schema`: the snapshot's schema, recorded in the header (Spark's JSON
+    * form, always the nullable shape). It makes the widen-only evolution
+    * contract readable: a mixed-generation read pins the UNION schema
+    * (old gens fill the added columns with null), and time travel to a
+    * pre-widen snapshot answers with that snapshot's own narrower schema.
+    * None only for legacy manifests (see [[snapshotSchema]]).
     */
   case class Manifest(gen: Long, partitionCol: String, entries: Seq[Entry],
-      publishedAtMs: Option[Long] = None)
+      publishedAtMs: Option[Long] = None, schema: Option[StructType] = None)
+
+  /** One data file of a snapshot, as its generation's record lists it:
+    * the file's status (qualified path, bytes, mtime) and — for tables
+    * with stats columns — its row count and each stats column's
+    * (min, max) in recorded string form (a null side never prunes).
+    * Files of a generation without a record carry no stats.
+    */
+  private[graft] case class LiveFile(status: FileStatus, rows: Option[Long],
+      bounds: Map[String, (String, String)])
 
   private val ManifestName = """manifest-(\d{20})""".r
-  private val StatsName = """stats-(\d{20})""".r
-  private val SchemaName = """schema-(\d{20})""".r
+  private val FilesName = """files-(\d{20})""".r
   // digits-only, like ManifestName: stray non-numeric `gen=` debris (manual
   // copies, partial syncs) must be skipped, not NumberFormatException every
   // future merge/compact/vacuum into a brick
@@ -115,60 +151,51 @@ object SnapshotLake {
     }
   }
 
-  private def parseManifest(fs: FileSystem, p: Path, gen: Long): Manifest = {
+  private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
-    val text = try {
-      scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    } finally in.close()
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  /** Create `dest` holding `text` through a temp file and one rename, so a
+    * reader sees the whole file or none of it. `dest` must not exist.
+    */
+  private def putText(fs: FileSystem, dest: Path, text: String): Unit = {
+    fs.mkdirs(dest.getParent)
+    val tmp = new Path(dest.getParent, s".tmp-${dest.getName}-${System.nanoTime()}")
+    val out = fs.create(tmp, false)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    Upsert.renameOrThrow(fs, tmp, dest)
+  }
+
+  private def parseManifest(fs: FileSystem, p: Path, gen: Long): Manifest = {
+    val text = readText(fs, p)
     val lines = text.split('\n').filter(_.nonEmpty)
     val header = lines.head.split('\t')
-    // 3 fields = legacy (pre-publish-stamp) manifest; 4th = publish epoch ms
-    require((header.length == 3 || header.length == 4) &&
+    // 3 fields = legacy (pre-publish-stamp) manifest; 4th = publish epoch
+    // ms; 5th = the snapshot's schema (compact JSON: no raw tab/newline)
+    require(header.length >= 3 && header.length <= 5 &&
       header(0) == "graft-snapshot-v1",
       s"unrecognized manifest header in $p: ${lines.head}")
-    val publishedAt =
-      if (header.length == 4) scala.util.Try(header(3).toLong).toOption else None
+    val publishedAt = header.lift(3).flatMap(_.toLongOption)
+    val schema = header.lift(4).flatMap(j => scala.util.Try(DataType.fromJson(j))
+      .toOption.collect { case s: StructType => s })
     val entries = lines.tail.toSeq.map { l =>
       // value strings may contain tabs — split only the first two fields
       val a = l.split('\t')
       Entry(a(0), a(1).toLong, a.drop(2).mkString("\t"))
     }
-    Manifest(gen, header(1), entries, publishedAt)
+    Manifest(gen, header(1), entries, publishedAt, schema)
   }
 
-  // ---- per-snapshot SCHEMA sidecars (the schema-evolution contract) ----
-
-  private def schemaPath(path: String, gen: Long) =
-    new Path(manifestDir(path), f"schema-$gen%020d")
-
-  /** Record snapshot `gen`'s schema (Spark's own JSON form) BEFORE its
-    * manifest publishes — the per-snapshot schema is what makes the
-    * widen-only evolution contract readable: a mixed-generation read pins
-    * the UNION schema (old gens fill the added columns with null), and
-    * time travel to a pre-widen snapshot still answers with that
-    * snapshot's own narrower schema. Crash between sidecar and publish
-    * leaves an orphan, GC'd with the orphan gens.
-    *
-    * The recorded shape is ALWAYS the nullable one (Spark's own
-    * file-relation posture): a parquet-backed snapshot can never promise
-    * non-null — on a widened history the pre-add generations null-fill
-    * the added column, so a batch-derived non-nullable field (e.g. a
-    * `concat_ws` product) recorded verbatim would be a LIE the first
-    * nullability-exploiting codegen consumer (a hash, a non-null-checked
-    * getter) turns into an executor NPE.
+  /** Recursive nullable form (what `DataType.asNullable` does privately).
+    * The recorded schema is ALWAYS this shape (Spark's own file-relation
+    * posture): a parquet-backed snapshot can never promise non-null — on
+    * a widened history the pre-add generations null-fill the added
+    * column, so a batch-derived non-nullable field (e.g. a `concat_ws`
+    * product) recorded verbatim would be a LIE the first
+    * nullability-exploiting codegen consumer turns into an executor NPE.
     */
-  private def writeSchemaSidecar(fs: FileSystem, path: String, gen: Long,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    fs.mkdirs(manifestDir(path))
-    val tmp = new Path(manifestDir(path), s".tmp-schema-$gen-${System.nanoTime()}")
-    val out = fs.create(tmp, false)
-    try out.write(toNullable(schema).json.getBytes("UTF-8")) finally out.close()
-    Upsert.renameOrThrow(fs, tmp, schemaPath(path, gen))
-  }
-
-  /** Recursive nullable form (what `DataType.asNullable` does privately). */
-  private def toNullable(
-      dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
+  private def toNullable(dt: DataType): DataType = {
     import org.apache.spark.sql.types._
     dt match {
       case s: StructType => StructType(s.fields.map(f =>
@@ -181,37 +208,42 @@ object SnapshotLake {
       case other => other
     }
   }
-  private def toNullable(
-      s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
-    toNullable(s: org.apache.spark.sql.types.DataType)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+  private def toNullable(s: StructType): StructType =
+    toNullable(s: DataType).asInstanceOf[StructType]
 
-  private def readSchemaSidecar(fs: FileSystem, path: String,
-      gen: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val p = schemaPath(path, gen)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(text))
-      .toOption.collect { case s: org.apache.spark.sql.types.StructType => s }
-  }
-
-  /** The schema snapshot `m` answers with: its own recorded sidecar when
-    * present (every post-evolution-contract commit writes one), else the
-    * legacy fallback — one head gen dir's parquet footer (correct for
-    * lakes that never evolved, which is every pre-sidecar lake). None for
-    * a snapshot with no entries and no sidecar.
+  /** The schema snapshot `m` answers with: the one its manifest records
+    * (every commit since the schema moved into the manifest header);
+    * else, for a legacy manifest, one head gen dir's parquet footer
+    * (correct for lakes that never evolved); else, for an EMPTY legacy
+    * snapshot, the newest older one's ([[schemaFallback]]). None only for
+    * a table that never published a row or a schema.
     */
   private[graft] def snapshotSchema(spark: SparkSession, path: String,
-      m: Manifest): Option[org.apache.spark.sql.types.StructType] = {
-    val fs = fsOf(spark, path)
-    readSchemaSidecar(fs, path, m.gen).orElse {
-      if (m.entries.isEmpty) None
-      else scala.util.Try(
-        spark.read.parquet(genDirOf(path, m.entries.head).toString).schema)
-        .toOption
+      m: Manifest): Option[StructType] =
+    m.schema.orElse(footerSchema(spark, path, m)).orElse {
+      if (m.entries.isEmpty) schemaFallback(spark, path, m.gen) else None
     }
+
+  /** A legacy snapshot's schema from one gen dir's footer (a Spark job). */
+  private def footerSchema(spark: SparkSession, path: String,
+      m: Manifest): Option[StructType] =
+    m.entries.headOption.flatMap(e => scala.util.Try(
+      spark.read.parquet(genDirOf(path, e).toString).schema).toOption)
+
+  /** The schema an EMPTY legacy snapshot still answers with: resolved
+    * from the newest retained manifest below `gen` that records a schema
+    * or lists at least one entry (an unconditional DELETE empties the
+    * entry list but the prior snapshots' gen dirs stay on disk until
+    * [[vacuum]] — and vacuum keeps every gen dir a retained manifest
+    * references, so a parseable manifest implies readable files).
+    */
+  private def schemaFallback(spark: SparkSession, path: String,
+      gen: Long): Option[StructType] = {
+    val fs = fsOf(spark, path)
+    retainedGens(spark, path).filter(_ < gen).reverseIterator
+      .map(g => parseManifest(fs, new Path(manifestDir(path), f"manifest-$g%020d"), g))
+      .map(m => m.schema.orElse(footerSchema(spark, path, m)))
+      .collectFirst { case Some(s) => s } // an unreadable gen falls through
   }
 
   /** The widen-only evolution check: every CURRENT table column must
@@ -246,52 +278,54 @@ object SnapshotLake {
   /** PUBLISH: the one atomic cut. Write to a temp name, then a single
     * rename to `manifest-<gen>` — on every real filesystem a create-rename
     * (no overwrite) is atomic, so readers list either the old max or the
-    * new max, never a torn file.
+    * new max, never a torn file. The header records the publish time
+    * (create-once files make mtime a plausible proxy, but mtime does not
+    * survive copy/rsync/backup-restore — TIMESTAMP AS OF must resolve from
+    * a value the commit itself recorded) and the snapshot's schema.
     */
   private[etl] def publish(fs: FileSystem, path: String, m: Manifest): Unit = {
-    val dir = manifestDir(path)
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, f".tmp-${m.gen}%020d-${System.nanoTime()}")
-    val out = fs.create(tmp, false)
-    try {
-      val sb = new StringBuilder
-      // publish time stamped IN the header (4th field): create-once files
-      // make mtime a plausible proxy, but mtime does not survive
-      // copy/rsync/backup-restore — TIMESTAMP AS OF must resolve from a
-      // value the commit itself recorded
-      sb.append(
-        s"graft-snapshot-v1\t${m.partitionCol}\t${m.gen}\t${System.currentTimeMillis()}\n")
-      m.entries.sortBy(_.dirName).foreach { e =>
-        sb.append(s"${e.dirName}\t${e.gen}\t${e.value}\n")
-      }
-      out.write(sb.toString.getBytes("UTF-8"))
-    } finally out.close()
-    Upsert.renameOrThrow(fs, tmp, new Path(dir, f"manifest-${m.gen}%020d"))
+    val sb = new StringBuilder
+    sb.append(
+      s"graft-snapshot-v1\t${m.partitionCol}\t${m.gen}\t${System.currentTimeMillis()}")
+    m.schema.foreach(s => sb.append('\t').append(toNullable(s).json))
+    sb.append('\n')
+    m.entries.sortBy(_.dirName).foreach { e =>
+      sb.append(s"${e.dirName}\t${e.gen}\t${e.value}\n")
+    }
+    putText(fs, new Path(manifestDir(path), f"manifest-${m.gen}%020d"), sb.toString)
   }
 
-  /** Read the current snapshot. The returned frame binds the manifest's
-    * concrete gen-dir paths, so it is a stable SNAPSHOT: commits that land
-    * after this call do not change (or break) it until a [[vacuum]] drops
-    * the generation dirs it pins.
+  /** Read the current snapshot. The returned frame binds the snapshot's
+    * concrete files, so it is a stable SNAPSHOT: commits that land after
+    * this call do not change (or break) it until a [[vacuum]] drops the
+    * generation dirs it pins.
     */
-  def read(spark: SparkSession, path: String): DataFrame =
-    readManifest(spark, path, currentManifest(spark, path).getOrElse(
-      throw new IllegalStateException(s"$path has no published snapshot")), None)
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val m = current(spark, path)
+    scan(spark, path, m, m.entries)
+  }
 
   /** Read the current snapshot restricted to `partitionValues` (compared on
-    * the value's `cast as string` form): manifest-level pruning — Spark
-    * never even lists the other partitions' files.
+    * the value's `cast as string` form): manifest-level pruning — the
+    * other partitions' files never enter the plan.
     */
-  def read(spark: SparkSession, path: String, partitionValues: Seq[Any]): DataFrame =
-    readManifest(spark, path, currentManifest(spark, path).getOrElse(
-      throw new IllegalStateException(s"$path has no published snapshot")),
-      Some(partitionValues.map(String.valueOf).toSet))
+  def read(spark: SparkSession, path: String, partitionValues: Seq[Any]): DataFrame = {
+    val m = current(spark, path)
+    val vs = partitionValues.map(String.valueOf).toSet
+    scan(spark, path, m, m.entries.filter(e => vs.contains(e.value)))
+  }
 
   /** Time travel: read the snapshot as of manifest `gen` (must still be
     * retained — see [[vacuum]]).
     */
-  def readAt(spark: SparkSession, path: String, gen: Long): DataFrame =
-    readManifest(spark, path, manifestAt(spark, path, gen), None)
+  def readAt(spark: SparkSession, path: String, gen: Long): DataFrame = {
+    val m = manifestAt(spark, path, gen)
+    scan(spark, path, m, m.entries)
+  }
+
+  private def current(spark: SparkSession, path: String): Manifest =
+    currentManifest(spark, path).getOrElse(
+      throw new IllegalStateException(s"$path has no published snapshot"))
 
   /** The publish time (epoch ms) of one manifest FILE, for `TIMESTAMP AS
     * OF` resolution: the header's own stamp when present, else the file's
@@ -337,66 +371,192 @@ object SnapshotLake {
     parseManifest(fs, p, gen)
   }
 
-  private def readManifest(spark: SparkSession, path: String, m: Manifest,
-      values: Option[Set[String]]): DataFrame = {
-    val picked = values match {
-      case Some(vs) => m.entries.filter(e => vs.contains(e.value))
-      case None => m.entries
+  // ---- the resolver: manifest + file records → a relation, no listing ----
+
+  /** Snapshot `m` restricted to `entries`, under the snapshot's schema,
+    * keeping only the files whose recorded min/max can intersect `slices`
+    * ([[pruneFiles]]). The recorded schema pins mixed-generation reads:
+    * gens written before an ADD COLUMN lack it in their footers and read
+    * it as null. A pruned-to-nothing (or emptied-by-delete) read still
+    * carries the TABLE's shape, so select/filter on table columns keep
+    * working; only a table that never held a row answers with the
+    * zero-column frame.
+    */
+  private def scan(spark: SparkSession, path: String, m: Manifest,
+      entries: Seq[Entry],
+      slices: Seq[(String, Seq[(Option[Any], Option[Any])])] = Nil): DataFrame =
+    snapshotSchema(spark, path, m) match {
+      case Some(s) => relation(spark, path, entries, s, pruneFiles(spark, s, slices))
+      case None => spark.emptyDataFrame
     }
-    // the snapshot's recorded schema pins mixed-generation reads: after a
-    // widen-only evolution, gens written before the ADD COLUMN lack the
-    // new column in their footers — the explicit union schema makes them
-    // read it as null instead of footer-sampling nondeterminism deciding
-    // whether the column exists at all
-    val pinned = readSchemaSidecar(fsOf(spark, path), path, m.gen)
-    if (picked.nonEmpty) pinned match {
-      case Some(s) =>
-        spark.read.schema(s).parquet(picked.map(e => genDirOf(path, e).toString): _*)
-      case None =>
-        spark.read.parquet(picked.map(e => genDirOf(path, e).toString): _*)
-    } else {
-      // pruned-to-nothing (or emptied-by-delete) read still carries the
-      // TABLE's shape: an empty frame with the snapshot's schema, so
-      // df.select/filter on table columns keeps working (a zero-column
-      // emptyDataFrame would throw UNRESOLVED_COLUMN). An empty SNAPSHOT
-      // resolves its schema from its sidecar, else from history
-      // (schemaFallback); only a table that never held a row has no
-      // schema at all.
-      val schema = pinned.orElse {
-        if (m.entries.nonEmpty)
-          scala.util.Try(spark.read
-            .parquet(genDirOf(path, m.entries.head).toString).schema).toOption
-        else schemaFallback(spark, path, m.gen)
-      }.getOrElse(return spark.emptyDataFrame)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** `entries`' live files as a parquet relation under `schema`: the one
+    * place a lake read becomes a Spark plan.
+    */
+  private def relation(spark: SparkSession, path: String, entries: Seq[Entry],
+      schema: StructType, keep: LiveFile => Boolean = _ => true): DataFrame =
+    relationOver(spark, fileIndex(spark, path, entries, keep), schema)
+
+  private def relationOver(spark: SparkSession, index: InMemoryFileIndex,
+      schema: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      toNullable(schema), None, new ParquetFileFormat, Map.empty)(spark))
+
+  /** `entries`' files as a Spark file index that never lists: each gen
+    * dir is a root path whose leaf files come from [[liveFiles]], those
+    * `keep` rejects left out. Serves every read here and the SQL face's
+    * scan ([[graft.sources.LakeCatalog]]).
+    */
+  private[graft] def fileIndex(spark: SparkSession, path: String,
+      entries: Seq[Entry], keep: LiveFile => Boolean): InMemoryFileIndex =
+    indexOver(spark, liveFiles(spark, path, entries).map { case (dir, files) =>
+      dir -> files.filter(keep) })
+
+  private def indexOver(spark: SparkSession,
+      dirs: Seq[(Path, Seq[LiveFile])]): InMemoryFileIndex =
+    new InMemoryFileIndex(spark, dirs.map(_._1), Map.empty, None,
+      new KnownFiles(dirs.map { case (d, fs) => d -> fs.map(_.status).toArray }.toMap),
+      Some(PartitionSpec.emptySpec))
+
+  /** The leaf files of every root an [[InMemoryFileIndex]] is built over,
+    * known up front, so the index never lists (and a refresh re-reads the
+    * same immutable snapshot).
+    */
+  private final class KnownFiles(files: Map[Path, Array[FileStatus]])
+      extends FileStatusCache {
+    override def getLeafFiles(p: Path): Option[Array[FileStatus]] = files.get(p)
+    override def putLeafFiles(p: Path, leaf: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
+  }
+
+  /** Every live file of `entries`, per qualified gen dir: from the
+    * generations' records, one small driver-side read per distinct gen.
+    * A gen dir its record does not name — a generation without a record
+    * (an older lake), or an entry whose dir was renamed under an older
+    * dir scheme — is listed on the driver instead: one `listStatus` of
+    * that dir alone, never a Spark job.
+    */
+  private[graft] def liveFiles(spark: SparkSession, path: String,
+      entries: Seq[Entry]): Seq[(Path, Seq[LiveFile])] = {
+    val fs = fsOf(spark, path)
+    val data = fs.makeQualified(dataDir(path))
+    val records = entries.map(_.gen).distinct
+      .map(g => g -> readFiles(fs, path, data, g)).toMap
+    entries.map { e =>
+      val dir = new Path(new Path(data, e.dirName), s"gen=${e.gen}")
+      dir -> records(e.gen).getOrElse(dir, listed(fs, dir))
     }
   }
 
-  /** The schema an EMPTY snapshot still answers with: resolved from the
-    * newest retained manifest at or below `gen` that lists at least one
-    * entry (an unconditional DELETE empties the entry list but the prior
-    * snapshots' gen dirs stay on disk until [[vacuum]] — and vacuum keeps
-    * every gen dir a retained manifest references, so a parseable
-    * manifest implies readable files). None for a table that never
-    * published a row.
+  /** `dir`'s data files by driver-side listing, without stats. The filter
+    * matches Spark's own hidden-file rule ('_' AND '.' prefixes: the
+    * filesystem's `.crc` checksums, `_SUCCESS`).
     */
-  private[graft] def schemaFallback(spark: SparkSession, path: String,
-      gen: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val fs = fsOf(spark, path)
-    val dir = manifestDir(path)
-    if (!fs.exists(dir)) return None
-    val gens = fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case ManifestName(g) => g.toLong }
-      .filter(_ <= gen).sorted.reverse
-    gens.iterator
-      .map(g => parseManifest(fs, new Path(dir, f"manifest-$g%020d"), g))
-      .filter(_.entries.nonEmpty)
-      .map(m => scala.util.Try(
-        spark.read.parquet(genDirOf(path, m.entries.head).toString).schema
-      ).toOption)
-      .collectFirst { case Some(s) => s } // an unreadable gen falls through
+  private def listed(fs: FileSystem, dir: Path): Seq[LiveFile] =
+    fs.listStatus(dir).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      // the path is rebuilt as `dir/name`: the index matches a root to its
+      // leaf files by the leaf's parent path
+      .map(s => LiveFile(new FileStatus(s.getLen, false, 0, 0,
+        s.getModificationTime, new Path(dir, s.getPath.getName)), None, Map.empty))
+
+  // ---- per-generation file records ----
+
+  private def filesPath(path: String, gen: Long) =
+    new Path(manifestDir(path), f"files-$gen%020d")
+
+  /** Record generation `gen`'s files BEFORE its manifest publishes. Bytes
+    * and mtime come from a driver-side listing of each just-installed gen
+    * dir of `entries`; with `statsCols`, ONE aggregation over exactly
+    * those files (through the non-listing index reads use) adds each
+    * file's row count and the typed min/max of every stats column. A
+    * crash between record and publish leaves an orphan record, GC'd with
+    * the orphan gens. Returns the recorded files with their entries.
+    *
+    * Format: a header `graft-files-v1 <gen> <statsCols>`, then one line
+    * per file — its path relative to `data/`, bytes, mtime, rows (empty
+    * when not counted) and a (min, max) pair per stats column — each
+    * field URL-encoded, tab-separated.
+    */
+  private def recordFiles(spark: SparkSession, fs: FileSystem, path: String,
+      gen: Long, entries: Seq[Entry], schema: StructType,
+      statsCols: Seq[String]): Seq[(Entry, LiveFile)] = {
+    val data = fs.makeQualified(dataDir(path))
+    val dirs = entries.map { e =>
+      val dir = new Path(new Path(data, e.dirName), s"gen=${e.gen}")
+      (e, dir, listed(fs, dir))
+    }
+    // per file (qualified path): rows, then (min, max) per stats column
+    val stats: Map[String, Seq[String]] =
+      if (statsCols.isEmpty) Map.empty
+      else {
+        // min/max run on the TYPED column, then take the string form: the
+        // string order of a number is not its value order (Long 1..250
+        // would record [1, 99]), and pruning casts the recorded forms
+        // back to the column's type
+        val aggs = count(lit(1)).cast("string") +: statsCols.flatMap { c =>
+          val dt = schema(c).dataType
+          Seq(statForm(min(col(c)), dt), statForm(max(col(c)), dt))
+        }
+        relationOver(spark, indexOver(spark, dirs.map(d => (d._2, d._3))), schema)
+          .groupBy(input_file_name())
+          .agg(aggs.head, aggs.tail: _*).collect()
+          // input_file_name() is a URI string (`file:///…`, percent-
+          // encoded); qualify it so it takes the listed paths' form
+          .map(r => fs.makeQualified(new Path(new java.net.URI(r.getString(0))))
+            .toString -> (1 until r.length).map(r.getString))
+          .toMap
+      }
+    val files = dirs.flatMap { case (e, _, listedFiles) => listedFiles.map { f =>
+      e -> stats.get(f.status.getPath.toString).fold(f) { s =>
+        f.copy(rows = Some(s.head.toLong), bounds = statsCols.zipWithIndex.map {
+          case (c, i) => c -> ((s(1 + 2 * i), s(2 + 2 * i)))
+        }.toMap)
+      }
+    }}
+    val sb = new StringBuilder
+    sb.append(s"graft-files-v1\t$gen\t${statsCols.map(enc).mkString(",")}\n")
+    files.foreach { case (e, f) =>
+      sb.append(s"${enc(s"${e.dirName}/gen=${e.gen}/${f.status.getPath.getName}")}\t" +
+        s"${f.status.getLen}\t${f.status.getModificationTime}\t${f.rows.getOrElse("")}")
+      statsCols.foreach { c =>
+        val (mn, mx) = f.bounds.getOrElse(c, (null, null))
+        sb.append(s"\t${enc(mn)}\t${enc(mx)}")
+      }
+      sb.append('\n')
+    }
+    putText(fs, filesPath(path, gen), sb.toString)
+    files
   }
+
+  /** Generation `gen`'s record as its files per qualified gen dir (under
+    * `data`); empty for a generation without a readable record. A record
+    * is used whole or not at all: a partial one would silently drop files.
+    */
+  private def readFiles(fs: FileSystem, path: String, data: Path,
+      gen: Long): Map[Path, Seq[LiveFile]] =
+    scala.util.Try {
+      val lines = readText(fs, filesPath(path, gen)).split('\n').filter(_.nonEmpty)
+      val header = lines.head.split("\t", -1)
+      require(header.length == 3 && header(0) == "graft-files-v1")
+      val cols = header(2).split(',').toSeq.filter(_.nonEmpty).map(dec)
+      lines.tail.toSeq.map { l =>
+        val a = l.split("\t", -1)
+        require(a.length == 4 + 2 * cols.length)
+        // `<dirName>/gen=<n>/<file>`: neither a dir name nor a file name
+        // holds a '/'
+        val rel = dec(a(0)).split('/')
+        require(rel.length == 3)
+        val dir = new Path(new Path(data, rel(0)), rel(1))
+        dir -> LiveFile(
+          new FileStatus(a(1).toLong, false, 0, 0, a(2).toLong, new Path(dir, rel(2))),
+          a(3).toLongOption,
+          cols.zipWithIndex.map { case (c, i) =>
+            c -> ((dec(a(4 + 2 * i)), dec(a(5 + 2 * i))))
+          }.toMap)
+      }.groupMap(_._1)(_._2)
+    }.getOrElse(Map.empty)
 
   /** The merge contract a lake was created with — keys, version column,
     * partition column, tie-breakers, stats columns. Persisted (as
@@ -420,10 +580,7 @@ object SnapshotLake {
     val fs = fsOf(spark, path)
     val p = metaPath(path)
     if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split('\n').filter(_.nonEmpty)
+    val lines = readText(fs, p).split('\n').filter(_.nonEmpty)
     if (lines.isEmpty || lines.head != "graft-lake-meta-v1") return None
     val kv = lines.tail.map { l =>
       val a = l.split('\t')
@@ -459,17 +616,10 @@ object SnapshotLake {
     val p = metaPath(path)
     val text = specText(spec)
     if (fs.exists(p)) {
-      val in = fs.open(p)
-      val cur = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      if (cur == text) return
+      if (readText(fs, p) == text) return
       fs.delete(p, false)
     }
-    fs.mkdirs(manifestDir(path))
-    val tmp = new Path(manifestDir(path), s".tmp-meta-${System.nanoTime()}")
-    val out = fs.create(tmp, false)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-    Upsert.renameOrThrow(fs, tmp, p)
+    putText(fs, p, text)
   }
 
   /** Keyed LWW merge into the lake, with a snapshot-isolated commit.
@@ -480,11 +630,12 @@ object SnapshotLake {
     * `tieBreakers` inside each side.
     *
     * `statsCols` (opt-in): range-CLUSTER each partition's files by these
-    * columns at write (one extra range exchange) and record per-FILE
-    * min/max into a `_manifests/stats-<gen>` sidecar (one extra
-    * page-cache-warm read of just-written data) — enabling
+    * columns at write (one extra range exchange) and record per-FILE row
+    * counts and min/max in the generation's `files-<gen>` record (one
+    * extra page-cache-warm read of just-written data) — enabling
     * [[readSlice]]'s FILE-level skipping inside a partition. Advisory
-    * metadata: a missing/partial sidecar only loses pruning, never rows.
+    * metadata: a file without recorded stats only loses pruning, never
+    * rows.
     */
   def merge(
       spark: SparkSession,
@@ -531,9 +682,9 @@ object SnapshotLake {
     * ('merge_keys'=…)` routes through ([[graft.sources.LakeCatalog]]), so a
     * SQL-only user can bootstrap a table and land batch 1 via INSERT
     * INTO / MERGE INTO without ever touching the Scala API. Publishes
-    * snapshot generation 0: an EMPTY manifest (no entries), the declared
-    * schema as gen 0's sidecar (so reads of the empty table answer with
-    * the declared shape, and the first merge's [[checkEvolution]] enforces
+    * snapshot generation 0: an EMPTY manifest (no entries) recording the
+    * declared schema (so reads of the empty table answer with the
+    * declared shape, and the first merge's [[checkEvolution]] enforces
     * it — a batch missing a declared column, or retyping one, refuses
     * exactly as it would against a merged table), and the persisted
     * [[MergeSpec]] every write face resolves. The manifest create is the
@@ -541,7 +692,7 @@ object SnapshotLake {
     * table already has a published snapshot or a stamped contract.
     */
   def create(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType, spec: MergeSpec): Unit = {
+      schema: StructType, spec: MergeSpec): Unit = {
     require(spec.keys.nonEmpty, "merge_keys must name at least one column")
     val names = schema.fieldNames.toSet
     (spec.keys ++ Seq(spec.versionCol, spec.partitionCol) ++
@@ -554,17 +705,14 @@ object SnapshotLake {
       require(currentManifest(spark, path).isEmpty,
         s"lake table at $path already exists (published snapshot) — " +
           "CREATE TABLE refuses to re-stamp a live table")
-      // With NO published manifest, a schema-0 sidecar or a table-meta can
-      // only be debris of a create that crashed before its publish (merges
-      // stamp their meta AFTER publishing, and vacuum always keeps >= 1
-      // manifest) — delete both so the retry's create-renames cannot
-      // collide and converge to a fresh table.
-      val orphanSchema = schemaPath(path, 0L)
-      if (fs.exists(orphanSchema)) fs.delete(orphanSchema, false)
+      // With NO published manifest, a table-meta can only be debris of a
+      // create that crashed before its publish (merges stamp their meta
+      // AFTER publishing, and vacuum always keeps >= 1 manifest) — delete
+      // it so the retry's create-rename cannot collide and converges to a
+      // fresh table.
       if (fs.exists(metaPath(path))) fs.delete(metaPath(path), false)
-      writeSchemaSidecar(fs, path, 0L, schema)
       writeMergeSpec(fs, path, spec)
-      publish(fs, path, Manifest(0L, spec.partitionCol, Nil))
+      publish(fs, path, Manifest(0L, spec.partitionCol, Nil, schema = Some(schema)))
     }
   }
 
@@ -591,25 +739,16 @@ object SnapshotLake {
     val fs = fsOf(spark, path)
     val p = streamMarkerPath(path, sinkId)
     if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split('\n')
+    val lines = readText(fs, p).split('\n')
     if (lines.isEmpty || lines.head != "graft-lake-stream-v1") None
     else lines.lift(1).flatMap(_.toLongOption)
   }
 
   private def writeStreamMarker(fs: FileSystem, path: String, sinkId: String,
       batchId: Long): Unit = {
-    val dir = streamMarkerDir(path)
-    fs.mkdirs(dir)
     val p = streamMarkerPath(path, sinkId)
     if (fs.exists(p)) fs.delete(p, false)
-    val tmp = new Path(dir, s".tmp-${System.nanoTime()}")
-    val out = fs.create(tmp, false)
-    try out.write(s"graft-lake-stream-v1\n$batchId\n$sinkId\n".getBytes("UTF-8"))
-    finally out.close()
-    Upsert.renameOrThrow(fs, tmp, p)
+    putText(fs, p, s"graft-lake-stream-v1\n$batchId\n$sinkId\n")
   }
 
   /** [[mergeViaSpec]] as a Structured Streaming micro-batch commit — the
@@ -663,7 +802,7 @@ object SnapshotLake {
   /** `ALTER TABLE … ADD COLUMN` — the widen-only evolution contract's DDL
     * verb, as a METADATA-ONLY commit: publishes generation `gen+1` with
     * the SAME partition entries (not a byte of data moves — exactly how
-    * [[delete]] keeps untouched partitions) and a schema sidecar widened
+    * [[delete]] keeps untouched partitions) and a recorded schema widened
     * by the new column appended. Readers of the new snapshot resolve the
     * widened shape (existing rows answer null — the parquet read is
     * schema-pinned, missing columns null-fill); time travel to older
@@ -684,19 +823,19 @@ object SnapshotLake {
     commitMetadataOnly(spark, path) { m =>
       val cur = snapshotSchema(spark, path, m).getOrElse(
         throw new UnsupportedOperationException(
-          s"lake at $path predates schema sidecars — evolve it by merging " +
-            "one widened batch (which records a sidecar), then ALTER works"))
+          s"lake at $path has no schema yet — merge one batch (which " +
+            "records it), then ALTER works"))
       require(!cur.fieldNames.exists(_.equalsIgnoreCase(field.name)),
         s"column ${field.name} already exists in $path " +
           s"(${cur.fieldNames.mkString(", ")})")
-      org.apache.spark.sql.types.StructType(cur.fields :+ field)
+      StructType(cur.fields :+ field)
     }
   }
 
   /** The one METADATA-ONLY commit: under the lease, publish generation
     * `gen+1` with the current snapshot's entries unchanged and
-    * `schemaOf(current)` as its schema sidecar. No data file is written,
-    * every gen dir (and its stats sidecar) stays shared with the previous
+    * `schemaOf(current)` as its recorded schema. No data file is written,
+    * every gen dir (and its file record) stays shared with the previous
     * snapshot, and the [[changes]] delta across the commit is empty.
     * `schemaOf` runs inside the lease, so its checks see the snapshot the
     * commit publishes over; it may refuse by throwing. Serves [[addColumn]]
@@ -704,7 +843,7 @@ object SnapshotLake {
     * same schema).
     */
   private[etl] def commitMetadataOnly(spark: SparkSession, path: String)(
-      schemaOf: Manifest => org.apache.spark.sql.types.StructType): Unit =
+      schemaOf: Manifest => StructType): Unit =
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
       val fs = fsOf(spark, path)
       val m = currentManifest(spark, path).getOrElse(
@@ -712,8 +851,8 @@ object SnapshotLake {
           s"$path has no published snapshot — nothing to commit over"))
       val schema = schemaOf(m)
       gcOrphans(fs, path, m.gen)
-      writeSchemaSidecar(fs, path, m.gen + 1, schema)
-      publish(fs, path, Manifest(m.gen + 1, m.partitionCol, m.entries))
+      publish(fs, path, Manifest(m.gen + 1, m.partitionCol, m.entries,
+        schema = Some(schema)))
     }
 
   /** The commit body shared by [[merge]] and [[mergeViaSpec]]; the caller
@@ -730,26 +869,6 @@ object SnapshotLake {
     prepareMerge(spark, path, updates, spec.keys, spec.versionCol,
       spec.partitionCol, spec.tieBreakers, spec.statsCols).foreach {
       case (fs, m) =>
-        // the commit's schema sidecar lands BEFORE the manifest publish:
-        // a reader resolving the new snapshot always finds its schema.
-        // The batch defines the snapshot's COLUMN SET — checkEvolution
-        // (inside prepareMerge) guaranteed it is a widening superset of
-        // the table's — but the recorded COLUMN ORDER is normalized to
-        // the existing table's with genuinely new columns appended: a
-        // batch whose columns merely arrive reordered must not silently
-        // reorder the table's published order (SELECT * / positional
-        // INSERT INTO binding would change across commits). Parquet reads
-        // under a pinned schema match columns BY NAME, so the files'
-        // physical order is free to differ.
-        val batchByName = updates.schema.fields.map(f => f.name -> f).toMap
-        val recorded = currentManifest(spark, path)
-          .flatMap(pm => snapshotSchema(spark, path, pm)) match {
-          case Some(t) => org.apache.spark.sql.types.StructType(
-            t.fields.map(f => batchByName(f.name)) ++
-              updates.schema.fields.filterNot(f => t.fieldNames.contains(f.name)))
-          case None => updates.schema
-        }
-        writeSchemaSidecar(fs, path, m.gen, recorded)
         publish(fs, path, m)
         // stamp the merge contract so `INSERT INTO` through the SQL face
         // can route later batches into the same keyed LWW commit
@@ -768,8 +887,8 @@ object SnapshotLake {
     * atomic manifest create, so readers see wholly-before or
     * wholly-after — and time travel ([[readAt]]) still resolves
     * pre-delete snapshots until [[vacuum]] expires them (a takedown that
-    * must also purge history is `delete` + `vacuum`). Stats sidecars are
-    * re-captured for the rewritten gens from the persisted merge spec's
+    * must also purge history is `delete` + `vacuum`). The rewritten gens'
+    * file records re-capture stats for the persisted merge spec's
     * statsCols, so file skipping survives deletion.
     *
     * Cost shape: one scan of the snapshot to find affected partitions +
@@ -826,20 +945,19 @@ object SnapshotLake {
     *    predicate runs in independent passes, like [[delete]]'s).
     *
     * Cost shape: identical to [[delete]] — one snapshot scan to find
-    * affected partitions + a rewrite of only those; stats sidecars are
-    * re-captured so file skipping survives the update. Returns the number
-    * of rows updated.
+    * affected partitions + a rewrite of only those; the file record
+    * re-captures stats so file skipping survives the update. Returns the
+    * number of rows updated.
     */
   def update(spark: SparkSession, path: String, predicate: Column,
       assignments: Map[String, Column]): Long = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
       val fs = fsOf(spark, path)
-      val m = currentManifest(spark, path).getOrElse(
-        throw new IllegalStateException(s"$path has no published snapshot"))
+      val m = current(spark, path)
       gcOrphans(fs, path, m.gen)
       val partitionCol = m.partitionCol
-      val full = readManifest(spark, path, m, None)
+      val full = scan(spark, path, m, m.entries)
       val schema = full.schema
       val spec = mergeSpecOf(spark, path)
       assignments.keys.foreach { c =>
@@ -888,8 +1006,7 @@ object SnapshotLake {
       else {
         val affectedValues = affected.map(_._1).toSet
         val hitEntries = m.entries.filter(e => affectedValues.contains(e.value))
-        val existing = spark.read.schema(schema)
-          .parquet(hitEntries.map(e => genDirOf(path, e).toString): _*)
+        val existing = relation(spark, path, hitEntries, schema)
         val updatedCount = existing.filter(pred).count()
         val newGen = m.gen + 1
         val statsCols = spec.map(_.statsCols).getOrElse(Nil)
@@ -899,8 +1016,8 @@ object SnapshotLake {
           statsCols, schema)
         val kept = m.entries.filterNot(e => affectedValues.contains(e.value))
         // an update never changes the schema: re-record the one it read
-        writeSchemaSidecar(fs, path, newGen, schema)
-        publish(fs, path, Manifest(newGen, partitionCol, kept ++ newEntries))
+        publish(fs, path, Manifest(newGen, partitionCol, kept ++ newEntries,
+          schema = Some(schema)))
         updatedCount
       }
     }
@@ -956,10 +1073,7 @@ object SnapshotLake {
     val schema = snapshotSchema(spark, path, mNew)
       .orElse(snapshotSchema(spark, path, mOld)).getOrElse(
         return spark.emptyDataFrame)
-    def readEntries(es: Seq[Entry]): DataFrame =
-      if (es.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(es.map(e => genDirOf(path, e).toString): _*)
+    def readEntries(es: Seq[Entry]): DataFrame = relation(spark, path, es, schema)
     val keys = spec.keys
     val dataCols = schema.fieldNames.toSeq.filterNot(keys.contains)
     val pre = readEntries(touchedOld)
@@ -1026,11 +1140,10 @@ object SnapshotLake {
       survivorsOf: DataFrame => DataFrame): Long =
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
       val fs = fsOf(spark, path)
-      val m = currentManifest(spark, path).getOrElse(
-        throw new IllegalStateException(s"$path has no published snapshot"))
+      val m = current(spark, path)
       gcOrphans(fs, path, m.gen)
       val partitionCol = m.partitionCol
-      val full = readManifest(spark, path, m, None)
+      val full = scan(spark, path, m, m.entries)
       val hits = hitOf(full)
       // the predicate is evaluated in TWO independent passes (affected-
       // partition discovery here, survivor rewrite below) — a
@@ -1062,8 +1175,7 @@ object SnapshotLake {
         val hitEntries = m.entries.filter(e => affectedValues.contains(e.value))
         // survivors of ONLY the affected partitions, read through the
         // manifest's gen dirs (untouched partitions are never re-read)
-        val existing = spark.read.schema(full.schema)
-          .parquet(hitEntries.map(e => genDirOf(path, e).toString): _*)
+        val existing = relation(spark, path, hitEntries, full.schema)
         // row counts come from parquet METADATA (empty-projection counts
         // read footers, not data), so the predicate itself is evaluated
         // only twice — finding affected partitions and writing survivors
@@ -1075,25 +1187,21 @@ object SnapshotLake {
         val newEntries = stageInstall(spark, fs, path, survivorsOf(existing),
           partitionCol, affected.map { case (v, h) => h -> v }.toMap, newGen,
           statsCols, full.schema)
-        val survivorCount =
-          if (newEntries.isEmpty) 0L
-          else spark.read
-            .parquet(newEntries.map(e => genDirOf(path, e).toString): _*)
-            .count()
+        val survivorCount = relation(spark, path, newEntries, full.schema).count()
         val kept = m.entries.filterNot(e => affectedValues.contains(e.value))
         // a delete never changes the schema: the new snapshot re-records
         // the one it read (keeps emptied/truncated tables answerable)
-        writeSchemaSidecar(fs, path, newGen, full.schema)
-        publish(fs, path, Manifest(newGen, partitionCol, kept ++ newEntries))
+        publish(fs, path, Manifest(newGen, partitionCol, kept ++ newEntries,
+          schema = Some(full.schema)))
         totalExisting - survivorCount
       }
     }
 
   /** Everything EXCEPT the publish: GC orphans, stage the merged affected
-    * partitions, install their new gen dirs, and return the pending
-    * manifest. Split out so the spec can pin the law directly: after
-    * prepare, a reader sees the wholly-old snapshot; after [[publish]],
-    * the wholly-new one. Callers must hold the lease. None = empty batch.
+    * partitions, install their new gen dirs, record their files, and
+    * return the pending manifest. Split out so the spec can pin the law
+    * directly: after prepare, a reader sees the wholly-old snapshot; after
+    * [[publish]], the wholly-new one. Callers must hold the lease. None = empty batch.
     */
   private[etl] def prepareMerge(
       spark: SparkSession,
@@ -1112,8 +1220,8 @@ object SnapshotLake {
     // the widen-only evolution contract: refuse narrowing/retyping batches
     // BEFORE any data moves (a missing column would silently truncate the
     // merged partitions; see checkEvolution's messages for remediation)
-    cur.flatMap(m => snapshotSchema(spark, path, m))
-      .foreach(t => checkEvolution(t, updates.schema))
+    val table = cur.flatMap(m => snapshotSchema(spark, path, m))
+    table.foreach(t => checkEvolution(t, updates.schema))
     gcOrphans(fs, path, curGen)
     val staging = new Path(path, "_staging")
     if (fs.exists(staging)) fs.delete(staging, true)
@@ -1171,8 +1279,7 @@ object SnapshotLake {
     // partitionCol included — is a DATA column in the files).
     val existing =
       if (hit.isEmpty) None
-      else Some(spark.read.schema(updates.schema)
-        .parquet(hit.map(e => genDirOf(path, e).toString): _*))
+      else Some(relation(spark, path, hit, updates.schema))
     val merged = existing match {
       case Some(ex) =>
         Upsert.lastWriteWins(
@@ -1187,7 +1294,21 @@ object SnapshotLake {
       updates.schema)
     val kept = cur.map(_.entries.filterNot(e => affectedValues.contains(e.value)))
       .getOrElse(Nil)
-    Some((fs, Manifest(newGen, partitionCol, kept ++ newEntries)))
+    // The batch defines the snapshot's COLUMN SET — checkEvolution
+    // guaranteed it is a widening superset of the table's — but the
+    // recorded COLUMN ORDER is normalized to the existing table's with
+    // genuinely new columns appended: a batch whose columns merely arrive
+    // reordered must not silently reorder the table's published order
+    // (SELECT * / positional INSERT INTO binding would change across
+    // commits). Parquet reads under a pinned schema match columns BY
+    // NAME, so the files' physical order is free to differ.
+    val batchByName = updates.schema.fields.map(f => f.name -> f).toMap
+    val recorded = table match {
+      case Some(t) => StructType(t.fields.map(f => batchByName(f.name)) ++
+        updates.schema.fields.filterNot(f => t.fieldNames.contains(f.name)))
+      case None => updates.schema
+    }
+    Some((fs, Manifest(newGen, partitionCol, kept ++ newEntries, schema = Some(recorded))))
   }
 
   /** The distinct (value string, hex dir key) pairs of `partitionCol` in
@@ -1232,17 +1353,18 @@ object SnapshotLake {
   /** ONE write job for a commit's affected partitions: route `rows` by the
     * hex dir key (a derived column, so `partitionCol` itself STAYS in the
     * files), stage under `_staging`, install each staged dir as its
-    * partition's gen `newGen`, record the stats sidecar when `statsCols`
-    * asked for one, and return the installed entries. With statsCols the
-    * rows are range-clustered by (dir, statsCols) first so each file
-    * covers a NARROW slice of the stats columns — the layout that makes
-    * the per-file min/max sidecar actually prune (a hash-shuffled write
-    * gives every file the full value range); in-job sampling
-    * nondeterminism is harmless because stats are recorded from the files
-    * actually written, never re-derived. A partition whose `rows` slice is
-    * EMPTY stages no dir and gets no entry — [[delete]] uses exactly this
-    * to drop emptied partitions from the manifest. Caller holds the lease
-    * and publishes the returned entries itself.
+    * partition's gen `newGen`, write the generation's file record
+    * ([[recordFiles]], with per-file stats when `statsCols` asked for
+    * them), and return the installed entries. With statsCols the rows are
+    * range-clustered by (dir, statsCols) first so each file covers a
+    * NARROW slice of the stats columns — the layout that makes per-file
+    * min/max actually prune (a hash-shuffled write gives every file the
+    * full value range); in-job sampling nondeterminism is harmless
+    * because stats are recorded from the files actually written, never
+    * re-derived. A partition whose `rows` slice is EMPTY stages no dir
+    * and gets no entry — [[delete]] uses exactly this to drop emptied
+    * partitions from the manifest. Caller holds the lease and publishes
+    * the returned entries itself.
     */
   private def stageInstall(
       spark: SparkSession,
@@ -1253,7 +1375,7 @@ object SnapshotLake {
       valueOfHex: Map[String, String],
       newGen: Long,
       statsCols: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): Seq[Entry] = {
+      schema: StructType): Seq[Entry] = {
     val staging = new Path(path, "_staging")
     if (fs.exists(staging)) fs.delete(staging, true)
     val castStr = expr(s"cast(`$partitionCol` as string)")
@@ -1263,7 +1385,7 @@ object SnapshotLake {
     // the dir key (one right-sized file per value) cost +0.1–0.4 s per lake
     // verb at sf0.1 with no read-back gain at these file counts
     // (OPTIMIZATION_r15.md §6). The stats path range-clusters by (dir,
-    // statsCols): its sidecar pruning NEEDS each file to cover a narrow
+    // statsCols): its file pruning NEEDS each file to cover a narrow
     // stats slice.
     val clustered =
       if (statsCols.nonEmpty)
@@ -1283,19 +1405,14 @@ object SnapshotLake {
           s"staged dir $hexName has no affected value — hex routing diverged")))
     }.toSeq
     fs.delete(staging, true)
-    if (statsCols.nonEmpty && newEntries.nonEmpty)
-      writeStats(spark, fs, path, newGen, newEntries, schema, statsCols)
+    if (newEntries.nonEmpty)
+      recordFiles(spark, fs, path, newGen, newEntries, schema, statsCols)
     newEntries
   }
 
-  // ---- per-file column statistics (advisory sidecars for readSlice) ----
-
-  private def statsPath(path: String, gen: Long) =
-    new Path(manifestDir(path), f"stats-$gen%020d")
-
-  /** URL-encoding keeps the line format unambiguous for arbitrary string
-    * stats; a NULL min/max encodes as the empty field and is never used
-    * to prune (the safe direction).
+  /** URL-encoding keeps the record formats unambiguous for arbitrary
+    * string stats; a NULL min/max encodes as the empty field and is never
+    * used to prune (the safe direction).
     */
   private def enc(s: String): String =
     if (s == null) "" else java.net.URLEncoder.encode(s, "UTF-8")
@@ -1308,100 +1425,9 @@ object SnapshotLake {
     * Spark's own string cast (exact round-trips for
     * decimal/date/integral/double/string/ntz).
     */
-  private def statForm(c: org.apache.spark.sql.Column,
-      dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.Column =
-    dt match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(c).cast("string")
-      case _ => c.cast("string")
-    }
-
-  /** One job over the commit's NEW gen dirs (just-written, page-cache
-    * warm): per (file, statsCol) min/max, written to the gen's sidecar
-    * before the publish. Crash between sidecar and publish leaves an
-    * orphan sidecar, GC'd with the orphan gens.
-    */
-  private def writeStats(
-      spark: SparkSession,
-      fs: FileSystem,
-      path: String,
-      gen: Long,
-      entries: Seq[Entry],
-      schema: org.apache.spark.sql.types.StructType,
-      statsCols: Seq[String]): Unit = {
-    val dirs = entries.map(e => genDirOf(path, e).toString)
-    if (dirs.isEmpty) return
-    val df = spark.read.schema(schema).parquet(dirs: _*)
-    // min/max run on the TYPED column, then take the string form: the
-    // string order of a number is not its value order (Long 1..250 would
-    // record [1, 99]), and pruning casts the recorded forms back to the
-    // column's type
-    val aggs = statsCols.zipWithIndex.flatMap { case (c, i) =>
-      val dt = schema(c).dataType
-      Seq(statForm(min(col(c)), dt).as(s"__mn$i"),
-        statForm(max(col(c)), dt).as(s"__mx$i"))
-    }
-    val rows = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val dataPrefix = fs.makeQualified(dataDir(path)).toString + "/"
-    val sb = new StringBuilder
-    sb.append(s"graft-stats-v1\t$gen\t${statsCols.map(enc).mkString(",")}\n")
-    rows.foreach { r =>
-      // input_file_name() is a URI string (`file:///…`, percent-encoded);
-      // qualify it through the filesystem so it takes the same form as
-      // dataPrefix and as the listing pruneFilesMulti matches against
-      val f = fs.makeQualified(new Path(new java.net.URI(r.getString(0)))).toString
-      // stats are keyed by the file's path RELATIVE to data/ so the lake
-      // can be relocated; a file whose URI does not share the expected
-      // prefix is simply not recorded (readSlice keeps unrecorded files)
-      if (f.startsWith(dataPrefix)) {
-        val rel = f.drop(dataPrefix.length)
-        statsCols.zipWithIndex.foreach { case (c, i) =>
-          sb.append(s"${enc(rel)}\t${enc(c)}\t${enc(r.getAs[String](s"__mn$i"))}\t" +
-            s"${enc(r.getAs[String](s"__mx$i"))}\n")
-        }
-      }
-    }
-    val tmp = new Path(manifestDir(path), s".tmp-stats-$gen-${System.nanoTime()}")
-    fs.mkdirs(manifestDir(path))
-    val out = fs.create(tmp, false)
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    Upsert.renameOrThrow(fs, tmp, statsPath(path, gen))
-  }
-
-  /** (relative file path, col) → (min, max) string forms for one gen's
-    * sidecar; empty for a missing/unparseable sidecar (advisory).
-    */
-  private def readStats(fs: FileSystem, path: String,
-      gen: Long): Map[(String, String), (String, String)] = {
-    val p = statsPath(path, gen)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val lines = text.split('\n').filter(_.nonEmpty)
-    if (lines.isEmpty || !lines.head.startsWith("graft-stats-v1")) return Map.empty
-    lines.tail.flatMap { l =>
-      l.split('\t') match {
-        case Array(f, c, mn, mx) => Some((dec(f), dec(c)) -> ((dec(mn), dec(mx))))
-        case Array(f, c, mn) => Some((dec(f), dec(c)) -> ((dec(mn), null: String)))
-        case _ => None
-      }
-    }.toMap
-  }
-
-  /** The stats columns a gen's sidecar was recorded for (from its header);
-    * empty for a missing sidecar.
-    */
-  private def statsColsOf(fs: FileSystem, path: String, gen: Long): Seq[String] = {
-    val p = statsPath(path, gen)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val head = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().nextOption().getOrElse("") finally in.close()
-    head.split('\t') match {
-      case Array("graft-stats-v1", _, cols) if cols.nonEmpty =>
-        cols.split(',').toSeq.map(dec)
-      case _ => Nil
-    }
+  private def statForm(c: Column, dt: DataType): Column = dt match {
+    case TimestampType => unix_micros(c).cast("string")
+    case _ => c.cast("string")
   }
 
   /** Read the current snapshot restricted to `sliceCol ∈ [lo, hi]` (both
@@ -1409,10 +1435,11 @@ object SnapshotLake {
     * [min, max] cannot intersect the slice — the file-level pruning the
     * manifest's partition entries cannot give inside one partition. The
     * returned frame carries the slice filter, so it is byte-identical to
-    * `read(...).filter(...)`; files without recorded stats (older
-    * commits, compactions without sidecars, relocation gaps) are always
-    * read — pruning is advisory, never lossy. Bound comparisons run
-    * through Spark's own cast/ordering on the column's real type.
+    * `read(...).filter(...)`; files without recorded stats (generations
+    * written without statsCols, or without a file record) are always
+    * read — pruning is advisory, never lossy. Resolution is driver-side
+    * arithmetic over the file records ([[pruneFiles]]): no listing, no
+    * Spark job.
     */
   def readSlice(
       spark: SparkSession,
@@ -1431,33 +1458,23 @@ object SnapshotLake {
       spark: SparkSession,
       path: String,
       slices: Seq[(String, Option[Any], Option[Any])]): DataFrame = {
-    val m = currentManifest(spark, path).getOrElse(
-      throw new IllegalStateException(s"$path has no published snapshot"))
-    val full = readManifest(spark, path, m, None)
+    val m = current(spark, path)
+    val pruned = scan(spark, path, m, m.entries,
+      slices.map { case (c, lo, hi) => (c, Seq((lo, hi))) })
     // Bounds are cast to the slice COLUMN's type before comparing, so the
-    // filter and [[pruneFiles]] share ONE comparison semantics: pruning
-    // casts the bound to the column type against the string-form stats,
-    // and an uncast filter would coerce differently for mismatched bound
-    // types (e.g. a numeric bound on a STRING column compares numerically
-    // in the filter but lexicographically in pruning — a file the filter
-    // keeps could be pruned, silent row loss). An uncastable bound turns
-    // the filter null-false AND disables pruning on that slice — rows
-    // never outlive their pruning, the lossless direction.
-    def sliceFilter(df: DataFrame): DataFrame =
-      slices.foldLeft(df) { case (d, (sc, lo, hi)) =>
-        val c = col(sc)
-        val dt = df.schema(sc).dataType
-        val f1 = lo.map(v => c >= lit(v).cast(dt)).getOrElse(lit(true))
-        val f2 = hi.map(v => c <= lit(v).cast(dt)).getOrElse(lit(true))
-        d.filter(f1 && f2)
-      }
-    pruneFiles(spark, path, m, full.schema, slices) match {
-      case None => sliceFilter(full)
-      case Some(paths) if paths.isEmpty =>
-        sliceFilter(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema))
-      case Some(paths) =>
-        sliceFilter(spark.read.schema(full.schema).parquet(paths: _*))
+    // filter and [[pruneFiles]] share ONE comparison semantics: an uncast
+    // filter would coerce differently for mismatched bound types (e.g. a
+    // numeric bound on a STRING column compares numerically in the filter
+    // but lexicographically in pruning — a file the filter keeps could be
+    // pruned, silent row loss). An uncastable bound turns the filter
+    // null-false AND disables pruning on that side — rows never outlive
+    // their pruning, the lossless direction.
+    slices.foldLeft(pruned) { case (d, (sc, lo, hi)) =>
+      val c = col(sc)
+      val dt = d.schema(sc).dataType
+      val f1 = lo.map(v => c >= lit(v).cast(dt)).getOrElse(lit(true))
+      val f2 = hi.map(v => c <= lit(v).cast(dt)).getOrElse(lit(true))
+      d.filter(f1 && f2)
     }
   }
 
@@ -1474,129 +1491,78 @@ object SnapshotLake {
       path: String,
       sliceCol: String,
       values: Seq[Any]): DataFrame = {
-    val m = currentManifest(spark, path).getOrElse(
-      throw new IllegalStateException(s"$path has no published snapshot"))
-    val full = readManifest(spark, path, m, None)
+    val m = current(spark, path)
     val vs = values.filter(_ != null)
-    def inFilter(df: DataFrame): DataFrame = {
-      val dt = df.schema(sliceCol).dataType
-      if (vs.isEmpty) df.filter(lit(false))
-      else df.filter(col(sliceCol).isin(vs.map(v => lit(v).cast(dt)): _*))
-    }
-    if (vs.isEmpty)
-      return inFilter(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema))
-    val points = Seq((sliceCol, vs.map(v => (Some(v), Some(v)))))
-    pruneFilesMulti(spark, path, m, full.schema, points) match {
-      case None => inFilter(full)
-      case Some(paths) if paths.isEmpty =>
-        inFilter(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema))
-      case Some(paths) =>
-        inFilter(spark.read.schema(full.schema).parquet(paths: _*))
-    }
+    val df = scan(spark, path, m, m.entries,
+      Seq((sliceCol, vs.map(v => (Some(v), Some(v))))))
+    val dt = df.schema(sliceCol).dataType
+    if (vs.isEmpty) df.filter(lit(false))
+    else df.filter(col(sliceCol).isin(vs.map(v => lit(v).cast(dt)): _*))
   }
 
-  /** The pruning core shared by [[readSlices]] and
-    * [[graft.sources.LakeCatalog]]'s scan-time pushdown: the concrete
-    * file paths of manifest `m` with every file whose recorded stats
-    * cannot intersect a slice EXCLUDED — or None when nothing can be
-    * excluded (read the gen dirs whole; no listing cost). Listing-based
-    * exclusion: files the sidecars missed are always kept — advisory
-    * metadata, never lossy.
+  /** The file-pruning core shared by [[readSlices]], [[readIn]] and
+    * [[graft.sources.LakeCatalog]]'s scan-time pushdown: a keep test over
+    * a snapshot's [[LiveFile]]s for a CONJUNCTION of per-column interval
+    * DISJUNCTIONS — a file is dropped when, for some column, NO interval
+    * can intersect its recorded [min, max]. An IN list — the reference's
+    * own verification shape, `= ANY(array)` (`postgres_writer.py:371-377`)
+    * — is the degenerate case of point intervals.
+    *
+    * Pure driver-side arithmetic over the records: bounds and recorded
+    * min/max go through Catalyst's own `Cast` to the column's type (in the
+    * session time zone, as the slice filter casts) and its ordering
+    * (`LessThan` on literals). Advisory, never lossy: a file without
+    * recorded stats for the column, a null min/max, an interval with
+    * neither bound, or a bound that does not cast keeps the file.
     */
   private[graft] def pruneFiles(
       spark: SparkSession,
-      path: String,
-      m: Manifest,
-      schema: org.apache.spark.sql.types.StructType,
-      slices: Seq[(String, Option[Any], Option[Any])]): Option[Seq[String]] =
-    pruneFilesMulti(spark, path, m, schema,
-      slices.map { case (c, lo, hi) => (c, Seq((lo, hi))) })
-
-  /** [[pruneFiles]] generalized to a DISJUNCTION of intervals per column
-    * (conjunction across columns): a file is excluded when, for some
-    * column, NO interval can intersect its recorded [min, max]. An IN
-    * list — the reference's own verification shape, `= ANY(array)`
-    * (`postgres_writer.py:371-377`) — is the degenerate case of point
-    * intervals. An interval with neither bound keeps every file (its
-    * column can never exclude), the conservative direction.
-    */
-  private[graft] def pruneFilesMulti(
-      spark: SparkSession,
-      path: String,
-      m: Manifest,
-      schema: org.apache.spark.sql.types.StructType,
-      slices: Seq[(String, Seq[(Option[Any], Option[Any])])]): Option[Seq[String]] = {
-    val fs = fsOf(spark, path)
-    val active = slices.filter(s =>
-      schema.fieldNames.contains(s._1) && s._2.nonEmpty &&
-        s._2.forall(iv => iv._1.isDefined || iv._2.isDefined))
-    if (m.entries.isEmpty || active.isEmpty) return None
-    val statsByGen = m.entries.map(_.gen).distinct
-      .map(g => g -> readStats(fs, path, g)).toMap
-    // candidate exclusions, evaluated through Spark's own comparisons on
-    // each column's type (driver-local frame, O(#files-with-stats) rows)
-    import spark.implicits._
-    val excluded: Set[String] = active.flatMap { case (sliceCol, intervals) =>
-      val dt = schema(sliceCol).dataType
-      val cand = m.entries.flatMap { e =>
-        statsByGen(e.gen).collect {
-          case ((f, c), (mn, mx)) if c == sliceCol && f.startsWith(e.dirName + "/") =>
-            (f, mn, mx)
-        }
+      schema: StructType,
+      slices: Seq[(String, Seq[(Option[Any], Option[Any])])]): LiveFile => Boolean = {
+    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+    def typed(v: Any, dt: DataType): Option[Any] =
+      scala.util.Try(Cast(Literal(v), dt, tz).eval()).toOption.flatMap(Option(_))
+    def stat(s: String, dt: DataType): Option[Any] =
+      if (s == null) None
+      else dt match {
+        case TimestampType => s.toLongOption // recorded as unix_micros
+        case _ => typed(UTF8String.fromString(s), dt)
       }
-      if (cand.isEmpty) Nil
-      else {
-        val sdf = cand.toDF("f", "mn", "mx")
-        def typed(c: org.apache.spark.sql.Column) = dt match {
-          case org.apache.spark.sql.types.TimestampType => c.cast("long")
-          case _ => c.cast(dt)
-        }
-        def bound(v: Any) = dt match {
-          case org.apache.spark.sql.types.TimestampType => unix_micros(lit(v).cast(dt))
-          case _ => lit(v).cast(dt)
-        }
+    val active = slices.collect {
+      case (c, intervals) if schema.fieldNames.contains(c) && intervals.nonEmpty &&
+          intervals.forall(iv => iv._1.isDefined || iv._2.isDefined) =>
+        val dt = schema(c).dataType
+        (c, dt, intervals.map { case (lo, hi) =>
+          (lo.flatMap(typed(_, dt)), hi.flatMap(typed(_, dt))) })
+    }
+    if (active.isEmpty) return _ => true
+    def lt(dt: DataType, a: Any, b: Any): Boolean =
+      scala.util.Try(LessThan(Literal(a, dt), Literal(b, dt)).eval() == true)
+        .getOrElse(false)
+    f => !active.exists { case (c, dt, intervals) =>
+      f.bounds.get(c).exists { case (mnS, mxS) =>
+        val mn = stat(mnS, dt)
+        val mx = stat(mxS, dt)
         // excluded ⇔ every interval misses: (mx < lo_i) OR (mn > hi_i), ∀i
-        val miss = intervals.map { case (lo, hi) =>
-          val exLo = lo.map(v => coalesce(typed(col("mx")) < bound(v), lit(false)))
-            .getOrElse(lit(false))
-          val exHi = hi.map(v => coalesce(typed(col("mn")) > bound(v), lit(false)))
-            .getOrElse(lit(false))
-          exLo || exHi
-        }.reduce(_ && _)
-        sdf.filter(miss).select("f").collect().map(_.getString(0)).toSeq
+        intervals.forall { case (lo, hi) =>
+          lo.exists(b => mx.exists(lt(dt, _, b))) ||
+            hi.exists(b => mn.exists(lt(dt, b, _)))
+        }
       }
-    }.toSet
-    if (excluded.isEmpty) return None
-    // per entry: list the gen dir and keep every file NOT excluded.
-    // The listing must match Spark's own InMemoryFileIndex hidden-file
-    // filter ('_' AND '.' prefixes): a stray hidden/temp file fed to the
-    // parquet reader would fail the PRUNED read where the unpruned one
-    // succeeds.
-    val dataPrefix = fs.makeQualified(dataDir(path)).toString + "/"
-    Some(m.entries.flatMap { e =>
-      val dir = genDirOf(path, e)
-      fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map(s => fs.makeQualified(s.getPath).toString)
-        .filter(p => !excluded.contains(p.stripPrefix(dataPrefix)))
-    })
+    }
   }
 
-  /** Unpublished generation dirs (gen > the current manifest) are orphans
-    * of a crashed prepare: no reader can reference them, the lease
-    * guarantees no writer owns them — delete, then the re-run converges.
+  /** Unpublished generations (gen > the current manifest) are orphans of
+    * a crashed prepare — their gen dirs and their file records: no reader
+    * can reference them, the lease guarantees no writer owns them —
+    * delete, then the re-run converges.
     */
   private def gcOrphans(fs: FileSystem, path: String, curGen: Long): Unit = {
     val data = dataDir(path)
-    // an unpublished commit may also have left its stats sidecar
     val mdir = manifestDir(path)
     if (fs.exists(mdir)) fs.listStatus(mdir).foreach { s =>
       s.getPath.getName match {
-        case StatsName(g) if g.toLong > curGen => fs.delete(s.getPath, false)
-        case SchemaName(g) if g.toLong > curGen => fs.delete(s.getPath, false)
+        case FilesName(g) if g.toLong > curGen => fs.delete(s.getPath, false)
         case _ => ()
       }
     }
@@ -1614,15 +1580,17 @@ object SnapshotLake {
   /** Small-file compaction, committed through the same manifest mechanism:
     * each fragmented partition's current gen is rewritten (coalesced to
     * `ceil(bytes/targetBytes)` files, floored at `minFilesToCompact`) into
-    * a NEW gen, and one publish re-points them all. Readers never see an
-    * absent or half-compacted partition (a Hive-layout directory swap
-    * cannot avoid that window); a reader pinned to the pre-compact snapshot keeps reading the
-    * old files until [[vacuum]]. Row content is preserved as a multiset.
-    * Compacted gens RE-CAPTURE their stats sidecar for whatever columns
-    * the replaced gens recorded (coalesced files carry wider — but still
-    * correct — ranges), so [[readSlice]] keeps skipping after
-    * maintenance; partitions that never had stats stay statless. Returns
-    * (dirName, filesBefore, filesAfter) per compacted partition.
+    * a NEW gen, and one publish re-points them all. Which partitions are
+    * fragmented is read from the file records (no listing). Readers never
+    * see an absent or half-compacted partition (a Hive-layout directory
+    * swap cannot avoid that window); a reader pinned to the pre-compact
+    * snapshot keeps reading the old files until [[vacuum]]. Row content
+    * is preserved as a multiset. The compacted gen's file record
+    * RE-CAPTURES stats for whatever columns the replaced gens recorded
+    * (coalesced files carry wider — but still correct — ranges), so
+    * [[readSlice]] keeps skipping after maintenance; partitions that
+    * never had stats stay statless. Returns (dirName, filesBefore,
+    * filesAfter) per compacted partition.
     */
   def compact(
       spark: SparkSession,
@@ -1635,19 +1603,19 @@ object SnapshotLake {
         case None => Nil
         case Some(m) =>
           gcOrphans(fs, path, m.gen)
-          val picked = m.entries.flatMap { e =>
-            val files = fs.listStatus(genDirOf(path, e))
-              .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-                !f.getPath.getName.startsWith("."))
-            val bytes = files.map(_.getLen).sum
-            val want = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-            if (files.length > math.max(want, minFilesToCompact))
-              Some((e, files.length, want))
-            else None
+          val picked = m.entries.zip(liveFiles(spark, path, m.entries)).flatMap {
+            case (e, (_, files)) =>
+              val bytes = files.map(_.status.getLen).sum
+              val want = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+              if (files.length > math.max(want, minFilesToCompact))
+                Some((e, files, want))
+              else None
           }
           if (picked.isEmpty) Nil
           else {
             val newGen = m.gen + 1
+            // compaction never changes the schema: the snapshot's own
+            val schema = snapshotSchema(spark, path, m).get
             // independent per-partition rewrites → concurrent jobs (a
             // serial loop over hundreds of fragmented partitions would pay
             // one scheduler round-trip each); failures propagate before any
@@ -1659,10 +1627,9 @@ object SnapshotLake {
                 scala.concurrent.ExecutionContext.fromExecutorService(pool)
               val jobs = picked.map { case (e, _, want) =>
                 scala.concurrent.Future {
-                  val dest = new Path(new Path(dataDir(path), e.dirName), s"gen=$newGen")
-                  spark.read.parquet(genDirOf(path, e).toString)
+                  relation(spark, path, Seq(e), schema)
                     .coalesce(want)
-                    .write.parquet(dest.toString)
+                    .write.parquet(genDirOf(path, e.copy(gen = newGen)).toString)
                 }
               }
               // settle EVERY rewrite before leaving the lease scope: a
@@ -1678,47 +1645,28 @@ object SnapshotLake {
               settled.collectFirst { case scala.util.Failure(t) => t }
                 .foreach(t => throw t)
             } finally pool.shutdown()
-            // re-capture stats for the compacted gens so file skipping
-            // survives compaction: the columns come from the sidecars of
-            // the gens being replaced (coalesced files carry wider — but
-            // still correct — ranges, recorded from the files actually
-            // written); partitions that never had stats stay statless
-            val statCols = picked.map(_._1.gen).distinct
-              .flatMap(g => statsColsOf(fs, path, g)).distinct
-            if (statCols.nonEmpty) {
-              val newEntries = picked.map(_._1.copy(gen = newGen))
-              val schema = spark.read
-                .parquet(genDirOf(path, newEntries.head).toString).schema
-              val usable = statCols.filter(c => schema.fieldNames.contains(c))
-              if (usable.nonEmpty)
-                writeStats(spark, fs, path, newGen, newEntries, schema, usable)
-            }
+            val newEntries = picked.map(_._1.copy(gen = newGen))
+            val statCols = picked.flatMap(_._2).flatMap(_.bounds.keys).distinct
+              .filter(schema.fieldNames.contains)
+            val recorded = recordFiles(spark, fs, path, newGen, newEntries, schema, statCols)
             val bumped = picked.map(_._1.dirName).toSet
-            // compaction never changes the schema: carry the snapshot's
-            // recorded one forward so mixed-generation pinning survives
-            // maintenance (legacy lakes without a sidecar stay legacy)
-            readSchemaSidecar(fs, path, m.gen)
-              .foreach(s => writeSchemaSidecar(fs, path, newGen, s))
             publish(fs, path, Manifest(newGen, m.partitionCol,
               m.entries.map(e =>
-                if (bumped.contains(e.dirName)) e.copy(gen = newGen) else e)))
+                if (bumped.contains(e.dirName)) e.copy(gen = newGen) else e),
+              schema = Some(schema)))
             picked.map { case (e, before, _) =>
-              val after = fs.listStatus(
-                new Path(new Path(dataDir(path), e.dirName), s"gen=$newGen"))
-                .count(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-                  !f.getPath.getName.startsWith("."))
-              (e.dirName, before, after)
+              (e.dirName, before.length, recorded.count(_._1.dirName == e.dirName))
             }
           }
       }
     }
 
   /** Retention: keep the newest `keepManifests` snapshots (and every gen
-    * dir they reference), delete everything older — both the unreferenced
-    * gen dirs and the expired manifest files. Readers pinned to an expired
-    * snapshot lose it (the Delta/Iceberg VACUUM contract); size the
-    * retention to the longest-running reader. Returns the number of gen
-    * dirs removed.
+    * dir and file record they reference), delete everything older — the
+    * unreferenced gen dirs, their records and the expired manifest files.
+    * Readers pinned to an expired snapshot lose it (the Delta/Iceberg
+    * VACUUM contract); size the retention to the longest-running reader.
+    * Returns the number of gen dirs removed.
     */
   def vacuum(spark: SparkSession, path: String, keepManifests: Int = 1): Int = {
     require(keepManifests >= 1, s"keepManifests must be >= 1, got $keepManifests")
@@ -1752,17 +1700,13 @@ object SnapshotLake {
         manifests.drop(keepManifests).foreach { case (_, n) =>
           fs.delete(new Path(dir, n), false)
         }
-        // stats sidecars live per GEN: drop the ones no kept manifest's
+        // file records live per GEN: drop the ones no kept manifest's
         // entries still reference (a kept manifest can reference entries
-        // of much older gens, whose sidecars must survive). Schema
-        // sidecars live per MANIFEST: drop them with their manifests.
+        // of much older gens, whose records must survive)
         val referencedGens = referenced.map(_._2)
-        val keptGens = kept.map(_._1).toSet
-        if (fs.exists(dir)) fs.listStatus(dir).foreach { s =>
+        fs.listStatus(dir).foreach { s =>
           s.getPath.getName match {
-            case StatsName(g) if !referencedGens.contains(g.toLong) =>
-              fs.delete(s.getPath, false)
-            case SchemaName(g) if !keptGens.contains(g.toLong) =>
+            case FilesName(g) if !referencedGens.contains(g.toLong) =>
               fs.delete(s.getPath, false)
             case _ => ()
           }
@@ -1773,9 +1717,9 @@ object SnapshotLake {
   }
 
   /** DROP the table: a lease-guarded purge of the ENTIRE lake — every
-    * manifest, every gen dir, the merge contract, the stats/schema
-    * sidecars. The lifecycle symmetry of [[create]]: vacuum-to-zero plus
-    * metadata removal, as ONE deliberate act. After the drop, time travel
+    * manifest, every gen dir and file record, the merge contract. The
+    * lifecycle symmetry of [[create]]: vacuum-to-zero plus metadata
+    * removal, as ONE deliberate act. After the drop, time travel
     * to any former snapshot is GONE (the Delta/Iceberg DROP contract — a
     * dropped table keeps no history), reads throw "no published snapshot",
     * and a re-[[create]] at the same path starts a fresh history at

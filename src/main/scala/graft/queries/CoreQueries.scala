@@ -191,7 +191,7 @@ object CoreQueries {
 
   /** E3d — FILE-level data skipping inside one lake partition: the merge
     * range-clusters each partition's files by `ts` and records per-file
-    * min/max into the commit's stats sidecar;
+    * min/max into the commit's file record;
     * [[graft.etl.SnapshotLake.readSlice]] then skips whole files whose
     * recorded range cannot intersect the queried six-day window — the
     * pruning lane partition entries cannot give INSIDE a partition
@@ -219,10 +219,9 @@ object CoreQueries {
     * `postgres_writer.py:371-377` — q_any's predicate) over a
     * [[graft.etl.SnapshotLake]] whose merge range-clustered files by
     * `user_id`. The catalog's scan-time pushdown turns the `IN` list
-    * into POINT intervals against the per-file min/max sidecars
-    * ([[graft.etl.SnapshotLake.pruneFilesMulti]]): whole files whose
-    * range contains none of the points are skipped before Spark's file
-    * index lists them (LakeCatalogSpec proves fewer files are read; this
+    * into POINT intervals against the file records' per-file min/max
+    * ([[graft.etl.SnapshotLake.pruneFiles]]): whole files whose range
+    * contains none of the points never enter the scan's file index (LakeCatalogSpec proves fewer files are read; this
     * gate row pins the results byte-identical to the unpruned
     * read + filter via the DuckDB oracle). The `event_type IN` conjunct
     * prunes at the MANIFEST level (whole partitions).
@@ -426,7 +425,7 @@ object CoreQueries {
     * schema + stamped spec), then BOTH batches land via `INSERT INTO` —
     * no Scala API call ever touches the table, closing the catalog's last
     * bootstrap gap. The declared schema is enforced from commit 1 (the
-    * widen-only evolution check runs against the gen-0 sidecar;
+    * widen-only evolution check runs against the gen-0 manifest's schema;
     * LakeCatalogSpec pins the refusals), and the result must equal the
     * API-merged twin's — one LWW semantics across every write face, now
     * including DDL-born tables.
@@ -640,7 +639,7 @@ object CoreQueries {
     * contract's DDL verb ([[graft.etl.SnapshotLake.addColumn]] via
     * [[graft.sources.LakeCatalog.alterTable]]) as a METADATA-ONLY commit —
     * a new generation with the SAME partition entries and a widened
-    * schema sidecar; not a byte of data moves, pre-ALTER rows answer
+    * recorded schema; not a byte of data moves, pre-ALTER rows answer
     * null, and the commit's CDC delta is empty (LakeCatalogSpec pins the
     * refusal shapes: rename/drop/retype/NOT NULL/positions/defaults).
     * History: CREATE → even-batch INSERT → ALTER ADD note → odd-batch

@@ -55,7 +55,7 @@ import graft.etl.Upsert
 class JdbcUpsertDataSource extends TableProvider {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    JdbcUpsertV2.tableSchema(JdbcUpsertV2.Config(options.asScala.toMap))
+    JdbcUpsertV2.tableSchema(JdbcUpsertV2.Config(options.asCaseSensitiveMap.asScala.toMap))
 
   override def getTable(
       schema: StructType,
@@ -100,9 +100,10 @@ object JdbcUpsertV2 {
 
   object Config {
     def apply(o0: Map[String, String]): Config = {
-      // DSv2 options are case-insensitive by convention, but getTable
-      // receives the case-PRESERVING properties map — normalize here so
-      // .option("dbTable", …) works everywhere, not just in inferSchema
+      // DSv2 options are case-insensitive by convention, and both faces
+      // (inferSchema and getTable) hand over case-PRESERVING keys —
+      // normalize the engine's own options here so .option("dbTable", …)
+      // works everywhere
       val o = o0.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
       def req(k: String): String = o.getOrElse(k,
         throw new IllegalArgumentException(s"option '$k' is required"))
@@ -124,13 +125,14 @@ object JdbcUpsertV2 {
           .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
         // user/password ride as first-class options (upsertJdbc's
         // java.util.Properties contract); any other driver property goes
-        // through a `jdbcprop.<name>` option. Names arrive lowercased —
-        // DSv2's CaseInsensitiveStringMap folds keys before we see them —
-        // which every mainstream JDBC driver accepts.
+        // through a `jdbcprop.<name>` option. The prefix matches in any
+        // case, but the NAME keeps its own: drivers look property names
+        // up exactly (pgjdbc's `reWriteBatchedInserts`, `ApplicationName`)
+        // and ignore a lowercased one without an error.
         props = o.get("user").map("user" -> _).toMap ++
           o.get("password").map("password" -> _).toMap ++
-          o.collect { case (k, v) if k.startsWith("jdbcprop.") =>
-            k.stripPrefix("jdbcprop.") -> v })
+          o0.collect { case (k, v) if k.toLowerCase(java.util.Locale.ROOT)
+              .startsWith("jdbcprop.") => k.drop("jdbcprop.".length) -> v })
     }
   }
 

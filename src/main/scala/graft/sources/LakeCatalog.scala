@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.catalog.{
   Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog,
   TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
@@ -35,10 +36,11 @@ import graft.etl.SnapshotLake
   *
   * `loadTable` resolves the (named or current) manifest ON THE DRIVER —
   * O(#partitions) metadata, no file listing — and hands the snapshot's
-  * concrete gen-dir paths to Spark's OWN V2 `ParquetTable`: the scan
-  * gets the native vectorized parquet reader, filter/column pushdown,
-  * and AQE for free, and stays pinned to the resolved snapshot (gen dirs
-  * are immutable until vacuum — the same stability contract as
+  * file index ([[SnapshotLake.fileIndex]]: the generations' file records,
+  * never a listing) to Spark's OWN V2 `ParquetTable`: the scan gets the
+  * native vectorized parquet reader, filter/column pushdown, and AQE for
+  * free, and stays pinned to the resolved snapshot (gen dirs are
+  * immutable until vacuum — the same stability contract as
   * [[SnapshotLake.read]]). `INSERT INTO <cat>.<table>` is supported and
   * ROUTES THROUGH [[SnapshotLake.merge]]'s keyed LWW commit (the merge
   * contract comes from the spec the lake's own merges stamp — see
@@ -231,7 +233,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
   /** SQL `ALTER TABLE … ADD COLUMN(S)` — the widen-only evolution
     * contract's one DDL verb, routed through
     * [[graft.etl.SnapshotLake.addColumn]]'s metadata-only commit (new
-    * generation, same partition entries, widened schema sidecar; existing
+    * generation, same partition entries, widened recorded schema; existing
     * rows answer null; the CDC delta across it is empty). Only top-level
     * nullable columns APPENDED to the schema are expressible — a position
     * (`FIRST`/`AFTER`), a nested path, or NOT NULL refuses, and every
@@ -277,7 +279,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
 
   /** SQL `DROP TABLE` — the lifecycle symmetry of `CREATE TABLE`, routed
     * through [[graft.etl.SnapshotLake.drop]]'s lease-guarded purge
-    * (every manifest, gen dir, and sidecar removed; time travel to any
+    * (every manifest, gen dir, and file record removed; time travel to any
     * former snapshot is gone; a re-CREATE starts a fresh history at gen 0).
     * Refuses loudly UNLESS the catalog opted in with
     * `spark.sql.catalog.<name>.allow_drop = true` — a takedown verb this
@@ -327,15 +329,15 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
 }
 
 /** One resolved SNAPSHOT of a lake as a read-only V2 table. Scans delegate
-  * to Spark's native `ParquetTable` over the manifest's immutable gen
-  * dirs, but THROUGH [[LakeScanBuilder]], which intercepts the pushed
-  * filters to apply the manifest's per-file min/max sidecars FIRST: a
-  * simple range/equality conjunct on a stats column excludes whole files
-  * before Spark's file index ever lists them into tasks — then the same
-  * filters continue into the parquet scan for row-group pushdown. Pruning
-  * only ever narrows the FILE list conservatively (files without recorded
-  * stats are always kept, every filter is still evaluated post-scan), so
-  * results are byte-identical to the unpruned scan.
+  * to Spark's native `ParquetTable` over the manifest's immutable files,
+  * but THROUGH [[LakeScanBuilder]], which intercepts the pushed filters to
+  * apply the file records' per-file min/max FIRST: a simple
+  * range/equality conjunct on a stats column excludes whole files before
+  * the scan's file index is built — then the same filters continue into
+  * the parquet scan for row-group pushdown. Pruning only ever narrows the
+  * FILE list conservatively (files without recorded stats are always
+  * kept, every filter is still evaluated post-scan), so results are
+  * byte-identical to the unpruned scan.
   */
 private[sources] class LakeTable(
     tableName: String,
@@ -355,31 +357,14 @@ private[sources] class LakeTable(
     */
   private[sources] def session: SparkSession = spark
 
-  private[sources] def genDirs: Seq[String] = manifest.entries
-    .map(e => new Path(new Path(new Path(lakePath, "data"), e.dirName),
-      s"gen=${e.gen}").toString)
-
-  private[sources] def parquetOver(paths: Seq[String],
-      schema: Option[StructType], options: CaseInsensitiveStringMap): ParquetTable =
-    ParquetTable(tableName, spark, options, paths, schema,
-      classOf[ParquetFileFormat])
-
   override def name(): String = tableName
 
   override lazy val schema: StructType =
-    // the snapshot's RECORDED schema first (the widen-only evolution
-    // contract: after an add-column merge the catalog must answer with
-    // the union, and time travel with each snapshot's own shape); legacy
-    // sidecar-less snapshots fall back to their files' footers, and an
-    // EMPTY snapshot (unconditional DELETE) to the newest retained
-    // non-empty manifest's files. A table that never held a row answers
-    // with the empty struct.
-    SnapshotLake.snapshotSchema(spark, lakePath, manifest)
-      .orElse {
-        if (manifest.entries.nonEmpty)
-          Some(parquetOver(genDirs, None, CaseInsensitiveStringMap.empty()).schema)
-        else SnapshotLake.schemaFallback(spark, lakePath, manifest.gen)
-      }.getOrElse(new StructType())
+    // the snapshot's RECORDED schema (the widen-only evolution contract:
+    // after an add-column merge the catalog must answer with the union,
+    // and time travel with each snapshot's own shape); a table that never
+    // held a row answers with the empty struct
+    SnapshotLake.snapshotSchema(spark, lakePath, manifest).getOrElse(new StructType())
 
   override def capabilities(): util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
     util.EnumSet.of(
@@ -497,9 +482,20 @@ private[sources] class LakeScanBuilder(
     AttributeReference, EqualNullSafe, EqualTo, Expression, GreaterThan,
     GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal}
 
-  private var inner: org.apache.spark.sql.connector.read.ScanBuilder =
-    table.parquetOver(table.genDirs, Some(tableSchema), options)
-      .newScanBuilder(options)
+  /** The snapshot entries and the per-file keep test the scan reads —
+    * narrowed by [[pushFilters]] before [[inner]] is first built.
+    */
+  private var entries: Seq[SnapshotLake.Entry] = manifest.entries
+  private var keep: SnapshotLake.LiveFile => Boolean = _ => true
+
+  /** Spark's parquet scan builder over the lake's non-listing file index. */
+  private lazy val inner: org.apache.spark.sql.connector.read.ScanBuilder = {
+    val index = SnapshotLake.fileIndex(spark, lakePath, entries, keep)
+    new ParquetTable(table.name(), spark, options,
+        index.rootPaths.map(_.toString), Some(tableSchema), classOf[ParquetFileFormat]) {
+      override lazy val fileIndex: PartitioningAwareFileIndex = index
+    }.newScanBuilder(options)
+  }
 
   /** Per-column interval DISJUNCTIONS from the pushable conjuncts —
     * inclusive bounds only ever WIDEN an exclusive predicate, the
@@ -563,7 +559,7 @@ private[sources] class LakeScanBuilder(
     * under the engine's UTC invariant), so a point matches a partition
     * iff the strings match. Points only: a RANGE bound would compare
     * lexicographically against a typed value — not conservative — so
-    * ranges fall through to the (typed) stats sidecars.
+    * ranges fall through to the (typed) per-file stats.
     */
   private def prunePartitions(
       m: SnapshotLake.Manifest,
@@ -591,22 +587,11 @@ private[sources] class LakeScanBuilder(
 
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     val slices = slicesOf(filters)
-    if (slices.nonEmpty) {
-      val m2 = prunePartitions(manifest, slices)
-      if (m2.entries.length != manifest.entries.length) {
-        // fewer partitions: re-root the inner parquet scan on the kept
-        // gen dirs (empty is fine — the explicit schema carries the shape)
-        val dirs = m2.entries.map(e => new Path(new Path(
-          new Path(lakePath, "data"), e.dirName), s"gen=${e.gen}").toString)
-        inner = table.parquetOver(dirs, Some(tableSchema), options)
-          .newScanBuilder(options)
-      }
-      SnapshotLake.pruneFilesMulti(spark, lakePath, m2, tableSchema, slices)
-        .foreach { pruned =>
-          inner = table.parquetOver(pruned, Some(tableSchema), options)
-            .newScanBuilder(options)
-        }
-    }
+    // fewer partitions root the scan on the kept gen dirs only (empty is
+    // fine — the explicit schema carries the shape); the kept files are
+    // the ones whose recorded min/max can meet every slice
+    entries = prunePartitions(manifest, slices).entries
+    keep = SnapshotLake.pruneFiles(spark, tableSchema, slices)
     inner match {
       case s: org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters =>
         s.pushFilters(filters)

@@ -114,8 +114,8 @@ private[sources] object LakeCdcSource {
   val ChangeTypeCol = "_change_type"
   val CommitGenCol = "_commit_gen"
 
-  /** The stream's schema: the lake's CURRENT snapshot schema (recorded
-    * sidecar first — the widen-only evolution contract) + the two CDC
+  /** The stream's schema: the lake's CURRENT snapshot schema (the
+    * recorded one — the widen-only evolution contract) + the two CDC
     * metadata columns.
     */
   def cdcSchemaOf(spark: SparkSession, lakePath: String): StructType = {
@@ -123,10 +123,9 @@ private[sources] object LakeCdcSource {
       throw new IllegalStateException(
         s"$lakePath has no published snapshot — nothing to stream"))
     val base = SnapshotLake.snapshotSchema(spark, lakePath, m)
-      .orElse(SnapshotLake.schemaFallback(spark, lakePath, m.gen))
       .getOrElse(throw new IllegalStateException(
-        s"$lakePath has no resolvable schema (no sidecar, no readable gen " +
-          "dir) — the table never held a row and was not DDL-created"))
+        s"$lakePath has no resolvable schema (none recorded, no readable " +
+          "gen dir) — the table never held a row and was not DDL-created"))
     require(!base.fieldNames.contains(ChangeTypeCol) &&
       !base.fieldNames.contains(CommitGenCol),
       s"lake schema already carries a $ChangeTypeCol/$CommitGenCol column — " +

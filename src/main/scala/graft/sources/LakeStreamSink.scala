@@ -22,7 +22,7 @@ import graft.etl.SnapshotLake
   * Each micro-batch lands as the lake's usual keyed LWW merge commit
   * ([[SnapshotLake.mergeStreamBatch]]) under the table's persisted
   * contract — the SAME semantics, snapshot isolation, lease, widen-only
-  * evolution check, and stats sidecars as every batch and SQL write face,
+  * evolution check, and file records as every batch and SQL write face,
   * so a streaming producer and an `INSERT INTO` land indistinguishable
   * commits. Unlike `foreachBatch` into a keyed merge
   * ([[graft.streaming.StreamingIngest.snapshotMergeAvailableNow]],

@@ -488,7 +488,7 @@ object VerifySf1 {
               "remaining_min", "remaining_max", "final_px")
         }),
       // e3d: the FILE-SKIPPING slice read (stats-clustered merge +
-      // sidecar-pruned readSlice) ↔ lake-free LWW algebra + a plain
+      // record-pruned readSlice) ↔ lake-free LWW algebra + a plain
       // filter — pruning may drop files, never rows, at 1.5M events
       ("e3d_lake_slice",
         () => CoreQueries.e3dLakeSlice(spark, work),
@@ -505,7 +505,7 @@ object VerifySf1 {
             .localCheckpoint()
         }),
       // e3e: the IN-list point-pruned SQL read (merge clustered by
-      // user_id + InSet/In pushdown into the sidecars) ↔ lake-free LWW
+      // user_id + InSet/In pushdown into the file records) ↔ lake-free LWW
       // algebra + a plain isin filter — point skipping may drop files,
       // never rows, at 1.5M events
       ("e3e_lake_in",

@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 
 import graft.{SparkSuite, Tables}
 
-/** End-to-end L2/L3 proof against a real JDBC database: the distributed
-  * `foreachPartition` upsert sink (reference `postgres_writer.py:181-278`
-  * semantics) run against embedded Derby, which executes a genuine
-  * `MERGE` per row batch. Covers: batching, per-partition transactions,
-  * insert-vs-update paths, and idempotent re-runs.
+/** End-to-end L2/L3 proof against a real JDBC database: the keyed upsert
+  * sink `upsertJdbc` writes through — `JdbcUpsertDataSource`, a
+  * DataSourceV2 write with one transaction per partition (reference
+  * `postgres_writer.py:181-278` semantics) — run against embedded Derby,
+  * which executes a genuine `MERGE` per row batch. Covers: batching,
+  * per-partition transactions, insert-vs-update paths, and idempotent
+  * re-runs.
   */
 class JdbcUpsertSpec extends SparkSuite {
 

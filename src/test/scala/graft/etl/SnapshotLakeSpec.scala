@@ -19,6 +19,13 @@ class SnapshotLakeSpec extends SparkSuite {
   private def tmp(): String =
     Files.createTempDirectory("graft_snaplake").toString + "/t"
 
+  /** The `_manifests` file names of the lake at `dir` (checksums aside). */
+  private def metaNames(dir: String): Set[String] =
+    Option(new java.io.File(s"$dir/_manifests").list()).map(_.toSet).getOrElse(Set.empty)
+      .filterNot(_.startsWith("."))
+
+  private def record(gen: Long): String = "files-" + "%020d".format(gen)
+
   private def state(df: DataFrame): Map[String, (Long, Double)] =
     df.collect().map(r => r.getAs[String]("key") ->
       ((r.getAs[Long]("v"), r.getAs[Double]("price")))).toMap
@@ -359,8 +366,12 @@ class SnapshotLakeSpec extends SparkSuite {
       .toDF("key", "dt", "v", "ts", "price")
     SnapshotLake.merge(spark, dir, extra, Seq("key"), "v", "dt")
     assert(SnapshotLake.readSlice(spark, dir, "v", Some(4000L), None).count() == 1)
-    // vacuum keeps sidecars of still-referenced gens, drops expired ones
+    // vacuum keeps the file records of still-referenced gens, drops expired
+    // ones: the extra merge rewrote the one partition, so gen 1 expires
+    assert(metaNames(dir).contains(record(1L)) && metaNames(dir).contains(record(2L)))
     SnapshotLake.vacuum(spark, dir)
+    assert(!metaNames(dir).contains(record(1L)) && metaNames(dir).contains(record(2L)),
+      s"vacuum must drop only the expired gen's record: ${metaNames(dir)}")
     assert(SnapshotLake.readSlice(spark, dir, "v", Some(100L), Some(200L)).count() == 101)
   }
 
@@ -382,11 +393,18 @@ class SnapshotLakeSpec extends SparkSuite {
       m.entries.head.dirName + s"/gen=${m.entries.head.gen}"))
       .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
     assert(totalFiles > 3, s"need a fragmented partition, got $totalFiles")
+    // the record holds each file's range in VALUE order, and the ranges
+    // together cover 1..1000 with every row counted
+    val files = SnapshotLake.liveFiles(spark, dir, m.entries).flatMap(_._2)
+    val ranges = files.map(f => (f.bounds("v")._1.toLong, f.bounds("v")._2.toLong))
+    assert(ranges.forall { case (lo, hi) => lo <= hi }, s"string-ordered bounds: $ranges")
+    assert(ranges.map(_._1).min == 1L && ranges.map(_._2).max == 1000L)
+    assert(files.flatMap(_.rows).sum == 1000L && files.forall(_.rows.isDefined))
     Seq((100L, 200L, 101L), (751L, 998L, 248L)).foreach { case (lo, hi, want) =>
       val sliced = SnapshotLake.readSlice(spark, dir, "v", Some(lo), Some(hi))
       assert(sliced.count() == want, s"slice [$lo, $hi] lost rows")
       assert(sliced.inputFiles.length < totalFiles,
-        s"slice [$lo, $hi] read all $totalFiles files — the sidecar pruned nothing")
+        s"slice [$lo, $hi] read all $totalFiles files — the record pruned nothing")
     }
   }
 
@@ -418,9 +436,16 @@ class SnapshotLakeSpec extends SparkSuite {
     val filesAfter = fs.listStatus(genDir())
       .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
     assert(filesAfter >= 2 && filesAfter < files0.length)
+    // the compacted gen's record re-captured rows and both stats columns
+    val m = SnapshotLake.currentManifest(spark, dir).get
+    assert(metaNames(dir).contains(record(m.gen)))
+    val recorded = SnapshotLake.liveFiles(spark, dir, m.entries).flatMap(_._2)
+    assert(recorded.length == filesAfter &&
+      recorded.forall(f => f.bounds.keySet == Set("v", "ts") && f.rows.isDefined))
+    assert(recorded.flatMap(_.rows).sum == n.toLong)
     val sliced = SnapshotLake.readSlice(spark, dir, "v", Some(50L), Some(150L))
     assert(sliced.inputFiles.length < filesAfter,
-      "post-compact slice read every file — the re-captured sidecar is dead")
+      "post-compact slice read every file — the re-captured record is dead")
     assert(sliced.count() == 101)
     // multi-column conjunct: each slice may prune on its own column
     val tsLo = java.sql.Timestamp.valueOf("2025-02-01 00:01:00")
@@ -539,14 +564,17 @@ class SnapshotLakeSpec extends SparkSuite {
     val e = intercept[IllegalArgumentException](
       SnapshotLake.create(spark, dir, b1.schema, spec))
     assert(e.getMessage.contains("already exists"))
-    // crashed-create debris (sidecar + meta, NO manifest) heals: the retry
-    // deletes the orphans and converges to a fresh table
+    // crashed-create debris (meta, NO manifest) heals: the retry deletes
+    // the orphan and converges to a fresh table. The declared schema rides
+    // in the gen-0 manifest itself: no other metadata file is written
     val dir2 = tmp()
     SnapshotLake.create(spark, dir2, b1.schema, spec)
+    assert(metaNames(dir2) == Set("manifest-" + "%020d".format(0L), "table-meta"))
     val mdir = new java.io.File(s"$dir2/_manifests")
     assert(new java.io.File(mdir, "manifest-" + "%020d".format(0L)).delete())
     SnapshotLake.create(spark, dir2, b1.schema, spec) // must not collide
-    assert(SnapshotLake.currentManifest(spark, dir2).exists(_.gen == 0L))
+    assert(SnapshotLake.currentManifest(spark, dir2).exists(m =>
+      m.gen == 0L && m.schema.map(_.fieldNames.toSeq).contains(b1.columns.toSeq)))
   }
 
   test("delete/update refuse nondeterministic predicates (two-pass consistency)") {
@@ -599,6 +627,11 @@ class SnapshotLakeSpec extends SparkSuite {
     SnapshotLake.merge(spark, dir, widened, Seq("key"), "v", "dt")
     assert(SnapshotLake.read(spark, dir).columns.toSeq ==
       Seq("key", "dt", "v", "price", "note"))
+    // the order is the one the manifest records, and no schema file
+    // exists beside it
+    assert(SnapshotLake.currentManifest(spark, dir).get.schema.get.fieldNames.toSeq ==
+      Seq("key", "dt", "v", "price", "note"))
+    assert(!metaNames(dir).exists(_.startsWith("schema-")))
   }
 
   test("delete: NULL-evaluating predicate rows survive (SQL WHERE polarity)") {
@@ -620,9 +653,13 @@ class SnapshotLakeSpec extends SparkSuite {
     SnapshotLake.merge(spark, dir, rows, Seq("key"), "v", "dt",
       statsCols = Seq("price"))
     assert(SnapshotLake.delete(spark, dir, col("price") > 190.0) == 10L)
-    val gen = SnapshotLake.currentManifest(spark, dir).get.gen
-    val sidecar = new java.io.File(s"$dir/_manifests/stats-${"%020d".format(gen)}")
-    assert(sidecar.exists(), "delete must re-record stats for the new gen")
+    val m = SnapshotLake.currentManifest(spark, dir).get
+    assert(metaNames(dir).contains(record(m.gen)),
+      "delete must record the rewritten gen's files")
+    val recorded = SnapshotLake.liveFiles(spark, dir, m.entries).flatMap(_._2)
+    assert(recorded.nonEmpty && recorded.forall(_.bounds.contains("price")),
+      "delete must re-record stats for the new gen")
+    assert(recorded.flatMap(_.rows).sum == 190L)
     // and the slice read still returns exactly the surviving rows
     assert(SnapshotLake.readSlice(spark, dir, "price", Some(100.0), None)
       .count() == 91L)

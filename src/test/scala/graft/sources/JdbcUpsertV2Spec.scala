@@ -124,6 +124,25 @@ class JdbcUpsertV2Spec extends SparkSuite {
       s"engine options must not leak into driver properties: ${cfg.props}")
   }
 
+  test("V2 upsert sink: jdbcprop.* names keep their case; the prefix matches in any case") {
+    // drivers look property names up exactly (pgjdbc ignores a lowercased
+    // `rewritebatchedinserts` without an error)
+    val cfg = JdbcUpsertV2.Config(Map(
+      "Url" -> url, "dbTable" -> "t", "Keys" -> "k",
+      "User" -> "alice", "PASSWORD" -> "s3cret",
+      "jdbcprop.reWriteBatchedInserts" -> "true",
+      "JDBCPROP.ApplicationName" -> "graft"))
+    val p = cfg.connectionProperties
+    assert(p.getProperty("reWriteBatchedInserts") == "true")
+    assert(p.getProperty("ApplicationName") == "graft")
+    assert(p.getProperty("rewritebatchedinserts") == null &&
+      p.getProperty("applicationname") == null)
+    // user/password resolve case-insensitively under their canonical names
+    assert(p.getProperty("user") == "alice" && p.getProperty("password") == "s3cret")
+    assert(cfg.props.keySet ==
+      Set("user", "password", "reWriteBatchedInserts", "ApplicationName"))
+  }
+
   test("V2 upsert sink: options are case-insensitive on BOTH schema and write paths") {
     // getTable receives the case-PRESERVING properties map — mixed-case
     // keys must still resolve (the DSv2 convention)

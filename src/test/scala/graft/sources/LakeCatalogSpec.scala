@@ -92,8 +92,8 @@ class LakeCatalogSpec extends SparkSuite {
       .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
     assert(total > 2, s"need fragmentation, got $total")
     // a narrow v-slice THROUGH SQL must read fewer files than the
-    // partition holds — the pushed conjuncts hit the sidecars before the
-    // parquet file index ever lists the rest
+    // partition holds — the pushed conjuncts hit the file record's
+    // min/max before the scan's file index is built
     val q = spark.sql(
       "SELECT key, v, input_file_name() AS f FROM glake.sliced " +
         "WHERE v >= 100 AND v <= 200")
@@ -203,7 +203,7 @@ class LakeCatalogSpec extends SparkSuite {
       .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
     assert(total > 2, s"need fragmentation, got $total")
     // a small IN list (below the InSet threshold) and a large one (above
-    // it, optimized to InSet) must both reach the sidecars as points
+    // it, optimized to InSet) must both reach the file record as points
     for (vals <- Seq(Seq(7L, 8L, 900L),
       (1L to 12L) ++ Seq(990L, 991L, 992L))) {
       val q = spark.sql(
@@ -523,9 +523,13 @@ class LakeCatalogSpec extends SparkSuite {
     assert(state(spark.sql("SELECT * FROM glake.born_sql").collect()) ==
       Map("k1" -> ((2L, 15.0)), "k2" -> ((1L, 20.0)),
         "k3" -> ((1L, 30.0)), "k4" -> ((1L, 40.0))))
-    // stats sidecars recorded from the declared contract (file skipping on)
+    // the first INSERT's file record carries stats for the declared
+    // contract's stats_cols (file skipping on)
     assert(new java.io.File(
-      s"$root/born_sql/_manifests/stats-${"%020d".format(1L)}").exists())
+      s"$root/born_sql/_manifests/files-${"%020d".format(1L)}").exists())
+    val born = SnapshotLake.manifestAt(spark, s"$root/born_sql", 1L)
+    assert(SnapshotLake.liveFiles(spark, s"$root/born_sql", born.entries)
+      .flatMap(_._2).forall(_.bounds.contains("price")))
     // gen 0 is retained history: VERSION AS OF 0 answers the empty table
     assert(spark.sql("SELECT * FROM glake.born_sql VERSION AS OF 0").count() == 0)
     // the declared schema is ENFORCED from commit 1: a batch missing a
