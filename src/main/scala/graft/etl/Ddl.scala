@@ -110,7 +110,41 @@ object Ddl {
   def createTables(
       url: String,
       dialect: Upsert.Dialect = Upsert.Derby,
-      props: java.util.Properties = new java.util.Properties()): Seq[String] = {
+      props: java.util.Properties = new java.util.Properties()): Seq[String] =
+    withTableProbe(url, props) { (st, exists) =>
+      val missing = Seq("indices", "quotes").filterNot(exists)
+      typedStatements(dialect).foreach { case (target, ddl) =>
+        if (missing.nonEmpty && target.forall(missing.contains)) st.execute(ddl)
+      }
+      missing
+    }
+
+  /** [[graft.sources.JdbcStreamSink]]'s batch ledger: one row per committed
+    * write partition, beside the data tables; `sink_id` namespaces streams.
+    */
+  val LedgerTable = "batch_ledger"
+
+  /** Idempotent [[LedgerTable]] bootstrap, same probe as [[createTables]]. */
+  def createLedger(url: String, props: java.util.Properties): Unit =
+    withTableProbe(url, props) { (st, exists) =>
+      if (!exists(LedgerTable))
+        try st.execute(
+          s"""CREATE TABLE $LedgerTable (
+             |  "sink_id" VARCHAR(200) NOT NULL,
+             |  "batch_id" BIGINT NOT NULL,
+             |  "partition_id" INTEGER NOT NULL,
+             |  "num_partitions" INTEGER NOT NULL,
+             |  PRIMARY KEY ("sink_id", "batch_id", "partition_id"))""".stripMargin)
+        catch {
+          // two streams bootstrapping one database concurrently: the loser's
+          // CREATE fails table-exists (Derby X0Y32 / Postgres 42P07), benign
+          // exactly when the scoped probe now finds it; else it propagates
+          case _: SQLException if exists(LedgerTable) => ()
+        }
+    }
+
+  private def withTableProbe[T](url: String, props: java.util.Properties)(
+      f: (java.sql.Statement, String => Boolean) => T): T = {
     val conn = DriverManager.getConnection(url, props)
     try {
       // Unquoted DDL identifiers fold UPPER in Derby but lower in Postgres —
@@ -128,16 +162,8 @@ object Ddl {
             catalog.orNull, schema.orNull, t, null)
           try rs.next() finally rs.close()
         }
-      val missing = Seq("indices", "quotes").filterNot(exists)
-      if (missing.nonEmpty) {
-        val st = conn.createStatement()
-        try {
-          typedStatements(dialect).foreach { case (target, ddl) =>
-            if (target.forall(missing.contains)) st.execute(ddl)
-          }
-        } finally st.close()
-      }
-      missing
+      val st = conn.createStatement()
+      try f(st, exists) finally st.close()
     } finally conn.close()
   }
 }

@@ -758,8 +758,8 @@ object SnapshotLake {
     * at-least-once (a crash between the sink write and the commit-log
     * write replays the batch), so the lake records the highest applied
     * `batchId` per `sinkId` (one marker file under `_manifests/streams`,
-    * ≙ [[graft.streaming.BatchLedger]] for the JDBC face, but
-    * filesystem-native and checked INSIDE the same lease as the commit):
+    * ≙ the ledger rows of the JDBC face, [[graft.sources.JdbcStreamSink]],
+    * but filesystem-native and checked INSIDE the same lease as the commit):
     *
     *  - `batchId <= recorded` → replay; skipped without reading the batch
     *    (returns false).

@@ -12,12 +12,13 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.etl.Upsert
+import graft.etl.{Ddl, Upsert}
 
 /** Keyed JDBC UPSERT as a DataSourceV2 WRITE — the sink face of the V2
   * catalog surface ([[BarDataSource]] is the source face) and the one JDBC
   * upsert writer: [[graft.etl.Upsert.upsertJdbc]] (and through it
-  * `Pipeline.runJdbc` and the streaming JDBC sinks) writes through it. One
+  * `Pipeline.runJdbc` and `StreamingIngest.pipelineAvailableNow`) and the
+  * `graft-jdbc` streaming sink ([[JdbcStreamSink]]) write through it. One
   * connection per partition, `batchsize`-paged executeBatch, the
   * per-dialect MERGE/ON CONFLICT statement, idempotent re-runs — the
   * reference's `postgres_writer.py` contract — riding Spark's V2 write
@@ -73,7 +74,8 @@ object JdbcUpsertV2 {
       dialect: Upsert.Dialect,
       batchSize: Int,
       noUpdate: Seq[String],
-      props: Map[String, String]) {
+      props: Map[String, String],
+      ledger: Option[Ledger] = None) {
     // Config travels to executors and surfaces in task-failure traces —
     // the auto-generated case-class toString would print every JDBC prop
     // verbatim, credentials included. Redact all prop VALUES (any prop can
@@ -90,6 +92,11 @@ object JdbcUpsertV2 {
       p
     }
   }
+
+  /** [[JdbcStreamSink]]'s batch identity — set by the sink, never from an
+    * option.
+    */
+  final case class Ledger(sinkId: String, batchId: Long)
 
   /** One connection-open path for driver (schema inference) and executors
     * (writers): credentials and passthrough properties always apply — an
@@ -120,7 +127,10 @@ object JdbcUpsertV2 {
           case d => throw new IllegalArgumentException(
             s"unknown dialect '$d' (postgres|derby|ansi)")
         },
-        batchSize = o.getOrElse("batchsize", "1000").toInt,
+        batchSize = o.get("batchsize").fold(1000) { v =>
+          v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+            s"option 'batchsize' must be a positive integer, got '$v'"))
+        },
         noUpdate = o.get("noupdate").toSeq
           .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
         // user/password ride as first-class options (upsertJdbc's
@@ -231,15 +241,16 @@ private[sources] final class JdbcUpsertBatchWrite(
   // per-partition transactions carry the durability (upsertJdbc's model);
   // the driver-side commit has nothing left to do
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new JdbcUpsertWriterFactory(cfg, schema)
+    new JdbcUpsertWriterFactory(cfg, schema, info.numPartitions)
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 private[sources] final class JdbcUpsertWriterFactory(
-    cfg: JdbcUpsertV2.Config, schema: StructType) extends DataWriterFactory {
+    cfg: JdbcUpsertV2.Config, schema: StructType, numPartitions: Int)
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new JdbcUpsertDataWriter(cfg, schema)
+    new JdbcUpsertDataWriter(cfg, schema, partitionId, numPartitions)
 }
 
 private[sources] final case class JdbcUpsertCommit(rows: Long)
@@ -248,10 +259,13 @@ private[sources] final case class JdbcUpsertCommit(rows: Long)
 /** One partition's writer — the one JDBC upsert loop (one connection,
   * prepared dialect statement, paged executeBatch, commit-or-rollback),
   * reading Catalyst internal rows directly — no Row conversion on the
-  * write path.
+  * write path. A write carrying a [[JdbcUpsertV2.Ledger]] also upserts the
+  * partition's ledger row before the commit, even for an empty partition,
+  * so the MERGE and its ledger row commit or roll back together.
   */
 private[sources] final class JdbcUpsertDataWriter(
-    cfg: JdbcUpsertV2.Config, schema: StructType)
+    cfg: JdbcUpsertV2.Config, schema: StructType, partitionId: Int,
+    numPartitions: Int)
     extends DataWriter[InternalRow] {
 
   private val cols = schema.fields.map(_.name).toSeq
@@ -296,10 +310,20 @@ private[sources] final class JdbcUpsertDataWriter(
   }
 
   override def commit(): WriterCommitMessage = {
-    if (total > 0L) {
-      if (pending > 0) st.executeBatch()
-      conn.commit()
+    if (pending > 0) st.executeBatch()
+    cfg.ledger.foreach { l =>
+      // an upsert: a replayed partial batch re-commits partitions with a row
+      val value = Map[String, Any]("sink_id" -> l.sinkId, "batch_id" -> l.batchId,
+        "partition_id" -> partitionId, "num_partitions" -> numPartitions)
+      val (cols, keys) = (value.keys.toSeq, Seq("sink_id", "batch_id", "partition_id"))
+      val ls = conn.prepareStatement(cfg.dialect.upsertSql(Ddl.LedgerTable, cols, keys))
+      try {
+        cfg.dialect.bindOrder(cols, keys).zipWithIndex
+          .foreach { case (c, i) => ls.setObject(i + 1, value(c)) }
+        ls.executeUpdate()
+      } finally ls.close()
     }
+    if (connOpened) conn.commit()
     JdbcUpsertCommit(total)
   }
 

@@ -10,8 +10,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{
   InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{
-  MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl,
-  SupportsTriggerAvailableNow}
+  MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics,
+  SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.{col, lit}
@@ -63,6 +63,9 @@ import graft.etl.SnapshotLake
   *    vacuum outran the consumer; ahead of it = the lake was deleted and
   *    re-created) — never a silent skip. Size retention to the slowest
   *    consumer's lag, the [[graft.etl.SnapshotLake.vacuum]] contract.
+  *  - LAG: each `StreamingQueryProgress` source entry carries the metric
+  *    `gensBehind` — the newest retained generation minus the consumed
+  *    one (0 = caught up).
   *  - SCHEMA: pinned at stream start (current snapshot's recorded schema —
   *    widen-only evolution means restart is sufficient to surface added
   *    columns; older commits read them as null).
@@ -193,7 +196,8 @@ private[sources] class LakeCdcMicroBatchStream(
     cdcSchema: StructType,
     checkpointLocation: String,
     maxGensPerBatch: Option[Long])
-  extends MicroBatchStream with SupportsTriggerAvailableNow {
+  extends MicroBatchStream with SupportsTriggerAvailableNow
+  with ReportsSourceMetrics {
 
   import LakeCdcSource.{ChangeTypeCol, CommitGenCol}
 
@@ -356,6 +360,11 @@ private[sources] class LakeCdcMicroBatchStream(
       }
     }
   }
+
+  override def metrics(consumed: util.Optional[Offset]): util.Map[String, String] =
+    retained().lastOption.zip(Option(consumed.orElse(null))).map { case (newest, o) =>
+      util.Map.of("gensBehind", (newest - LakeCdcOffset.fromJson(o.json()).gen).toString)
+    }.getOrElse(util.Map.of[String, String]())
 
   override def stop(): Unit = ()
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.graft.StreamingBatchBridge
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -24,9 +25,8 @@ import graft.etl.SnapshotLake
   * contract — the SAME semantics, snapshot isolation, lease, widen-only
   * evolution check, and file records as every batch and SQL write face,
   * so a streaming producer and an `INSERT INTO` land indistinguishable
-  * commits. Unlike `foreachBatch` into a keyed merge
-  * ([[graft.streaming.StreamingIngest.snapshotMergeAvailableNow]],
-  * at-least-once and converging), exactly-once comes from the in-lake per-sink batch
+  * commits. It is the lake's one streaming write face ([[JdbcStreamSink]]
+  * is the JDBC one). Exactly-once comes from the in-lake per-sink batch
   * marker (checked inside the commit's lease; replays skip without
   * reading the batch) plus keyed LWW convergence for the one
   * crash-between window — see mergeStreamBatch's scaladoc for the full
@@ -66,28 +66,13 @@ class LakeStreamSink extends StreamSinkProvider with DataSourceRegister {
       parameters: Map[String, String],
       partitionColumns: Seq[String],
       outputMode: OutputMode): Sink = {
-    def opt(k: String): Option[String] = parameters.collectFirst {
-      case (p, v) if p.equalsIgnoreCase(k) && v.nonEmpty => v
-    }
-    require(partitionColumns.isEmpty,
-      "graft-lake: drop .partitionBy(…) — the lake's layout comes from " +
-        "its persisted merge contract (partition_col at CREATE TABLE), " +
-        "never from the writer")
-    require(outputMode != OutputMode.Complete(),
-      "graft-lake is an append-merge sink (every micro-batch upserts by " +
-        "the table's keys) — Complete mode's truncate-and-replace " +
-        "contract does not exist here; use Append or Update")
+    val (opt, sinkId) = KeyedStreamSink.open("graft-lake",
+      "the lake's layout comes from its persisted merge contract " +
+        "(partition_col at CREATE TABLE), never from the writer",
+      parameters, partitionColumns, outputMode)
     val path = opt("path").getOrElse(throw new IllegalArgumentException(
       "graft-lake needs the lake's table root: .option(\"path\", <path>) " +
         "or .start(<path>)"))
-    // batch ids are only unique per checkpoint lineage, so the replay
-    // marker is keyed by it; an explicit sinkId option overrides (two
-    // queries deliberately sharing one marker, or a relocated checkpoint)
-    val sinkId = opt("sinkId").orElse(opt("checkpointLocation")).getOrElse(
-      throw new IllegalArgumentException(
-        "graft-lake needs .option(\"checkpointLocation\", …) (or an " +
-          "explicit .option(\"sinkId\", …)) — exactly-once needs a " +
-          "durable lineage to key the replay marker by"))
     new LakeSink(sqlContext.sparkSession, path, sinkId)
   }
 }
@@ -96,19 +81,40 @@ private[sources] class LakeSink(spark: SparkSession, path: String,
     sinkId: String) extends Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    SnapshotLake.mergeStreamBatch(spark, path, LakeSink.decouple(data),
-      sinkId, batchId)
+    // ForeachBatchSink's decoupling (see StreamingBatchBridge for why a
+    // V1 sink's batch cannot be re-planned as handed over)
+    SnapshotLake.mergeStreamBatch(spark, path,
+      StreamingBatchBridge.decoupleFromStreaming(data), sinkId, batchId)
     ()
   }
 
   override def toString: String = s"GraftLakeSink[$path]"
 }
 
-private[sources] object LakeSink {
-  /** `ForeachBatchSink`'s decoupling, via
-    * [[org.apache.spark.sql.graft.StreamingBatchBridge]] (see its scaladoc
-    * for why a V1 sink's batch cannot be re-planned as handed over).
-    */
-  def decouple(data: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.StreamingBatchBridge.decoupleFromStreaming(data)
+/** The start-time contract both keyed sinks share ([[LakeStreamSink]],
+  * [[JdbcStreamSink]]): `partitionBy` and `Complete` mode refuse, and the
+  * replay lineage is `sinkId`, else `checkpointLocation` (batch ids are only
+  * unique per checkpoint lineage; an explicit `sinkId` serves two queries
+  * deliberately sharing one lineage, or a relocated checkpoint). Returns a
+  * case-insensitive option lookup and the sink id.
+  */
+private[sources] object KeyedStreamSink {
+  def open(name: String, layout: String, parameters: Map[String, String],
+      partitionColumns: Seq[String],
+      outputMode: OutputMode): (String => Option[String], String) = {
+    def opt(k: String): Option[String] = parameters.collectFirst {
+      case (p, v) if p.equalsIgnoreCase(k) && v.nonEmpty => v
+    }
+    require(partitionColumns.isEmpty, s"$name: drop .partitionBy(…) — $layout")
+    require(outputMode != OutputMode.Complete(),
+      s"$name is a keyed upsert sink (every micro-batch upserts by the " +
+        "table's keys) — Complete mode's truncate-and-replace contract " +
+        "does not exist here; use Append or Update")
+    val sinkId = opt("sinkId").orElse(opt("checkpointLocation")).getOrElse(
+      throw new IllegalArgumentException(
+        s"$name needs .option(\"checkpointLocation\", …) (or an explicit " +
+          ".option(\"sinkId\", …)) — exactly-once needs a durable lineage " +
+          "to key its replay record by"))
+    (opt, sinkId)
+  }
 }

@@ -53,12 +53,12 @@ final case class ClosedSession(
   *    cron tick (process everything new, then stop);
   *  - `withWatermark` + `dropDuplicates` ≙ the overlap-refetch tolerance
   *    (late data within the watermark is deduped on the PK);
-  *  - `foreachBatch` → the keyed upsert sink ≙ ON CONFLICT DO UPDATE.
+  *  - the keyed upsert sink ≙ ON CONFLICT DO UPDATE: one exactly-once
+  *    `writeStream.format(...)` face per target — `graft-lake`
+  *    ([[graft.sources.LakeStreamSink]]) and `graft-jdbc`
+  *    ([[graft.sources.JdbcStreamSink]]).
   */
 object StreamingIngest {
-
-  private val ensuredUrls =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Landing-directory file source (schema must be supplied — streaming
     * sources cannot infer).
@@ -87,8 +87,8 @@ object StreamingIngest {
     * so suppression within it is the whole contract. Re-deliveries arriving
     * AFTER the horizon re-emit by design (StreamingSpec pins all three
     * behaviors); absorbing those is the keyed sink's job
-    * ([[snapshotMergeAvailableNow]]) — and the admission index's, for
-    * content identity.
+    * (`writeStream.format("graft-lake")`, [[graft.sources.LakeStreamSink]])
+    * — and the admission index's, for content identity.
     */
   def dedupedStateBounded(
       events: DataFrame,
@@ -272,35 +272,6 @@ object StreamingIngest {
       .select(col("event_id"), col("user_id"), col("ts"), col("p_ts"), col("p_value"))
   }
 
-  /** Drain everything currently in the landing dir through the keyed
-    * upsert into the SNAPSHOT-ISOLATED lake ([[graft.etl.SnapshotLake]]),
-    * then stop (AvailableNow ≙ one cron tick). Every micro-batch LWW-merges
-    * into new partition generations and publishes ONE atomic manifest, so
-    * concurrent readers of the maintained table always resolve a
-    * consistent snapshot, an in-flight scan is never invalidated by the
-    * next batch, and a crash mid-batch leaves the previous snapshot
-    * readable. Replay safety is convergence: the merge is idempotent LWW,
-    * so a re-delivered batch publishes a gen with identical content (no
-    * ledger needed — unlike the sum-fold MV lanes). For exactly-once
-    * (a replayed batch id skipped even if its bytes changed) write through
-    * `writeStream.format("graft-lake")` ([[graft.sources.LakeStreamSink]]).
-    */
-  def snapshotMergeAvailableNow(
-      deduped: DataFrame,
-      targetPath: String,
-      checkpoint: String,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: String): StreamingQuery =
-    deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.etl.SnapshotLake.merge(
-          batch.sparkSession, targetPath, batch, keys, versionCol, partitionCol)
-      }
-      .start()
-
   /** Streaming document admission: each micro-batch of crawled documents
     * flows through [[graft.dedup.IncrementalDedup]]'s content-hash gate —
     * only never-seen content reaches the corpus, across batches AND across
@@ -369,28 +340,6 @@ object StreamingIngest {
           graft.dedup.IncrementalDedup.admitAndCommitMinhash(
             batch.sparkSession, bucketIndexPath, batch, sink)
         ()
-      }
-      .start()
-
-  /** The reference's full load path, streaming: micro-batches upserted into
-    * a relational table over JDBC (`foreachBatch` → MERGE/ON CONFLICT ≙
-    * `postgres_writer.py:181-278` run per tick). Each batch is LWW-deduped
-    * before the write so a batch never carries two rows per key.
-    */
-  def upsertJdbcAvailableNow(
-      deduped: DataFrame,
-      url: String,
-      table: String,
-      checkpoint: String,
-      keys: Seq[String],
-      versionCol: String,
-      dialect: Upsert.Dialect): StreamingQuery =
-    deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Upsert.upsertJdbc(
-          Upsert.lastWriteWins(batch, keys, versionCol), url, table, keys, dialect)
       }
       .start()
 
@@ -509,6 +458,13 @@ object StreamingIngest {
     * rename (see the replay analysis on [[foldVocabBatchOnce]]'s scaladoc
     * header above — it applies verbatim to every lane riding this).
     *
+    * The ledger keeps ONE marker per `sinkId`, named by the highest folded
+    * id, and a `batchId` at or below it is a replay — the rule
+    * [[graft.etl.SnapshotLake.mergeStreamBatch]] uses. It holds because a
+    * `sinkId`'s ids only increase (micro-batch ids within a lineage,
+    * `_commit_gen` for a CDC follower), and it keeps each fold's marker
+    * cost independent of the stream's history.
+    *
     * A lake CDC consumer composes it with the `graft-lake-cdc` stream
     * ([[graft.sources.LakeCdcSource]]): inside `foreachBatch`, fold each
     * commit's rows with its `_commit_gen` as `batchId`. The ledger is then
@@ -531,8 +487,16 @@ object StreamingIngest {
       // crashed between the swap renames: restore the parked state — the
       // marker was never published, so the refold below rebuilds staging
       if (!fs.exists(cur) && fs.exists(old)) Upsert.renameOrThrow(fs, old, cur)
-      val marker = new org.apache.hadoop.fs.Path(cur, s"__applied/$sinkId/$batchId")
-      if (fs.exists(marker)) false
+      // one marker per sinkId, named by its highest folded id; a directory
+      // left with one marker per batch reads as its largest id
+      val appliedRoot = new org.apache.hadoop.fs.Path(cur, "__applied")
+      val applied: Map[String, Long] =
+        if (!fs.exists(appliedRoot)) Map.empty
+        else fs.listStatus(appliedRoot).toSeq.flatMap { sink =>
+          fs.listStatus(sink.getPath).flatMap(_.getPath.getName.toLongOption)
+            .maxOption.map(sink.getPath.getName -> _)
+        }.toMap
+      if (applied.get(sinkId).exists(_ >= batchId)) false
       else {
         val batchState = stateOf(batch)
         val merged =
@@ -541,21 +505,13 @@ object StreamingIngest {
         val staging = new org.apache.hadoop.fs.Path(statePath + "__staging")
         if (fs.exists(staging)) fs.delete(staging, true)
         merged.write.mode("overwrite").parquet(staging.toString)
-        // carry every already-applied marker forward, then add this batch's —
+        // carry every other sink's marker forward and advance this one's —
         // all published atomically by the staging→cur rename below
-        val appliedRoot = new org.apache.hadoop.fs.Path(cur, "__applied")
-        if (fs.exists(appliedRoot))
-          fs.listStatus(appliedRoot).foreach { sink =>
-            fs.listStatus(sink.getPath).foreach { m =>
-              val dst = new org.apache.hadoop.fs.Path(
-                staging, s"__applied/${sink.getPath.getName}/${m.getPath.getName}")
-              fs.mkdirs(dst.getParent)
-              fs.create(dst, false).close()
-            }
-          }
-        val dst = new org.apache.hadoop.fs.Path(staging, s"__applied/$sinkId/$batchId")
-        fs.mkdirs(dst.getParent)
-        fs.create(dst, false).close()
+        (applied + (sinkId -> batchId)).foreach { case (sink, id) =>
+          val dst = new org.apache.hadoop.fs.Path(staging, s"__applied/$sink/$id")
+          fs.mkdirs(dst.getParent)
+          fs.create(dst, false).close()
+        }
         if (fs.exists(old)) fs.delete(old, true)
         if (fs.exists(cur)) Upsert.renameOrThrow(fs, cur, old)
         Upsert.renameOrThrow(fs, staging, cur)
@@ -578,8 +534,8 @@ object StreamingIngest {
     * into the SAME marker namespace. Cross-lineage suppression additionally
     * assumes the rebuilt stream re-forms the same (batchId → files)
     * batches, which AvailableNow's deterministic listing gives when the
-    * source options are unchanged; within one checkpoint lineage the
-    * (sinkId, batchId) match is exact.
+    * source options are unchanged; within one checkpoint lineage batch ids
+    * increase, so the (sinkId, highest folded id) check is exact.
     */
   def vocabStateAvailableNow(
       docs: DataFrame,
@@ -616,74 +572,6 @@ object StreamingIngest {
         ()
       }
       .start()
-
-  /** One micro-batch through the ledgered JDBC sink: skip if this
-    * (sinkId, batchId) is already recorded, else LWW-dedup → keyed MERGE →
-    * record. Returns whether the batch was applied (false = replay
-    * suppressed). Crash windows: before the MERGE commits ⇒ replay
-    * re-applies (idempotent); between MERGE and ledger write ⇒ replay
-    * re-applies identical rows and then records (converges); after the
-    * ledger write ⇒ replay skips without touching data. The last case is
-    * the one plain at-least-once cannot express: a batch whose SOURCE data
-    * changed between delivery and replay (e.g. an overwritten landing
-    * file) must NOT be re-applied with the new content.
-    */
-  def applyJdbcBatchOnce(
-      batch: DataFrame,
-      batchId: Long,
-      url: String,
-      table: String,
-      keys: Seq[String],
-      versionCol: String,
-      dialect: Upsert.Dialect,
-      sinkId: String,
-      props: java.util.Properties = new java.util.Properties()): Boolean = {
-    // ensure() is a one-time bootstrap; paying a connection + metadata probe
-    // on EVERY micro-batch would be pure overhead. Memoized per URL within
-    // the process — but only AFTER success: memoizing a failed bootstrap
-    // (DB briefly unreachable) would wedge every later batch on a missing
-    // ledger table until process restart. ensure stays idempotent, so a
-    // concurrent double-run is benign.
-    if (!ensuredUrls.contains(url)) {
-      BatchLedger.ensure(url, props)
-      ensuredUrls.add(url)
-    }
-    if (BatchLedger.alreadyApplied(url, sinkId, batchId, props)) false
-    else {
-      Upsert.upsertJdbc(
-        Upsert.lastWriteWins(batch, keys, versionCol), url, table, keys, dialect,
-        props = props)
-      BatchLedger.record(url, sinkId, batchId, props)
-      true
-    }
-  }
-
-  /** [[upsertJdbcAvailableNow]] with the [[BatchLedger]] replay guard —
-    * exactly-once observable semantics instead of at-least-once-converging.
-    * `sinkId` defaults to `table@checkpoint` (batch ids are only unique per
-    * checkpoint lineage).
-    */
-  def upsertJdbcExactlyOnceAvailableNow(
-      deduped: DataFrame,
-      url: String,
-      table: String,
-      checkpoint: String,
-      keys: Seq[String],
-      versionCol: String,
-      dialect: Upsert.Dialect,
-      sinkId: Option[String] = None,
-      props: java.util.Properties = new java.util.Properties()): StreamingQuery = {
-    val sid = sinkId.getOrElse(s"$table@$checkpoint")
-    deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyJdbcBatchOnce(batch, batchId, url, table, keys, versionCol, dialect,
-          sid, props)
-        ()
-      }
-      .start()
-  }
 
   /** The reference's ENTIRE pipeline as one incremental streaming job:
     * raw long-format bars land in a directory; each AvailableNow tick

@@ -220,11 +220,18 @@ class SnapshotLakeSpec extends SparkSuite {
     val landing = Files.createTempDirectory("graft_snaplake_landing").toString
     b1.unionByName(b2).repartition(3).write.mode("overwrite").parquet(landing)
     val schema = spark.read.parquet(landing).schema
+    // the sink writes under the lake's persisted contract, so the table
+    // is created first with the contract a batch merge would stamp
+    SnapshotLake.create(spark, dir, schema,
+      SnapshotLake.MergeSpec(Seq("key"), "v", "dt", Nil, Nil))
     def tick(n: Int): Unit = {
-      val stream = spark.readStream.schema(schema)
+      spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(landing)
-      graft.streaming.StreamingIngest.snapshotMergeAvailableNow(
-        stream, dir, s"$landing/ckpt_$n", Seq("key"), "v", "dt")
+        .writeStream.format("graft-lake")
+        .option("path", dir)
+        .option("checkpointLocation", s"$landing/ckpt_$n")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
         .awaitTermination()
     }
     tick(1) // >= 3 micro-batches, each one manifest commit
@@ -233,7 +240,8 @@ class SnapshotLakeSpec extends SparkSuite {
     assert(state(SnapshotLake.read(spark, dir)) == want)
     assert(SnapshotLake.currentManifest(spark, dir).get.gen >= 3,
       "each micro-batch must have published its own manifest")
-    // fresh checkpoint => full re-delivery; idempotent LWW converges
+    // fresh checkpoint => a new sink lineage re-delivers everything;
+    // idempotent LWW converges
     tick(2)
     assert(state(SnapshotLake.read(spark, dir)) == want,
       "replayed stream must converge, not duplicate or regress")

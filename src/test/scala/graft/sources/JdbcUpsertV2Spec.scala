@@ -107,6 +107,11 @@ class JdbcUpsertV2Spec extends SparkSuite {
     assert(attempt(Map("url" -> url, "dbtable" -> "quotes_v2",
       "keys" -> "user_id", "dialect" -> "oracle"))
       .getMessage.contains("unknown dialect"))
+    val batch = attempt(Map("url" -> url, "dbtable" -> "quotes_v2",
+      "keys" -> "user_id", "batchsize" -> "1k"))
+    assert(batch.isInstanceOf[IllegalArgumentException] &&
+      batch.getMessage.contains("batchsize") && batch.getMessage.contains("'1k'"),
+      batch.toString)
   }
 
   test("V2 upsert sink: user/password and jdbcprop.* become connection properties") {

@@ -115,6 +115,23 @@ class LakeCdcStreamSpec extends SparkSuite {
     assert(offsets == 3, s"expected 3 per-gen batches, got $offsets")
   }
 
+  test("lag: each batch's progress reports gensBehind, 0 once caught up") {
+    val root = tmp("lag")
+    val lake = threeCommitLake(root)
+    val q = spark.readStream.format("graft-lake-cdc")
+      .option("maxGensPerBatch", "1").load(lake)
+      .writeStream.format("parquet")
+      .option("path", s"$root/out")
+      .option("checkpointLocation", s"$root/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    // one batch per generation: gens 1, 2, 3 consumed of newest gen 3
+    val lags = q.recentProgress.filter(_.numInputRows > 0)
+      .map(_.sources.head.metrics.get("gensBehind")).toSeq
+    assert(lags == Seq("2", "1", "0"), s"gensBehind per batch: $lags")
+  }
+
   test("vacuum guardrail: a stream outrun by retention fails naming the snapshot") {
     val root = tmp("vac")
     val lake = s"$root/t"

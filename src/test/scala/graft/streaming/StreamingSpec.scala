@@ -22,6 +22,21 @@ class StreamingSpec extends SparkSuite {
     dir
   }
 
+  /** One AvailableNow drain of `df` through `writeStream.format("graft-jdbc")`
+    * into a Derby table keyed on `event_id`, LWW by `ts`.
+    */
+  private def drainJdbc(df: org.apache.spark.sql.DataFrame, url: String,
+      table: String, ckpt: String, sinkId: Option[String] = None): Unit = {
+    val w = df.writeStream.format("graft-jdbc")
+      .option("url", url).option("dbtable", table)
+      .option("keys", "event_id").option("versionCol", "ts")
+      .option("dialect", "derby")
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    sinkId.foreach(w.option("sinkId", _))
+    w.start().awaitTermination()
+  }
+
   test("streaming hourly agg over AvailableNow equals the batch aggregation") {
     val schema = spark.read.parquet(landing).schema
     val stream = StreamingIngest.readLanding(spark, landing, schema)
@@ -350,6 +365,16 @@ class StreamingSpec extends SparkSuite {
     // (sum-merge would otherwise double every count)
     tick(2)
     assert(stats() == want, "checkpoint-loss replay double-counted")
+    // the fold ledger keeps ONE marker per sinkId, named by the highest
+    // folded id, however many batches were folded
+    val fs = new org.apache.hadoop.fs.Path(state)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def markers(st: String, sinkId: String): Seq[String] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(st, s"__applied/$sinkId"))
+        .map(_.getPath.getName).toSeq
+    val lastId = new java.io.File(docsDir).list().count(_.endsWith(".parquet")) - 1
+    assert(markers(state, "docs-vocab") == Seq(lastId.toString),
+      s"expected one marker for ${lastId + 1} folds: ${markers(state, "docs-vocab")}")
     // direct replay of an applied (sinkId, batchId) is a no-op
     val state2 = s"$work/vocab_state2"
     assert(StreamingIngest.foldVocabBatchOnce(docs.toDF(), 0L, state2))
@@ -357,8 +382,6 @@ class StreamingSpec extends SparkSuite {
       "replayed batch was folded twice")
     // swap-crash window: state parked at __old (death between the two
     // renames) — the next fold restores it and applies the new batch
-    val fs = new org.apache.hadoop.fs.Path(state2)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(state2),
       new org.apache.hadoop.fs.Path(state2 + "__old")))
     assert(StreamingIngest.foldVocabBatchOnce(docs.toDF(), 1L, state2),
@@ -368,6 +391,16 @@ class StreamingSpec extends SparkSuite {
     val tokensOnce = want.map(_(1).asInstanceOf[Long]).sum
     assert(tokensTwice == 2 * tokensOnce,
       s"recovered state should hold exactly two folds ($tokensTwice vs 2×$tokensOnce)")
+    assert(markers(state2, "default") == Seq("1"))
+    // a ledger written with one marker per batch reads as its largest id:
+    // id 7 is a replay, id 8 folds and leaves the one marker "8"
+    Seq("3", "7").foreach(id =>
+      fs.create(new org.apache.hadoop.fs.Path(state2, s"__applied/legacy/$id")).close())
+    val empty = docs.toDF().limit(0)
+    assert(!StreamingIngest.foldVocabBatchOnce(empty, 7L, state2, "legacy"))
+    assert(StreamingIngest.foldVocabBatchOnce(empty, 8L, state2, "legacy"))
+    assert(markers(state2, "legacy") == Seq("8"))
+    assert(markers(state2, "default") == Seq("1"))
   }
 
   test("streaming candle MV: per-batch folds equal the e4 full recompute; " +
@@ -480,16 +513,15 @@ class StreamingSpec extends SparkSuite {
     c.close()
     val schema = spark.read.parquet(landing).schema
 
-    def tick(n: Int): Unit = {
-      val stream = StreamingIngest.readLanding(spark, landing, schema)
-        .select(col("event_id"), col("ts"), col("value"))
-      StreamingIngest.upsertJdbcAvailableNow(
-        stream, url, "stream_quotes", s"$work/ckpt_jdbc_$n",
-        Seq("event_id"), "ts", graft.etl.Upsert.Derby).awaitTermination()
-    }
+    def tick(n: Int): Unit =
+      drainJdbc(StreamingIngest.readLanding(spark, landing, schema)
+        .select(col("event_id"), col("ts"), col("value")),
+        url, "stream_quotes", s"$work/ckpt_jdbc_$n")
 
     tick(1)
-    tick(2) // fresh checkpoint ⇒ full re-delivery; the MERGE absorbs it
+    // fresh checkpoint ⇒ a new sink lineage re-delivers everything; the
+    // keyed MERGE absorbs it
+    tick(2)
     val c2 = java.sql.DriverManager.getConnection(url)
     val r = c2.createStatement().executeQuery("SELECT COUNT(*) FROM stream_quotes")
     r.next()
@@ -502,17 +534,22 @@ class StreamingSpec extends SparkSuite {
   test("watermark dedup + AvailableNow upsert sink converge across re-delivery") {
     val schema = spark.read.parquet(landing).schema
     val target = s"$work/target"
+    val deduped = StreamingIngest.dedupedWithinWatermark(
+      StreamingIngest.readLanding(spark, landing, schema),
+      "ts", "2 days", Seq("event_id"))
+      // lake partition derived from the key, as the merge contract requires
+      .withColumn("p", pmod(col("event_id"), lit(8)))
+    // the sink writes under the lake's persisted contract
+    graft.etl.SnapshotLake.create(spark, target, deduped.schema,
+      graft.etl.SnapshotLake.MergeSpec(Seq("event_id"), "ts", "p", Nil, Nil))
 
-    def tick(n: Int): Unit = {
-      val stream = StreamingIngest.readLanding(spark, landing, schema)
-      val deduped = StreamingIngest.dedupedWithinWatermark(
-        stream, "ts", "2 days", Seq("event_id"))
-        // lake partition derived from the key, as the merge contract requires
-        .withColumn("p", pmod(col("event_id"), lit(8)))
-      val q = StreamingIngest.snapshotMergeAvailableNow(
-        deduped, target, s"$work/ckpt_upsert_$n", Seq("event_id"), "ts", "p")
-      q.awaitTermination()
-    }
+    def tick(n: Int): Unit =
+      deduped.writeStream.format("graft-lake")
+        .option("path", target)
+        .option("checkpointLocation", s"$work/ckpt_upsert_$n")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
 
     tick(1)
     val after1 = graft.etl.SnapshotLake.read(spark, target).count()
@@ -589,13 +626,10 @@ class StreamingSpec extends SparkSuite {
         .select("event_id", "ts", "value")
     // sinkId pinned explicitly: the crash simulation below resumes from a
     // COPIED checkpoint path, and batch identity must survive the move.
-    def run(ckpt: String): Unit = {
-      val schema = spark.read.parquet(xoLanding).schema
-      StreamingIngest.upsertJdbcExactlyOnceAvailableNow(
-        StreamingIngest.readLanding(spark, xoLanding, schema),
-        url, "stream_xo", ckpt, Seq("event_id"), "ts", graft.etl.Upsert.Derby,
-        sinkId = Some("xo")).awaitTermination()
-    }
+    def stream() = StreamingIngest.readLanding(spark, xoLanding,
+      spark.read.parquet(xoLanding).schema)
+    def run(ckpt: String): Unit =
+      drainJdbc(stream(), url, "stream_xo", ckpt, sinkId = Some("xo"))
     def tableState(): Map[Long, Double] = {
       val c2 = DriverManager.getConnection(url)
       try {
@@ -605,10 +639,14 @@ class StreamingSpec extends SparkSuite {
           .map(r => r.getLong(1) -> r.getDouble(2)).toMap
       } finally c2.close()
     }
+    // applied batches: one ledger row per write partition, so count the
+    // distinct (sink_id, batch_id) pairs
     def ledgerCount(): Long = {
       val c2 = DriverManager.getConnection(url)
       try {
-        val rs = c2.createStatement().executeQuery("SELECT COUNT(*) FROM batch_ledger")
+        val rs = c2.createStatement().executeQuery(
+          """SELECT COUNT(*) FROM (SELECT DISTINCT "sink_id", "batch_id"
+            |FROM batch_ledger) b""".stripMargin)
         rs.next(); rs.getLong(1)
       } finally c2.close()
     }
@@ -663,11 +701,7 @@ class StreamingSpec extends SparkSuite {
     // converges through the idempotent MERGE — the ledger only pins batch
     // identity within one checkpoint lineage. (Landing file 1 now carries
     // the poisoned values, which LWW absorbs deterministically.)
-    StreamingIngest.upsertJdbcExactlyOnceAvailableNow(
-      StreamingIngest.readLanding(spark, xoLanding,
-        spark.read.parquet(xoLanding).schema),
-      url, "stream_xo", s"$work/ckpt_xo2", Seq("event_id"), "ts",
-      graft.etl.Upsert.Derby).awaitTermination()
+    drainJdbc(stream(), url, "stream_xo", s"$work/ckpt_xo2")
     assert(tableState() == Map(1L -> 99.0, 2L -> 99.0, 3L -> 30.0))
     assert(ledgerCount() == 3)
   }
