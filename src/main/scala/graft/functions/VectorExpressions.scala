@@ -54,10 +54,17 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  /** Register `cosine_sim(a, b)` for SQL/expr use on a session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
+  /** Register `cosine_sim(a, b)` for SQL/expr use on a session, once:
+    * a later call (or a session built with [[GraftExtensions]]) leaves the
+    * registry entry as it is.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
+      registry.createOrReplaceTempFunction(
+        "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
+  }
 }
 
 /** Library-style Catalyst integration: enable with
@@ -108,11 +115,12 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     // global RANGE-frame min/max (no inverse) rewrite to the sparse-block
     // decomposition — see graft.plans.RangeMinMaxRule
     ext.injectOptimizerRule(_ => graft.plans.RangeMinMaxRule)
-    // ROWS frames with FOLLOWING ends re-express as RANGE over
-    // row_number() — see graft.plans.RowsFollowingRule
+    // global ROWS n PRECEDING AND m FOLLOWING frames lower to the padded
+    // lead-of-trailing-slide cascade the rank rule distributes — see
+    // graft.plans.RowsFollowingRule
     ext.injectOptimizerRule(_ => graft.plans.RowsFollowingRule)
-    // DESC / NULLS LAST global orders canonicalize to ASC NULLS FIRST so
-    // the rules above fire on "latest-first" SQL — see
+    // DESC / NULLS LAST orders of global RANGE windows canonicalize to ASC
+    // NULLS FIRST so the two RANGE rules fire on "latest-first" SQL — see
     // graft.plans.DescOrderRule
     ext.injectOptimizerRule(_ => graft.plans.DescOrderRule)
     // suffix frames (CURRENT ROW .. UNBOUNDED FOLLOWING) reverse into
@@ -120,12 +128,5 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     // graft.plans.SuffixFrameRule
     ext.injectOptimizerRule(_ => graft.plans.SuffixFrameRule)
     ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
-    // OPT-IN analyzer-time cost lint (spark.graft.lint.centeredRows=true):
-    // warns, at plan time, on the multi-family centered-ROWS shape the
-    // rules above execute correctly but expensively, naming the
-    // RangeWindows.rowsSlidingAll remediation — see
-    // graft.plans.CenteredRowsLintRule
-    ext.injectPostHocResolutionRule(session =>
-      graft.plans.CenteredRowsLintRule(session))
   }
 }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, explode, expr, lit, pmod}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, BinaryExpression, Expression, GenericInternalRow,
   JoinedRow, PredicateHelper, RowOrdering, SortOrder, Unevaluable,
@@ -575,10 +575,12 @@ object AsOfJoin {
   }
 
   def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FunctionName, AsOfMatch.fromArgs, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      BarrierFunctionName, exprs => PushdownBarrier(exprs.head), "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    def once(name: String, build: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "scala_udf")
+    once(FunctionName, AsOfMatch.fromArgs)
+    once(BarrierFunctionName, exprs => PushdownBarrier(exprs.head))
     val exp = spark.experimental
     if (!exp.extraOptimizations.contains(AsOfJoinRule))
       exp.extraOptimizations = exp.extraOptimizations :+ AsOfJoinRule

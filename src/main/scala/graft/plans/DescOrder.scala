@@ -1,171 +1,110 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, Ascending, BitwiseNot, Cast, DateDiff, Descending, Expression,
-  IsNotNull, IsNull, Literal, NamedExpression, NullsFirst, NullsLast,
-  RangeFrame, SortOrder, SpecifiedWindowFrame, UnixMicros, WindowExpression,
+  Ascending, BitwiseNot, Cast, DateDiff, Descending, Expression, Literal,
+  NamedExpression, NullsFirst, SortOrder, SpecifiedWindowFrame,
   WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType,
-  ShortType, TimestampType}
+  ShortType}
 
-/** Canonicalizes GLOBAL window orders to ASC NULLS FIRST so the
-  * frame-algebra rewrite families ([[RangeSlidingRule]],
-  * [[RangeMinMaxRule]], [[RowsFollowingRule]] — each scoped to single
-  * ASC NULLS FIRST BIGINT keys, because their ghost/bucket arithmetic is
-  * written in ascending key space) fire on "latest-first" SQL —
-  * `SUM(d) OVER (ORDER BY ts DESC ROWS BETWEEN 6 PRECEDING AND 1
-  * FOLLOWING)` is the single most natural query a market analyst writes,
-  * and it used to plan the one-task Window cliff. ([[GlobalRankRule]]'s
-  * own family — ranks, shifts, prefix and retract-sliding aggregates —
-  * is direction-agnostic already: its exec works in arrival order with
-  * tie detection by key EQUALITY, so `RANK() OVER (ORDER BY s DESC)`
-  * distributes without this rule, DescOrderSpec-pinned.)
+/** Canonicalizes the order of GLOBAL value-bounded RANGE windows to ASC
+  * NULLS FIRST so [[RangeSlidingRule]] and [[RangeMinMaxRule]] — each
+  * scoped to one ASC NULLS FIRST BIGINT key, because their ghost/bucket
+  * arithmetic is written in ascending key space — fire on "latest-first"
+  * SQL: `SUM(d) OVER (ORDER BY dnum DESC RANGE BETWEEN 6 PRECEDING AND 2
+  * FOLLOWING)` would otherwise plan the one-task Window cliff. Every
+  * other global family needs no canonicalization: [[GlobalRankRule]]
+  * (ranks, shifts, prefix and trailing-slide aggregates) and
+  * [[RowsFollowingRule]] (ROWS frames with FOLLOWING ends) run earlier in
+  * the same batch and take any deterministic order, DESC and multi-column
+  * included — their exec works in arrival order with tie detection by key
+  * EQUALITY.
   *
-  * The identities (each exact, never approximate):
-  *  - DESC over an integral key k ≡ ASC over `~k` (bitwise NOT): `~k =
-  *    −k − 1` is strictly decreasing and TOTAL on BIGINT — unlike
-  *    negation, which overflows at `Long.MinValue` — and `~k − ~k' =
-  *    k' − k`, so RANGE offsets carry over with the SAME literal bounds
-  *    (an n-PRECEDING row under DESC is the key `k + n`; under ASC `~k`
-  *    it is `~k − n` — the same row). Int/short/byte keys widen through
-  *    an exact `CAST(k AS BIGINT)` first.
-  *  - Null placement: for VALUE-bounded RANGE frames (both bounds
-  *    literal/CURRENT ROW) the null group's position is semantically
-  *    irrelevant — null keys frame over their own peer group and no
-  *    non-null value interval ever contains a null — so the single
-  *    negated key suffices and [[RangeSlidingRule.globalLongOrder]]'s
-  *    single-BIGINT-key scope is met. For every other frame (ROWS,
-  *    running prefixes, rank functions) position matters, so a
-  *    null-segregation key is PREPENDED: `IsNull(k)` ascending puts
-  *    nulls last, `IsNotNull(k)` puts them first — boolean, never null,
-  *    and constant within each side, so peer structure and order are
-  *    exactly the original's. (Multi-key orders are fine downstream:
-  *    [[GlobalRankRule]] takes any deterministic order;
-  *    [[RowsFollowingRule]] linearizes through a running count.)
+  * The identity (exact, never approximate): DESC over an integral key k ≡
+  * ASC over `~k` (bitwise NOT). `~k = −k − 1` is strictly decreasing and
+  * TOTAL on BIGINT — unlike negation, which overflows at `Long.MinValue` —
+  * and `~k − ~k' = k' − k`, so RANGE offsets carry over with the SAME
+  * literal bounds (an n-PRECEDING row under DESC is the key `k + n`; under
+  * ASC `~k` it is `~k − n` — the same row). Int/short/byte keys widen
+  * through an exact `CAST(k AS BIGINT)` first; a DATE key (integer RANGE
+  * bounds count days) through its day number. Null placement is
+  * semantically irrelevant for value-bounded frames — null keys frame over
+  * their own peer group and no non-null value interval ever contains a
+  * null — so `NULLS LAST` needs no extra key either.
   *
-  * The rewrite only RE-EXPRESSES the node — same expressions, same
-  * frames, canonicalized sort — and fires only when a downstream family
-  * is checked to accept the result, so a plan is never left with a
-  * churned-but-still-stock Window. Ties keep the standard caveat: any
-  * ROWS frame / row_number over a non-total order is nondeterministic in
-  * stock Spark too.
+  * The rewrite only RE-EXPRESSES the node — same expressions, same frames,
+  * canonicalized sort — and fires only when a downstream family is checked
+  * to accept the result, so a plan is never left with a
+  * churned-but-still-stock Window. A key the rule cannot re-express
+  * (string/fp DESC keys have no monotone total inverse) leaves the node
+  * untouched (linted by [[PlanChecks]], the ever-correct fallback).
   *
-  * Scope: global window (empty partition spec), unbounded input, at
-  * least one non-canonical sort, deterministic keys; DESC keys must
-  * have a strictly-increasing BIGINT image — integrals (exact widen),
-  * DATE (day number via `datediff`), TIMESTAMP (epoch micros) — so the
-  * natural `ORDER BY ts DESC ROWS BETWEEN n PRECEDING AND m FOLLOWING`
-  * rides too; strings/fp have no monotone total inverse. (DESC
-  * date/timestamp keys only ever reach the ROWS/rank/running families:
-  * RANGE frames over them carry interval bounds, which no downstream
-  * rule accepts — checked, so the node stays stock.) A key the rule
-  * cannot re-express leaves the node untouched (linted by
-  * [[PlanChecks]], the ever-correct fallback).
-  *
-  * DescOrderSpec pins bit-equality vs the kill-switched stock Window
-  * (DESC sliding sums, DESC ranks, null placement both ways, ties);
-  * `e24_desc_sliding_sql` / `e24b_desc_rows_sql` pin the raw-SQL face
-  * against DuckDB's native window engine.
+  * DescOrderSpec pins bit-equality vs the kill-switched stock Window;
+  * `e24_desc_sliding_sql` pins the raw-SQL face against DuckDB's native
+  * window engine.
   */
 object DescOrderRule extends Rule[LogicalPlan] {
 
   /** Kill-switch, the [[GlobalRankRule.EnabledKey]] idiom. */
   val EnabledKey = "spark.graft.descOrder.enabled"
 
-  private def integral(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt == ByteType || dt == ShortType || dt == IntegerType || dt == LongType
-
-  private def canonical(o: SortOrder): Boolean =
-    o.direction == Ascending && o.nullOrdering == NullsFirst
-
-  /** Every window expression a VALUE-bounded RANGE frame — the shapes for
-    * which the null group's position cannot affect any output value (see
-    * the class doc), letting the rewrite emit a single BIGINT key.
-    */
-  private def rangeOffsetOnly(exprs: Seq[NamedExpression]): Boolean =
-    exprs.forall {
-      case Alias(WindowExpression(_, WindowSpecDefinition(Nil, _,
-          SpecifiedWindowFrame(RangeFrame, lo, hi))), _) =>
-        RangeSlidingRule.frameBounds(lo, hi).isDefined
-      case _ => false
-    }
-
   /** A strictly-increasing injective BIGINT image of the key, for types
     * a DESC order can be inverted on: integrals widen exactly; DATE is
     * its day number (`datediff` from the epoch — the cast the analyzer
-    * would reject, expressed through an always-legal function);
-    * TIMESTAMP is its epoch micros. Null maps to null (the segregation
-    * key owns placement). Strings/fp/ntz have no such image — None.
+    * would reject, expressed through an always-legal function). Null maps
+    * to null. Strings/fp have no such image — None. (A TIMESTAMP key takes
+    * interval RANGE bounds, which no downstream family accepts.)
     */
   private def asLongImage(e: Expression): Option[Expression] =
     e.dataType match {
       case LongType => Some(e)
-      case dt if integral(dt) => Some(Cast(e, LongType))
+      case ByteType | ShortType | IntegerType => Some(Cast(e, LongType))
       case DateType => Some(Cast(DateDiff(e, Literal(0, DateType)), LongType))
-      case TimestampType => Some(UnixMicros(e))
       case _ => None
     }
-
-  /** The ASC NULLS FIRST re-expression of one sort key, or None when the
-    * key cannot be re-expressed (DESC with no monotone BIGINT image).
-    */
-  private def rewriteOrder(
-      o: SortOrder, needNullKey: Boolean): Option[Seq[SortOrder]] = {
-    val valueKey: Option[Expression] = o.direction match {
-      case Ascending => Some(o.child)
-      case Descending => asLongImage(o.child).map(BitwiseNot)
-      case _ => None
-    }
-    valueKey.map { vk =>
-      val flag: Seq[SortOrder] =
-        if (!o.child.nullable || !needNullKey) Nil
-        else Seq(SortOrder(
-          if (o.nullOrdering == NullsLast) IsNull(o.child)
-          else IsNotNull(o.child), Ascending))
-      flag :+ SortOrder(vk, Ascending)
-    }
-  }
-
-  /** Will one of the distributed families take the canonicalized node?
-    * Checked BEFORE rewriting so a reject leaves the stock plan (and its
-    * lint) untouched.
-    */
-  private def downstreamAccepts(w: Window, newOrder: Seq[SortOrder]): Boolean = {
-    val w2 = Window(w.windowExpressions, Nil, newOrder, w.child)
-    GlobalRankRule.acceptsExpressions(w.windowExpressions) ||
-      (RangeSlidingRule.globalLongOrder(w2) &&
-        (RangeSlidingRule.acceptsExpressions(w.windowExpressions) ||
-          RangeMinMaxRule.acceptsExpressions(w.windowExpressions))) ||
-      RowsFollowingRule.acceptsExpressions(w.windowExpressions)
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case w: Window
+    case w @ Window(exprs, Nil, Seq(o), child, _)
         if conf.getConfString(EnabledKey, "true") != "false" &&
-          w.partitionSpec.isEmpty && w.orderSpec.nonEmpty &&
-          w.windowExpressions.nonEmpty && !PlanChecks.bounded(w.child) &&
-          w.orderSpec.exists(o => !canonical(o)) &&
-          w.orderSpec.forall(_.child.deterministic) =>
+          exprs.nonEmpty && !PlanChecks.bounded(child) &&
+          !(o.direction == Ascending && o.nullOrdering == NullsFirst) &&
+          o.child.deterministic =>
       // the rewrite runs ONCE per matched node per fixed-point pass;
       // returning the untouched node on a reject leaves the plan unchanged
       // (same instance), so the executor still reaches its fixed point
-      rewritten(w).getOrElse(w)
+      rewritten(w, o).getOrElse(w)
   }
 
-  private def rewritten(w: Window): Option[LogicalPlan] = {
-    val needNullKey = !rangeOffsetOnly(w.windowExpressions)
-    val parts = w.orderSpec.map(o =>
-      if (canonical(o)) Some(Seq(o)) else rewriteOrder(o, needNullKey))
-    if (parts.exists(_.isEmpty)) return None
-    val newOrder = parts.flatten.flatten
-    if (!downstreamAccepts(w, newOrder)) return None
-    // the frames' own specs carry order too — keep node and expressions
-    // agreeing (WindowExec derives RANGE bound orderings from the spec)
-    val newExprs = w.windowExpressions.map(_.transform {
-      case WindowSpecDefinition(Nil, _, f) => WindowSpecDefinition(Nil, newOrder, f)
-    }.asInstanceOf[NamedExpression])
-    Some(Window(newExprs, Nil, newOrder, w.child))
+  private def rewritten(w: Window, o: SortOrder): Option[LogicalPlan] = {
+    val key = o.direction match {
+      case Ascending => Some(o.child)
+      case Descending => asLongImage(o.child).map(BitwiseNot)
+    }
+    key.map(k => Seq(SortOrder(k, Ascending)))
+      // will a RANGE family take the canonicalized node? Checked BEFORE
+      // rewriting so a reject leaves the stock plan (and its lint) untouched
+      .filter(newOrder =>
+        RangeSlidingRule.globalLongOrder(
+          Window(w.windowExpressions, Nil, newOrder, w.child)) &&
+          (RangeSlidingRule.acceptsExpressions(w.windowExpressions) ||
+            RangeMinMaxRule.acceptsExpressions(w.windowExpressions)))
+      .map { newOrder =>
+        // the frames' own specs carry order too — keep node and
+        // expressions agreeing (WindowExec derives RANGE bound orderings
+        // from the spec); INT bounds (an INT or DATE key's) widen with the
+        // key, or the frame no longer type-checks against it
+        def widened(b: Expression): Expression = b match {
+          case Literal(v: Int, IntegerType) => Literal(v.toLong)
+          case _ => b
+        }
+        val newExprs = w.windowExpressions.map(_.transform {
+          case WindowSpecDefinition(Nil, _, SpecifiedWindowFrame(ft, lo, hi)) =>
+            WindowSpecDefinition(Nil, newOrder,
+              SpecifiedWindowFrame(ft, widened(lo), widened(hi)))
+        }.asInstanceOf[NamedExpression])
+        Window(newExprs, Nil, newOrder, w.child)
+      }
   }
 }

@@ -436,9 +436,10 @@ object GlobalRankRule extends Rule[LogicalPlan] {
     */
   val MaxShift = 1024
 
-  /** Whole-node acceptance for OTHER rules (the [[DescOrderRule]]
-    * canonicalization) deciding whether this rule will take the node:
-    * every window expression a supported rank/shift/prefix/slide function.
+  /** Whole-node acceptance for OTHER rules ([[RowsFollowingRule]]'s
+    * trailing-slide cascade) deciding whether this rule will take the
+    * node: every window expression a supported rank/shift/prefix/slide
+    * function.
     */
   private[plans] def acceptsExpressions(exprs: Seq[NamedExpression]): Boolean =
     exprs.nonEmpty && exprs.forall(funcOf(_).isDefined)
@@ -1500,13 +1501,14 @@ object GlobalRank {
     // decomposition instead (partitioned windows only, no cliff)
     if (!exp.extraOptimizations.contains(RangeMinMaxRule))
       exp.extraOptimizations = exp.extraOptimizations :+ RangeMinMaxRule
-    // ROWS frames with FOLLOWING ends re-express as RANGE over
-    // row_number() — food for all three rules above on the same batch
+    // ROWS n PRECEDING AND m FOLLOWING frames lower to the padded
+    // lead-of-trailing-slide cascade — two windows GlobalRankRule then
+    // distributes on the next iteration, in any order direction
     if (!exp.extraOptimizations.contains(RowsFollowingRule))
       exp.extraOptimizations = exp.extraOptimizations :+ RowsFollowingRule
-    // DESC / NULLS LAST global orders canonicalize to ASC NULLS FIRST
-    // (bitwise-NOT key + null-segregation key) — "latest-first" SQL
-    // becomes food for all the rules above on the same batch
+    // DESC / NULLS LAST orders of global RANGE windows canonicalize to ASC
+    // NULLS FIRST over a bitwise-NOT key — "latest-first" RANGE SQL
+    // becomes food for the two RANGE rules above on the same batch
     if (!exp.extraOptimizations.contains(DescOrderRule))
       exp.extraOptimizations = exp.extraOptimizations :+ DescOrderRule
     // SUFFIX frames (CURRENT ROW .. UNBOUNDED FOLLOWING) reverse into

@@ -125,11 +125,8 @@ object RangeSlidingRule extends Rule[LogicalPlan] {
     for (n <- width; m <- follow) yield (n, m)
   }
 
-  /** The aggregate-family half of the scope check (frame-independent) —
-    * shared with [[RowsFollowingRule]], which re-expresses ROWS frames
-    * into this rule's food and must know the family will be accepted.
-    */
-  private[plans] def kindOf(
+  /** The aggregate-family half of the scope check (frame-independent). */
+  private def kindOf(
       af: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction): Option[(Expression, Kind)] =
     af match {
       // decimal sums ride in BOTH eval modes: the exact subtraction

@@ -1,156 +1,150 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, Ascending, CurrentRow, Expression, Literal, NamedExpression,
-  NullsFirst, RangeFrame, RowFrame, RowOrdering, SortOrder,
-  SpecifiedWindowFrame, UnboundedPreceding, WindowExpression,
-  WindowSpecDefinition}
+  Alias, Ascending, Attribute, AttributeReference, CurrentRow, EqualTo,
+  Expression, KnownNotNull, Lead, Literal, NamedExpression, RowFrame,
+  SortOrder, SpecifiedWindowFrame, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
-  AggregateExpression, Complete, Count, Max, Min}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window}
+  AggregateExpression, AggregateFunction, Complete}
+import org.apache.spark.sql.catalyst.plans.logical.{
+  Filter, LocalRelation, LogicalPlan, Project, Union, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.IntegerType
 
 /** Auto-rewrite for the GLOBAL `ROWS BETWEEN n PRECEDING AND m FOLLOWING`
-  * sliding aggregate with a FOLLOWING end — the one ROWS family the
-  * [[GlobalRankExec]] ring cannot emit at arrival (the frame needs values
-  * that have not arrived yet). The identity that closes it: a ROWS frame
-  * over a total order IS a RANGE frame over `row_number()` — row numbers
-  * are dense unique BIGINTs, so `ROWS [n, m]` ≡
-  * `RANGE BETWEEN n PRECEDING AND m FOLLOWING` over `ORDER BY rn`.
+  * sliding aggregate — the one ROWS family the [[GlobalRankExec]] ring
+  * cannot emit at arrival (the frame needs rows that have not arrived
+  * yet). The identity that closes it: the frame `[i−n, i+m]` of row `i`
+  * is the TRAILING frame `[(i+m)−(n+m), i+m]` of row `i+m`. So one
+  * trailing `ROWS (n+m) PRECEDING..CURRENT ROW` slide plus one
+  * `lead(·, m)` of it gives every row's frame — provided row `i+m`
+  * exists. Padding the sorted stream with `m` all-null rows ordered after
+  * every real row makes it exist for the last `m` rows too: their
+  * trailing frames hold the real tail `[i−n, N]` plus padding, which every
+  * aggregate ignores.
   *
-  * The rewrite therefore only RE-EXPRESSES the plan and lets the existing
-  * machinery distribute it on the same fixed-point batch:
+  * The cascade, planned entirely by [[GlobalRankRule]] on the same
+  * fixed-point batch (one range exchange, one sort, two stacked
+  * [[GlobalRankExec]]s, one consumer — nothing is checkpointed):
   *
-  *  1. one `row_number()` window over the original order —
-  *     [[GlobalRankRule]] food (O(1)-state rank stream, range exchange);
-  *  2. the original aggregates re-framed onto `RANGE (−n, +m) ORDER BY
-  *     rn` — [[RangeSlidingRule]] (sum/count/decimal-avg, two ghost
-  *     families) and/or [[RangeMinMaxRule]] (min/max block decomposition;
-  *     its mixed-node split covers nodes carrying both families) food;
-  *  3. a final Project restores the node's exact output.
+  *  1. below a Union, a real-side Project pre-evaluates every non-column
+  *     aggregate input and order key into a slot (so `COUNT(*)` counts a
+  *     slot that is `1` on real rows) and adds `__pad = 0`;
+  *  2. the Union adds a `LocalRelation` of `M = max m` rows with
+  *     `__pad = 1..M` and null in every column and slot, so no expression
+  *     is ever evaluated on a padding row;
+  *  3. one Window computes the trailing aggregates over
+  *     `(__pad, original order…)`, a second one `lead(·, m)` of each over
+  *     the same order;
+  *  4. `Filter(__pad = 0)` and a Project back to the node's exact output
+  *     (original exprIds; a never-null aggregate such as COUNT keeps its
+  *     non-null type — its lead always lands on an existing row).
   *
-  * Downstream acceptance is checked BEFORE rewriting (the aggregate
-  * families and the frame-length bound), so a plan is never stranded
-  * half-rewritten with an extra rank window.
-  *
-  * Scope: global window, any deterministic ASC NULLS FIRST order (multi-
-  * column orders are fine — rn linearizes them; the downstream rules get
-  * the BIGINT key they need), literal bounds with `m ≥ 1` (`m = 0`
-  * already rides the in-exec retract/deque lanes). Ties in the order key
-  * make any ROWS frame nondeterministic (stock Spark picks an arbitrary
-  * tie order; so does the synthesized rn) — the SQL-standard caveat,
-  * unchanged by this rewrite; use a total order for deterministic
-  * results, as ever.
+  * Scope: global window over an unbounded input, any deterministic order
+  * (GlobalRankExec is direction-agnostic — DESC and multi-column orders
+  * need no canonicalization), every expression an aggregate over a
+  * literal `ROWS n PRECEDING AND m FOLLOWING` frame with `n ≥ 0`,
+  * `m ≥ 1` and `n + m + 1 ≤` [[GlobalRankRule.MaxShift]] (frames may
+  * differ per expression). The node is rewritten only when
+  * [[GlobalRankRule.acceptsExpressions]] accepts its re-framed trailing
+  * expressions, so the aggregate and type scope — the fp sum/avg
+  * cancellation veto included — lives in that one place. Wider frames
+  * stay on the stock Window and [[PlanChecks.unboundedGlobalWindows]]
+  * flags them. Ties in the order key make any ROWS frame
+  * nondeterministic (stock Spark picks an arbitrary tie order); both
+  * stacked execs read one sorted stream, so each row's frame is a frame
+  * of that one order.
   *
   * RowsFollowingSpec pins bit-equality vs the kill-switched stock Window
-  * (sums, extrema, the mixed node, multi-column orders);
-  * `e23_rows_centered_sql` pins the raw-SQL face — all five aggregate
-  * families in ONE window — against DuckDB's native ROWS engine.
+  * (all five families, ASC and DESC multi-column orders, inputs shorter
+  * than `m`, the frame-length edge, the fp veto); `e23`/`e23b`/`e24b`/
+  * `e24c` pin the SQL and DataFrame faces against DuckDB's native ROWS
+  * engine.
   */
 object RowsFollowingRule extends Rule[LogicalPlan] {
 
   /** Kill-switch, the [[GlobalRankRule.EnabledKey]] idiom. */
   val EnabledKey = "spark.graft.rowsFollowing.enabled"
 
-  private def bounds(lower: Expression, upper: Expression): Option[(Long, Long)] = {
-    val n: Option[Long] = lower match {
-      case Literal(v: Long, LongType) if v <= 0L && v > Long.MinValue + 1 => Some(-v)
-      case Literal(v: Int, IntegerType) if v <= 0 => Some(-v.toLong)
-      case CurrentRow => Some(0L)
-      case _ => None
-    }
-    val m: Option[Long] = upper match {
-      case Literal(v: Long, LongType) if v >= 1L => Some(v)
-      case Literal(v: Int, IntegerType) if v >= 1 => Some(v.toLong)
-      case _ => None
-    }
-    for (a <- n; b <- m) yield (a, b)
-  }
+  private case class Slot(alias: Alias, af: AggregateFunction, n: Int, m: Int)
 
-  private def slotOf(ne: NamedExpression): Option[(Alias, (Long, Long))] =
-    ne match {
-      case a @ Alias(WindowExpression(AggregateExpression(_, _, false, None, _),
-          WindowSpecDefinition(Nil, _,
-            SpecifiedWindowFrame(RowFrame, lower, upper))), _) =>
-        bounds(lower, upper).map(b => (a, b))
-      case _ => None
-    }
-
-  /** Will the downstream RANGE rules accept the whole re-framed node?
-    * Min/Max go to the block decomposition (any orderable type); the rest
-    * must be [[RangeSlidingRule]] food. Mixed nodes are fine — the minmax
-    * split peels them apart.
-    */
-  private def downstreamAccepts(
-      exprs: Seq[NamedExpression], n: Long, m: Long): Boolean = {
-    if (n >= Long.MaxValue - m) return false // block length must fit
-    exprs.forall {
-      case Alias(WindowExpression(
-          AggregateExpression(af, _, false, None, _), _), _) =>
-        af match {
-          case Min(e) => e.deterministic && RowOrdering.isOrderable(e.dataType)
-          case Max(e) => e.deterministic && RowOrdering.isOrderable(e.dataType)
-          case _ => RangeSlidingRule.kindOf(af).isDefined
-        }
-      case _ => false
-    }
-  }
-
-  /** Whole-node acceptance for OTHER rules (the [[DescOrderRule]]
-    * canonicalization): every expression a bounded ROWS-FOLLOWING slot
-    * over one shared frame the downstream RANGE rules will take.
-    * Order-spec conditions are checked by the caller/apply.
-    */
-  private[plans] def acceptsExpressions(exprs: Seq[NamedExpression]): Boolean = {
-    val slots = exprs.map(slotOf)
-    exprs.nonEmpty && slots.forall(_.isDefined) &&
-      slots.flatten.map(_._2).distinct.length == 1 && {
-        val (n, m) = slots.flatten.head._2
-        downstreamAccepts(exprs, n, m)
+  private def slotOf(ne: NamedExpression): Option[Slot] = ne match {
+    case a @ Alias(WindowExpression(AggregateExpression(af, _, false, None, _),
+        WindowSpecDefinition(Nil, _,
+          SpecifiedWindowFrame(RowFrame, lower, Literal(m: Int, IntegerType)))), _)
+        if af.deterministic =>
+      val n: Option[Long] = lower match {
+        case CurrentRow => Some(0L)
+        case Literal(v: Int, IntegerType) if v <= 0 => Some(-v.toLong)
+        case _ => None
       }
+      n.filter(n => m >= 1 && n + m + 1 <= GlobalRankRule.MaxShift)
+        .map(n => Slot(a, af, n.toInt, m))
+    case _ => None
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case w: Window
         if conf.getConfString(EnabledKey, "true") != "false" &&
           w.partitionSpec.isEmpty && w.orderSpec.nonEmpty &&
-          w.orderSpec.forall(o => o.direction == Ascending &&
-            o.nullOrdering == NullsFirst && o.child.deterministic) &&
-          w.windowExpressions.nonEmpty && !PlanChecks.bounded(w.child) &&
-          acceptsExpressions(w.windowExpressions) =>
-      rewrite(w)
+          w.orderSpec.forall(_.child.deterministic) &&
+          w.windowExpressions.nonEmpty && !PlanChecks.bounded(w.child) =>
+      // a reject returns the same instance, so the batch reaches its
+      // fixed point
+      rewritten(w).getOrElse(w)
   }
 
-  private[plans] def rewrite(w: Window): LogicalPlan = {
-    val slots = w.windowExpressions.map(ne => slotOf(ne).get)
-    val (n, m) = slots.head._2
-    // 1. the dense BIGINT linearization of the original order: a running
-    // COUNT(*) over ROWS UNBOUNDED PRECEDING..CURRENT ROW — value-equal
-    // to row_number() but NATIVELY LongType. RowNumber() is IntegerType
-    // and wraps silently past 2^31 rows BEFORE any cast could widen it;
-    // this rule specifically targets unbounded global inputs, where a
-    // rewrite must not cap what stock Spark computes correctly. The
-    // running count is the same [[GlobalRankRule]] food (prefix count
-    // lane, O(1) state).
-    val rnSpec = WindowSpecDefinition(Nil, w.orderSpec,
-      SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))
-    val rnA = Alias(WindowExpression(
-      AggregateExpression(Count(Seq(Literal(1))), Complete, isDistinct = false),
-      rnSpec), "__rf_rn")()
-    val rnl = Window(Seq(rnA), Nil, w.orderSpec, w.child)
-    val rnRef = rnA.toAttribute
-    // 2. the same aggregates over RANGE (−n, +m) ORDER BY rn, original ids
-    val rangeSpec = WindowSpecDefinition(Nil,
-      Seq(SortOrder(rnRef, Ascending)),
-      SpecifiedWindowFrame(RangeFrame, Literal(-n), Literal(m)))
-    val reframed = slots.map { case (a, _) =>
-      val we = a.child.asInstanceOf[WindowExpression]
-      Alias(WindowExpression(we.windowFunction, rangeSpec), a.name)(
-        exprId = a.exprId, qualifier = a.qualifier)
+  private def rewritten(w: Window): Option[LogicalPlan] = {
+    val found = w.windowExpressions.map(slotOf)
+    if (found.exists(_.isEmpty)) return None
+    val slots = found.flatten
+    // 1. slots for every non-column input and order key, evaluated on the
+    // real side only
+    val computed = scala.collection.mutable.ArrayBuffer.empty[Alias]
+    def slotted(e: Expression): Expression = e match {
+      case a: Attribute => a
+      case _ =>
+        computed.find(_.child.semanticEquals(e)).getOrElse {
+          val a = Alias(e, s"__rf_in${computed.length}")()
+          computed += a
+          a
+        }.toAttribute
     }
-    val aggWin = Window(reframed, Nil, rangeSpec.orderSpec, rnl)
-    // 3. drop the rn helper, keep the node's exact output
-    Project(w.output, aggWin)
+    val padA = Alias(Literal(0), "__pad")()
+    val padRef = padA.toAttribute
+    val order = SortOrder(padRef, Ascending) +:
+      w.orderSpec.map(o => SortOrder(slotted(o.child), o.direction, o.nullOrdering, Nil))
+    // 3a. the trailing (n+m)-row slides
+    val trails = slots.zipWithIndex.map { case (s, j) =>
+      val frame = SpecifiedWindowFrame(RowFrame, Literal(-(s.n + s.m)), CurrentRow)
+      Alias(WindowExpression(
+        AggregateExpression(s.af.mapChildren(slotted).asInstanceOf[AggregateFunction],
+          Complete, isDistinct = false),
+        WindowSpecDefinition(Nil, order, frame)), s"__rf_t$j")()
+    }
+    if (!GlobalRankRule.acceptsExpressions(trails)) return None
+    // 3b. lead(·, m) of each slide
+    val leads = slots.zip(trails).zipWithIndex.map { case ((s, t), j) =>
+      val lead = Lead(t.toAttribute, Literal(s.m), Literal(null, t.dataType), false)
+      Alias(WindowExpression(lead, WindowSpecDefinition(Nil, order, lead.frame)),
+        s"__rf_l$j")()
+    }
+    // 2. real rows ∪ M padding rows ordered after them
+    val real = Project(w.child.output ++ computed :+ padA, w.child)
+    val padOut = real.output.map(a =>
+      AttributeReference(a.name, a.dataType, a.exprId != padRef.exprId)())
+    val padRows = (1 to slots.map(_.m).max).map(j =>
+      InternalRow.fromSeq(Seq.fill(padOut.length - 1)(null) :+ j))
+    val union = Union(Seq(real, LocalRelation(padOut, padRows)))
+    val leadWin = Window(leads, Nil, order,
+      Window(trails, Nil, order, union))
+    // 4. real rows only, the node's exact output
+    val out = slots.zip(leads).map { case (s, l) =>
+      val v = if (s.alias.nullable) l.toAttribute else KnownNotNull(l.toAttribute)
+      Alias(v, s.alias.name)(exprId = s.alias.exprId, qualifier = s.alias.qualifier)
+    }
+    Some(Project(w.child.output ++ out,
+      Filter(EqualTo(padRef, Literal(0)), leadWin)))
   }
 }

@@ -2267,51 +2267,49 @@ object CoreQueries {
 
   /** E23: the CENTERED ROW-COUNT window — `ROWS BETWEEN 6 PRECEDING AND 3
     * FOLLOWING` over a total order, ALL FIVE aggregate families in ONE
-    * window. Oracle = DuckDB's native ROWS window engine (AVG in HUGEINT
-    * units, the e18 discipline). Since round 15 the face executes through
-    * the e23b library cascade (see the body note); the raw-SQL
-    * rule-composition path ([[graft.plans.RowsFollowingRule]] +
-    * GlobalRank + minmax split + ghost subtraction) remains available and
-    * spec-covered, but the declared query no longer pays its documented
-    * per-family rank-pipeline re-run.
+    * window. [[graft.plans.RowsFollowingRule]] lowers the natural SQL to
+    * the padded lead-of-trailing-slide cascade: `lead(·, 3)` of a trailing
+    * `ROWS 9 PRECEDING` slide over the input padded with 3 all-null rows,
+    * two stacked GlobalRank execs over one range exchange. Oracle =
+    * DuckDB's native ROWS window engine (AVG in HUGEINT units, the e18
+    * discipline).
     */
-  def e23RowsCenteredSql(s: SparkSession, dir: String): DataFrame =
-    // Round-15 optimization (verdict item 4): the pure-optimizer composition
-    // (RowsFollowingRule + GlobalRank + minmax split + ghost subtraction)
-    // re-ran the rank pipeline above the reused exchange once per aggregate
-    // family — measured 2.4× the library twin (3.40 s vs 1.44 s at sf0.1)
-    // with `PlanChecks.centeredRowsMultiFamily` linting exactly this cost.
-    // The declared query's RESULTS are pinned to the same DuckDB oracle as
-    // e23b (value-identical by gate since round 13), so the face now
-    // executes through the materialize-once rowsSlidingAll cascade. The
-    // rule composition stays covered by RowsFollowingSpec and the
-    // single-family SQL faces (e19b/e20b/e21b/e24/e25).
-    e23bRowsCenteredLib(s, dir)
+  def e23RowsCenteredSql(s: SparkSession, dir: String): DataFrame = {
+    graft.plans.GlobalRank.ensureRegistered(s)
+    t(s, dir, "orders").createOrReplaceTempView("e23_orders")
+    s.sql(
+      """SELECT o_orderkey,
+                CAST(SUM(px) OVER w AS DOUBLE) AS c_total,
+                COUNT(*) OVER w AS c_cnt,
+                CAST(AVG(px) OVER w AS DOUBLE) AS c_avg,
+                CAST(MIN(px2) OVER w AS DOUBLE) AS c_min,
+                CAST(MAX(px2) OVER w AS DOUBLE) AS c_max
+         FROM (SELECT o_orderkey, o_orderdate,
+                      CAST(o_totalprice AS DECIMAL(25,4)) AS px,
+                      CAST(o_totalprice AS DECIMAL(18,2)) AS px2
+               FROM e23_orders)
+         WINDOW w AS (ORDER BY o_orderdate, o_orderkey
+                      ROWS BETWEEN 6 PRECEDING AND 3 FOLLOWING)
+         ORDER BY o_orderkey""")
+  }
 
-  /** E23b — e23's PRODUCTION face: the same centered ROWS window through
-    * [[graft.operators.RangeWindows.rowsSlidingAll]], which materializes
-    * the sorted stream ONCE (one range exchange + one localCheckpoint)
-    * and carries every family as lead-of-trailing-slide in a single
-    * stacked GlobalRank cascade, patching only the last m rows through a
-    * frame-bounded broadcast self-join — versus e23's pure-optimizer
-    * composition, whose reals/ghost/bucket branches each re-run the rank
-    * pipeline above the reused exchange (SURVEY §6.19's documented cost,
-    * here made a library choice). Same DuckDB oracle as e23: the two
-    * faces must be value-identical.
+  /** E23b — e23's DataFrame face: the same centered ROWS window as stock
+    * `over(Window.orderBy(…).rowsBetween(-6, 3))` expressions, planned by
+    * the same [[graft.plans.RowsFollowingRule]] cascade. Same DuckDB
+    * oracle as e23: the two faces must be value-identical.
     */
   def e23bRowsCenteredLib(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_orderdate"),
-      col("o_totalprice").cast("decimal(25,4)").as("px"),
-      col("o_totalprice").cast("decimal(18,2)").as("px2"))
-    graft.operators.RangeWindows
-      .rowsSlidingAll(o, Seq("o_orderkey"),
-        Seq(col("o_orderdate"), col("o_orderkey")), 6L, 3L, "px", "px2")
+    graft.plans.GlobalRank.ensureRegistered(s)
+    val w = Window.orderBy(col("o_orderdate"), col("o_orderkey")).rowsBetween(-6, 3)
+    t(s, dir, "orders").select(col("o_orderkey"), col("o_orderdate"),
+        col("o_totalprice").cast("decimal(25,4)").as("px"),
+        col("o_totalprice").cast("decimal(18,2)").as("px2"))
       .select(col("o_orderkey"),
-        col("frame_sum").cast("double").as("c_total"),
-        col("frame_cnt").as("c_cnt"),
-        col("frame_avg").cast("double").as("c_avg"),
-        col("frame_min").cast("double").as("c_min"),
-        col("frame_max").cast("double").as("c_max"))
+        sum(col("px")).over(w).cast("double").as("c_total"),
+        count(lit(1)).over(w).as("c_cnt"),
+        avg(col("px")).over(w).cast("double").as("c_avg"),
+        min(col("px2")).over(w).cast("double").as("c_min"),
+        max(col("px2")).over(w).cast("double").as("c_max"))
       .orderBy("o_orderkey")
   }
 
@@ -2345,46 +2343,49 @@ object CoreQueries {
   }
 
   /** E24b: the LATEST-FIRST centered ROW-COUNT window — e23's shape over
-    * a fully DESCENDING multi-column total order. Oracle = DuckDB's
-    * native ROWS window engine on the identical DESC order. Since round
-    * 15 the face executes through the e24c library cascade (see the body
-    * note); the four-rule DESC composition
-    * ([[graft.plans.DescOrderRule]] + RowsFollowingRule + the RANGE
-    * families) remains available and spec-covered.
+    * a fully DESCENDING multi-column total order. GlobalRankExec is
+    * direction-agnostic, so [[graft.plans.RowsFollowingRule]] lowers the
+    * DESC text to the same padded cascade as e23 with no order
+    * canonicalization. Oracle = DuckDB's native ROWS window engine on the
+    * identical DESC order.
     */
-  def e24bDescRowsSql(s: SparkSession, dir: String): DataFrame =
-    // Round-15 optimization (verdict item 4): same reroute as e23 — the
-    // four-rule DESC composition measured 2.8× the library twin (3.95 s vs
-    // 1.42 s at sf0.1); results are pinned to the same DuckDB oracle as
-    // e24c, so the face executes through the direction-agnostic
-    // rowsSlidingAll cascade. DescOrderRule stays covered by DescOrderSpec
-    // and the e24_desc_sliding_sql RANGE face.
-    e24cDescRowsLib(s, dir)
+  def e24bDescRowsSql(s: SparkSession, dir: String): DataFrame = {
+    graft.plans.GlobalRank.ensureRegistered(s)
+    t(s, dir, "orders").createOrReplaceTempView("e24b_orders")
+    s.sql(
+      """SELECT o_orderkey,
+                CAST(SUM(px) OVER w AS DOUBLE) AS c_total,
+                COUNT(*) OVER w AS c_cnt,
+                CAST(MIN(px2) OVER w AS DOUBLE) AS c_min,
+                CAST(MAX(px2) OVER w AS DOUBLE) AS c_max
+         FROM (SELECT o_orderkey,
+                      CAST(o_totalprice AS DECIMAL(25,4)) AS px,
+                      CAST(o_totalprice AS DECIMAL(18,2)) AS px2,
+                      CAST(datediff(o_orderdate, DATE'1992-01-01') AS BIGINT) AS dnum
+               FROM e24b_orders)
+         WINDOW w AS (ORDER BY dnum DESC, o_orderkey DESC
+                      ROWS BETWEEN 6 PRECEDING AND 3 FOLLOWING)
+         ORDER BY o_orderkey""")
+  }
 
-  /** E24c — e24b's PRODUCTION face: the same latest-first centered ROWS
-    * window through [[graft.operators.RangeWindows.rowsSlidingAll]],
-    * whose cascade (running count, trailing retract slide, lead) is
-    * direction-agnostic GlobalRank food — the DESC multi-column order
-    * rides the SAME materialize-once pipeline as e23b's ASC twin, so the
-    * latest-first SQL shape stops paying e24b's per-consumer rank-cascade
-    * re-run (the four-rule optimizer composition re-runs the rank
-    * pipeline above the reused exchange once per family — its documented
-    * structural cost, here traded away exactly as e23 → e23b). Same
-    * DuckDB oracle as e24b: the two faces must be value-identical.
+  /** E24c — e24b's DataFrame face: the same latest-first centered ROWS
+    * window as stock `over(...)` expressions on the DESC multi-column
+    * order, planned by the same [[graft.plans.RowsFollowingRule]]
+    * cascade. Same DuckDB oracle as e24b: the two faces must be
+    * value-identical.
     */
   def e24cDescRowsLib(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_orderkey"),
-      col("o_totalprice").cast("decimal(25,4)").as("px"),
-      col("o_totalprice").cast("decimal(18,2)").as("px2"),
-      expr("CAST(datediff(o_orderdate, DATE'1992-01-01') AS BIGINT)").as("dnum"))
-    graft.operators.RangeWindows
-      .rowsSlidingAll(o, Seq("o_orderkey"),
-        Seq(col("dnum").desc, col("o_orderkey").desc), 6L, 3L, "px", "px2")
+    graft.plans.GlobalRank.ensureRegistered(s)
+    val w = Window.orderBy(col("dnum").desc, col("o_orderkey").desc).rowsBetween(-6, 3)
+    t(s, dir, "orders").select(col("o_orderkey"),
+        col("o_totalprice").cast("decimal(25,4)").as("px"),
+        col("o_totalprice").cast("decimal(18,2)").as("px2"),
+        expr("CAST(datediff(o_orderdate, DATE'1992-01-01') AS BIGINT)").as("dnum"))
       .select(col("o_orderkey"),
-        col("frame_sum").cast("double").as("c_total"),
-        col("frame_cnt").as("c_cnt"),
-        col("frame_min").cast("double").as("c_min"),
-        col("frame_max").cast("double").as("c_max"))
+        sum(col("px")).over(w).cast("double").as("c_total"),
+        count(lit(1)).over(w).as("c_cnt"),
+        min(col("px2")).over(w).cast("double").as("c_min"),
+        max(col("px2")).over(w).cast("double").as("c_max"))
       .orderBy("o_orderkey")
   }
 

@@ -76,49 +76,6 @@ object VerifySf1 {
       try body.localCheckpoint() finally keys.foreach(spark.conf.unset)
     }
 
-    // The raw centered-ROWS SQL texts, kept here VERBATIM from the
-    // pre-round-15 declared bodies: since round 15 the declared e23/e24b
-    // faces execute through the rowsSlidingAll library cascade, so the
-    // rule-composition path gets its 10× coverage from these texts instead
-    // (rules ENABLED = the three/four-rule composition; under stockWindows
-    // = the stock single-partition Window plan).
-    def e23CompositionSql(): DataFrame = {
-      graft.plans.GlobalRank.ensureRegistered(spark)
-      graft.Tables(spark, work, "orders").createOrReplaceTempView("e23_orders")
-      spark.sql(
-        """SELECT o_orderkey,
-                  CAST(SUM(px) OVER w AS DOUBLE) AS c_total,
-                  COUNT(*) OVER w AS c_cnt,
-                  CAST(AVG(px) OVER w AS DOUBLE) AS c_avg,
-                  CAST(MIN(px2) OVER w AS DOUBLE) AS c_min,
-                  CAST(MAX(px2) OVER w AS DOUBLE) AS c_max
-           FROM (SELECT o_orderkey, o_orderdate,
-                        CAST(o_totalprice AS DECIMAL(25,4)) AS px,
-                        CAST(o_totalprice AS DECIMAL(18,2)) AS px2
-                 FROM e23_orders)
-           WINDOW w AS (ORDER BY o_orderdate, o_orderkey
-                        ROWS BETWEEN 6 PRECEDING AND 3 FOLLOWING)
-           ORDER BY o_orderkey""")
-    }
-    def e24bCompositionSql(): DataFrame = {
-      graft.plans.GlobalRank.ensureRegistered(spark)
-      graft.Tables(spark, work, "orders").createOrReplaceTempView("e24b_orders")
-      spark.sql(
-        """SELECT o_orderkey,
-                  CAST(SUM(px) OVER w AS DOUBLE) AS c_total,
-                  COUNT(*) OVER w AS c_cnt,
-                  CAST(MIN(px2) OVER w AS DOUBLE) AS c_min,
-                  CAST(MAX(px2) OVER w AS DOUBLE) AS c_max
-           FROM (SELECT o_orderkey,
-                        CAST(o_totalprice AS DECIMAL(25,4)) AS px,
-                        CAST(o_totalprice AS DECIMAL(18,2)) AS px2,
-                        CAST(datediff(o_orderdate, DATE'1992-01-01') AS BIGINT) AS dnum
-                 FROM e24b_orders)
-           WINDOW w AS (ORDER BY dnum DESC, o_orderkey DESC
-                        ROWS BETWEEN 6 PRECEDING AND 3 FOLLOWING)
-           ORDER BY o_orderkey""")
-    }
-
     val checks: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
       ("a26_salted_skew_join",
         () => CoreQueries.a26SaltedSkewJoin(spark, work),
@@ -412,42 +369,35 @@ object VerifySf1 {
       ("e21b_range_centered_sql",
         () => CoreQueries.e21bRangeCenteredSql(spark, work),
         () => stockWindows(CoreQueries.e21bRangeCenteredSql(spark, work))),
-      // e23: the declared face (library cascade since round 15) ↔ the
-      // stock single-partition Window on the verbatim pre-r15 SQL text
+      // e23/e23b: the SQL and DataFrame faces of the centered ROWS window,
+      // each (RowsFollowingRule's padded cascade) ↔ the stock
+      // single-partition Window on its own text
       ("e23_rows_centered_sql",
         () => CoreQueries.e23RowsCenteredSql(spark, work),
-        () => stockWindows(e23CompositionSql())),
-      // e23b: the materialize-once library face ↔ the pure-optimizer
-      // three-rule composition (rules enabled on the verbatim SQL text) —
-      // two disjoint distributions of the same centered ROWS frame,
-      // value-identical by contract
+        () => stockWindows(CoreQueries.e23RowsCenteredSql(spark, work))),
       ("e23b_rows_centered_lib",
         () => CoreQueries.e23bRowsCenteredLib(spark, work),
-        () => e23CompositionSql()),
+        () => stockWindows(CoreQueries.e23bRowsCenteredLib(spark, work))),
       // e22: the running covar/corr DECIMAL-prefix composition ↔ the stock
       // single-partition Window on the same text — the per-row double
       // arithmetic is on exact operands, so the hashes must be identical
       ("e22_running_covar_sql",
         () => CoreQueries.e22RunningCovarSql(spark, work),
         () => stockWindows(CoreQueries.e22RunningCovarSql(spark, work))),
-      // e24/e24b: the round-11 DESC canonicalization (NOT-key + null
-      // segregation) against the stock DESC Window — the twins where a
-      // sign error in the key algebra or a misplaced null group would
-      // actually flip a hash at 1.5M rows
+      // e24: the DESC RANGE canonicalization (NOT key) against the stock
+      // DESC Window — the twin where a sign error in the key algebra would
+      // actually flip a hash at 1.5M rows; e24b/e24c: the latest-first
+      // centered ROWS window's SQL and DataFrame faces, each ↔ the stock
+      // DESC Window on its own text
       ("e24_desc_sliding_sql",
         () => CoreQueries.e24DescSlidingSql(spark, work),
         () => stockWindows(CoreQueries.e24DescSlidingSql(spark, work))),
       ("e24b_desc_rows_sql",
         () => CoreQueries.e24bDescRowsSql(spark, work),
-        () => stockWindows(e24bCompositionSql())),
-      // e24c: the materialize-once library face on the DESC multi-column
-      // order ↔ the four-rule optimizer composition (rules enabled on the
-      // verbatim pre-r15 SQL text) — two disjoint distributions of the
-      // same latest-first centered ROWS frame, value-identical by
-      // contract (the e23b ↔ e23 pattern)
+        () => stockWindows(CoreQueries.e24bDescRowsSql(spark, work))),
       ("e24c_desc_rows_lib",
         () => CoreQueries.e24cDescRowsLib(spark, work),
-        () => e24bCompositionSql()),
+        () => stockWindows(CoreQueries.e24cDescRowsLib(spark, work))),
       // e25: the suffix-frame reversal vs an INDEPENDENT stock-exec
       // formulation. NOT the stock suffix window itself: Spark's
       // [CURRENT ROW, UNBOUNDED FOLLOWING] frame RECOMPUTES the aggregate

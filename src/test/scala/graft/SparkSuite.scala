@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +12,35 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def sf001 = "/root/testdata/sf0.001"
+
+  /** Spark jobs this thread started while `body` ran. A listener records
+    * the jobs tagged with this call's local property (jobs of other
+    * threads carry none); a marker job after `body` proves every earlier
+    * event has been delivered (the listener bus keeps order).
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"probe-${System.nanoTime()}"
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.probe")))
+          .filter(_.startsWith(tag)).foreach(started.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.probe", tag)
+      val out = try body finally sc.setLocalProperty("graft.test.probe", null)
+      sc.setLocalProperty("graft.test.probe", s"$tag-marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.probe", null)
+      var jobs = 0
+      var next = started.poll(60, TimeUnit.SECONDS)
+      while (next == tag) { jobs += 1; next = started.poll(60, TimeUnit.SECONDS) }
+      assert(next == s"$tag-marker", "the marker job never reached the listener")
+      (out, jobs)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSuite {

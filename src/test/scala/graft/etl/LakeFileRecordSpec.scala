@@ -2,10 +2,8 @@ package graft.etl
 
 import java.nio.file.Files
 import java.sql.{Date, Timestamp}
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -47,35 +45,6 @@ class LakeFileRecordSpec extends SparkSuite {
     df.collect().map(r => (r.getAs[String]("ticker"),
       r.getAs[Timestamp]("timestamp_utc").getTime, r.getAs[Long]("v"),
       r.getAs[Double]("close"))).toSet
-
-  /** Spark jobs this thread started while `body` ran. A listener records
-    * the jobs tagged with this call's local property (jobs of other
-    * threads carry none); a marker job after `body` proves every earlier
-    * event has been delivered (the listener bus keeps order).
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"probe-${System.nanoTime()}"
-    val started = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.probe")))
-          .filter(_.startsWith(tag)).foreach(started.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.probe", tag)
-      val out = try body finally sc.setLocalProperty("graft.test.probe", null)
-      sc.setLocalProperty("graft.test.probe", s"$tag-marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.test.probe", null)
-      var jobs = 0
-      var next = started.poll(60, TimeUnit.SECONDS)
-      while (next == tag) { jobs += 1; next = started.poll(60, TimeUnit.SECONDS) }
-      assert(next == s"$tag-marker", "the marker job never reached the listener")
-      (out, jobs)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("resolving a 40-partition snapshot read starts no Spark job; pruning keeps the record's files") {
     assert(jobsDuring(spark.range(10).count())._2 >= 1, "the job probe sees no job")

@@ -32,4 +32,20 @@ class ExtensionsSpec extends SparkSuite {
       SparkSession.setActiveSession(spark)
     }
   }
+
+  test("imperative registration runs once per session: a second call keeps each registry entry") {
+    val registry = spark.sessionState.functionRegistry
+    def builders = Seq("cosine_sim", graft.plans.AsOfJoin.FunctionName,
+      graft.plans.AsOfJoin.BarrierFunctionName).map(n =>
+      registry.lookupFunctionBuilder(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n)).get)
+    VectorExpressions.register(spark)
+    graft.plans.AsOfJoin.ensureRegistered(spark)
+    val first = builders
+    VectorExpressions.register(spark)
+    graft.plans.AsOfJoin.ensureRegistered(spark)
+    // the same builder instances: nothing was re-registered (a replace
+    // would install a fresh closure and log a WARN per call)
+    assert(builders.zip(first).forall { case (a, b) => a eq b })
+  }
 }

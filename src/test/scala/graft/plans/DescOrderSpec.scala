@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** DESC / NULLS LAST global orders: the ASC-NULLS-FIRST canonicalization
-  * (bitwise-NOT key + null-segregation key) feeding every distributed
-  * window family — bit-equality vs the kill-switched stock Window across
-  * frame shapes, null placements, and ties; plus the scope rejections.
+/** DESC / NULLS LAST global orders: the RANGE families ride the
+  * ASC-NULLS-FIRST canonicalization (bitwise-NOT key), every other family
+  * takes the order as written — bit-equality vs the kill-switched stock
+  * Window across frame shapes, null placements, and ties; plus the scope
+  * rejections.
   */
 class DescOrderSpec extends SparkSuite {
   import spark.implicits._
@@ -108,7 +109,8 @@ class DescOrderSpec extends SparkSuite {
     corpus(23L, 900).createOrReplaceTempView("do_run")
     // running sum/count are peer-inclusive (RANGE default) — deterministic
     // on ties; nulls sit LAST (DESC default), so their prefix is the whole
-    // corpus: placement matters and the segregation key must carry it
+    // corpus: placement matters, and GlobalRankRule keeps the order as
+    // written
     compare(
       """SELECT id, SUM(d) OVER w AS sd, COUNT(d) OVER w AS cd
          FROM do_run
@@ -126,7 +128,7 @@ class DescOrderSpec extends SparkSuite {
          FROM do_run
          WINDOW w AS (ORDER BY k DESC NULLS FIRST)""",
       "desc-nulls-first")
-    // ASC NULLS LAST (no negation, segregation key only)
+    // ASC NULLS LAST
     compare(
       """SELECT id, RANK() OVER w AS rk, SUM(d) OVER w AS sd
          FROM do_run
@@ -168,6 +170,13 @@ class DescOrderSpec extends SparkSuite {
          FROM do_dt
          WINDOW w AS (ORDER BY dt DESC)""",
       "desc-date-running")
+    // date DESC (tied, nullable) RANGE frame: integer bounds count days,
+    // so the day-number image carries the offsets
+    compare(
+      """SELECT id, SUM(d) OVER w AS sd, MAX(d) OVER w AS mx
+         FROM do_dt
+         WINDOW w AS (ORDER BY dt DESC RANGE BETWEEN 6 PRECEDING AND 2 FOLLOWING)""",
+      "desc-date-range")
   }
 
   test("scope: non-integral DESC keys and the kill-switch stay stock") {
@@ -175,16 +184,18 @@ class DescOrderSpec extends SparkSuite {
       .withColumn("s", concat(lit("v"), col("id")))
       .createOrReplaceTempView("do_scope")
     def rewrote(sql: String): Boolean = cliffFree(spark.sql(sql))
-    // a frame-carrying shape over a STRING DESC key: strings have no
-    // monotone total inverse, so the node must stay stock (note the
-    // rank/shift/prefix family needs no canonicalization at all —
-    // GlobalRankRule is direction-agnostic and takes e.g.
-    // `RANK() OVER (ORDER BY s DESC)` directly)
-    assert(!rewrote("""SELECT SUM(d) OVER (ORDER BY s DESC ROWS BETWEEN 3
-      PRECEDING AND 2 FOLLOWING) FROM do_scope"""))
+    // a value-bounded RANGE frame over a DOUBLE DESC key: fp has no
+    // monotone total BIGINT image, so the node must stay stock
+    assert(!rewrote("""SELECT SUM(d) OVER (ORDER BY x DESC RANGE BETWEEN 3
+      PRECEDING AND CURRENT ROW) FROM do_scope"""))
+    // a ROWS frame over a STRING DESC key needs no canonicalization at all:
+    // RowsFollowingRule's cascade is direction-agnostic and takes it, as
+    // GlobalRankRule takes e.g. `RANK() OVER (ORDER BY s DESC)`
+    compare("""SELECT id, SUM(d) OVER (ORDER BY s DESC ROWS BETWEEN 3
+      PRECEDING AND 2 FOLLOWING) AS sd FROM do_scope""", "string-desc-rows")
     // kill-switch restores the stock plan for a shape only this rule
-    // enables (DESC ROWS-FOLLOWING needs the canonical order first)
-    val q = """SELECT SUM(d) OVER (ORDER BY id DESC ROWS BETWEEN 3
+    // enables (a DESC RANGE frame needs the canonical order first)
+    val q = """SELECT SUM(d) OVER (ORDER BY k DESC RANGE BETWEEN 3
       PRECEDING AND 2 FOLLOWING) FROM do_scope"""
     spark.conf.set(DescOrderRule.EnabledKey, "false")
     try assert(!rewrote(q))
