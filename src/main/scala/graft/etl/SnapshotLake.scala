@@ -27,12 +27,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * Layout (under the table root):
   * {{{
   *   _manifests/manifest-<zero-padded gen>     one per commit; max = current;
-  *                                             its header records the schema
+  *                                             its header records the schema,
+  *                                             the merge contract and each
+  *                                             stream sink's watermark
   *   _manifests/files-<zero-padded gen>        the files commit <gen> wrote
   *   data/<partitionCol>=h<HEX>/gen=<n>/part-….parquet
   * }}}
-  *  - The manifest names every live (partition, generation) entry and the
-  *    snapshot's schema; each generation's `files-<gen>` record names
+  *  - The manifest names every live (partition, generation) entry, the
+  *    snapshot's schema, its [[MergeSpec]] and the highest batch id each
+  *    stream sink has applied; each generation's `files-<gen>` record names
   *    every data file that commit wrote, with its bytes and mtime and, for
   *    tables with stats columns, its row count and typed min/max. Together
   *    they are the file index: resolving a read lists nothing and starts
@@ -108,9 +111,17 @@ object SnapshotLake {
     * (old gens fill the added columns with null), and time travel to a
     * pre-widen snapshot answers with that snapshot's own narrower schema.
     * None only for legacy manifests (see [[snapshotSchema]]).
+    *
+    * `spec`: the merge contract this snapshot was committed under, carried
+    * forward by every commit and replaced by an API [[merge]] (see
+    * [[specOf]] for manifests written before it was recorded here).
+    *
+    * `streams`: each stream sink's highest applied micro-batch id, by
+    * sinkId ([[mergeStreamBatch]]), carried forward by every commit.
     */
   case class Manifest(gen: Long, partitionCol: String, entries: Seq[Entry],
-      publishedAtMs: Option[Long] = None, schema: Option[StructType] = None)
+      publishedAtMs: Option[Long] = None, schema: Option[StructType] = None,
+      spec: Option[MergeSpec] = None, streams: Map[String, Long] = Map.empty)
 
   /** One data file of a snapshot, as its generation's record lists it:
     * the file's status (qualified path, bytes, mtime) and — for tables
@@ -170,21 +181,33 @@ object SnapshotLake {
   private def parseManifest(fs: FileSystem, p: Path, gen: Long): Manifest = {
     val text = readText(fs, p)
     val lines = text.split('\n').filter(_.nonEmpty)
-    val header = lines.head.split('\t')
+    val header = lines.head.split("\t", -1)
     // 3 fields = legacy (pre-publish-stamp) manifest; 4th = publish epoch
-    // ms; 5th = the snapshot's schema (compact JSON: no raw tab/newline)
-    require(header.length >= 3 && header.length <= 5 &&
+    // ms; 5th = the snapshot's schema (compact JSON: no raw tab/newline);
+    // 6th = the merge contract; 7th = the stream watermarks. An empty
+    // field is an absent value
+    require(header.length >= 3 && header.length <= 7 &&
       header(0) == "graft-snapshot-v1",
       s"unrecognized manifest header in $p: ${lines.head}")
-    val publishedAt = header.lift(3).flatMap(_.toLongOption)
-    val schema = header.lift(4).flatMap(j => scala.util.Try(DataType.fromJson(j))
+    def field(i: Int) = header.lift(i).filter(_.nonEmpty)
+    val publishedAt = field(3).flatMap(_.toLongOption)
+    val schema = field(4).flatMap(j => scala.util.Try(DataType.fromJson(j))
       .toOption.collect { case s: StructType => s })
+    val spec = field(5).map { f =>
+      val a = f.split(";", -1)
+      require(a.length == 5, s"unrecognized merge contract in $p: $f")
+      MergeSpec(decList(a(0)), dec(a(1)), dec(a(2)), decList(a(3)), decList(a(4)))
+    }
+    val streams = field(6).toSeq.flatMap(_.split(',')).map { kv =>
+      val i = kv.lastIndexOf('=')
+      dec(kv.take(i)) -> kv.drop(i + 1).toLong
+    }.toMap
     val entries = lines.tail.toSeq.map { l =>
       // value strings may contain tabs — split only the first two fields
       val a = l.split('\t')
       Entry(a(0), a(1).toLong, a.drop(2).mkString("\t"))
     }
-    Manifest(gen, header(1), entries, publishedAt, schema)
+    Manifest(gen, header(1), entries, publishedAt, schema, spec, streams)
   }
 
   /** Recursive nullable form (what `DataType.asNullable` does privately).
@@ -281,13 +304,18 @@ object SnapshotLake {
     * new max, never a torn file. The header records the publish time
     * (create-once files make mtime a plausible proxy, but mtime does not
     * survive copy/rsync/backup-restore — TIMESTAMP AS OF must resolve from
-    * a value the commit itself recorded) and the snapshot's schema.
+    * a value the commit itself recorded), the snapshot's schema, its merge
+    * contract and the stream watermarks, so all of a commit's metadata
+    * becomes visible in this one create.
     */
   private[etl] def publish(fs: FileSystem, path: String, m: Manifest): Unit = {
     val sb = new StringBuilder
-    sb.append(
-      s"graft-snapshot-v1\t${m.partitionCol}\t${m.gen}\t${System.currentTimeMillis()}")
-    m.schema.foreach(s => sb.append('\t').append(toNullable(s).json))
+    sb.append(Seq("graft-snapshot-v1", m.partitionCol, m.gen, System.currentTimeMillis(),
+      m.schema.fold("")(s => toNullable(s).json),
+      m.spec.fold("")(c => Seq(encList(c.keys), enc(c.versionCol), enc(c.partitionCol),
+        encList(c.tieBreakers), encList(c.statsCols)).mkString(";")),
+      m.streams.toSeq.sorted.map { case (id, b) => s"${enc(id)}=$b" }.mkString(","))
+      .mkString("\t"))
     sb.append('\n')
     m.entries.sortBy(_.dirName).foreach { e =>
       sb.append(s"${e.dirName}\t${e.gen}\t${e.value}\n")
@@ -516,7 +544,7 @@ object SnapshotLake {
       }
     }}
     val sb = new StringBuilder
-    sb.append(s"graft-files-v1\t$gen\t${statsCols.map(enc).mkString(",")}\n")
+    sb.append(s"graft-files-v1\t$gen\t${encList(statsCols)}\n")
     files.foreach { case (e, f) =>
       sb.append(s"${enc(s"${e.dirName}/gen=${e.gen}/${f.status.getPath.getName}")}\t" +
         s"${f.status.getLen}\t${f.status.getModificationTime}\t${f.rows.getOrElse("")}")
@@ -540,7 +568,7 @@ object SnapshotLake {
       val lines = readText(fs, filesPath(path, gen)).split('\n').filter(_.nonEmpty)
       val header = lines.head.split("\t", -1)
       require(header.length == 3 && header(0) == "graft-files-v1")
-      val cols = header(2).split(',').toSeq.filter(_.nonEmpty).map(dec)
+      val cols = decList(header(2))
       lines.tail.toSeq.map { l =>
         val a = l.split("\t", -1)
         require(a.length == 4 + 2 * cols.length)
@@ -559,10 +587,11 @@ object SnapshotLake {
     }.getOrElse(Map.empty)
 
   /** The merge contract a lake was created with — keys, version column,
-    * partition column, tie-breakers, stats columns. Persisted (as
-    * `_manifests/table-meta`) by [[merge]] so the SQL write face
-    * ([[graft.sources.LakeCatalog]]'s `INSERT INTO`) can route through
-    * the SAME keyed LWW commit without the caller re-stating the spec.
+    * partition column, tie-breakers, stats columns. Recorded in every
+    * manifest ([[Manifest.spec]]) so the SQL write faces
+    * ([[graft.sources.LakeCatalog]]'s `INSERT INTO`/`MERGE INTO`), the
+    * stream sink and [[changes]] route through the SAME keyed LWW identity
+    * without the caller re-stating the spec.
     */
   case class MergeSpec(
       keys: Seq[String],
@@ -571,56 +600,51 @@ object SnapshotLake {
       tieBreakers: Seq[String],
       statsCols: Seq[String])
 
-  private def metaPath(path: String) = new Path(manifestDir(path), "table-meta")
-
-  /** The persisted [[MergeSpec]], or None for a lake that has never been
-    * merged through the spec-stamping path (pre-round-11 lakes).
+  /** The current snapshot's merge contract, or None for a lake without
+    * one (see [[specOf]]).
     */
-  def mergeSpecOf(spark: SparkSession, path: String): Option[MergeSpec] = {
-    val fs = fsOf(spark, path)
-    val p = metaPath(path)
-    if (!fs.exists(p)) return None
-    val lines = readText(fs, p).split('\n').filter(_.nonEmpty)
-    if (lines.isEmpty || lines.head != "graft-lake-meta-v1") return None
-    val kv = lines.tail.map { l =>
-      val a = l.split('\t')
-      a(0) -> (if (a.length > 1) a(1) else "")
-    }.toMap
-    def list(k: String): Seq[String] =
-      kv.getOrElse(k, "").split(',').toSeq.filter(_.nonEmpty).map(dec)
-    for {
-      v <- kv.get("version").filter(_.nonEmpty).map(dec)
-      pc <- kv.get("partition").filter(_.nonEmpty).map(dec)
-      ks = list("keys") if ks.nonEmpty
-    } yield MergeSpec(ks, v, pc, list("tiebreakers"), list("statscols"))
-  }
+  def mergeSpecOf(spark: SparkSession, path: String): Option[MergeSpec] =
+    currentManifest(spark, path).flatMap(specOf(spark, path, _))
 
-  private def specText(spec: MergeSpec): String =
-    "graft-lake-meta-v1\n" +
-      s"keys\t${spec.keys.map(enc).mkString(",")}\n" +
-      s"version\t${enc(spec.versionCol)}\n" +
-      s"partition\t${enc(spec.partitionCol)}\n" +
-      s"tiebreakers\t${spec.tieBreakers.map(enc).mkString(",")}\n" +
-      s"statscols\t${spec.statsCols.map(enc).mkString(",")}\n"
-
-  /** Persist the merge contract (idempotent; caller holds the lease).
-    *
-    * An unchanged spec is left untouched; a changed one is replaced by
-    * delete-then-rename, which is NOT atomic — the contract making that
-    * safe is that every spec read on a WRITE path happens inside the same
-    * [[LakeLease]] ([[mergeViaSpec]] — the SQL `INSERT INTO` route), so no
-    * writer can observe the delete window. [[mergeSpecOf]] outside the
-    * lease is for inspection only.
+  /** Snapshot `m`'s merge contract: the one its manifest records, else —
+    * for a manifest written before the contract moved into the manifest —
+    * a read-only parse of the lake's legacy `_manifests/table-meta` file.
+    * The next commit that resolves the contract (a merge, update or
+    * delete) records it in its own manifest.
     */
-  private def writeMergeSpec(fs: FileSystem, path: String, spec: MergeSpec): Unit = {
-    val p = metaPath(path)
-    val text = specText(spec)
-    if (fs.exists(p)) {
-      if (readText(fs, p) == text) return
-      fs.delete(p, false)
+  private def specOf(spark: SparkSession, path: String, m: Manifest): Option[MergeSpec] =
+    m.spec.orElse {
+      val fs = fsOf(spark, path)
+      val p = new Path(manifestDir(path), "table-meta")
+      val lines =
+        if (fs.exists(p)) readText(fs, p).split('\n').toSeq.filter(_.nonEmpty) else Nil
+      if (!lines.headOption.contains("graft-lake-meta-v1")) None
+      else {
+        val kv = lines.tail.map { l =>
+          val a = l.split("\t", -1)
+          a(0) -> a.lift(1).getOrElse("")
+        }.toMap
+        def list(k: String) = decList(kv.getOrElse(k, ""))
+        for {
+          v <- kv.get("version").filter(_.nonEmpty).map(dec)
+          pc <- kv.get("partition").filter(_.nonEmpty).map(dec)
+          ks = list("keys") if ks.nonEmpty
+        } yield MergeSpec(ks, v, pc, list("tiebreakers"), list("statscols"))
+      }
     }
-    putText(fs, p, text)
-  }
+
+  /** Snapshot `m`'s merge contract, or the one refusal every keyed face
+    * (`INSERT INTO`, `MERGE INTO`, the `graft-lake` stream, [[changes]])
+    * gives a lake without one, naming the two ways to record it.
+    */
+  private[graft] def requireSpec(spark: SparkSession, path: String,
+      m: Option[Manifest], verb: String): MergeSpec =
+    m.flatMap(specOf(spark, path, _)).getOrElse(
+      throw new UnsupportedOperationException(
+        s"lake at $path has no merge contract, so $verb cannot know its " +
+          "keys/version/partition — declare one with CREATE TABLE … " +
+          "TBLPROPERTIES ('merge_keys'=…) through the catalog, or run one " +
+          "SnapshotLake.merge through the API"))
 
   /** Keyed LWW merge into the lake, with a snapshot-isolated commit.
     * CONTRACT: `partitionCol` is functionally determined by `keys` (e.g.
@@ -636,6 +660,10 @@ object SnapshotLake {
     * [[readSlice]]'s FILE-level skipping inside a partition. Advisory
     * metadata: a file without recorded stats only loses pruning, never
     * rows.
+    *
+    * The commit records this call's [[MergeSpec]] in its manifest, so the
+    * SQL write faces and the stream sink route later batches into the
+    * same keyed LWW commit.
     */
   def merge(
       spark: SparkSession,
@@ -645,37 +673,44 @@ object SnapshotLake {
       versionCol: String,
       partitionCol: String,
       tieBreakers: Seq[String] = Nil,
-      statsCols: Seq[String] = Nil): Unit = {
-    require(updates.columns.contains(partitionCol),
-      s"updates must carry partition column '$partitionCol'")
-    require(statsCols.forall(updates.columns.contains),
-      s"statsCols ${statsCols.mkString(",")} must be update columns")
+      statsCols: Seq[String] = Nil): Unit =
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      mergeLocked(spark, path, updates,
+      mergeChecked(spark, path, updates,
         MergeSpec(keys, versionCol, partitionCol, tieBreakers, statsCols))
+        .foreach { case (fs, m) => publish(fs, path, m) }
     }
-  }
 
-  /** [[merge]] with the contract resolved from the lake's own persisted
-    * spec, ALL inside the lease — the SQL write faces (`INSERT INTO`,
-    * `MERGE INTO` via [[graft.sources.LakeCatalog]]) route here, so a
-    * concurrent merge re-stamping the spec can never expose its
-    * delete-then-rename window to them (it holds the same lease).
+  /** [[merge]] under the current snapshot's recorded contract, resolved
+    * inside the lease — the SQL write faces (`INSERT INTO`, `MERGE INTO`
+    * via [[graft.sources.LakeCatalog]]) route here.
     */
   def mergeViaSpec(spark: SparkSession, path: String, updates: DataFrame): Unit =
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      val spec = mergeSpecOf(spark, path).getOrElse(
-        throw new UnsupportedOperationException(
-          s"lake at $path has no persisted merge contract " +
-            "(_manifests/table-meta) — run one SnapshotLake.merge " +
-            "through the API to establish keys/version/partition, " +
-            "then SQL writes route through the same LWW commit"))
-      require(updates.columns.contains(spec.partitionCol),
-        s"updates must carry partition column '${spec.partitionCol}'")
-      require(spec.statsCols.forall(updates.columns.contains),
-        s"statsCols ${spec.statsCols.mkString(",")} must be update columns")
-      mergeLocked(spark, path, updates, spec)
+      mergeChecked(spark, path, updates,
+        requireSpec(spark, path, currentManifest(spark, path), "a SQL write"))
+        .foreach { case (fs, m) => publish(fs, path, m) }
     }
+
+  /** The commit body shared by [[merge]], [[mergeViaSpec]] and
+    * [[mergeStreamBatch]]: [[prepareMerge]] under `spec` after checking the
+    * batch carries the spec's partition and stats columns; the caller
+    * holds the lease and publishes. `updates` is the RAW batch —
+    * [[prepareMerge]] owns the within-batch LWW (its affected-partition
+    * detection skips the window entirely when partitionCol is a merge key,
+    * and its into-existing branch deliberately keeps the two-stage
+    * batch-dedup + union-LWW shape: the folded single union-level window
+    * was measured slower at sf0.1, e3b 1.84→2.51 s, round 14).
+    * Pre-deduplicating here would pay the batch window one extra time on
+    * every path.
+    */
+  private def mergeChecked(spark: SparkSession, path: String, updates: DataFrame,
+      spec: MergeSpec): Option[(FileSystem, Manifest)] = {
+    require(updates.columns.contains(spec.partitionCol),
+      s"updates must carry partition column '${spec.partitionCol}'")
+    require(spec.statsCols.forall(updates.columns.contains),
+      s"statsCols ${spec.statsCols.mkString(",")} must be update columns")
+    prepareMerge(spark, path, updates, spec)
+  }
 
   /** CREATE an empty lake table with a declared schema and merge contract —
     * the DDL bootstrap `CREATE TABLE <cat>.<t> (…) TBLPROPERTIES
@@ -686,10 +721,10 @@ object SnapshotLake {
     * declared schema (so reads of the empty table answer with the
     * declared shape, and the first merge's [[checkEvolution]] enforces
     * it — a batch missing a declared column, or retyping one, refuses
-    * exactly as it would against a merged table), and the persisted
-    * [[MergeSpec]] every write face resolves. The manifest create is the
-    * usual single atomic cut; creation is lease-guarded and refuses if the
-    * table already has a published snapshot or a stamped contract.
+    * exactly as it would against a merged table) and the [[MergeSpec]]
+    * every write face resolves. The manifest create is the usual single
+    * atomic cut; creation is lease-guarded and refuses if the table
+    * already has a published snapshot.
     */
   def create(spark: SparkSession, path: String,
       schema: StructType, spec: MergeSpec): Unit = {
@@ -701,100 +736,58 @@ object SnapshotLake {
         s"contract column '$c' is not in the declared schema " +
           s"(${schema.fieldNames.mkString(", ")})"))
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      val fs = fsOf(spark, path)
       require(currentManifest(spark, path).isEmpty,
         s"lake table at $path already exists (published snapshot) — " +
           "CREATE TABLE refuses to re-stamp a live table")
-      // With NO published manifest, a table-meta can only be debris of a
-      // create that crashed before its publish (merges stamp their meta
-      // AFTER publishing, and vacuum always keeps >= 1 manifest) — delete
-      // it so the retry's create-rename cannot collide and converges to a
-      // fresh table.
-      if (fs.exists(metaPath(path))) fs.delete(metaPath(path), false)
-      writeMergeSpec(fs, path, spec)
-      publish(fs, path, Manifest(0L, spec.partitionCol, Nil, schema = Some(schema)))
+      publish(fsOf(spark, path), path,
+        Manifest(0L, spec.partitionCol, Nil, schema = Some(schema), spec = Some(spec)))
     }
   }
 
-  // ---- streaming write face: per-sink batch markers ----------------------
+  // ---- streaming write face: per-sink watermarks in the manifest -------
 
-  private def streamMarkerDir(path: String) = new Path(manifestDir(path), "streams")
-
-  /** One marker file per sink lineage. The file NAME is a digest (a sinkId
-    * is typically a checkpoint path — arbitrary length and characters);
-    * the sinkId itself is recorded verbatim inside for operators.
-    */
-  private def streamMarkerPath(path: String, sinkId: String): Path = {
-    val d = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(sinkId.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString
-    new Path(streamMarkerDir(path), s"sink-$d")
-  }
-
-  /** The highest micro-batch id this sink lineage has applied, or None for
-    * a lineage that never committed. Outside-lease reads are for
-    * inspection; [[mergeStreamBatch]] re-reads inside its lease.
+  /** The highest micro-batch id this sink lineage has applied, as the
+    * current manifest records it, or None for a lineage that never
+    * committed. Outside-lease reads are for inspection;
+    * [[mergeStreamBatch]] re-reads inside its lease.
     */
   def streamBatchApplied(spark: SparkSession, path: String,
-      sinkId: String): Option[Long] = {
-    val fs = fsOf(spark, path)
-    val p = streamMarkerPath(path, sinkId)
-    if (!fs.exists(p)) return None
-    val lines = readText(fs, p).split('\n')
-    if (lines.isEmpty || lines.head != "graft-lake-stream-v1") None
-    else lines.lift(1).flatMap(_.toLongOption)
-  }
-
-  private def writeStreamMarker(fs: FileSystem, path: String, sinkId: String,
-      batchId: Long): Unit = {
-    val p = streamMarkerPath(path, sinkId)
-    if (fs.exists(p)) fs.delete(p, false)
-    putText(fs, p, s"graft-lake-stream-v1\n$batchId\n$sinkId\n")
-  }
+      sinkId: String): Option[Long] =
+    currentManifest(spark, path).flatMap(_.streams.get(sinkId))
 
   /** [[mergeViaSpec]] as a Structured Streaming micro-batch commit — the
     * sink half of exactly-once over the lake
     * ([[graft.sources.LakeStreamSink]] routes `writeStream
     * .format("graft-lake")` here). The engine's sink contract is
     * at-least-once (a crash between the sink write and the commit-log
-    * write replays the batch), so the lake records the highest applied
-    * `batchId` per `sinkId` (one marker file under `_manifests/streams`,
-    * ≙ the ledger rows of the JDBC face, [[graft.sources.JdbcStreamSink]],
-    * but filesystem-native and checked INSIDE the same lease as the commit):
+    * write replays the batch), so each manifest records the highest
+    * applied `batchId` per `sinkId` (≙ Delta's `txn` action, and the
+    * ledger rows of the JDBC face, [[graft.sources.JdbcStreamSink]]),
+    * checked INSIDE the same lease as the commit:
     *
-    *  - `batchId <= recorded` → replay; skipped without reading the batch
-    *    (returns false).
-    *  - otherwise → the usual keyed LWW commit, then the marker advances
-    *    before the lease releases. An EMPTY batch advances the marker
-    *    without publishing a generation.
+    *  - `batchId <= recorded` → replay; skipped without reading the batch.
+    *  - otherwise → the usual keyed LWW commit, whose manifest carries the
+    *    advanced watermark: the batch's data and its watermark become
+    *    visible in the one publish, so a replay never adds a generation.
+    *    An EMPTY batch publishes nothing and leaves the watermark where it
+    *    was (replaying it is again a no-op).
     *
-    * The one unguarded window — crash AFTER the manifest publish, BEFORE
-    * the marker write — replays into a re-merge of the same batch, which
-    * keyed LWW resolves to an IDENTICAL snapshot; the duplicate generation
-    * it publishes has an empty [[changes]] delta (the diff is by row
-    * VALUE), so even CDC consumers observe exactly-once. Batch ids are
-    * only unique per checkpoint lineage — `sinkId` must change when the
+    * Returns whether a generation was published. Batch ids are only
+    * unique per checkpoint lineage — `sinkId` must change when the
     * checkpoint does (the sink derives it from `checkpointLocation`).
     */
   def mergeStreamBatch(spark: SparkSession, path: String, updates: DataFrame,
       sinkId: String, batchId: Long): Boolean = {
     require(sinkId.nonEmpty, "sinkId must be non-empty")
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      val fs = fsOf(spark, path)
-      if (streamBatchApplied(spark, path, sinkId).exists(_ >= batchId)) false
-      else {
-        val spec = mergeSpecOf(spark, path).getOrElse(
-          throw new UnsupportedOperationException(
-            s"lake at $path has no persisted merge contract " +
-              "(_manifests/table-meta) — CREATE TABLE through the catalog " +
-              "or run one SnapshotLake.merge to establish " +
-              "keys/version/partition before streaming into it"))
-        require(updates.columns.contains(spec.partitionCol),
-          s"stream batch must carry partition column '${spec.partitionCol}'")
-        require(spec.statsCols.forall(updates.columns.contains),
-          s"statsCols ${spec.statsCols.mkString(",")} must be stream columns")
-        mergeLocked(spark, path, updates, spec)
-        writeStreamMarker(fs, path, sinkId, batchId)
-        true
+      val cur = currentManifest(spark, path)
+      if (cur.flatMap(_.streams.get(sinkId)).exists(_ >= batchId)) false
+      else mergeChecked(spark, path, updates,
+        requireSpec(spark, path, cur, "a graft-lake stream")) match {
+        case Some((fs, m)) =>
+          publish(fs, path, m.copy(streams = m.streams + (sinkId -> batchId)))
+          true
+        case None => false
       }
     }
   }
@@ -836,7 +829,8 @@ object SnapshotLake {
     * `gen+1` with the current snapshot's entries unchanged and
     * `schemaOf(current)` as its recorded schema. No data file is written,
     * every gen dir (and its file record) stays shared with the previous
-    * snapshot, and the [[changes]] delta across the commit is empty.
+    * snapshot, the contract and stream watermarks carry forward, and the
+    * [[changes]] delta across the commit is empty.
     * `schemaOf` runs inside the lease, so its checks see the snapshot the
     * commit publishes over; it may refuse by throwing. Serves [[addColumn]]
     * (a widened schema) and [[Pipeline.runLake]]'s unchanged dim (the
@@ -851,28 +845,7 @@ object SnapshotLake {
           s"$path has no published snapshot — nothing to commit over"))
       val schema = schemaOf(m)
       gcOrphans(fs, path, m.gen)
-      publish(fs, path, Manifest(m.gen + 1, m.partitionCol, m.entries,
-        schema = Some(schema)))
-    }
-
-  /** The commit body shared by [[merge]] and [[mergeViaSpec]]; the caller
-    * holds the lease. `updates` is the RAW batch — [[prepareMerge]] owns
-    * the within-batch LWW (its affected-partition detection skips the
-    * window entirely when partitionCol is a merge key, and its
-    * into-existing branch deliberately keeps the two-stage batch-dedup +
-    * union-LWW shape: the folded single union-level window was measured
-    * slower at sf0.1, e3b 1.84→2.51 s, round 14). Pre-deduplicating here
-    * would pay the batch window one extra time on every path.
-    */
-  private def mergeLocked(spark: SparkSession, path: String,
-      updates: DataFrame, spec: MergeSpec): Unit =
-    prepareMerge(spark, path, updates, spec.keys, spec.versionCol,
-      spec.partitionCol, spec.tieBreakers, spec.statsCols).foreach {
-      case (fs, m) =>
-        publish(fs, path, m)
-        // stamp the merge contract so `INSERT INTO` through the SQL face
-        // can route later batches into the same keyed LWW commit
-        writeMergeSpec(fs, path, spec)
+      publish(fs, path, m.copy(gen = m.gen + 1, schema = Some(schema)))
     }
 
   /** Row-level DELETE — the takedown / right-to-be-forgotten operator an
@@ -959,7 +932,7 @@ object SnapshotLake {
       val partitionCol = m.partitionCol
       val full = scan(spark, path, m, m.entries)
       val schema = full.schema
-      val spec = mergeSpecOf(spark, path)
+      val spec = specOf(spark, path, m)
       assignments.keys.foreach { c =>
         require(schema.fieldNames.contains(c),
           s"UPDATE assigns unknown column '$c' (table columns: " +
@@ -1016,8 +989,8 @@ object SnapshotLake {
           statsCols, schema)
         val kept = m.entries.filterNot(e => affectedValues.contains(e.value))
         // an update never changes the schema: re-record the one it read
-        publish(fs, path, Manifest(newGen, partitionCol, kept ++ newEntries,
-          schema = Some(schema)))
+        publish(fs, path, m.copy(gen = newGen, entries = kept ++ newEntries,
+          schema = Some(schema), spec = spec))
         updatedCount
       }
     }
@@ -1044,8 +1017,8 @@ object SnapshotLake {
     * (the LWW merge rewrites whole partitions, so most rows are identical
     * copies — the keyed full-outer join filters them out).
     *
-    * Keys come from the persisted merge contract ([[MergeSpec]] — the
-    * same identity every write face upserts by). Rows are read under
+    * Keys come from `toGen`'s merge contract ([[MergeSpec]] — the same
+    * identity every write face upserts by). Rows are read under
     * `toGen`'s schema (widen-only evolution: pre-widen rows surface the
     * added columns as null, so pre/post images align). Both snapshots
     * must still be retained (see [[vacuum]]); `fromGen < toGen` — a
@@ -1058,10 +1031,7 @@ object SnapshotLake {
       s"changes wants fromGen < toGen, got $fromGen >= $toGen")
     val mOld = manifestAt(spark, path, fromGen)
     val mNew = manifestAt(spark, path, toGen)
-    val spec = mergeSpecOf(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"$path has no persisted merge contract (_manifests/table-meta) — " +
-          "changes() needs the key identity every write face upserts by"))
+    val spec = requireSpec(spark, path, Some(mNew), "changes()")
     val oldByVal = mOld.entries.map(e => e.value -> e).toMap
     val newByVal = mNew.entries.map(e => e.value -> e).toMap
     // the partition-scoped core: same gen in both snapshots = untouched,
@@ -1182,7 +1152,8 @@ object SnapshotLake {
         // — never in a third dedicated counting pass over the data
         val totalExisting = existing.count()
         val newGen = m.gen + 1
-        val statsCols = mergeSpecOf(spark, path).map(_.statsCols).getOrElse(Nil)
+        val spec = specOf(spark, path, m)
+        val statsCols = spec.map(_.statsCols).getOrElse(Nil)
           .filter(full.schema.fieldNames.contains)
         val newEntries = stageInstall(spark, fs, path, survivorsOf(existing),
           partitionCol, affected.map { case (v, h) => h -> v }.toMap, newGen,
@@ -1191,8 +1162,8 @@ object SnapshotLake {
         val kept = m.entries.filterNot(e => affectedValues.contains(e.value))
         // a delete never changes the schema: the new snapshot re-records
         // the one it read (keeps emptied/truncated tables answerable)
-        publish(fs, path, Manifest(newGen, partitionCol, kept ++ newEntries,
-          schema = Some(full.schema)))
+        publish(fs, path, m.copy(gen = newGen, entries = kept ++ newEntries,
+          schema = Some(full.schema), spec = spec))
         totalExisting - survivorCount
       }
     }
@@ -1201,17 +1172,16 @@ object SnapshotLake {
     * partitions, install their new gen dirs, record their files, and
     * return the pending manifest. Split out so the spec can pin the law
     * directly: after prepare, a reader sees the wholly-old snapshot; after
-    * [[publish]], the wholly-new one. Callers must hold the lease. None = empty batch.
+    * [[publish]], the wholly-new one. The pending manifest records `spec`
+    * and carries the current stream watermarks forward. Callers must hold
+    * the lease. None = empty batch.
     */
   private[etl] def prepareMerge(
       spark: SparkSession,
       path: String,
       updates: DataFrame,
-      keys: Seq[String],
-      versionCol: String,
-      partitionCol: String,
-      tieBreakers: Seq[String],
-      statsCols: Seq[String] = Nil): Option[(FileSystem, Manifest)] = {
+      spec: MergeSpec): Option[(FileSystem, Manifest)] = {
+    val MergeSpec(keys, versionCol, partitionCol, tieBreakers, statsCols) = spec
     val fs = fsOf(spark, path)
     val cur = currentManifest(spark, path)
     val curGen = cur.map(_.gen).getOrElse(0L)
@@ -1308,7 +1278,8 @@ object SnapshotLake {
         updates.schema.fields.filterNot(f => t.fieldNames.contains(f.name)))
       case None => updates.schema
     }
-    Some((fs, Manifest(newGen, partitionCol, kept ++ newEntries, schema = Some(recorded))))
+    Some((fs, Manifest(newGen, partitionCol, kept ++ newEntries, schema = Some(recorded),
+      spec = Some(spec), streams = cur.map(_.streams).getOrElse(Map.empty))))
   }
 
   /** The distinct (value string, hex dir key) pairs of `partitionCol` in
@@ -1418,6 +1389,9 @@ object SnapshotLake {
     if (s == null) "" else java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String =
     if (s.isEmpty) null else java.net.URLDecoder.decode(s, "UTF-8")
+  private def encList(names: Seq[String]): String = names.map(enc).mkString(",")
+  private def decList(s: String): Seq[String] =
+    s.split(',').toSeq.filter(_.nonEmpty).map(dec)
 
   /** The string form a column's per-file min/max is recorded in, applied
     * AFTER the typed min/max: TIMESTAMP goes through `unix_micros`
@@ -1650,8 +1624,8 @@ object SnapshotLake {
               .filter(schema.fieldNames.contains)
             val recorded = recordFiles(spark, fs, path, newGen, newEntries, schema, statCols)
             val bumped = picked.map(_._1.dirName).toSet
-            publish(fs, path, Manifest(newGen, m.partitionCol,
-              m.entries.map(e =>
+            publish(fs, path, m.copy(gen = newGen,
+              entries = m.entries.map(e =>
                 if (bumped.contains(e.dirName)) e.copy(gen = newGen) else e),
               schema = Some(schema)))
             picked.map { case (e, before, _) =>
@@ -1717,7 +1691,8 @@ object SnapshotLake {
   }
 
   /** DROP the table: a lease-guarded purge of the ENTIRE lake — every
-    * manifest, every gen dir and file record, the merge contract. The
+    * manifest (with the merge contract it carries), every gen dir and
+    * file record. The
     * lifecycle symmetry of [[create]]: vacuum-to-zero plus metadata
     * removal, as ONE deliberate act. After the drop, time travel
     * to any former snapshot is GONE (the Delta/Iceberg DROP contract — a

@@ -2,11 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, Ascending, Attribute, AttributeReference, CurrentRow, EqualTo,
-  Expression, KnownNotNull, Lead, Literal, NamedExpression, RowFrame,
-  SortOrder, SpecifiedWindowFrame, WindowExpression, WindowSpecDefinition}
+  Alias, Ascending, Attribute, AttributeReference, CurrentRow, Expression,
+  IsNotNull, KnownNotNull, Lead, Literal, NamedExpression, NullsLast,
+  RowFrame, SortOrder, SpecifiedWindowFrame, WindowExpression,
+  WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
-  AggregateExpression, AggregateFunction, Complete}
+  AggregateExpression, AggregateFunction, Complete, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{
   Filter, LocalRelation, LogicalPlan, Project, Union, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -29,15 +30,17 @@ import org.apache.spark.sql.types.IntegerType
   * [[GlobalRankExec]]s, one consumer — nothing is checkpointed):
   *
   *  1. below a Union, a real-side Project pre-evaluates every non-column
-  *     aggregate input and order key into a slot (so `COUNT(*)` counts a
-  *     slot that is `1` on real rows) and adds `__pad = 0`;
-  *  2. the Union adds a `LocalRelation` of `M = max m` rows with
-  *     `__pad = 1..M` and null in every column and slot, so no expression
-  *     is ever evaluated on a padding row;
+  *     aggregate input and order key into a slot and adds the marker
+  *     `__rf_real = true`;
+  *  2. the Union adds a `LocalRelation` of `M = max m` rows that are null
+  *     in every column, slot and the marker, so no expression is ever
+  *     evaluated on a padding row;
   *  3. one Window computes the trailing aggregates over
-  *     `(__pad, original order…)`, a second one `lead(·, m)` of each over
-  *     the same order;
-  *  4. `Filter(__pad = 0)` and a Project back to the node's exact output
+  *     `(__rf_real NULLS LAST, original order…)` (the identical padding
+  *     rows sort last, in any order among themselves), a second one
+  *     `lead(·, m)` of each over the same order; `COUNT(*)` (any COUNT of
+  *     a non-null literal) counts the marker;
+  *  4. `Filter(__rf_real IS NOT NULL)` and a Project back to the node's exact output
   *     (original exprIds; a never-null aggregate such as COUNT keeps its
   *     non-null type — its lead always lands on an existing row).
   *
@@ -100,9 +103,11 @@ object RowsFollowingRule extends Rule[LogicalPlan] {
     if (found.exists(_.isEmpty)) return None
     val slots = found.flatten
     // 1. slots for every non-column input and order key, evaluated on the
-    // real side only
+    // real side only. Above the Union every column is nullable (the padding
+    // rows are null), so its references say so: orderings, the range
+    // exchange's bounds and aggregates must null-check the padding rows
     val computed = scala.collection.mutable.ArrayBuffer.empty[Alias]
-    def slotted(e: Expression): Expression = e match {
+    def slotted(e: Expression): Attribute = (e match {
       case a: Attribute => a
       case _ =>
         computed.find(_.child.semanticEquals(e)).getOrElse {
@@ -110,16 +115,20 @@ object RowsFollowingRule extends Rule[LogicalPlan] {
           computed += a
           a
         }.toAttribute
-    }
-    val padA = Alias(Literal(0), "__pad")()
-    val padRef = padA.toAttribute
-    val order = SortOrder(padRef, Ascending) +:
+    }).withNullability(true)
+    val realA = Alias(Literal(true), "__rf_real")()
+    val realRef = realA.toAttribute.withNullability(true)
+    val order = SortOrder(realRef, Ascending, NullsLast, Nil) +:
       w.orderSpec.map(o => SortOrder(slotted(o.child), o.direction, o.nullOrdering, Nil))
+    def inputs(af: AggregateFunction) = af.mapChildren {
+      case l: Literal if !l.nullable && af.isInstanceOf[Count] => realRef
+      case e => slotted(e)
+    }.asInstanceOf[AggregateFunction]
     // 3a. the trailing (n+m)-row slides
     val trails = slots.zipWithIndex.map { case (s, j) =>
       val frame = SpecifiedWindowFrame(RowFrame, Literal(-(s.n + s.m)), CurrentRow)
       Alias(WindowExpression(
-        AggregateExpression(s.af.mapChildren(slotted).asInstanceOf[AggregateFunction],
+        AggregateExpression(inputs(s.af),
           Complete, isDistinct = false),
         WindowSpecDefinition(Nil, order, frame)), s"__rf_t$j")()
     }
@@ -131,11 +140,10 @@ object RowsFollowingRule extends Rule[LogicalPlan] {
         s"__rf_l$j")()
     }
     // 2. real rows ∪ M padding rows ordered after them
-    val real = Project(w.child.output ++ computed :+ padA, w.child)
-    val padOut = real.output.map(a =>
-      AttributeReference(a.name, a.dataType, a.exprId != padRef.exprId)())
-    val padRows = (1 to slots.map(_.m).max).map(j =>
-      InternalRow.fromSeq(Seq.fill(padOut.length - 1)(null) :+ j))
+    val real = Project(w.child.output ++ computed :+ realA, w.child)
+    val padOut = real.output.map(a => AttributeReference(a.name, a.dataType)())
+    val padRows = Seq.fill(slots.map(_.m).max)(
+      InternalRow.fromSeq(Seq.fill(padOut.length)(null)))
     val union = Union(Seq(real, LocalRelation(padOut, padRows)))
     val leadWin = Window(leads, Nil, order,
       Window(trails, Nil, order, union))
@@ -145,6 +153,6 @@ object RowsFollowingRule extends Rule[LogicalPlan] {
       Alias(v, s.alias.name)(exprId = s.alias.exprId, qualifier = s.alias.qualifier)
     }
     Some(Project(w.child.output ++ out,
-      Filter(EqualTo(padRef, Literal(0)), leadWin)))
+      Filter(IsNotNull(realRef), leadWin)))
   }
 }

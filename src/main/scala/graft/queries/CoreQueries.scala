@@ -154,8 +154,9 @@ object CoreQueries {
   /** E3c — the lake's SQL FACE, now both directions: batch 1 lands via
     * the API merge, batch 2 via `INSERT INTO` over the catalog (planned
     * as AppendData, routed through the SAME [[graft.etl.SnapshotLake]]
-    * LWW commit via the stamped merge contract), and the answer reads
-    * back with plain `spark.sql` over a catalog-qualified table (the
+    * LWW commit via the merge contract its manifest records), and the
+    * answer reads back with plain `spark.sql` over a catalog-qualified
+    * table (the
     * reference's whole value proposition is raw SQL over its tables,
     * `README.md:316-357` — the lake can stay neither read- nor
     * write-API-only). `loadTable` resolves the manifest driver-side and
@@ -170,7 +171,7 @@ object CoreQueries {
     val ev = t(s, dir, "events")
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts"), col("value"))
-    // batch 1 through the API merge — bootstraps the lake AND stamps the
+    // batch 1 through the API merge — bootstraps the lake AND records the
     // merge contract (keys/version/partition) the SQL write face uses
     graft.etl.SnapshotLake.merge(s, lake, ev.filter(col("event_id") % 2 === 0),
       Seq("user_id", "event_type"), "ts", "event_type", Seq("event_id"))
@@ -596,11 +597,11 @@ object CoreQueries {
     * file-source stream over two landings, two `Trigger.AvailableNow`
     * drains through `.format("graft-lake")` — each micro-batch lands as
     * the lake's usual keyed LWW merge commit, replay-guarded by the
-    * in-lake per-sink batch marker (LakeStreamSinkSpec pins replay skip,
-    * the crash-window convergence + empty CDC delta, and the refusal
-    * shapes). The oracle-checked law is e3j's verbatim: streamed
-    * batches land the identical LWW state the SQL INSERT twin lands —
-    * one write semantics across API, SQL, and streaming faces.
+    * per-sink watermark each manifest carries (LakeStreamSinkSpec pins
+    * replay skip and the refusal shapes, LakeManifestSpec the
+    * injected-crash replays). The oracle-checked law is e3j's verbatim:
+    * streamed batches land the identical LWW state the SQL INSERT twin
+    * lands — one write semantics across API, SQL, and streaming faces.
     */
   def e3nLakeStreamWrite(s: SparkSession, dir: String): DataFrame = {
     val root = ScratchLakes.fresh("e3n")

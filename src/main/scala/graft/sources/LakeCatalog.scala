@@ -43,7 +43,7 @@ import graft.etl.SnapshotLake
   * immutable until vacuum — the same stability contract as
   * [[SnapshotLake.read]]). `INSERT INTO <cat>.<table>` is supported and
   * ROUTES THROUGH [[SnapshotLake.merge]]'s keyed LWW commit (the merge
-  * contract comes from the spec the lake's own merges stamp — see
+  * contract comes from the current manifest, which records it — see
   * [[SnapshotLake.mergeSpecOf]]); `INSERT OVERWRITE` and DDL
   * (`createTable` / `dropTable` / `alterTable`) refuse loudly — a lake is
   * bootstrapped by its first API merge, never by SQL DDL.
@@ -378,10 +378,10 @@ private[sources] class LakeTable(
   /** The SQL WRITE face: `INSERT INTO <cat>.<table> …` plans an
     * `AppendData` over this table and routes the batch through
     * [[SnapshotLake.merge]]'s keyed LWW commit — the merge contract comes
-    * from the spec the lake's own merges stamped
-    * ([[SnapshotLake.mergeSpecOf]]), so SQL writers and API writers share
-    * ONE upsert semantics, snapshot isolation, and the single-writer
-    * lease (the [[JdbcUpsertTable]] V1-write pattern). `INSERT OVERWRITE`
+    * from the current manifest ([[SnapshotLake.mergeSpecOf]]), so SQL
+    * writers and API writers share ONE upsert semantics, snapshot
+    * isolation, and the single-writer lease (the [[JdbcUpsertTable]]
+    * V1-write pattern). `INSERT OVERWRITE`
     * has no truncate face and refuses at analysis; DDL stays read-only.
     */
   override def newWriteBuilder(
@@ -395,9 +395,8 @@ private[sources] class LakeTable(
                 s"lake table $tableName is append-merge only: INSERT " +
                   "OVERWRITE would discard history; use SnapshotLake " +
                   "vacuum/retention for lifecycle management")
-              // spec resolution happens INSIDE the lease (mergeViaSpec):
-              // a concurrent merge re-stamping the contract can never
-              // expose its spec-replacement window to this write
+              // the contract is read inside the lease (mergeViaSpec), from
+              // the snapshot this write commits over
               SnapshotLake.mergeViaSpec(data.sparkSession, lakePath, data)
             }
         }

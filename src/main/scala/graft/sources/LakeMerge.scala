@@ -201,9 +201,8 @@ object LakeMergeStrategy extends SparkStrategy {
           // be a different one, and the commit would run through the wrong
           // session's Hadoop conf/catalog state
           val spark = lake.session
-          val spec = SnapshotLake.mergeSpecOf(spark, lake.path).getOrElse(
-            refuse(s"table ${lake.name()} has no persisted merge contract " +
-              "(_manifests/table-meta); run one SnapshotLake.merge first"))
+          val spec = SnapshotLake.requireSpec(spark, lake.path,
+            SnapshotLake.currentManifest(spark, lake.path), "MERGE INTO")
           if (m.withSchemaEvolution) refuse("WITH SCHEMA EVOLUTION is not supported")
           // WHEN NOT MATCHED BY SOURCE THEN DELETE — the table-SYNC verb
           // (drop target keys the source no longer carries); unconditional

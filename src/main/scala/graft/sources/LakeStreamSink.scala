@@ -26,12 +26,11 @@ import graft.etl.SnapshotLake
   * evolution check, and file records as every batch and SQL write face,
   * so a streaming producer and an `INSERT INTO` land indistinguishable
   * commits. It is the lake's one streaming write face ([[JdbcStreamSink]]
-  * is the JDBC one). Exactly-once comes from the in-lake per-sink batch
-  * marker (checked inside the commit's lease; replays skip without
-  * reading the batch) plus keyed LWW convergence for the one
-  * crash-between window — see mergeStreamBatch's scaladoc for the full
-  * argument, including why CDC readers of the lake observe exactly-once
-  * too.
+  * is the JDBC one). Exactly-once comes from the per-sink watermark in
+  * the manifest: checked inside the commit's lease (replays skip without
+  * reading the batch) and advanced in the same manifest publish as the
+  * batch's data, so a replay never adds a generation and CDC readers of
+  * the lake observe exactly-once too.
   *
   * Sink API choice, deliberately V1 ([[Sink]], the Delta-Lake precedent):
   * a keyed MERGE's natural unit is the whole micro-batch DataFrame (it

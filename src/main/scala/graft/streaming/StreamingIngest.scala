@@ -460,7 +460,8 @@ object StreamingIngest {
     *
     * The ledger keeps ONE marker per `sinkId`, named by the highest folded
     * id, and a `batchId` at or below it is a replay — the rule
-    * [[graft.etl.SnapshotLake.mergeStreamBatch]] uses. It holds because a
+    * [[graft.etl.SnapshotLake.mergeStreamBatch]] applies to the per-sink
+    * watermark its manifests carry. It holds because a
     * `sinkId`'s ids only increase (micro-batch ids within a lineage,
     * `_commit_gen` for a CDC follower), and it keeps each fold's marker
     * cost independent of the stream's history.

@@ -659,8 +659,8 @@ object VerifySf1 {
                 .as("close_usd"),
               upper(col("event_type")).as("name"))
         }),
-      // e3n: writeStream INTO the lake (two AvailableNow drains through
-      // the V1 sink, replay-guarded by the in-lake batch marker) ↔ the
+      // e3n: writeStream INTO the lake (two AvailableNow drains through the
+      // V1 sink, replay-guarded by the manifest's per-sink watermark) ↔ the
       // same two-commit LWW algebra as e3j — streamed batches must land
       // the identical state the SQL INSERT twin lands, at 1.5M events
       ("e3n_lake_stream_write",

@@ -60,8 +60,8 @@ class SnapshotLakeSpec extends SparkSuite {
     // prepare WITHOUT publish = the exact mid-commit window: all affected
     // partitions' new gen dirs are fully installed on disk
     val deduped = Upsert.lastWriteWins(b2, Seq("key"), "v", Nil)
-    val pending = SnapshotLake.prepareMerge(
-      spark, dir, deduped, Seq("key"), "v", "dt", Nil).get
+    val pending = SnapshotLake.prepareMerge(spark, dir, deduped,
+      SnapshotLake.MergeSpec(Seq("key"), "v", "dt", Nil, Nil)).get
     // a reader resolving NOW sees the wholly-OLD snapshot — no torn state,
     // no transiently-absent partition, even though dt=2025-01-01's next gen
     // and the brand-new dt=2025-01-04 are already on disk
@@ -88,7 +88,8 @@ class SnapshotLakeSpec extends SparkSuite {
     val before = state(SnapshotLake.read(spark, dir))
     // simulate the crash: prepare (stage + install) and DROP the manifest
     val deduped = Upsert.lastWriteWins(b2, Seq("key"), "v", Nil)
-    SnapshotLake.prepareMerge(spark, dir, deduped, Seq("key"), "v", "dt", Nil)
+    SnapshotLake.prepareMerge(spark, dir, deduped,
+      SnapshotLake.MergeSpec(Seq("key"), "v", "dt", Nil, Nil))
     assert(state(SnapshotLake.read(spark, dir)) == before,
       "crashed (unpublished) commit must be invisible")
     // next writer GCs the orphan gens and commits cleanly
@@ -565,19 +566,19 @@ class SnapshotLakeSpec extends SparkSuite {
       org.apache.spark.sql.types.StructType(
         b1.schema.fields.map(_.copy(nullable = true))))
     assert(SnapshotLake.mergeSpecOf(spark, dir).contains(spec))
-    // a later merge lands gen 1 through the stamped contract
+    // a later merge lands gen 1 through the recorded contract
     SnapshotLake.merge(spark, dir, b1, Seq("key"), "v", "dt")
     assert(state(SnapshotLake.read(spark, dir)).keySet == Set("k1", "k2", "k3"))
     // duplicate create refuses on the live table
     val e = intercept[IllegalArgumentException](
       SnapshotLake.create(spark, dir, b1.schema, spec))
     assert(e.getMessage.contains("already exists"))
-    // crashed-create debris (meta, NO manifest) heals: the retry deletes
-    // the orphan and converges to a fresh table. The declared schema rides
-    // in the gen-0 manifest itself: no other metadata file is written
+    // a create that never published leaves no table: the retry converges
+    // to a fresh one. The declared schema and the contract ride in the
+    // gen-0 manifest itself: no other metadata file is written
     val dir2 = tmp()
     SnapshotLake.create(spark, dir2, b1.schema, spec)
-    assert(metaNames(dir2) == Set("manifest-" + "%020d".format(0L), "table-meta"))
+    assert(metaNames(dir2) == Set("manifest-" + "%020d".format(0L)))
     val mdir = new java.io.File(s"$dir2/_manifests")
     assert(new java.io.File(mdir, "manifest-" + "%020d".format(0L)).delete())
     SnapshotLake.create(spark, dir2, b1.schema, spec) // must not collide

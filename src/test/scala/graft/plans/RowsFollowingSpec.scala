@@ -115,7 +115,7 @@ class RowsFollowingSpec extends SparkSuite {
 
   test("multi-column total orders ride (rn carries the composite order)") {
     // no row index is synthesized any more: the cascade sorts by
-    // (__pad, grp, id) directly
+    // (__rf_real, grp, id) directly
     corpus(41L, 700).createOrReplaceTempView("rf_mc")
     compare(
       """SELECT id, SUM(d) OVER w AS sd, MIN(d) OVER w AS mn

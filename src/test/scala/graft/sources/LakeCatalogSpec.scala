@@ -305,14 +305,26 @@ class LakeCatalogSpec extends SparkSuite {
       "INSERT OVERWRITE glake.insguard SELECT * FROM glake.insguard"))
     assert(e1.getMessage.contains("append-merge only") ||
       e1.getMessage.toLowerCase.contains("overwrite"), e1.getMessage)
-    // a lake without the stamped contract (pre-round-11 layout) refuses
-    // INSERT with remediation, instead of guessing keys
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_manifests/table-meta"), false)
-    val e2 = intercept[Exception](spark.sql(
+    // a lake without a recorded contract (a manifest written before the
+    // manifest carried it, and no legacy table-meta) refuses every keyed
+    // face with the one remedy, instead of guessing keys
+    graft.etl.LakeManifestSpec.asPreContractManifest(spark, dir)
+    def refusal(face: String)(body: => Any): Unit = {
+      val msg = intercept[Exception](body).getMessage
+      assert(msg.contains("merge contract") && msg.contains(face) &&
+        msg.contains("TBLPROPERTIES ('merge_keys'=") &&
+        msg.contains("SnapshotLake.merge"), msg)
+    }
+    refusal("a SQL write")(spark.sql(
       "INSERT INTO glake.insguard VALUES ('k9','2025-01-09',CAST(1 AS BIGINT),9.0)"))
-    assert(e2.getMessage.contains("merge contract"), e2.getMessage)
+    b2.createOrReplaceTempView("insguard_src")
+    refusal("MERGE INTO")(spark.sql(
+      "MERGE INTO glake.insguard t USING insguard_src s ON t.key = s.key " +
+        "WHEN MATCHED THEN UPDATE SET *"))
+    refusal("a graft-lake stream")(SnapshotLake.mergeStreamBatch(spark, dir, b2, "s", 0L))
+    SnapshotLake.merge(spark, dir, b2, Seq("key"), "v", "dt")
+    graft.etl.LakeManifestSpec.asPreContractManifest(spark, dir)
+    refusal("changes()")(SnapshotLake.changes(spark, dir, 1L, 2L))
   }
 
   test("SQL DELETE routes through the atomic lake delete; opaque conditions refuse") {

@@ -11,10 +11,9 @@ import graft.etl.SnapshotLake
 
 /** `writeStream.format("graft-lake")` ([[graft.sources.LakeStreamSink]]):
   * each micro-batch lands as the lake's keyed LWW merge commit,
-  * exactly-once via the in-lake per-sink batch marker — replay skips
-  * without reading the batch, the crash-between window converges through
-  * LWW with an EMPTY CDC delta for the duplicate generation, and the
-  * refusal shapes (Complete mode, partitionBy, missing checkpoint,
+  * exactly-once via the per-sink watermark its manifest carries — replay
+  * skips without committing (LakeManifestSpec injects the crashes on
+  * either side of the publish), and the refusal shapes (Complete mode, partitionBy, missing checkpoint,
   * missing contract) fail loudly at the right time.
   */
 class LakeStreamSinkSpec extends SparkSuite {
@@ -92,29 +91,14 @@ class LakeStreamSinkSpec extends SparkSuite {
     assert(SnapshotLake.retainedGens(spark, lake).max == gen)
     assert(state(lake) == Map("k1" -> (1L, 10.0)))
 
-    // an EMPTY later batch advances the marker without publishing
-    assert(SnapshotLake.mergeStreamBatch(spark, lake, rows(), sid, 1L))
-    assert(SnapshotLake.streamBatchApplied(spark, lake, sid).contains(1L))
+    // an EMPTY later batch publishes nothing and leaves the watermark:
+    // replaying it is again a no-op
+    assert(!SnapshotLake.mergeStreamBatch(spark, lake, rows(), sid, 1L))
+    assert(SnapshotLake.streamBatchApplied(spark, lake, sid).contains(0L))
     assert(SnapshotLake.retainedGens(spark, lake).max == gen)
 
-    // a DIFFERENT sink lineage has its own marker
+    // a DIFFERENT sink lineage has its own watermark
     assert(SnapshotLake.streamBatchApplied(spark, lake, "sink-b").isEmpty)
-  }
-
-  test("crash-between window: re-merge converges, duplicate gen's CDC delta is empty") {
-    val root = tmp("crash")
-    val lake = freshLake(root)
-    val batch = rows(("k1", "2025-01-01", 1L, 10.0), ("k2", "2025-01-02", 1L, 20.0))
-    assert(SnapshotLake.mergeStreamBatch(spark, lake, batch, "sink-a", 0L))
-    val gen = SnapshotLake.retainedGens(spark, lake).max
-    val before = state(lake)
-    // simulate "manifest published, marker write lost": the replay arrives
-    // with no marker (a fresh lineage), re-merging the SAME batch
-    assert(SnapshotLake.mergeStreamBatch(spark, lake, batch, "sink-lost", 0L))
-    val gen2 = SnapshotLake.retainedGens(spark, lake).max
-    assert(gen2 == gen + 1)            // a duplicate generation IS published…
-    assert(state(lake) == before)      // …but the snapshot is identical…
-    assert(SnapshotLake.changes(spark, lake, gen, gen2).isEmpty) // …and CDC-invisible
   }
 
   test("refusals: Complete mode, partitionBy, missing checkpoint, missing contract") {
@@ -167,8 +151,11 @@ class LakeStreamSinkSpec extends SparkSuite {
         .start()
       q.awaitTermination()
     }
-    assert(err.getMessage.contains("merge contract") ||
-      Option(err.getCause).exists(_.getMessage.contains("merge contract")))
+    val msg = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).find(m => m != null && m.contains("merge contract"))
+      .getOrElse(err.getMessage)
+    assert(msg.contains("merge contract") && msg.contains("graft-lake stream") &&
+      msg.contains("'merge_keys'") && msg.contains("SnapshotLake.merge"), msg)
   }
 
   test("round trip: writeStream in, readStream CDC out, states agree") {
