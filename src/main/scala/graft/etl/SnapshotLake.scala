@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, LessThan, Literal}
 import org.apache.spark.sql.execution.datasources.{
   FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
@@ -73,6 +73,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    orphan gens and records (single-writer lease) and re-runs to
   *    convergence (idempotent LWW).
   *  - SHARED MECHANISM: [[merge]] (keyed last-write-wins upsert),
+  *    [[foldStreamBatch]] (a state MV's stream fold),
   *    [[delete]]/[[deleteKeys]] (row-level takedown), and [[compact]]
   *    (small-file maintenance) all commit through the same
   *    prepare→publish path; [[readAt]] gives time travel over retained
@@ -675,7 +676,7 @@ object SnapshotLake {
       tieBreakers: Seq[String] = Nil,
       statsCols: Seq[String] = Nil): Unit =
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      mergeChecked(spark, path, updates,
+      prepareMerge(spark, path, currentManifest(spark, path), updates,
         MergeSpec(keys, versionCol, partitionCol, tieBreakers, statsCols))
         .foreach { case (fs, m) => publish(fs, path, m) }
     }
@@ -686,31 +687,10 @@ object SnapshotLake {
     */
   def mergeViaSpec(spark: SparkSession, path: String, updates: DataFrame): Unit =
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      mergeChecked(spark, path, updates,
-        requireSpec(spark, path, currentManifest(spark, path), "a SQL write"))
+      val cur = currentManifest(spark, path)
+      prepareMerge(spark, path, cur, updates, requireSpec(spark, path, cur, "a SQL write"))
         .foreach { case (fs, m) => publish(fs, path, m) }
     }
-
-  /** The commit body shared by [[merge]], [[mergeViaSpec]] and
-    * [[mergeStreamBatch]]: [[prepareMerge]] under `spec` after checking the
-    * batch carries the spec's partition and stats columns; the caller
-    * holds the lease and publishes. `updates` is the RAW batch —
-    * [[prepareMerge]] owns the within-batch LWW (its affected-partition
-    * detection skips the window entirely when partitionCol is a merge key,
-    * and its into-existing branch deliberately keeps the two-stage
-    * batch-dedup + union-LWW shape: the folded single union-level window
-    * was measured slower at sf0.1, e3b 1.84→2.51 s, round 14).
-    * Pre-deduplicating here would pay the batch window one extra time on
-    * every path.
-    */
-  private def mergeChecked(spark: SparkSession, path: String, updates: DataFrame,
-      spec: MergeSpec): Option[(FileSystem, Manifest)] = {
-    require(updates.columns.contains(spec.partitionCol),
-      s"updates must carry partition column '${spec.partitionCol}'")
-    require(spec.statsCols.forall(updates.columns.contains),
-      s"statsCols ${spec.statsCols.mkString(",")} must be update columns")
-    prepareMerge(spark, path, updates, spec)
-  }
 
   /** CREATE an empty lake table with a declared schema and merge contract —
     * the DDL bootstrap `CREATE TABLE <cat>.<t> (…) TBLPROPERTIES
@@ -748,8 +728,8 @@ object SnapshotLake {
 
   /** The highest micro-batch id this sink lineage has applied, as the
     * current manifest records it, or None for a lineage that never
-    * committed. Outside-lease reads are for inspection;
-    * [[mergeStreamBatch]] re-reads inside its lease.
+    * committed. Outside-lease reads are for inspection; the stream
+    * commits re-read inside their lease.
     */
   def streamBatchApplied(spark: SparkSession, path: String,
       sinkId: String): Option[Long] =
@@ -777,19 +757,64 @@ object SnapshotLake {
     * checkpoint does (the sink derives it from `checkpointLocation`).
     */
   def mergeStreamBatch(spark: SparkSession, path: String, updates: DataFrame,
-      sinkId: String, batchId: Long): Boolean = {
+      sinkId: String, batchId: Long): Boolean =
+    commitStreamBatch(spark, path, sinkId, batchId) { cur =>
+      prepareMerge(spark, path, cur, updates, requireSpec(spark, path, cur, "a graft-lake stream"))
+    }
+
+  /** [[mergeStreamBatch]] for an MV of state folded in from a stream (the
+    * [[graft.streaming.StreamingIngest]] lanes): the touched partitions'
+    * new rows are `fold(existing touched rows, state)` instead of keyed
+    * LWW, and only they are read and rewritten. `state` (the batch reduced
+    * to state rows) and the fold's output carry `partitionCol`, which the
+    * fold's key must fix. A fold need not be idempotent: the watermark
+    * alone makes it exactly-once, so `sinkId` must be the stream's stable
+    * logical identity with only increasing ids (`_commit_gen` for a
+    * [[graft.sources.LakeCdcSource]] follower). It records no
+    * [[MergeSpec]] of its own (the current one carries forward), so an MV
+    * refuses the keyed write faces and [[changes]].
+    */
+  def foldStreamBatch(spark: SparkSession, path: String, state: DataFrame,
+      partitionCol: String, sinkId: String, batchId: Long)(
+      fold: (DataFrame, DataFrame) => DataFrame): Boolean =
+    commitStreamBatch(spark, path, sinkId, batchId) { cur =>
+      if (cur.isEmpty) requireNoFlatState(spark, path)
+      prepareFold(spark, path, cur, state, partitionCol)(fold)
+    }
+
+  /** The watermark check and publish both stream commits share (see
+    * [[mergeStreamBatch]]); `prepare` runs over the in-lease manifest.
+    */
+  private def commitStreamBatch(spark: SparkSession, path: String, sinkId: String,
+      batchId: Long)(prepare: Option[Manifest] => Option[(FileSystem, Manifest)]): Boolean = {
     require(sinkId.nonEmpty, "sinkId must be non-empty")
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
       val cur = currentManifest(spark, path)
       if (cur.flatMap(_.streams.get(sinkId)).exists(_ >= batchId)) false
-      else mergeChecked(spark, path, updates,
-        requireSpec(spark, path, cur, "a graft-lake stream")) match {
+      else prepare(cur) match {
         case Some((fs, m)) =>
           publish(fs, path, m.copy(streams = m.streams + (sinkId -> batchId)))
           true
         case None => false
       }
     }
+  }
+
+  /** Refuse a flat state MV from before MVs committed through the lake
+    * (root-level parquet files or `__applied/` markers, no manifest).
+    */
+  private def requireNoFlatState(spark: SparkSession, path: String): Unit = {
+    val fs = fsOf(spark, path)
+    val root = new Path(path)
+    if (fs.exists(root) && fs.listStatus(root).exists { s =>
+        val n = s.getPath.getName
+        n == "__applied" || (s.isFile && n.endsWith(".parquet"))
+      }) throw new IllegalStateException(
+      s"$path holds a flat state MV (parquet files or __applied/ markers); " +
+        "folding here would ignore its rows and re-fold every replay. Import " +
+        s"it once: SnapshotLake.foldStreamBatch spark.read.parquet(\"$path\") " +
+        "plus the lane's partition column into a fresh path with batchId = " +
+        "the id under __applied/<sinkId>, then swap the two paths")
   }
 
   /** `ALTER TABLE … ADD COLUMN` — the widen-only evolution contract's DDL
@@ -1168,45 +1193,89 @@ object SnapshotLake {
       }
     }
 
-  /** Everything EXCEPT the publish: GC orphans, stage the merged affected
-    * partitions, install their new gen dirs, record their files, and
-    * return the pending manifest. Split out so the spec can pin the law
-    * directly: after prepare, a reader sees the wholly-old snapshot; after
-    * [[publish]], the wholly-new one. The pending manifest records `spec`
-    * and carries the current stream watermarks forward. Callers must hold
-    * the lease. None = empty batch.
+  /** Everything EXCEPT the publish of a keyed LWW commit of the RAW batch
+    * `updates` over `cur`, the manifest the caller resolved in its lease
+    * (the spec pins the law: after prepare, readers see the wholly-old
+    * snapshot; after [[publish]], the wholly-new one). The into-existing
+    * branch keeps the two-stage batch-dedup + union-LWW shape: one
+    * union-level window was measured slower at sf0.1 (e3b 1.84→2.51 s,
+    * round 14). None = empty batch.
     */
   private[etl] def prepareMerge(
       spark: SparkSession,
       path: String,
+      cur: Option[Manifest],
       updates: DataFrame,
       spec: MergeSpec): Option[(FileSystem, Manifest)] = {
     val MergeSpec(keys, versionCol, partitionCol, tieBreakers, statsCols) = spec
+    require(updates.columns.contains(partitionCol),
+      s"updates must carry partition column '$partitionCol'")
+    require(statsCols.forall(updates.columns.contains),
+      s"statsCols ${statsCols.mkString(",")} must be update columns")
+    val batch = Upsert.lastWriteWins(updates, keys, versionCol, tieBreakers)
+    // Affected-partition detection. When partitionCol is one of the merge
+    // keys (the common contract), every key group's LWW winner carries its
+    // group's partition value, so the raw batch and its deduped winners
+    // span the SAME distinct values — detect from the raw batch and skip a
+    // full window pass (the scan is column-pruned to partitionCol).
+    // When partitionCol is NOT a key, a group's winner can land in a
+    // different partition than its losers and "affected" has always meant
+    // the WINNERS' partitions — keep that semantics and pay the window.
+    val touched = if (keys.contains(partitionCol)) updates else batch
+    replacePartitions(spark, path, cur, partitionCol, touched, updates.schema,
+      Some(spec), "merge batch") {
+      case Some(existing) =>
+        Upsert.lastWriteWins(
+          existing.withColumn("__gen", lit(0L))
+            .unionByName(batch.withColumn("__gen", lit(1L))),
+          keys, "__gen", versionCol +: tieBreakers).drop("__gen")
+      case None => batch
+    }
+  }
+
+  /** Everything EXCEPT the publish of a [[foldStreamBatch]] commit over
+    * `cur`. A new partition folds `empty`, so even the first fold records
+    * the fold's output schema, not the raw state's.
+    */
+  private[graft] def prepareFold(spark: SparkSession, path: String,
+      cur: Option[Manifest], state: DataFrame, partitionCol: String)(
+      fold: (DataFrame, DataFrame) => DataFrame): Option[(FileSystem, Manifest)] = {
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      cur.flatMap(snapshotSchema(spark, path, _)).getOrElse(state.schema))
+    val schema = fold(empty, state).schema
+    require(state.columns.contains(partitionCol) && schema.fieldNames.contains(partitionCol),
+      s"fold state and output must carry partition column '$partitionCol'")
+    replacePartitions(spark, path, cur, partitionCol, state, schema,
+      cur.flatMap(_.spec), "fold batch")(existing => fold(existing.getOrElse(empty), state))
+  }
+
+  /** The partition-replace body merge and fold commits share: the
+    * partitions `touched` names get `rowsOf(their existing rows, None when
+    * all are new)`, in `schema`, as a new generation; the pending manifest
+    * records `spec` and carries the watermarks forward. Callers hold the
+    * lease. None = nothing touched.
+    */
+  private def replacePartitions(
+      spark: SparkSession,
+      path: String,
+      cur: Option[Manifest],
+      partitionCol: String,
+      touched: DataFrame,
+      schema: StructType,
+      spec: Option[MergeSpec],
+      verb: String)(
+      rowsOf: Option[DataFrame] => DataFrame): Option[(FileSystem, Manifest)] = {
     val fs = fsOf(spark, path)
-    val cur = currentManifest(spark, path)
     val curGen = cur.map(_.gen).getOrElse(0L)
     cur.foreach(m => require(m.partitionCol == partitionCol,
       s"$path is partitioned by ${m.partitionCol}, not $partitionCol"))
     // the widen-only evolution contract: refuse narrowing/retyping batches
     // BEFORE any data moves (a missing column would silently truncate the
-    // merged partitions; see checkEvolution's messages for remediation)
+    // rewritten partitions; see checkEvolution's messages for remediation)
     val table = cur.flatMap(m => snapshotSchema(spark, path, m))
-    table.foreach(t => checkEvolution(t, updates.schema))
+    table.foreach(t => checkEvolution(t, schema))
     gcOrphans(fs, path, curGen)
-    val staging = new Path(path, "_staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    // Affected-partition detection. When partitionCol is one of the merge
-    // keys (the common contract), every key group's LWW winner carries its
-    // group's partition value, so the raw batch and its deduped winners
-    // span the SAME distinct values — detect from the raw batch and skip a
-    // full window pass (the scan below is column-pruned to partitionCol).
-    // When partitionCol is NOT a key, a group's winner can land in a
-    // different partition than its losers and "affected" has always meant
-    // the WINNERS' partitions — keep that semantics and pay the window.
-    val affectedSrc =
-      if (keys.contains(partitionCol)) updates
-      else Upsert.lastWriteWins(updates, keys, versionCol, tieBreakers)
-    val affected = affectedPartitions(spark, affectedSrc, partitionCol, "merge batch")
+    val affected = affectedPartitions(spark, touched, partitionCol, verb)
     if (affected.isEmpty) return None
     require(affected.forall(_._1 != null),
       s"null $partitionCol in update batch: a null partition value has no " +
@@ -1229,12 +1298,12 @@ object SnapshotLake {
     // Entries are matched by VALUE, not by directory name: the value string
     // is layout-independent (dir names changed once already — bare hex →
     // `h`-prefixed hex), so a manifest written under an older dir scheme
-    // still LWW-merges correctly — its old entry is read through its
-    // verbatim dirName, replaced by a new-layout entry, and the stale gen
-    // dir ages out at vacuum. Matching by dirName would silently keep the
-    // legacy entry ALONGSIDE the new one for the same value (duplicate
-    // rows on read). A well-formed manifest has one entry per value; a
-    // duplicate means corruption — fail loudly before making it worse.
+    // still merges correctly — its old entry is read through its verbatim
+    // dirName, replaced by a new-layout entry, and the stale gen dir ages
+    // out at vacuum. Matching by dirName would silently keep the legacy
+    // entry ALONGSIDE the new one for the same value (duplicate rows on
+    // read). A well-formed manifest has one entry per value; a duplicate
+    // means corruption — fail loudly before making it worse.
     val affectedValues = affected.map(_._1).toSet
     cur.foreach { m =>
       val dup = m.entries.groupBy(_.value).collect { case (v, es) if es.length > 1 => v }
@@ -1245,23 +1314,12 @@ object SnapshotLake {
     val hit = cur.map(_.entries.filter(e => affectedValues.contains(e.value)))
       .getOrElse(Nil)
     // Existing rows of ONLY the affected partitions, read through the
-    // manifest's gen dirs. Schema pinned to the updates' (every column —
+    // manifest's gen dirs under the new rows' schema (every column —
     // partitionCol included — is a DATA column in the files).
-    val existing =
-      if (hit.isEmpty) None
-      else Some(relation(spark, path, hit, updates.schema))
-    val merged = existing match {
-      case Some(ex) =>
-        Upsert.lastWriteWins(
-          ex.withColumn("__gen", lit(0L))
-            .unionByName(Upsert.lastWriteWins(updates, keys, versionCol,
-              tieBreakers).withColumn("__gen", lit(1L))),
-          keys, "__gen", versionCol +: tieBreakers).drop("__gen")
-      case None => Upsert.lastWriteWins(updates, keys, versionCol, tieBreakers)
-    }
-    val newEntries = stageInstall(spark, fs, path, merged, partitionCol,
-      affected.map { case (v, h) => h -> v }.toMap, newGen, statsCols,
-      updates.schema)
+    val rows = rowsOf(if (hit.isEmpty) None else Some(relation(spark, path, hit, schema)))
+    val newEntries = stageInstall(spark, fs, path, rows, partitionCol,
+      affected.map { case (v, h) => h -> v }.toMap, newGen,
+      spec.map(_.statsCols).getOrElse(Nil).filter(schema.fieldNames.contains), schema)
     val kept = cur.map(_.entries.filterNot(e => affectedValues.contains(e.value)))
       .getOrElse(Nil)
     // The batch defines the snapshot's COLUMN SET — checkEvolution
@@ -1272,14 +1330,14 @@ object SnapshotLake {
     // (SELECT * / positional INSERT INTO binding would change across
     // commits). Parquet reads under a pinned schema match columns BY
     // NAME, so the files' physical order is free to differ.
-    val batchByName = updates.schema.fields.map(f => f.name -> f).toMap
+    val byName = schema.fields.map(f => f.name -> f).toMap
     val recorded = table match {
-      case Some(t) => StructType(t.fields.map(f => batchByName(f.name)) ++
-        updates.schema.fields.filterNot(f => t.fieldNames.contains(f.name)))
-      case None => updates.schema
+      case Some(t) => StructType(t.fields.map(f => byName(f.name)) ++
+        schema.fields.filterNot(f => t.fieldNames.contains(f.name)))
+      case None => schema
     }
     Some((fs, Manifest(newGen, partitionCol, kept ++ newEntries, schema = Some(recorded),
-      spec = Some(spec), streams = cur.map(_.streams).getOrElse(Map.empty))))
+      spec = spec, streams = cur.map(_.streams).getOrElse(Map.empty))))
   }
 
   /** The distinct (value string, hex dir key) pairs of `partitionCol` in

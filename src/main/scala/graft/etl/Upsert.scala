@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *  2. an idempotent keyed sink (JDBC ON CONFLICT writer, or a
   *     storage-level merge for lake targets).
   *
-  * Keyed lake tables have one durable format, [[SnapshotLake]] (manifest
-  * commits; the dedup corpus included, see
+  * Keyed lake tables and the streaming state MVs have one durable format,
+  * [[SnapshotLake]] (the dedup corpus included, see
   * [[graft.dedup.IncrementalDedup.mergeIntoCorpus]]). The one parquet
   * writer left here, [[compactParquetDir]], maintains the blind-append
   * admission-index dirs.

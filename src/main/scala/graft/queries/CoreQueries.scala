@@ -374,9 +374,9 @@ object CoreQueries {
     * The replica is materialized (`localCheckpoint`) inside each
     * micro-batch, so no frame outlives its batch and the lineage stays one
     * fold deep. A standing consumer over hundreds of commits should fold
-    * into durable state instead: [[graft.streaming.StreamingIngest
-    * .foldStateBatchOnce]] with the commit generation as the batch id
-    * (LakeCdcSpec shows the composition).
+    * into durable state instead: [[graft.etl.SnapshotLake.foldStreamBatch]]
+    * with the commit generation as the batch id (LakeCdcSpec shows the
+    * composition).
     */
   def e3iLakeCdcFollow(s: SparkSession, dir: String): DataFrame = {
     val root = ScratchLakes.fresh("e3i")

@@ -41,12 +41,13 @@ import graft.etl.SnapshotLake
   * native vectorized parquet reader, filter/column pushdown, and AQE for
   * free, and stays pinned to the resolved snapshot (gen dirs are
   * immutable until vacuum — the same stability contract as
-  * [[SnapshotLake.read]]). `INSERT INTO <cat>.<table>` is supported and
-  * ROUTES THROUGH [[SnapshotLake.merge]]'s keyed LWW commit (the merge
-  * contract comes from the current manifest, which records it — see
-  * [[SnapshotLake.mergeSpecOf]]); `INSERT OVERWRITE` and DDL
-  * (`createTable` / `dropTable` / `alterTable`) refuse loudly — a lake is
-  * bootstrapped by its first API merge, never by SQL DDL.
+  * [[SnapshotLake.read]]). `INSERT INTO` and `MERGE INTO` route through
+  * [[SnapshotLake.merge]]'s keyed LWW commit under the contract the current
+  * manifest records ([[SnapshotLake.mergeSpecOf]]). `CREATE TABLE …
+  * TBLPROPERTIES ('merge_keys'=…)` bootstraps a lake, `ALTER TABLE … ADD
+  * COLUMN` widens it, and `DROP TABLE` purges it under `allow_drop=true`;
+  * `INSERT OVERWRITE`, other `ALTER TABLE` changes, `RENAME TABLE` and
+  * `DROP TABLE` without `allow_drop` refuse loudly.
   *
   * Time travel: `VERSION AS OF n` loads manifest n exactly (must be
   * retained); `TIMESTAMP AS OF t` loads the newest manifest PUBLISHED at

@@ -41,10 +41,10 @@ import graft.etl.SnapshotLake
   * `airflow/dags/market_data_dag.py:13-37`).
   *
   * A consumer that folds each commit in order (e3i) reads with
-  * `maxGensPerBatch = 1` into `foreachBatch`; a non-idempotent fold keys
-  * its own ledger on `_commit_gen` ([[graft.streaming.StreamingIngest
-  * .foldStateBatchOnce]]), so even a lost checkpoint cannot fold a commit
-  * twice.
+  * `maxGensPerBatch = 1` into `foreachBatch`; a non-idempotent fold
+  * commits through [[graft.etl.SnapshotLake.foldStreamBatch]] with
+  * `_commit_gen` as its batch id, so the MV's watermark is keyed on the
+  * lake's history and even a lost checkpoint cannot fold a commit twice.
   *
   * Semantics (the CDC contract):
   *  - OFFSETS ARE MANIFEST GENERATIONS: offset `{"gen": n}` means "every

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.etl.{CurrencyConverter, Ddl, Pipeline, Standardizer, Upsert}
+import graft.etl.{CurrencyConverter, Ddl, Pipeline, Scd2, SnapshotLake, Standardizer, Upsert}
+import graft.queries.CoreQueries
+import graft.text.TextQueries
 
 /** Incrementally-maintained OHLC candle for one (user, hour) group —
   * mapGroupsWithState state/output. Open/close are tracked by remembering
@@ -292,16 +294,12 @@ object StreamingIngest {
       indexPath: String,
       corpusPath: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.dedup.IncrementalDedup.admitAndCommit(
-          batch.sparkSession, indexPath, batch,
-          graft.dedup.IncrementalDedup.mergeIntoCorpus(batch.sparkSession, corpusPath, _))
-        ()
-      }
-      .start()
+    drainAvailableNow(docs, checkpoint) { (batch, _) =>
+      graft.dedup.IncrementalDedup.admitAndCommit(
+        batch.sparkSession, indexPath, batch,
+        graft.dedup.IncrementalDedup.mergeIntoCorpus(batch.sparkSession, corpusPath, _))
+      ()
+    }
 
   /** Streaming document admission through the FUZZY (MinHash-LSH) gate —
     * [[admitDocumentsAvailableNow]]'s near-dup twin for the crawl loop
@@ -327,68 +325,49 @@ object StreamingIngest {
       corpusPath: String,
       checkpoint: String,
       minLanes: Int = 12): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sink: DataFrame => Unit =
-          graft.dedup.IncrementalDedup.mergeIntoCorpus(batch.sparkSession, corpusPath, _)
-        if (minLanes > 0)
-          graft.dedup.IncrementalDedup.admitAndCommitMinhashEstimated(
-            batch.sparkSession, bucketIndexPath, batch, sink, minLanes)
-        else
-          graft.dedup.IncrementalDedup.admitAndCommitMinhash(
-            batch.sparkSession, bucketIndexPath, batch, sink)
-        ()
-      }
-      .start()
+    drainAvailableNow(docs, checkpoint) { (batch, _) =>
+      val sink: DataFrame => Unit =
+        graft.dedup.IncrementalDedup.mergeIntoCorpus(batch.sparkSession, corpusPath, _)
+      if (minLanes > 0)
+        graft.dedup.IncrementalDedup.admitAndCommitMinhashEstimated(
+          batch.sparkSession, bucketIndexPath, batch, sink, minLanes)
+      else
+        graft.dedup.IncrementalDedup.admitAndCommitMinhash(
+          batch.sparkSession, bucketIndexPath, batch, sink)
+      ()
+    }
 
   /** One micro-batch folded into t19's persisted vocab-state MV (the
-    * streaming face of the text lane's e12; see
-    * [[graft.text.TextQueries.t19IncrementalVocab]]). Sum-merge is NOT
-    * idempotent — re-folding a batch double-counts — so the replay marker
-    * cannot be written AFTER the data commit the way an idempotent LWW
-    * sink's can (that crash window is benign only under idempotent merges).
-    * Here the marker is written INTO the staged state directory and
-    * published by the SAME atomic rename that publishes the merged counts:
-    * state and fold-ledger commit together, so a replay after any crash
-    * either sees no marker and refolds from the still-unswapped old state,
-    * or sees the marker and skips. (`__applied/` is underscore-prefixed, so
-    * Spark's source listing hides it from the parquet read.) Crash between
-    * the two swap renames parks the state at `__old`; the recovery preamble
-    * restores it and the refold rebuilds the same staging. Lease-guarded
-    * like every rename-based lake mutation. Returns whether the batch was
-    * folded (false = replay suppressed).
+    * streaming face of [[graft.text.TextQueries.t19IncrementalVocab]]), a
+    * lake partitioned by `source`. Sum-merge is NOT idempotent, so the
+    * batch commits through [[graft.etl.SnapshotLake.foldStreamBatch]]: its
+    * counts and the sink's watermark publish in one manifest, and a replay
+    * of an applied (`sinkId`, `batchId`) publishes nothing. Returns whether
+    * the batch was folded.
     */
   def foldVocabBatchOnce(
       batch: DataFrame,
       batchId: Long,
       statePath: String,
       sinkId: String = "default"): Boolean =
-    foldStateBatchOnce(batch, batchId, statePath, sinkId,
-      graft.text.TextQueries.t19StateOf,
-      (cur, b) => graft.text.TextQueries.t19MergeStates(cur, b))
+    vocabLane(batch).commit(statePath, sinkId, batchId)
 
   /** One micro-batch folded into e12's persisted candle-state MV — the
-    * market-data lane of the SAME exactly-once fold as [[foldVocabBatchOnce]]
-    * (shared machinery: [[foldStateBatchOnce]]). The batch reduces to one
-    * mergeable row per touched (user_id, day) ([[graft.queries.CoreQueries
-    * .e12StateOf]]) and folds into the stored state with the associative,
+    * market-data lane of the SAME exactly-once fold as
+    * [[foldVocabBatchOnce]]. The batch reduces to one mergeable row per
+    * touched (user_id, day) ([[graft.queries.CoreQueries.e12StateOf]]) and
+    * folds into the stored state of the touched days only with the
     * order-independent endpoint merge ([[graft.queries.CoreQueries
-    * .e12FoldStates]]); n_bars/volume are SUMS, so like the vocab fold the
-    * merge is not idempotent and replay suppression must commit atomically
-    * with the data — which the shared rename protocol provides. Query the
-    * maintained view with `CoreQueries.e12MergeStates(spark.read.parquet(
-    * statePath))` — e4's exact output, never rescanning history.
+    * .e12FoldStates]]; n_bars/volume are SUMS). Query the maintained view
+    * with `CoreQueries.e12MergeStates(SnapshotLake.read(spark, statePath))`
+    * — e4's exact output, never rescanning history.
     */
   def foldCandleBatchOnce(
       batch: DataFrame,
       batchId: Long,
       statePath: String,
       sinkId: String = "default"): Boolean =
-    foldStateBatchOnce(batch, batchId, statePath, sinkId,
-      graft.queries.CoreQueries.e12StateOf,
-      (cur, b) => graft.queries.CoreQueries.e12FoldStates(cur, b))
+    candleLane(batch).commit(statePath, sinkId, batchId)
 
   /** One micro-batch folded into a persisted SCD2 dimension-history MV —
     * dimension history joins vocab (t19) and candles (e12) as the THIRD
@@ -396,13 +375,10 @@ object StreamingIngest {
     * change per (key, ts) (lexicographic MAX of the value struct — an
     * associative, grouping-independent tie policy, e14's max-value rule
     * generalized), builds a history FRAGMENT ([[graft.etl.Scd2.build]]),
-    * and folds it into the stored history with [[graft.etl.Scd2.fold]]:
-    * touched keys rebuilt, untouched keys streamed through an anti-join —
-    * per-tick cost proportional to the touched keys' version counts, never
-    * a history rescan. The fold is NOT replay-safe on its own (a replayed
-    * batch re-wins its (key, ts) collisions against corrections that
-    * landed in between), so suppression must commit atomically with the
-    * data — the shared rename protocol provides exactly that.
+    * and folds it into the stored history of the touched key buckets with
+    * [[graft.etl.Scd2.fold]]; other buckets are not read. The fold is NOT
+    * replay-safe on its own (a replayed batch re-wins its (key, ts)
+    * collisions against corrections that landed in between).
     */
   def foldScd2BatchOnce(
       batch: DataFrame,
@@ -411,28 +387,17 @@ object StreamingIngest {
       keyCol: String,
       tsCol: String,
       valueCols: Seq[String],
-      sinkId: String = "default"): Boolean = {
-    val vs = struct(valueCols.map(col): _*)
-    foldStateBatchOnce(batch, batchId, statePath, sinkId,
-      b => graft.etl.Scd2.build(
-        b.groupBy(col(keyCol), col(tsCol)).agg(max(vs).as("__vs"))
-          .select(col(keyCol) +: col(tsCol) +: valueCols.map(c => col(s"__vs.$c")): _*),
-        keyCol, tsCol, valueCols),
-      // the stored state IS the history table; flatten the batch fragment
-      // back to changes (valid_from = the original ts) and Scd2.fold them
-      (cur, bState) => graft.etl.Scd2.fold(cur,
-        bState.select(col(keyCol) +: col("valid_from").as(tsCol) +:
-          valueCols.map(col): _*),
-        keyCol, tsCol, valueCols))
-  }
+      sinkId: String = "default"): Boolean =
+    scd2Lane(batch, keyCol, tsCol, valueCols).commit(statePath, sinkId, batchId)
 
   /** Maintain an SCD2 dimension-history MV from a change stream — the
     * dimension lane of [[vocabStateAvailableNow]]/[[candleStateAvailableNow]],
     * same `sinkId` contract (the stream's stable LOGICAL identity, so a
-    * rebuilt checkpoint's full re-delivery lands in the same marker
-    * namespace and is suppressed). Query the maintained history directly:
-    * `spark.read.parquet(statePath)` is the exact [[graft.etl.Scd2.build]]
-    * output over everything folded so far (StreamingSpec pins the law).
+    * rebuilt checkpoint's full re-delivery meets the same watermark and is
+    * suppressed). Query the maintained history directly:
+    * `SnapshotLake.read(spark, statePath)` is the exact
+    * [[graft.etl.Scd2.build]] output over everything folded so far, plus
+    * the `key_bucket` partition column (StreamingSpec pins the law).
     */
   def scd2StateAvailableNow(
       changes: DataFrame,
@@ -442,137 +407,101 @@ object StreamingIngest {
       keyCol: String,
       tsCol: String,
       valueCols: Seq[String]): StreamingQuery =
-    changes.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldScd2BatchOnce(batch, batchId, statePath, keyCol, tsCol, valueCols, sinkId)
-        ()
-      }
-      .start()
-
-  /** The shared exactly-once state fold behind [[foldVocabBatchOnce]] and
-    * [[foldCandleBatchOnce]]: reduce the batch with `stateOf`, fold it into
-    * the persisted state with `merge` (which must be a NON-rescanning
-    * state × state merge), and publish state + fold-ledger in one atomic
-    * rename (see the replay analysis on [[foldVocabBatchOnce]]'s scaladoc
-    * header above — it applies verbatim to every lane riding this).
-    *
-    * The ledger keeps ONE marker per `sinkId`, named by the highest folded
-    * id, and a `batchId` at or below it is a replay — the rule
-    * [[graft.etl.SnapshotLake.mergeStreamBatch]] applies to the per-sink
-    * watermark its manifests carry. It holds because a
-    * `sinkId`'s ids only increase (micro-batch ids within a lineage,
-    * `_commit_gen` for a CDC follower), and it keeps each fold's marker
-    * cost independent of the stream's history.
-    *
-    * A lake CDC consumer composes it with the `graft-lake-cdc` stream
-    * ([[graft.sources.LakeCdcSource]]): inside `foreachBatch`, fold each
-    * commit's rows with its `_commit_gen` as `batchId`. The ledger is then
-    * keyed on the lake's own history, not on the query's checkpoint, so a
-    * re-delivery from a fresh checkpoint folds nothing twice.
-    */
-  def foldStateBatchOnce(
-      batch: DataFrame,
-      batchId: Long,
-      statePath: String,
-      sinkId: String,
-      stateOf: DataFrame => DataFrame,
-      merge: (DataFrame, DataFrame) => DataFrame): Boolean = {
-    val s = batch.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    graft.etl.LakeLease.withLease(conf, statePath) {
-      val cur = new org.apache.hadoop.fs.Path(statePath)
-      val fs = cur.getFileSystem(conf)
-      val old = new org.apache.hadoop.fs.Path(statePath + "__old")
-      // crashed between the swap renames: restore the parked state — the
-      // marker was never published, so the refold below rebuilds staging
-      if (!fs.exists(cur) && fs.exists(old)) Upsert.renameOrThrow(fs, old, cur)
-      // one marker per sinkId, named by its highest folded id; a directory
-      // left with one marker per batch reads as its largest id
-      val appliedRoot = new org.apache.hadoop.fs.Path(cur, "__applied")
-      val applied: Map[String, Long] =
-        if (!fs.exists(appliedRoot)) Map.empty
-        else fs.listStatus(appliedRoot).toSeq.flatMap { sink =>
-          fs.listStatus(sink.getPath).flatMap(_.getPath.getName.toLongOption)
-            .maxOption.map(sink.getPath.getName -> _)
-        }.toMap
-      if (applied.get(sinkId).exists(_ >= batchId)) false
-      else {
-        val batchState = stateOf(batch)
-        val merged =
-          if (fs.exists(cur)) merge(s.read.parquet(statePath), batchState)
-          else batchState
-        val staging = new org.apache.hadoop.fs.Path(statePath + "__staging")
-        if (fs.exists(staging)) fs.delete(staging, true)
-        merged.write.mode("overwrite").parquet(staging.toString)
-        // carry every other sink's marker forward and advance this one's —
-        // all published atomically by the staging→cur rename below
-        (applied + (sinkId -> batchId)).foreach { case (sink, id) =>
-          val dst = new org.apache.hadoop.fs.Path(staging, s"__applied/$sink/$id")
-          fs.mkdirs(dst.getParent)
-          fs.create(dst, false).close()
-        }
-        if (fs.exists(old)) fs.delete(old, true)
-        if (fs.exists(cur)) Upsert.renameOrThrow(fs, cur, old)
-        Upsert.renameOrThrow(fs, staging, cur)
-        fs.delete(old, true)
-        true
-      }
+    drainAvailableNow(changes, checkpoint) { (batch, batchId) =>
+      foldScd2BatchOnce(batch, batchId, statePath, keyCol, tsCol, valueCols, sinkId)
+      ()
     }
+
+  /** One state MV lane: a batch reduced to its state rows (which carry the
+    * MV's partition column), that column, and the state × state fold
+    * `(existing touched rows, batch state) => new rows`.
+    */
+  private[streaming] final case class StateLane(state: DataFrame, partitionCol: String,
+      fold: (DataFrame, DataFrame) => DataFrame) {
+    def commit(statePath: String, sinkId: String, batchId: Long): Boolean =
+      SnapshotLake.foldStreamBatch(state.sparkSession, statePath, state, partitionCol,
+        sinkId, batchId)(fold)
+  }
+
+  private[streaming] def vocabLane(batch: DataFrame): StateLane =
+    StateLane(TextQueries.t19StateOf(batch), "source", TextQueries.t19MergeStates(_, _))
+
+  /** Partitioned by `day_key`, the UTC day number: `window()` days are
+    * UTC-aligned, so it is exact, and unlike a TIMESTAMP partition value's
+    * string form it does not follow the session time zone. e12FoldStates
+    * projects its output, so the key is added back after the fold.
+    */
+  private[streaming] def candleLane(batch: DataFrame): StateLane = {
+    def keyed(df: DataFrame) = df.withColumn("day_key", expr("unix_seconds(day_start) div 86400"))
+    StateLane(keyed(CoreQueries.e12StateOf(batch)), "day_key",
+      (cur, st) => keyed(CoreQueries.e12FoldStates(cur, st)))
+  }
+
+  private val Scd2Buckets = 16
+
+  /** Partitioned by `key_bucket = pmod(xxhash64(key), Scd2Buckets)`: null-safe, as
+    * [[graft.etl.Scd2.fold]] needs. Scd2.fold keeps its history input's
+    * columns, so the key is dropped before the fold and added back after.
+    */
+  private[streaming] def scd2Lane(batch: DataFrame, keyCol: String, tsCol: String,
+      valueCols: Seq[String]): StateLane = {
+    require(!(keyCol +: valueCols).contains("key_bucket"),
+      "key_bucket is the SCD2 MV's partition column — rename the input column")
+    def keyed(df: DataFrame) =
+      df.withColumn("key_bucket", pmod(xxhash64(col(keyCol)), lit(Scd2Buckets)))
+    val vs = struct(valueCols.map(col): _*)
+    StateLane(
+      keyed(Scd2.build(
+        batch.groupBy(col(keyCol), col(tsCol)).agg(max(vs).as("__vs"))
+          .select(col(keyCol) +: col(tsCol) +: valueCols.map(c => col(s"__vs.$c")): _*),
+        keyCol, tsCol, valueCols)),
+      "key_bucket",
+      // the stored state IS the history table; flatten the batch fragment
+      // back to changes (valid_from = the original ts) and Scd2.fold them
+      (cur, bState) => keyed(Scd2.fold(cur.drop("key_bucket"),
+        bState.select(col(keyCol) +: col("valid_from").as(tsCol) +: valueCols.map(col): _*),
+        keyCol, tsCol, valueCols)))
   }
 
   /** Maintain the t19 vocab-state MV from a document stream: AvailableNow
     * micro-batches, each folded exactly once via [[foldVocabBatchOnce]].
-    * Per-tick cost is state-of-batch + a vocab-sized merge — the corpus is
-    * never rescanned, which is the whole point of the MV at 100 TB. Query
-    * the maintained view with `TextQueries.t19StatsOf(spark.read.parquet(statePath))`.
+    * Per-tick cost is state-of-batch + a merge over the touched sources'
+    * vocab — the corpus is never rescanned. Query the maintained view with
+    * `TextQueries.t19StatsOf(SnapshotLake.read(spark, statePath))`.
     *
-    * `sinkId` is REQUIRED and must be the stream's stable LOGICAL identity
-    * — unlike the idempotent-merge sinks (whose checkpoint-derived default
-    * is safe because any replay converges), a sum-fold replayed under a
-    * rebuilt checkpoint would double-count unless the rebuilt stream folds
-    * into the SAME marker namespace. Cross-lineage suppression additionally
+    * `sinkId` is REQUIRED and must be the stream's stable LOGICAL identity:
+    * a sum-fold replayed under a rebuilt checkpoint would double-count
+    * unless it meets the SAME watermark. Cross-lineage suppression also
     * assumes the rebuilt stream re-forms the same (batchId → files)
     * batches, which AvailableNow's deterministic listing gives when the
-    * source options are unchanged; within one checkpoint lineage batch ids
-    * increase, so the (sinkId, highest folded id) check is exact.
+    * source options are unchanged.
     */
   def vocabStateAvailableNow(
       docs: DataFrame,
       statePath: String,
       checkpoint: String,
       sinkId: String): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldVocabBatchOnce(batch, batchId, statePath, sinkId)
-        ()
-      }
-      .start()
+    drainAvailableNow(docs, checkpoint) { (batch, batchId) =>
+      foldVocabBatchOnce(batch, batchId, statePath, sinkId)
+      ()
+    }
 
   /** Maintain the e12 candle-state MV from an event stream — the market-data
-    * twin of [[vocabStateAvailableNow]], same per-tick cost shape
-    * (state-of-batch + a merge proportional to the TOUCHED key×days, never
-    * a history rescan) and the same `sinkId` contract: it must be the
-    * stream's stable logical identity, because a sum-fold replayed under a
-    * rebuilt checkpoint must land in the SAME marker namespace to be
-    * suppressed.
+    * twin of [[vocabStateAvailableNow]]: per tick, state-of-batch + a merge
+    * that reads and rewrites only the TOUCHED days, never a history
+    * rescan; the same `sinkId` contract (the stream's stable logical
+    * identity, because a sum-fold replayed under a rebuilt checkpoint must
+    * meet the SAME watermark to be suppressed).
     */
   def candleStateAvailableNow(
       events: DataFrame,
       statePath: String,
       checkpoint: String,
       sinkId: String): StreamingQuery =
-    events.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldCandleBatchOnce(batch, batchId, statePath, sinkId)
-        ()
-      }
-      .start()
+    drainAvailableNow(events, checkpoint) { (batch, batchId) =>
+      foldCandleBatchOnce(batch, batchId, statePath, sinkId)
+      ()
+    }
 
   /** The reference's ENTIRE pipeline as one incremental streaming job:
     * raw long-format bars land in a directory; each AvailableNow tick
@@ -601,13 +530,20 @@ object StreamingIngest {
     Ddl.createTables(url, dialect, props)
     val standardized = Standardizer.standardize(rawBars, dim, sourceTz)
     val converted = CurrencyConverter.convert(standardized, fxRates, targetCurrency)
-    converted.writeStream
+    drainAvailableNow(converted, checkpoint) { (batch, _) =>
+      Pipeline.upsertIndicesJdbc(batch, url, now, dialect, props)
+      Pipeline.upsertQuotesJdbc(batch, url, now, dialect, targetCurrency, props)
+    }
+  }
+
+  /** One `Trigger.AvailableNow` drain of `stream`, handing each
+    * micro-batch and its id to `f` (`foreachBatch`).
+    */
+  private def drainAvailableNow(stream: DataFrame, checkpoint: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Pipeline.upsertIndicesJdbc(batch, url, now, dialect, props)
-        Pipeline.upsertQuotesJdbc(batch, url, now, dialect, targetCurrency, props)
-      }
+      .foreachBatch(f)
       .start()
-  }
 }

@@ -556,10 +556,10 @@ object TextQueries {
     * Scale contract: the corpus is reduced ONCE to its vocab state (the
     * materialized view — vocab-sized, not corpus-sized); each incoming
     * batch pays state-of-batch + a VOCAB-SIZED merge (the streaming face's
-    * flat-dir swap rewrites the whole state table per fold — unlike e12's
-    * partition-scoped candle merge, a text batch's terms scatter across
-    * the entire vocabulary, so key-locality pruning buys little; what
-    * keeps the fold cheap is that vocab ≪ corpus). Hapax counts, type
+    * lake MV is partitioned by source and rewrites the touched sources'
+    * vocab per fold — a text batch's terms scatter across each source's
+    * entire vocabulary, so finer key-locality buys little; what keeps the
+    * fold cheap is that vocab ≪ corpus). Hapax counts, type
     * counts, and token counts all derive from the state, so no statistic
     * forces a corpus rescan.
     */

@@ -96,8 +96,9 @@ class LakeFileRecordSpec extends SparkSuite {
     val before = rows(SnapshotLake.read(spark, crashed))
     val gen = SnapshotLake.currentManifest(spark, crashed).get.gen
     // the crashed commit: staged, installed and RECORDED, never published
-    SnapshotLake.prepareMerge(spark, crashed, bars(0 until 2, 2L), SnapshotLake.MergeSpec(
-      Seq("ticker", "timestamp_utc"), "v", "p_date", Nil, Seq("timestamp_utc")))
+    SnapshotLake.prepareMerge(spark, crashed, SnapshotLake.currentManifest(spark, crashed),
+      bars(0 until 2, 2L), SnapshotLake.MergeSpec(
+        Seq("ticker", "timestamp_utc"), "v", "p_date", Nil, Seq("timestamp_utc")))
     val orphan = new Path(s"$crashed/_manifests", "files-" + "%020d".format(gen + 1))
     val fs = orphan.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(orphan), "the crashed commit must have written its record")

@@ -127,7 +127,7 @@ class LakeManifestSpec extends SparkSuite {
     val before = state(SnapshotLake.read(spark, lake))
     // batch 1 staged, installed and recorded, never published: the crash
     val batch = rows(("k1", "2025-01-01", 2L, 15.0), ("k2", "2025-01-02", 1L, 20.0))
-    SnapshotLake.prepareMerge(spark, lake, batch,
+    SnapshotLake.prepareMerge(spark, lake, SnapshotLake.currentManifest(spark, lake), batch,
       SnapshotLake.mergeSpecOf(spark, lake).get)
     assert(state(SnapshotLake.read(spark, lake)) == before)
     assert(SnapshotLake.streamBatchApplied(spark, lake, sid).contains(0L))

@@ -60,7 +60,8 @@ class SnapshotLakeSpec extends SparkSuite {
     // prepare WITHOUT publish = the exact mid-commit window: all affected
     // partitions' new gen dirs are fully installed on disk
     val deduped = Upsert.lastWriteWins(b2, Seq("key"), "v", Nil)
-    val pending = SnapshotLake.prepareMerge(spark, dir, deduped,
+    val pending = SnapshotLake.prepareMerge(spark, dir,
+      SnapshotLake.currentManifest(spark, dir), deduped,
       SnapshotLake.MergeSpec(Seq("key"), "v", "dt", Nil, Nil)).get
     // a reader resolving NOW sees the wholly-OLD snapshot — no torn state,
     // no transiently-absent partition, even though dt=2025-01-01's next gen
@@ -88,7 +89,7 @@ class SnapshotLakeSpec extends SparkSuite {
     val before = state(SnapshotLake.read(spark, dir))
     // simulate the crash: prepare (stage + install) and DROP the manifest
     val deduped = Upsert.lastWriteWins(b2, Seq("key"), "v", Nil)
-    SnapshotLake.prepareMerge(spark, dir, deduped,
+    SnapshotLake.prepareMerge(spark, dir, SnapshotLake.currentManifest(spark, dir), deduped,
       SnapshotLake.MergeSpec(Seq("key"), "v", "dt", Nil, Nil))
     assert(state(SnapshotLake.read(spark, dir)) == before,
       "crashed (unpublished) commit must be invisible")

@@ -156,29 +156,32 @@ class LakeCdcSpec extends SparkSuite {
     SnapshotLake.merge(spark, lake, b1, Seq("key"), "v", "dt") // gen 1
     SnapshotLake.merge(spark, lake, b2, Seq("key"), "v", "dt") // gen 2
     // MV: running SUM of post-image prices per key (sum-merge — NOT
-    // idempotent, so replay suppression must be the fold ledger's, keyed
-    // on the commit generation)
+    // idempotent, so replay suppression must be the MV's stream watermark,
+    // keyed on the commit generation)
     def fold(delta: DataFrame, gen: Long): Unit = {
-      StreamingIngest.foldStateBatchOnce(
-        delta.filter(col("_change_type") =!= "delete"), gen, mv, "cdc-mv",
-        b => b.groupBy(col("key")).agg(sum(col("price")).as("s")),
-        (cur, bs) => cur.unionByName(bs)
-          .groupBy(col("key")).agg(sum(col("s")).as("s")))
+      SnapshotLake.foldStreamBatch(spark, mv,
+        delta.filter(col("_change_type") =!= "delete")
+          .groupBy(col("key")).agg(sum(col("price")).as("s")),
+        "key", "cdc-mv", gen)(
+        (cur, bs) => cur.unionByName(bs).groupBy(col("key")).agg(sum(col("s")).as("s")))
       ()
     }
-    follow(lake, ckpt)(fold)
-    val once = spark.read.parquet(mv).collect()
+    def sums() = SnapshotLake.read(spark, mv).collect()
       .map(r => r.getAs[String]("key") -> r.getAs[Double]("s")).toMap
+    follow(lake, ckpt)(fold)
+    val once = sums()
     assert(once == Map("k1" -> 25.0, "k2" -> 20.0, "k3" -> 30.0))
+    val gens = SnapshotLake.retainedGens(spark, mv)
+    assert(SnapshotLake.streamBatchApplied(spark, mv, "cdc-mv").contains(2L))
     // simulate a LOST consumer position (checkpoint wiped): the re-delivered
-    // generations land in the SAME fold-ledger namespace and are suppressed
-    // — the MV never double-counts
+    // generations meet the SAME watermark and are suppressed — the MV never
+    // double-counts and gains no generation
     val fs = new org.apache.hadoop.fs.Path(ckpt).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
     assert(follow(lake, ckpt)(fold) == Seq(1L, 2L))
-    val twice = spark.read.parquet(mv).collect()
-      .map(r => r.getAs[String]("key") -> r.getAs[Double]("s")).toMap
+    val twice = sums()
+    assert(SnapshotLake.retainedGens(spark, mv) == gens)
     assert(twice == once, "replayed generations must not re-fold")
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSuite, Tables}
+import graft.etl.SnapshotLake
 
 /** Streaming-mode tests: a landing directory of parquet drained with
   * Trigger.AvailableNow must reproduce the batch semantics (dedup ≙ PK
@@ -341,7 +342,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("streaming vocab MV: per-batch folds converge to the batch recompute; " +
-    "replays, checkpoint loss, and swap-crash windows all suppressed") {
+    "replays, checkpoint loss, and a crash before the publish all suppressed") {
     val docsDir = s"$work/docs_landing"
     val state = s"$work/vocab_state"
     val docs = Tables(spark, sf001, "documents").select("doc_id", "source", "text")
@@ -358,49 +359,77 @@ class StreamingSpec extends SparkSuite {
     val want = graft.text.TextQueries.t16HapaxStats(spark, sf001)
       .collect().map(_.toSeq).toSeq
     def stats() = graft.text.TextQueries
-      .t19StatsOf(spark.read.parquet(state)).collect().map(_.toSeq).toSeq
+      .t19StatsOf(SnapshotLake.read(spark, state)).collect().map(_.toSeq).toSeq
     assert(stats() == want, "incremental folds drifted from the full recompute")
-    // fresh checkpoint ⇒ FULL re-delivery; the in-state markers must
-    // suppress every batch even though the engine's own commit log is gone
+    // one generation per folded batch; the MV's manifest carries the
+    // sink's watermark, its highest folded id
+    val lastId = new java.io.File(docsDir).list().count(_.endsWith(".parquet")) - 1
+    val gens = SnapshotLake.retainedGens(spark, state)
+    assert(gens.length == lastId + 1)
+    assert(SnapshotLake.streamBatchApplied(spark, state, "docs-vocab").contains(lastId.toLong))
+    // fresh checkpoint ⇒ FULL re-delivery; the watermark must suppress
+    // every batch even though the engine's own commit log is gone
     // (sum-merge would otherwise double every count)
     tick(2)
     assert(stats() == want, "checkpoint-loss replay double-counted")
-    // the fold ledger keeps ONE marker per sinkId, named by the highest
-    // folded id, however many batches were folded
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def markers(st: String, sinkId: String): Seq[String] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(st, s"__applied/$sinkId"))
-        .map(_.getPath.getName).toSeq
-    val lastId = new java.io.File(docsDir).list().count(_.endsWith(".parquet")) - 1
-    assert(markers(state, "docs-vocab") == Seq(lastId.toString),
-      s"expected one marker for ${lastId + 1} folds: ${markers(state, "docs-vocab")}")
+    assert(SnapshotLake.retainedGens(spark, state) == gens,
+      "a re-delivery must publish no generation")
     // direct replay of an applied (sinkId, batchId) is a no-op
     val state2 = s"$work/vocab_state2"
-    assert(StreamingIngest.foldVocabBatchOnce(docs.toDF(), 0L, state2))
-    assert(!StreamingIngest.foldVocabBatchOnce(docs.toDF(), 0L, state2),
+    val batch = docs.toDF()
+    def vocab() = SnapshotLake.read(spark, state2).select("source", "term", "c")
+      .collect().map(_.toSeq).toSet
+    assert(StreamingIngest.foldVocabBatchOnce(batch, 0L, state2))
+    assert(!StreamingIngest.foldVocabBatchOnce(batch, 0L, state2),
       "replayed batch was folded twice")
-    // swap-crash window: state parked at __old (death between the two
-    // renames) — the next fold restores it and applies the new batch
-    assert(fs.rename(new org.apache.hadoop.fs.Path(state2),
-      new org.apache.hadoop.fs.Path(state2 + "__old")))
-    assert(StreamingIngest.foldVocabBatchOnce(docs.toDF(), 1L, state2),
-      "fold after crash-parked state did not apply")
-    val tokensTwice = graft.text.TextQueries.t19StatsOf(spark.read.parquet(state2))
-      .agg(sum("n_tokens")).head().getLong(0)
-    val tokensOnce = want.map(_(1).asInstanceOf[Long]).sum
-    assert(tokensTwice == 2 * tokensOnce,
-      s"recovered state should hold exactly two folds ($tokensTwice vs 2×$tokensOnce)")
-    assert(markers(state2, "default") == Seq("1"))
-    // a ledger written with one marker per batch reads as its largest id:
-    // id 7 is a replay, id 8 folds and leaves the one marker "8"
-    Seq("3", "7").foreach(id =>
-      fs.create(new org.apache.hadoop.fs.Path(state2, s"__applied/legacy/$id")).close())
-    val empty = docs.toDF().limit(0)
-    assert(!StreamingIngest.foldVocabBatchOnce(empty, 7L, state2, "legacy"))
-    assert(StreamingIngest.foldVocabBatchOnce(empty, 8L, state2, "legacy"))
-    assert(markers(state2, "legacy") == Seq("8"))
-    assert(markers(state2, "default") == Seq("1"))
+    val once = vocab()
+    val gen = SnapshotLake.currentManifest(spark, state2).get.gen
+    // the crash: batch 1 staged, installed and recorded, never published —
+    // readers keep the old snapshot and its watermark
+    val lane = StreamingIngest.vocabLane(batch)
+    assert(SnapshotLake.prepareFold(spark, state2, SnapshotLake.currentManifest(spark, state2),
+      lane.state, lane.partitionCol)(lane.fold).isDefined)
+    assert(vocab() == once, "readers saw an unpublished fold")
+    assert(SnapshotLake.streamBatchApplied(spark, state2, "default").contains(0L))
+    // Spark replays batch 1: one generation holding exactly two folds
+    assert(StreamingIngest.foldVocabBatchOnce(batch, 1L, state2),
+      "the replay after the crash did not apply")
+    assert(!StreamingIngest.foldVocabBatchOnce(batch, 1L, state2))
+    assert(SnapshotLake.retainedGens(spark, state2).max == gen + 1)
+    assert(SnapshotLake.streamBatchApplied(spark, state2, "default").contains(1L))
+    assert(vocab() == once.map(r => Seq(r(0), r(1), 2 * r(2).asInstanceOf[Long])),
+      "the recovered state must hold exactly two folds")
+    // an empty batch publishes nothing and leaves the watermark where it was
+    assert(!StreamingIngest.foldVocabBatchOnce(batch.limit(0), 8L, state2, "other"))
+    assert(SnapshotLake.streamBatchApplied(spark, state2, "other").isEmpty)
+    assert(SnapshotLake.retainedGens(spark, state2).max == gen + 1)
+  }
+
+  test("a flat state MV from before lake commits is refused, naming the one-time import") {
+    import spark.implicits._
+    val flat = s"$work/vocab_flat"
+    Seq(("web", "a", 2L)).toDF("source", "term", "c").write.parquet(flat)
+    val fs = new org.apache.hadoop.fs.Path(flat)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(flat, "__applied/s/3")).close()
+    val batch = Seq((1L, "web", "a b")).toDF("doc_id", "source", "text")
+    val e = intercept[IllegalStateException] {
+      StreamingIngest.foldVocabBatchOnce(batch, 4L, flat, "s")
+    }
+    assert(e.getMessage.contains(s"""spark.read.parquet("$flat")""") &&
+      e.getMessage.contains("__applied/<sinkId>"), e.getMessage)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(flat, "_manifests")) &&
+      !fs.exists(new org.apache.hadoop.fs.Path(flat, "data")),
+      "the refused fold must write nothing beside the flat state")
+    // the import the message names: the old rows fold in under the old
+    // marker's id, so its batches stay applied and the next one folds
+    val imported = s"$work/vocab_imported"
+    assert(SnapshotLake.foldStreamBatch(spark, imported, spark.read.parquet(flat),
+      "source", "s", 3L)(graft.text.TextQueries.t19MergeStates(_, _)))
+    assert(!StreamingIngest.foldVocabBatchOnce(batch, 3L, imported, "s"))
+    assert(StreamingIngest.foldVocabBatchOnce(batch, 4L, imported, "s"))
+    assert(SnapshotLake.read(spark, imported).select("source", "term", "c")
+      .collect().map(_.toSeq).toSet == Set(Seq("web", "a", 3L), Seq("web", "b", 1L)))
   }
 
   test("streaming candle MV: per-batch folds equal the e4 full recompute; " +
@@ -420,14 +449,17 @@ class StreamingSpec extends SparkSuite {
     tick(1) // >= 3 micro-batches fold incrementally
     val want = graft.queries.CoreQueries.e4OhlcvResample(spark, sf001)
       .collect().map(_.toSeq).toSeq
-    def candles() = graft.queries.CoreQueries
-      .e12MergeStates(spark.read.parquet(state))
+    def candles(st: String) = graft.queries.CoreQueries
+      .e12MergeStates(SnapshotLake.read(spark, st))
       .orderBy("user_id", "day_start").collect().map(_.toSeq).toSeq
-    assert(candles() == want, "incremental candle folds drifted from the e4 recompute")
-    // fresh checkpoint => FULL re-delivery; the in-state fold ledger must
+    assert(candles(state) == want, "incremental candle folds drifted from the e4 recompute")
+    val gens = SnapshotLake.retainedGens(spark, state)
+    // fresh checkpoint => FULL re-delivery; the MV's watermark must
     // suppress every batch (n_bars/volume are sums — a refold doubles them)
     tick(2)
-    assert(candles() == want, "checkpoint-loss replay double-counted the candles")
+    assert(candles(state) == want, "checkpoint-loss replay double-counted the candles")
+    assert(SnapshotLake.retainedGens(spark, state) == gens,
+      "a re-delivery must publish no generation")
     // direct replay of an applied (sinkId, batchId) is a no-op
     val ev = spark.read.parquet(evDir)
     val state2 = s"$work/candle_state2"
@@ -438,9 +470,7 @@ class StreamingSpec extends SparkSuite {
     // (endpoint merges are idempotent on identical extremes — the fold's
     // order-independence contract, visible through the state)
     assert(StreamingIngest.foldCandleBatchOnce(ev, 1L, state2))
-    val twice = graft.queries.CoreQueries
-      .e12MergeStates(spark.read.parquet(state2))
-      .orderBy("user_id", "day_start").collect().map(_.toSeq).toSeq
+    val twice = candles(state2)
     assert(twice.map(r => r.take(6)) == want.map(r => r.take(6)),
       "OHLC endpoints drifted under a double fold")
     assert(twice.map(_(6).asInstanceOf[Long]).sum ==
@@ -448,8 +478,49 @@ class StreamingSpec extends SparkSuite {
       "n_bars should sum across folds")
   }
 
+  test("candle MV fold rewrites only the touched day; the files it writes do " +
+    "not grow with the state, and readAt answers the earlier candles") {
+    import spark.implicits._
+    val state = s"$work/candle_days"
+    val rnd = new scala.util.Random(11)
+    val day0 = java.time.LocalDate.parse("2025-01-01").toEpochDay
+    // one UTC day of hourly events for 4 users per batch, seeded values
+    val batches = (0 until 20).map { d =>
+      (for (u <- 1L to 4L; h <- 0 until 6) yield (u,
+        new java.sql.Timestamp(((day0 + d) * 86400L + h * 3600L + rnd.nextInt(3600)) * 1000L),
+        rnd.nextDouble() * 100)).toDF("user_id", "ts", "value")
+    }
+    def candles(df: org.apache.spark.sql.DataFrame) = graft.queries.CoreQueries
+      .e12MergeStates(df).orderBy("user_id", "day_start").collect().map(_.toSeq).toSeq
+    def recompute(bs: Seq[org.apache.spark.sql.DataFrame]) =
+      candles(graft.queries.CoreQueries.e12StateOf(bs.reduce(_ unionByName _)))
+    val written = batches.zipWithIndex.map { case (b, d) =>
+      val before = SnapshotLake.currentManifest(spark, state).fold(Seq.empty[SnapshotLake.Entry])(_.entries)
+      assert(StreamingIngest.foldCandleBatchOnce(b, d.toLong, state, "days"))
+      val m = SnapshotLake.currentManifest(spark, state).get
+      val fresh = m.entries.filter(_.gen == m.gen)
+      assert(fresh.map(_.value) == Seq((day0 + d).toString),
+        s"the fold of day $d rewrote ${fresh.map(_.value)}")
+      assert(m.entries.filter(_.gen < m.gen).toSet == before.toSet,
+        s"the fold of day $d moved an earlier day's generation")
+      // the generation's file record names files under day d's dir only
+      val record = java.nio.file.Paths.get(state, "_manifests", f"files-${m.gen}%020d")
+      val dirs = new String(Files.readAllBytes(record), "UTF-8").split('\n').toSeq
+        .drop(1).filter(_.nonEmpty)
+        .map(l => java.net.URLDecoder.decode(l.split('\t')(0), "UTF-8").split('/')(0))
+      assert(dirs.nonEmpty && dirs.toSet == Set(fresh.head.dirName))
+      dirs.length
+    }
+    assert(written(4) == written(19),
+      s"a one-day fold wrote ${written(4)} files over 5 days, ${written(19)} over 20")
+    val last = SnapshotLake.currentManifest(spark, state).get.gen
+    assert(candles(SnapshotLake.read(spark, state)) == recompute(batches))
+    assert(candles(SnapshotLake.readAt(spark, state, last - 1)) == recompute(batches.init),
+      "time travel to the MV before its last fold must answer the earlier candles")
+  }
+
   test("streaming SCD2 MV: per-batch folds equal the one-shot build; " +
-    "replays, checkpoint loss, and swap-crash windows all suppressed") {
+    "replays, checkpoint loss, and a crash before the publish all suppressed") {
     import spark.implicits._
     val changesDir = s"$work/scd2_changes"
     val state = s"$work/scd2_state"
@@ -475,28 +546,35 @@ class StreamingSpec extends SparkSuite {
       .select("k", "version", "valid_from", "valid_to", "value", "is_current")
       .collect().map(_.toSeq).toSet
     val want = rows(graft.etl.Scd2.build(changes, "k", "ts", Seq("value")))
-    assert(rows(spark.read.parquet(state)) == want,
+    assert(rows(SnapshotLake.read(spark, state)) == want,
       "incremental history folds drifted from the one-shot build")
-    // fresh checkpoint ⇒ full re-delivery; in-state markers must suppress
+    val gens = SnapshotLake.retainedGens(spark, state)
+    // fresh checkpoint ⇒ full re-delivery; the watermark must suppress
     // every batch (a re-fold would re-version every key's chain)
     tick(2)
-    assert(rows(spark.read.parquet(state)) == want,
+    assert(rows(SnapshotLake.read(spark, state)) == want,
       "checkpoint-loss replay corrupted the history")
+    assert(SnapshotLake.retainedGens(spark, state) == gens,
+      "a re-delivery must publish no generation")
     // direct replay of an applied (sinkId, batchId) is a no-op
     val state2 = s"$work/scd2_state2"
     assert(StreamingIngest.foldScd2BatchOnce(changes, 0L, state2, "k", "ts", Seq("value")))
     assert(!StreamingIngest.foldScd2BatchOnce(changes, 0L, state2, "k", "ts", Seq("value")),
       "replayed batch was folded twice")
-    // swap-crash window: state parked at __old — the next fold restores it
-    // and applies the new batch (a correction rewriting k=1's history)
-    val fs = new org.apache.hadoop.fs.Path(state2)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(state2),
-      new org.apache.hadoop.fs.Path(state2 + "__old")))
+    val gen = SnapshotLake.currentManifest(spark, state2).get.gen
+    // the crash: a correction rewriting k=1's history staged, installed and
+    // recorded as batch 1, never published — readers keep the old history
     val correction = Seq((1L, 20L, "a2fix")).toDF("k", "ts", "value")
+    val lane = StreamingIngest.scd2Lane(correction, "k", "ts", Seq("value"))
+    assert(SnapshotLake.prepareFold(spark, state2, SnapshotLake.currentManifest(spark, state2),
+      lane.state, lane.partitionCol)(lane.fold).isDefined)
+    assert(rows(SnapshotLake.read(spark, state2)) == want, "readers saw an unpublished fold")
+    // Spark replays batch 1: it applies once, in one generation
     assert(StreamingIngest.foldScd2BatchOnce(correction, 1L, state2, "k", "ts", Seq("value")),
-      "fold after crash-parked state did not apply")
-    val healed = rows(spark.read.parquet(state2))
+      "the replay after the crash did not apply")
+    assert(!StreamingIngest.foldScd2BatchOnce(correction, 1L, state2, "k", "ts", Seq("value")))
+    assert(SnapshotLake.retainedGens(spark, state2).max == gen + 1)
+    val healed = rows(SnapshotLake.read(spark, state2))
     val wantHealed = rows(graft.etl.Scd2.fold(
       graft.etl.Scd2.build(changes, "k", "ts", Seq("value")),
       correction, "k", "ts", Seq("value")))
