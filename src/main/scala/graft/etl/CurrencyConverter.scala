@@ -1,6 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Pluggable FX-rate source — replaces the reference's HTTP fetch + memo
@@ -48,16 +50,22 @@ object CurrencyConverter {
     * spanning more than [[MaxPairs]] pairs is refused before any fetch.
     */
   def distinctPairs(quotes: DataFrame, target: String): Seq[(String, java.sql.Date)] =
-    BoundedDistinct.collect(
-      quotes
-        .filter(col("original_currency").isNotNull && col("original_currency") =!= target)
-        .select(col("original_currency"), to_date(col("timestamp_utc")).as("rate_date")),
+    pairsOf(BoundedDistinct.collect(quotes, Seq(pairProjection(target))).head)
+
+  /** [[distinctPairs]]' set as a [[BoundedDistinct.Projection]], so one
+    * pass can collect it beside other sets; [[pairsOf]] reads its rows.
+    */
+  private[etl] def pairProjection(target: String): BoundedDistinct.Projection =
+    BoundedDistinct.Projection(
+      Seq(col("original_currency"), to_date(col("timestamp_utc")).as("rate_date")),
       MaxPairs,
       s"batch needs more than $MaxPairs distinct (currency, date) FX pairs — " +
         "the rate table is broadcast and must stay driver-sized; convert " +
-        "the batch in shorter date windows")
-      .map(r => (r.getString(0), r.getDate(1)))
-      .toSeq
+        "the batch in shorter date windows",
+      where = col("original_currency").isNotNull && col("original_currency") =!= target)
+
+  private[etl] def pairsOf(rows: Array[Row]): Seq[(String, java.sql.Date)] =
+    rows.map(r => (r.getString(0), r.getDate(1))).toSeq
 
   /** T7+T9+T10+T11 — apply conversion given an FxRate table.
     *
@@ -80,11 +88,9 @@ object CurrencyConverter {
       .withColumn("exchange_rate",
         when(col("original_currency") === lit(target), lit(1.0d))
           .otherwise(col("rate")))
-    val converted = Schema.priceCols.foldLeft(joined) { (df, c) => // T10
-      if (df.columns.contains(c))
-        df.withColumn(s"${c}_$suffix", col(c) * col("exchange_rate"))
-      else df
-    }
+    val converted = joined.withColumns(ListMap( // T10
+      Schema.priceCols.filter(joined.columns.contains)
+        .map(c => s"${c}_$suffix" -> col(c) * col("exchange_rate")): _*))
     converted.drop("rate_date", "exchange_rate", "base_currency", "rate") // T11
   }
 
@@ -96,9 +102,19 @@ object CurrencyConverter {
       spark: SparkSession,
       quotes: DataFrame,
       provider: RateProvider,
-      target: String = "USD"): DataFrame = {
+      target: String = "USD"): DataFrame =
+    convertPairs(spark, quotes, provider, distinctPairs(quotes, target), target)
+
+  /** [[convertWithProvider]] with the pairs already planned: the provider
+    * is asked for exactly `pairs`.
+    */
+  private[etl] def convertPairs(
+      spark: SparkSession,
+      quotes: DataFrame,
+      provider: RateProvider,
+      pairs: Seq[(String, java.sql.Date)],
+      target: String): DataFrame = {
     import spark.implicits._
-    val pairs = distinctPairs(quotes, target)
     val fx: Dataset[FxRate] = provider.rates(pairs, target).toDS()
     convert(quotes, fx.toDF(), target)
   }

@@ -22,30 +22,22 @@ object Pipeline {
   /** Audit metrics collected during the single execution pass. */
   final case class RunMetrics(rows: Long, nullClose: Long, missingRate: Long)
 
-  /** E1 standardize → E2 convert, with the audit metrics riding on the
-    * plan: the returned frame carries an observation of row, null-close and
-    * missing-rate counts, and the returned thunk reads them once a sink has
-    * executed the frame (no extra job).
+  /** The audit metrics riding on `converted`: the returned frame carries
+    * an observation of row, null-close and missing-rate counts, and the
+    * returned thunk reads them once a sink has executed the frame (no
+    * extra job).
     */
-  private def observedConversion(
-      spark: SparkSession,
-      bars: DataFrame,
-      dim: DataFrame,
-      rates: RateProvider,
-      targetCurrency: String,
-      sourceTz: Option[String]): (DataFrame, () => RunMetrics) = {
-    val standardized = Standardizer.standardize(bars, dim, sourceTz)
-    val converted =
-      CurrencyConverter.convertWithProvider(spark, standardized, rates, targetCurrency)
+  private def observed(converted: DataFrame,
+      targetCurrency: String): (DataFrame, () => RunMetrics) = {
     val obs = Observation()
-    val observed = converted.observe(
+    val df = converted.observe(
       obs,
       count(lit(1)).as("rows"),
       sum(col("close").isNull.cast("long")).as("null_close"),
       sum((col("close").isNotNull &&
         col(s"close_${targetCurrency.toLowerCase}").isNull).cast("long"))
         .as("missing_rate"))
-    (observed, () => {
+    (df, () => {
       val m = obs.get
       // a batch the optimizer folds to an empty relation (`limit(0)` over a
       // local frame) never runs the observed plan: no metrics, zero rows
@@ -84,11 +76,11 @@ object Pipeline {
       sourceTz: Option[String] = None,
       props: java.util.Properties = new java.util.Properties()): RunMetrics = {
     Ddl.createTables(url, dialect, props)
-    val (observed, metrics) =
-      observedConversion(spark, bars, dim, rates, targetCurrency, sourceTz)
+    val (converted, metrics) = observed(CurrencyConverter.convertWithProvider(spark,
+      Standardizer.standardize(bars, dim, sourceTz), rates, targetCurrency), targetCurrency)
     // 1) dim first (FK target), 2) facts second, FK now satisfiable.
-    upsertIndicesJdbc(observed, url, now, dialect, props)
-    upsertQuotesJdbc(observed, url, now, dialect, targetCurrency, props)
+    upsertIndicesJdbc(converted, url, now, dialect, props)
+    upsertQuotesJdbc(converted, url, now, dialect, targetCurrency, props)
     metrics()
   }
 
@@ -133,6 +125,27 @@ object Pipeline {
     * Quotes land date-partitioned (`p_date`): an incremental batch rewrites
     * only the trade dates it carries — at 100 TB a 6-hour tick's commit
     * cost is proportional to the tick, not the table.
+    *
+    * ONE EVALUATION of the delivered batch: the standardized batch is
+    * checkpointed once (`localCheckpoint(eager = false)`), and the first
+    * action over it is one map-side [[BoundedDistinct]] pass that
+    * materializes the checkpoint and returns the three bounded sets the
+    * run needs — the FX pairs (the provider is asked for exactly these),
+    * the dimension tuples (FK gate and dim batch) and the affected
+    * `p_date` partitions (handed to the quotes commit, which then does not
+    * scan the batch again). The fact write converts from the checkpoint,
+    * and the audit observation rides on that write. The quotes commit's
+    * own batch LWW is the one dedup: `timestamp_utc` is a key, so the
+    * value columns are its tie-breakers and a batch carrying an original
+    * AND a corrected bar for one key keeps a DETERMINISTIC winner (the
+    * reference relies on arrival order, `postgres_writer.py:251-259`).
+    *
+    * Refusal order, all before either commit: the pass's bounds (more FX
+    * pairs than `CurrencyConverter`'s bound, more dimension tuples or
+    * more `p_date` values than `graft.lake.maxAffectedPartitions`, in that
+    * order), then, under both leases, the FK gate, then the dim commit's
+    * own checks (widen-only schema, partition column). An empty batch
+    * commits nothing and returns zero metrics.
     */
   def runLake(
       spark: SparkSession,
@@ -143,37 +156,36 @@ object Pipeline {
       quotesLake: String,
       targetCurrency: String = "USD",
       sourceTz: Option[String] = None): RunMetrics = {
-    val (observed, metrics) =
-      observedConversion(spark, bars, dim, rates, targetCurrency, sourceTz)
-    // timestamp_utc is also a key, so as versionCol alone it orders nothing
-    // within a key group — the value columns tie-break so a batch carrying
-    // an original AND a corrected bar for one key picks a DETERMINISTIC
-    // winner (the reference relies on arrival order, postgres_writer.py:251-259).
-    val tieBreakers = observed.columns.toSeq
-      .filterNot(Seq("ticker", "timestamp_utc").contains)
-    val quotes = Upsert.lastWriteWins(
-      observed, keys = Seq("ticker", "timestamp_utc"),
-      versionCol = "timestamp_utc", tieBreakers = tieBreakers)
-      .withColumn("p_date", to_date(col("timestamp_utc")))
-      .localCheckpoint() // one evaluation serves FK check + both commits
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dimCols = quotes.select(
+    val standardized = Standardizer.standardize(bars, dim, sourceTz)
+      .localCheckpoint(eager = false)
+    val dimCols = standardized.select(
       col("ticker"), col("name"), col("country"), col("exchange"),
       col("original_currency"))
+    val pDate = to_date(col("timestamp_utc"))
+    val max = SnapshotLake.maxAffectedPartitions(spark)
+    val Seq(pairs, tuples, partitions) = BoundedDistinct.collect(standardized, Seq(
+      CurrencyConverter.pairProjection(targetCurrency),
+      // about one tuple per ticker (the metadata came from the broadcast
+      // enrich join)
+      BoundedDistinct.Projection(dimCols.columns.toSeq.map(col), max,
+        s"batch carries more than $max distinct dimension tuples — the " +
+          "indices lake is partitioned by ticker and one commit may " +
+          "touch at most that many; split the batch by ticker or raise " +
+          "graft.lake.maxAffectedPartitions"),
+      // p_date is a function of the key timestamp_utc, so the raw batch
+      // spans exactly the dates its LWW winners land in
+      SnapshotLake.partitionProjection(spark, pDate, "p_date", "merge batch")))
+    if (partitions.isEmpty) return RunMetrics(0, 0, 0)
+    val (converted, metrics) = observed(CurrencyConverter.convertPairs(spark,
+      standardized, rates, CurrencyConverter.pairsOf(pairs), targetCurrency), targetCurrency)
+    val tieBreakers = converted.columns.toSeq
+      .filterNot(Seq("ticker", "timestamp_utc").contains)
+    val conf = spark.sparkContext.hadoopConfiguration
     // both leases for the whole span, canonical order (see contract above);
     // the inner commits' withLease calls share these reentrant holds
     val Seq(first, second) = Seq(indicesLake, quotesLake).sorted
     LakeLease.withLease(conf, first) {
       LakeLease.withLease(conf, second) {
-        // ONE bounded collect serves the FK gate and the dim batch: the
-        // distinct dimension tuples, about one per ticker (the metadata
-        // came from the broadcast enrich join), as one map-side job
-        val max = SnapshotLake.maxAffectedPartitions(spark)
-        val tuples = BoundedDistinct.collect(dimCols, max,
-          s"batch carries more than $max distinct dimension tuples — the " +
-            "indices lake is partitioned by ticker and one commit may " +
-            "touch at most that many; split the batch by ticker or raise " +
-            "graft.lake.maxAffectedPartitions")
         // FK gate BEFORE any commit: standardize's enrich join is a LEFT
         // join, so a ticker with no dimension row surfaces as a null name
         // (NOT NULL in the reference dim)
@@ -202,10 +214,10 @@ object Pipeline {
               keys = Seq("ticker"), versionCol = "name", partitionCol = "ticker")
         }
         // 2) facts second — the FK-safe cut order
-        SnapshotLake.merge(spark, quotesLake, quotes,
-          keys = Seq("ticker", "timestamp_utc"), versionCol = "timestamp_utc",
-          partitionCol = "p_date", tieBreakers = tieBreakers,
-          statsCols = Seq("timestamp_utc"))
+        SnapshotLake.mergeTouching(spark, quotesLake, converted.withColumn("p_date", pDate),
+          SnapshotLake.MergeSpec(Seq("ticker", "timestamp_utc"), "timestamp_utc",
+            "p_date", tieBreakers, Seq("timestamp_utc")),
+          Some(partitions))
       }
     }
     metrics()

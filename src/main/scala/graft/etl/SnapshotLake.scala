@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.datasources.{
   FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType, TimestampType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SNAPSHOT-ISOLATED partitioned parquet lake: a manifest-pointer commit
@@ -69,9 +69,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    however many partitions it spans.
   *  - CRASH SAFETY: a writer dying after staging/installing (or after
   *    writing its file record) but before the manifest create leaves the
-  *    old snapshot fully readable; the next writer GCs the unpublished
-  *    orphan gens and records (single-writer lease) and re-runs to
-  *    convergence (idempotent LWW).
+  *    old snapshot fully readable; the next writer (single-writer lease)
+  *    deletes the unpublished file records and the orphan gen dirs of the
+  *    partitions it installs into, and re-runs to convergence (idempotent
+  *    LWW). An orphan gen dir elsewhere is named by no manifest and can
+  *    never collide with a commit; [[vacuum]] deletes it.
   *  - SHARED MECHANISM: [[merge]] (keyed last-write-wins upsert),
   *    [[foldStreamBatch]] (a state MV's stream fold),
   *    [[delete]]/[[deleteKeys]] (row-level takedown), and [[compact]]
@@ -675,9 +677,21 @@ object SnapshotLake {
       partitionCol: String,
       tieBreakers: Seq[String] = Nil,
       statsCols: Seq[String] = Nil): Unit =
+    mergeTouching(spark, path, updates,
+      MergeSpec(keys, versionCol, partitionCol, tieBreakers, statsCols), None)
+
+  /** [[merge]] under `spec`; `affected`, when given, is the batch's
+    * affected-partition set as the caller already collected it through
+    * [[partitionProjection]], and the commit takes it instead of scanning
+    * the batch again. Every other check of the commit still runs, and a
+    * set that misses a value the batch holds cannot land: [[stageInstall]]
+    * refuses a staged dir the set does not name.
+    */
+  private[etl] def mergeTouching(spark: SparkSession, path: String,
+      updates: DataFrame, spec: MergeSpec, affected: Option[Array[Row]]): Unit =
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
-      prepareMerge(spark, path, currentManifest(spark, path), updates,
-        MergeSpec(keys, versionCol, partitionCol, tieBreakers, statsCols))
+      prepareMerge(spark, path, currentManifest(spark, path), updates, spec,
+        affected.map(pairsOf))
         .foreach { case (fs, m) => publish(fs, path, m) }
     }
 
@@ -869,7 +883,7 @@ object SnapshotLake {
         throw new IllegalStateException(
           s"$path has no published snapshot — nothing to commit over"))
       val schema = schemaOf(m)
-      gcOrphans(fs, path, m.gen)
+      gcOrphans(fs, path, m.gen, Nil)
       publish(fs, path, m.copy(gen = m.gen + 1, schema = Some(schema)))
     }
 
@@ -953,7 +967,6 @@ object SnapshotLake {
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
       val fs = fsOf(spark, path)
       val m = current(spark, path)
-      gcOrphans(fs, path, m.gen)
       val partitionCol = m.partitionCol
       val full = scan(spark, path, m, m.entries)
       val schema = full.schema
@@ -1002,6 +1015,7 @@ object SnapshotLake {
       val affected = affectedPartitions(spark, hits, partitionCol, "update")
       if (affected.isEmpty) 0L
       else {
+        gcOrphans(fs, path, m.gen, dirsOf(partitionCol, affected))
         val affectedValues = affected.map(_._1).toSet
         val hitEntries = m.entries.filter(e => affectedValues.contains(e.value))
         val existing = relation(spark, path, hitEntries, schema)
@@ -1136,7 +1150,6 @@ object SnapshotLake {
     LakeLease.withLease(spark.sparkContext.hadoopConfiguration, path) {
       val fs = fsOf(spark, path)
       val m = current(spark, path)
-      gcOrphans(fs, path, m.gen)
       val partitionCol = m.partitionCol
       val full = scan(spark, path, m, m.entries)
       val hits = hitOf(full)
@@ -1166,6 +1179,7 @@ object SnapshotLake {
       val affected = affectedPartitions(spark, hits, partitionCol, "delete")
       if (affected.isEmpty) 0L
       else {
+        gcOrphans(fs, path, m.gen, dirsOf(partitionCol, affected))
         val affectedValues = affected.map(_._1).toSet
         val hitEntries = m.entries.filter(e => affectedValues.contains(e.value))
         // survivors of ONLY the affected partitions, read through the
@@ -1199,14 +1213,16 @@ object SnapshotLake {
     * snapshot; after [[publish]], the wholly-new one). The into-existing
     * branch keeps the two-stage batch-dedup + union-LWW shape: one
     * union-level window was measured slower at sf0.1 (e3b 1.84→2.51 s,
-    * round 14). None = empty batch.
+    * round 14). `affected`: the batch's affected-partition pairs when the
+    * caller already holds them (see [[mergeTouching]]). None = empty batch.
     */
   private[etl] def prepareMerge(
       spark: SparkSession,
       path: String,
       cur: Option[Manifest],
       updates: DataFrame,
-      spec: MergeSpec): Option[(FileSystem, Manifest)] = {
+      spec: MergeSpec,
+      affected: Option[Array[(String, String)]] = None): Option[(FileSystem, Manifest)] = {
     val MergeSpec(keys, versionCol, partitionCol, tieBreakers, statsCols) = spec
     require(updates.columns.contains(partitionCol),
       s"updates must carry partition column '$partitionCol'")
@@ -1222,8 +1238,8 @@ object SnapshotLake {
     // different partition than its losers and "affected" has always meant
     // the WINNERS' partitions — keep that semantics and pay the window.
     val touched = if (keys.contains(partitionCol)) updates else batch
-    replacePartitions(spark, path, cur, partitionCol, touched, updates.schema,
-      Some(spec), "merge batch") {
+    replacePartitions(spark, path, cur, partitionCol, updates.schema, Some(spec),
+      affected.getOrElse(affectedPartitions(spark, touched, partitionCol, "merge batch"))) {
       case Some(existing) =>
         Upsert.lastWriteWins(
           existing.withColumn("__gen", lit(0L))
@@ -1245,25 +1261,26 @@ object SnapshotLake {
     val schema = fold(empty, state).schema
     require(state.columns.contains(partitionCol) && schema.fieldNames.contains(partitionCol),
       s"fold state and output must carry partition column '$partitionCol'")
-    replacePartitions(spark, path, cur, partitionCol, state, schema,
-      cur.flatMap(_.spec), "fold batch")(existing => fold(existing.getOrElse(empty), state))
+    replacePartitions(spark, path, cur, partitionCol, schema, cur.flatMap(_.spec),
+      affectedPartitions(spark, state, partitionCol, "fold batch"))(
+      existing => fold(existing.getOrElse(empty), state))
   }
 
   /** The partition-replace body merge and fold commits share: the
-    * partitions `touched` names get `rowsOf(their existing rows, None when
-    * all are new)`, in `schema`, as a new generation; the pending manifest
-    * records `spec` and carries the watermarks forward. Callers hold the
-    * lease. None = nothing touched.
+    * `affected` partitions ((value, dir key) pairs, see
+    * [[affectedPartitions]]; evaluated after the schema checks) get
+    * `rowsOf(their existing rows, None when all are new)`, in `schema`, as
+    * a new generation; the pending manifest records `spec` and carries the
+    * watermarks forward. Callers hold the lease. None = nothing touched.
     */
   private def replacePartitions(
       spark: SparkSession,
       path: String,
       cur: Option[Manifest],
       partitionCol: String,
-      touched: DataFrame,
       schema: StructType,
       spec: Option[MergeSpec],
-      verb: String)(
+      affectedOf: => Array[(String, String)])(
       rowsOf: Option[DataFrame] => DataFrame): Option[(FileSystem, Manifest)] = {
     val fs = fsOf(spark, path)
     val curGen = cur.map(_.gen).getOrElse(0L)
@@ -1274,8 +1291,7 @@ object SnapshotLake {
     // rewritten partitions; see checkEvolution's messages for remediation)
     val table = cur.flatMap(m => snapshotSchema(spark, path, m))
     table.foreach(t => checkEvolution(t, schema))
-    gcOrphans(fs, path, curGen)
-    val affected = affectedPartitions(spark, touched, partitionCol, verb)
+    val affected = affectedOf
     if (affected.isEmpty) return None
     require(affected.forall(_._1 != null),
       s"null $partitionCol in update batch: a null partition value has no " +
@@ -1294,6 +1310,7 @@ object SnapshotLake {
       partitionCol.length + 2 + v.getBytes("UTF-8").length * 2 <= 240 },
       s"$partitionCol value too long for a hex-named partition directory " +
         "(value bytes x2 + column name must stay under 240 chars)")
+    gcOrphans(fs, path, curGen, dirsOf(partitionCol, affected))
     val newGen = curGen + 1
     // Entries are matched by VALUE, not by directory name: the value string
     // is layout-independent (dir names changed once already — bare hex →
@@ -1362,17 +1379,41 @@ object SnapshotLake {
       spark: SparkSession,
       rows: DataFrame,
       partitionCol: String,
-      verb: String): Array[(String, String)] = {
-    val castStr = expr(s"cast(`$partitionCol` as string)")
-    val routeKey = concat(lit("h"), hex(castStr))
+      verb: String): Array[(String, String)] =
+    pairsOf(BoundedDistinct.collect(rows, Seq(partitionProjection(
+      spark, col(s"`$partitionCol`"), partitionCol, verb))).head)
+
+  /** [[affectedPartitions]]' set as a [[BoundedDistinct.Projection]] over
+    * the partition value `value` (a column or the expression that will
+    * compute `partitionCol`), so one pass can collect it beside other
+    * sets; its refusal names `verb`.
+    */
+  private[etl] def partitionProjection(spark: SparkSession, value: Column,
+      partitionCol: String, verb: String): BoundedDistinct.Projection = {
+    val (str, dir) = routing(value)
     val max = maxAffectedPartitions(spark)
-    BoundedDistinct.collect(rows.select(castStr.as("__v"), routeKey.as("__h")), max,
+    BoundedDistinct.Projection(Seq(str, dir), max,
       s"$verb touches more than $max distinct $partitionCol " +
         "values — the per-partition commit protocol is built for " +
         "low-cardinality partitioning; repartition the table or raise " +
         "graft.lake.maxAffectedPartitions")
-      .map(r => (r.getString(0), r.getString(1)))
   }
+
+  /** A partition value's string form and its `h` + hex dir key: the one
+    * pair of expressions both the affected set and [[stageInstall]]'s
+    * routing use.
+    */
+  private def routing(value: Column): (Column, Column) = {
+    val str = value.cast(StringType)
+    (str, concat(lit("h"), hex(str)))
+  }
+
+  private def pairsOf(rows: Array[Row]): Array[(String, String)] =
+    rows.map(r => (r.getString(0), r.getString(1)))
+
+  /** The partition dirs a commit over `affected` installs into. */
+  private def dirsOf(partitionCol: String, affected: Array[(String, String)]): Seq[String] =
+    affected.toSeq.map { case (_, h) => s"$partitionCol=$h" }
 
   /** The bound on the partition values one commit may touch. */
   private[etl] def maxAffectedPartitions(spark: SparkSession): Int =
@@ -1407,8 +1448,7 @@ object SnapshotLake {
       schema: StructType): Seq[Entry] = {
     val staging = new Path(path, "_staging")
     if (fs.exists(staging)) fs.delete(staging, true)
-    val castStr = expr(s"cast(`$partitionCol` as string)")
-    val routed = rows.withColumn("__pdir", concat(lit("h"), hex(castStr)))
+    val routed = rows.withColumn("__pdir", routing(col(s"`$partitionCol`"))._2)
     // Without statsCols the write fans out: `partitionBy` makes every
     // upstream task open a file in every dir value it holds. A REBALANCE on
     // the dir key (one right-sized file per value) cost +0.1–0.4 s per lake
@@ -1587,10 +1627,16 @@ object SnapshotLake {
   /** Unpublished generations (gen > the current manifest) are orphans of
     * a crashed prepare — their gen dirs and their file records: no reader
     * can reference them, the lease guarantees no writer owns them —
-    * delete, then the re-run converges.
+    * delete, then the re-run converges. Lists `_manifests/` and, of the
+    * data, only `partDirs`: the partition dirs this commit installs into.
+    * An orphan gen dir in any other partition cannot collide with the
+    * commit (a commit creates `gen=<newGen>` only under partitions it
+    * touches), no manifest names it, and [[vacuum]] deletes it, so a
+    * commit's listing cost follows the partitions it touches, not the
+    * table's.
     */
-  private def gcOrphans(fs: FileSystem, path: String, curGen: Long): Unit = {
-    val data = dataDir(path)
+  private def gcOrphans(fs: FileSystem, path: String, curGen: Long,
+      partDirs: Seq[String]): Unit = {
     val mdir = manifestDir(path)
     if (fs.exists(mdir)) fs.listStatus(mdir).foreach { s =>
       s.getPath.getName match {
@@ -1598,9 +1644,8 @@ object SnapshotLake {
         case _ => ()
       }
     }
-    if (!fs.exists(data)) return
-    fs.listStatus(data).filter(_.isDirectory).foreach { part =>
-      fs.listStatus(part.getPath).foreach { g =>
+    partDirs.map(new Path(dataDir(path), _)).filter(fs.exists).foreach { part =>
+      fs.listStatus(part).foreach { g =>
         g.getPath.getName match {
           case GenName(n) if n.toLong > curGen => fs.delete(g.getPath, true)
           case _ => ()
@@ -1634,7 +1679,6 @@ object SnapshotLake {
       currentManifest(spark, path) match {
         case None => Nil
         case Some(m) =>
-          gcOrphans(fs, path, m.gen)
           val picked = m.entries.zip(liveFiles(spark, path, m.entries)).flatMap {
             case (e, (_, files)) =>
               val bytes = files.map(_.status.getLen).sum
@@ -1645,6 +1689,7 @@ object SnapshotLake {
           }
           if (picked.isEmpty) Nil
           else {
+            gcOrphans(fs, path, m.gen, picked.map(_._1.dirName))
             val newGen = m.gen + 1
             // compaction never changes the schema: the snapshot's own
             val schema = snapshotSchema(spark, path, m).get

@@ -65,9 +65,7 @@ object Standardizer {
     val present = renameMap.filter { case (from, _) => bars.columns.contains(from) }
     require(bars.columns.contains("ts") && bars.columns.contains("ticker"),
       "critical columns ts/ticker missing") // hard-fail ≙ standardizer.py:98-111
-    val renamed = present.foldLeft(bars) { case (df, (from, to)) =>
-      df.withColumnRenamed(from, to)
-    }
+    val renamed = bars.withColumnsRenamed(present)
     // T2 UTC normalization
     val utc = renamed
       .withColumn("timestamp_utc", toUtc(col("ts"), sourceTz))
@@ -79,13 +77,10 @@ object Standardizer {
       Seq("ticker"), "left")
     // T4 casts: numeric coercion-to-null ≙ pandas to_numeric(errors="coerce")
     // (standardizer.py:188-221); try_cast keeps ANSI mode happy.
-    val priceCast = Schema.priceCols.foldLeft(enriched) { (df, c) =>
-      if (df.columns.contains(c)) df.withColumn(c, expr(s"try_cast($c AS DOUBLE)")) else df
-    }
-    val cast =
-      if (priceCast.columns.contains("volume"))
-        priceCast.withColumn("volume", expr("try_cast(volume AS BIGINT)"))
-      else priceCast
+    val casts = Schema.priceCols.map(_ -> "DOUBLE") :+ ("volume" -> "BIGINT")
+    val cast = enriched.withColumns(casts.collect {
+      case (c, t) if enriched.columns.contains(c) => c -> expr(s"try_cast($c AS $t)")
+    }.toMap)
     // T5 canonical projection in fixed order, tolerating absences
     // (standardizer.py:222-245)
     val cols = Schema.canonicalQuoteCols.filter(cast.columns.contains)

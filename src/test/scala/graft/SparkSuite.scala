@@ -1,17 +1,40 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentLinkedQueue, LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session — getOrCreate
   * returns the same instance, so suites don't thrash executors).
   */
-trait SparkSuite extends AnyFunSuite {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   def sf001 = "/root/testdata/sf0.001"
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp dir named `prefix…`, deleted with everything in it once
+    * the suite has run.
+    */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach { dir =>
+      if (Files.exists(dir)) {
+        val walk = Files.walk(dir)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally walk.close()
+      }
+    } finally super.afterAll()
 
   /** Spark jobs this thread started while `body` ran. A listener records
     * the jobs tagged with this call's local property (jobs of other

@@ -242,7 +242,7 @@ class DedupSpec extends SparkSuite {
     val nearDup = baseToks.updated(20, "CHANGED").mkString(" ")
     assert(jac(base, nearDup) > 0.8)
 
-    val root = java.nio.file.Files.createTempDirectory("graft_admit_verify").toString
+    val root = tempDir("graft_admit_verify")
     val index = s"$root/buckets"
     val corpus = s"$root/corpus"
     def sink(df: org.apache.spark.sql.DataFrame): Unit =
@@ -356,7 +356,7 @@ class DedupSpec extends SparkSuite {
 
   test("incremental admission: novel-only, replay-safe, crash-window converges") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_admit").toString
+    val root = tempDir("graft_admit")
     val index = s"$root/index"
     val corpus = s"$root/corpus"
     def sink(df: org.apache.spark.sql.DataFrame): Unit =
@@ -403,7 +403,7 @@ class DedupSpec extends SparkSuite {
   test("corpus admission: one generation per admitting batch; readAt keeps the pre-admit corpus") {
     import spark.implicits._
     import graft.etl.SnapshotLake
-    val root = java.nio.file.Files.createTempDirectory("graft_admit_gen").toString
+    val root = tempDir("graft_admit_gen")
     val index = s"$root/index"
     val corpus = s"$root/corpus"
     def sink(df: org.apache.spark.sql.DataFrame): Unit =
@@ -434,7 +434,7 @@ class DedupSpec extends SparkSuite {
 
   test("minhash admission: near-dups blocked across batches, distinct text admitted") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_admit_lsh").toString
+    val root = tempDir("graft_admit_lsh")
     val index = s"$root/buckets"
     val corpus = s"$root/corpus"
     def sink(df: org.apache.spark.sql.DataFrame): Unit =
@@ -475,7 +475,7 @@ class DedupSpec extends SparkSuite {
     val docs = graft.Tables(spark, sf001, "documents")
     // build a REAL bucket index from the even half, exactly as an admission
     // run would have left it
-    val root = java.nio.file.Files.createTempDirectory("graft_x18").toString
+    val root = tempDir("graft_x18")
     val index = s"$root/buckets"
     DedupQueries.bandBuckets(DedupQueries.shingles(
         docs.filter(col("doc_id") % 2 === 0)))
@@ -500,7 +500,7 @@ class DedupSpec extends SparkSuite {
 
   test("x19 decisions equal the verified production gate; precision admits a superset of x18") {
     val docs = graft.Tables(spark, sf001, "documents")
-    val root = java.nio.file.Files.createTempDirectory("graft_x19").toString
+    val root = tempDir("graft_x19")
     val index = s"$root/buckets"
     DedupQueries.bandBuckets(DedupQueries.shingles(
         docs.filter(col("doc_id") % 2 === 0)))
@@ -608,7 +608,7 @@ class DedupSpec extends SparkSuite {
 
   test("x22 decisions equal the estimate production gate; estimate agrees with exact verify here") {
     val docs = graft.Tables(spark, sf001, "documents")
-    val root = java.nio.file.Files.createTempDirectory("graft_x22").toString
+    val root = tempDir("graft_x22")
     val idx = s"$root/buckets"
     // index ALL even docs (the "snapshot") in the lane-carrying format the
     // admission path writes (x19-spec pattern: the full split, so the query's
@@ -646,7 +646,7 @@ class DedupSpec extends SparkSuite {
 
   test("bucket-index compaction: gate decisions identical before and after") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_icompact").toString
+    val root = tempDir("graft_icompact")
     val idx = s"$root/buckets"
     val texts = Seq(
       "one two three four five six seven eight nine ten eleven twelve " +
@@ -688,7 +688,7 @@ class DedupSpec extends SparkSuite {
 
   test("estimate gate confirms conservatively when the index predates lane storage") {
     val docs = graft.Tables(spark, sf001, "documents")
-    val root = java.nio.file.Files.createTempDirectory("graft_x22old").toString
+    val root = tempDir("graft_x22old")
     val idx = s"$root/buckets"
     // hand-write an OLD-format index (no lane columns) for the even docs
     DedupQueries.bandBuckets(DedupQueries.shingles(

@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.Row
@@ -130,7 +129,7 @@ class EtlSpec extends SparkSuite {
   }
 
   test("E3: parquet merge sink is idempotent and upserts") {
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/quotes"
+    val dir = tempDir("graft_upsert") + "/quotes"
     def state = SnapshotLake.read(spark, dir).collect()
       .map(r => r.getAs[String]("key") -> r.getAs[Double]("price")).toMap
     val b1 = Seq(("k1", 1L, 10.0), ("k2", 1L, 20.0)).toDF("key", "v", "price")
@@ -147,7 +146,7 @@ class EtlSpec extends SparkSuite {
   test("E3: partition-scoped merge rewrites only affected partitions") {
     import java.nio.file.{Files => JFiles, Paths}
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("graft_pmerge").toString + "/quotes"
+    val dir = tempDir("graft_pmerge") + "/quotes"
     // Key "key" functionally determines dt (each key has one date).
     val b1 = Seq(
       ("k1", "2025-01-01", 1L, 10.0),
@@ -193,7 +192,7 @@ class EtlSpec extends SparkSuite {
   test("flat-dir compaction collapses an append-fragmented index, preserves rows, heals a parked crash") {
     import java.nio.file.{Files => JFiles, Paths}
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("graft_fcompact").toString + "/index"
+    val dir = tempDir("graft_fcompact") + "/index"
     // 6 small appends (the standing-ingest shape), mixed schema generations:
     // the first two lack the lane column newer appends carry
     (1 to 6).foreach { i =>
@@ -236,7 +235,7 @@ class EtlSpec extends SparkSuite {
   test("E3: compaction collapses fragmented partitions, preserves rows, skips healthy ones") {
     import java.nio.file.{Files => JFiles, Paths}
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("graft_compact").toString + "/quotes"
+    val dir = tempDir("graft_compact") + "/quotes"
     // dt=2025-01-01: fragmented (the key-spread batch writes one file per
     // upstream task); dt=2025-01-02: healthy (one row, one file)
     val frag = (1 to 64).map(i => (s"k$i", "2025-01-01", 1L, i.toDouble))
@@ -286,7 +285,7 @@ class EtlSpec extends SparkSuite {
   }
 
   test("Pipeline: E1→E2→E3 end-to-end with observed audit metrics, idempotent") {
-    val root = Files.createTempDirectory("graft_pipeline").toString
+    val root = tempDir("graft_pipeline")
     val indices = s"$root/indices"; val quotes = s"$root/quotes"
     val rates = new StaticRateProvider(Map(
       ("EUR", d("2025-04-17")) -> 1.14,
@@ -348,7 +347,7 @@ class EtlSpec extends SparkSuite {
       (ts("2025-04-17 07:00:00"), 1.0, 2.0),
       (ts("2025-04-17 08:00:00"), 1.5, 2.5))
       .toDF("ts", "AAA:Close", "BBB:Close")
-    val dir = Files.createTempDirectory("graft_bars").toString + "/bars"
+    val dir = tempDir("graft_bars") + "/bars"
     wide.write.parquet(dir)
     val fetched = new StagedParquetBarSource(dir)
       .fetchWide(spark, Seq("AAA"), "7d", "60m")

@@ -7,7 +7,7 @@ class LakeLeaseSpec extends SparkSuite {
 
   test("second writer aborts cleanly while the lease is held; stale lease is taken over") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("graft_lease").toString + "/t"
+    val table = tempDir("graft_lease") + "/t"
     val b1 = Seq((1L, "2024-01-01", 1L)).toDF("k", "p_date", "v")
     SnapshotLake.merge(spark, table, b1, Seq("k"), "v", "p_date")
     def rows() = SnapshotLake.read(spark, table).collect().map(_.toString).sorted.toSeq
@@ -33,7 +33,7 @@ class LakeLeaseSpec extends SparkSuite {
 
   test("interleaved writers: holder's merges run reentrantly, contender aborts, table consistent") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("graft_lease2").toString + "/t"
+    val table = tempDir("graft_lease2") + "/t"
     @volatile var secondFailed: Option[Throwable] = None
     val done = new java.util.concurrent.CountDownLatch(1)
     LakeLease.withLease(conf, table) {
@@ -62,7 +62,7 @@ class LakeLeaseSpec extends SparkSuite {
 
   test("opt-in retry: two interleaved writers BOTH land, commits serialized") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("graft_lease3").toString + "/t"
+    val table = tempDir("graft_lease3") + "/t"
     SnapshotLake.merge(spark,
       table, Seq(("k0", "p", 1L)).toDF("key", "dt", "v"), Seq("key"), "v", "dt")
     // writer A holds the lease for a while; writer B — with the bounded
@@ -103,7 +103,7 @@ class LakeLeaseSpec extends SparkSuite {
 
   test("admission loop is lease-guarded: a held index lease aborts the admit") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_lease3").toString
+    val root = tempDir("graft_lease3")
     val index = s"$root/index"
     val corpus = s"$root/corpus"
     def sink(df: org.apache.spark.sql.DataFrame): Unit =

@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -24,7 +23,7 @@ class LakeManifestSpec extends SparkSuite {
   import LakeManifestSpec._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_lakemanifest").toString + "/t"
+    tempDir("graft_lakemanifest") + "/t"
 
   private def rows(t: (String, String, Long, Double)*): DataFrame =
     t.toDF("key", "dt", "v", "price")

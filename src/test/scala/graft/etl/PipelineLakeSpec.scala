@@ -16,7 +16,7 @@ class PipelineLakeSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_pipeline_lake").toString
+    tempDir("graft_pipeline_lake")
 
   private def d(s: String) = Date.valueOf(s)
 
@@ -224,5 +224,71 @@ class PipelineLakeSpec extends SparkSuite {
     // nothing half-landed
     assert(SnapshotLake.retainedGens(spark, indices).isEmpty &&
       SnapshotLake.retainedGens(spark, quotes).isEmpty)
+  }
+
+  test("a bound refusal in the one pass lands nothing in either lake") {
+    val root = tmp()
+    val indices = s"$root/indices"; val quotes = s"$root/quotes"
+    Pipeline.runLake(spark, bars, dim, rates, indices, quotes)
+    val dimGen = SnapshotLake.currentManifest(spark, indices).get.gen
+    val factGen = SnapshotLake.currentManifest(spark, quotes).get.gen
+    // 2 tickers (2 dimension tuples, within the bound) over 3 trade dates
+    val threeDays = mkBars(Seq(
+      ("2025-04-17 07:00:00", "^GDAXI", 21000.5),
+      ("2025-04-18 07:00:00", "^GDAXI", 21100.0),
+      ("2025-04-21 07:00:00", "^GDAXI", 21200.0),
+      ("2025-04-17 13:30:00", "^GSPC", 5300.75)))
+    spark.conf.set("graft.lake.maxAffectedPartitions", "2")
+    val e = try intercept[IllegalArgumentException] {
+      Pipeline.runLake(spark, threeDays, dim, rates, indices, quotes)
+    } finally spark.conf.unset("graft.lake.maxAffectedPartitions")
+    assert(e.getMessage.contains("merge batch touches more than 2 distinct p_date values"),
+      s"expected the merge's partition refusal, got: ${e.getMessage}")
+    assert(SnapshotLake.currentManifest(spark, indices).get.gen == dimGen &&
+      SnapshotLake.currentManifest(spark, quotes).get.gen == factGen,
+      "a refused batch must publish in neither lake")
+  }
+
+  test("job budget: one pass over the batch; a re-delivery runs at most 11 Spark jobs") {
+    val root = tmp()
+    val indices = s"$root/indices"; val quotes = s"$root/quotes"
+    // landed as parquet, as a fetched delivery is (the landing's own
+    // schema read runs before the count)
+    bars.write.parquet(s"$root/landed1")
+    val landed1 = spark.read.parquet(s"$root/landed1")
+    val (m1, firstJobs) = jobsDuring(
+      Pipeline.runLake(spark, landed1, dim, rates, indices, quotes))
+    assert(m1 == Pipeline.RunMetrics(3, 0, 0))
+    assert(firstJobs <= 12, s"the first load ran $firstJobs Spark jobs")
+    // a re-delivery: an in-batch duplicate key (an original and a corrected
+    // bar) and one missing FX pair (EUR on 04-21)
+    mkBars(Seq(
+      ("2025-04-17 07:00:00", "^GDAXI", 21000.5),
+      ("2025-04-17 07:00:00", "^GDAXI", 21001.5),
+      ("2025-04-21 07:00:00", "^GDAXI", 21200.0),
+      ("2025-04-17 13:30:00", "^GSPC", 5300.75))).write.parquet(s"$root/landed2")
+    val landed2 = spark.read.parquet(s"$root/landed2")
+    val (m2, tickJobs) = jobsDuring(
+      Pipeline.runLake(spark, landed2, dim, rates, indices, quotes))
+    // exact: the observed plan ran once, before the dedup
+    assert(m2 == Pipeline.RunMetrics(4, 0, 1))
+    assert(tickJobs <= 11, s"the re-delivery ran $tickJobs Spark jobs")
+    // the corrected bar wins the in-batch tie (value tie-breakers)
+    val gdaxi = SnapshotLake.read(spark, quotes).filter($"ticker" === "^GDAXI")
+      .select(col("timestamp_utc").cast("string"), $"close", $"close_usd")
+      .as[(String, Double, Option[Double])].collect().sortBy(_._1).toSeq
+    assert(gdaxi == Seq(
+      ("2025-04-17 07:00:00", 21001.5, Some(21001.5 * 1.14)),
+      ("2025-04-18 07:00:00", 21100.0, Some(21100.0 * 1.15)),
+      ("2025-04-21 07:00:00", 21200.0, None)))
+    // an empty landed delivery returns zeros without waiting on metrics
+    bars.filter($"Close" < 0).write.parquet(s"$root/empty")
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val empty = Await.result(Future(Pipeline.runLake(spark,
+      spark.read.parquet(s"$root/empty"), dim, rates, indices, quotes)),
+      scala.concurrent.duration.Duration(120, "s"))
+    assert(empty == Pipeline.RunMetrics(0, 0, 0))
+    assert(SnapshotLake.currentManifest(spark, quotes).get.gen == 2)
   }
 }

@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import scala.util.Random
@@ -33,7 +32,7 @@ class PropertySpec extends SparkSuite {
 
   test("property: merge sink idempotency — merge(merge(b)) == merge(b)") {
     (1 to 5).foreach { trial =>
-      val dir = Files.createTempDirectory(s"graft_prop$trial").toString + "/t"
+      val dir = tempDir(s"graft_prop$trial") + "/t"
       val b = randomBatch(50).toDF("key", "v", "price")
       SnapshotLake.merge(spark, dir, b, Seq("key"), "v", "key", Seq("price"))
       val once = SnapshotLake.read(spark, dir).collect().map(_.toString).sorted.toSeq
@@ -45,7 +44,7 @@ class PropertySpec extends SparkSuite {
 
   test("property: lake delete law — read-after-delete == read-before minus TRUE rows") {
     (1 to 4).foreach { trial =>
-      val dir = Files.createTempDirectory(s"graft_propdel$trial").toString + "/t"
+      val dir = tempDir(s"graft_propdel$trial") + "/t"
       val b = randomBatch(60).toDF("key", "v", "price")
         .withColumn("dt", concat(lit("p"), (col("v") % 3).cast("string")))
       SnapshotLake.merge(spark, dir, b, Seq("key"), "v", "dt")
@@ -68,7 +67,7 @@ class PropertySpec extends SparkSuite {
     def newer(a: Rec, b: Rec): Rec = if (order.gteq((a._3, a._4), (b._3, b._4))) a else b
     val seeded = new Random(7)
     (1 to 3).foreach { trial =>
-      val dir = Files.createTempDirectory(s"graft_proplww$trial").toString + "/t"
+      val dir = tempDir(s"graft_proplww$trial") + "/t"
       var model = Map.empty[String, Rec]
       var sent = Vector.empty[Seq[Rec]]
       (1 to 5).foreach { step =>

@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -17,7 +16,7 @@ class SnapshotLakeSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_snaplake").toString + "/t"
+    tempDir("graft_snaplake") + "/t"
 
   /** The `_manifests` file names of the lake at `dir` (checksums aside). */
   private def metaNames(dir: String): Set[String] =
@@ -99,6 +98,45 @@ class SnapshotLakeSpec extends SparkSuite {
       Map("k1" -> ((2L, 15.0)), "k2" -> ((1L, 20.0)),
         "k3" -> ((1L, 30.0)), "k4" -> ((1L, 40.0)), "k9" -> ((1L, 90.0))),
       "recovery must not drop rows the batch didn't carry")
+  }
+
+  test("orphan GC: a commit sweeps the partitions it installs into; vacuum the rest") {
+    val dir = tmp()
+    SnapshotLake.merge(spark, dir, b1, Seq("key"), "v", "dt")
+    val g1 = SnapshotLake.currentManifest(spark, dir).get
+    def dirOf(value: String) = g1.entries.find(_.value == value).get.dirName
+    def genDir(value: String, gen: Long) =
+      new java.io.File(s"$dir/data/${dirOf(value)}/gen=$gen")
+    // the crash: a batch over 01-01 and 01-02 staged, installed and
+    // recorded as gen 2, never published
+    SnapshotLake.prepareMerge(spark, dir, Some(g1),
+      Seq(("k1", "2025-01-01", 5L, 11.0), ("k2", "2025-01-02", 5L, 21.0))
+        .toDF("key", "dt", "v", "price"),
+      SnapshotLake.MergeSpec(Seq("key"), "v", "dt", Nil, Nil))
+    assert(genDir("2025-01-01", 2).isDirectory && genDir("2025-01-02", 2).isDirectory)
+    // the next commit installs gen 2 into 01-01 (and the new 01-04)
+    SnapshotLake.merge(spark, dir, b2, Seq("key"), "v", "dt")
+    val g2 = SnapshotLake.currentManifest(spark, dir).get
+    assert(g2.gen == 2)
+    val expected = Map("k1" -> ((2L, 15.0)), "k2" -> ((1L, 20.0)),
+      "k3" -> ((1L, 30.0)), "k4" -> ((1L, 40.0)))
+    assert(state(SnapshotLake.read(spark, dir)) == expected)
+    // 01-01's orphan was swept before the install: its gen-2 dir holds
+    // exactly the files the commit recorded
+    val touched = g2.entries.filter(e => e.value == "2025-01-01")
+    assert(touched.map(_.gen) == Seq(2L))
+    val recorded = SnapshotLake.liveFiles(spark, dir, touched).flatMap(_._2)
+      .map(_.status.getPath.getName).toSet
+    assert(recorded.nonEmpty && genDir("2025-01-01", 2).list().toSet
+      .filter(_.endsWith(".parquet")) == recorded)
+    // 01-02's orphan cannot collide with any commit and no manifest names
+    // it: it survives the commit, and vacuum deletes it
+    assert(g2.entries.find(_.value == "2025-01-02").map(_.gen) == Some(1L))
+    assert(genDir("2025-01-02", 2).isDirectory)
+    SnapshotLake.vacuum(spark, dir)
+    assert(!genDir("2025-01-02", 2).exists())
+    assert(genDir("2025-01-02", 1).isDirectory && genDir("2025-01-01", 2).isDirectory)
+    assert(state(SnapshotLake.read(spark, dir)) == expected)
   }
 
   test("compaction commits through the same manifest; readers never see a gap") {
@@ -219,7 +257,7 @@ class SnapshotLakeSpec extends SparkSuite {
 
   test("streaming sink: micro-batches converge to the batch merge; replays converge") {
     val dir = tmp()
-    val landing = Files.createTempDirectory("graft_snaplake_landing").toString
+    val landing = tempDir("graft_snaplake_landing")
     b1.unionByName(b2).repartition(3).write.mode("overwrite").parquet(landing)
     val schema = spark.read.parquet(landing).schema
     // the sink writes under the lake's persisted contract, so the table

@@ -146,7 +146,7 @@ class RowsFollowingSpec extends SparkSuite {
 
   test("inputs shorter than the frame: empty, one row, m rows") {
     // a parquet input, so the optimizer cannot fold the empty case away
-    val dir = java.nio.file.Files.createTempDirectory("graft_rf_short").toString
+    val dir = tempDir("graft_rf_short")
     corpus(29L, 40).write.mode("overwrite").parquet(dir)
     for (size <- Seq(0, 1, 3, 5)) {
       val df = spark.read.parquet(dir).filter(col("id") <= size)

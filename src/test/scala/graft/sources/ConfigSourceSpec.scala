@@ -7,7 +7,7 @@ import graft.SparkSuite
 class ConfigSourceSpec extends SparkSuite {
 
   private def write(json: String): String = {
-    val p = Files.createTempDirectory("graft_cfg").resolve("indices.json")
+    val p = java.nio.file.Paths.get(tempDir("graft_cfg")).resolve("indices.json")
     Files.writeString(p, json)
     p.toString
   }

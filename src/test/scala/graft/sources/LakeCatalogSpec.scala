@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -15,7 +14,7 @@ import graft.etl.SnapshotLake
 class LakeCatalogSpec extends SparkSuite {
   import spark.implicits._
 
-  private val root = Files.createTempDirectory("graft_lakecat").toString
+  private val root = tempDir("graft_lakecat")
   spark.conf.set("spark.sql.catalog.glake", classOf[LakeCatalog].getName)
   spark.conf.set("spark.sql.catalog.glake.root", root)
 

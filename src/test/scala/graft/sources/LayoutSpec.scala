@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
@@ -12,7 +11,7 @@ import graft.{SparkSuite, Tables}
   */
 class LayoutSpec extends SparkSuite {
 
-  private lazy val work = Files.createTempDirectory("graft_layout").toString
+  private lazy val work = tempDir("graft_layout")
 
   test("partitioned sink: date filter prunes partitions at the scan") {
     val path = s"$work/events_by_day"

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.{DriverManager, Timestamp}
 
 import org.apache.spark.sql.DataFrame
@@ -24,7 +23,7 @@ class JdbcStreamSinkSpec extends SparkSuite {
   private val url = s"$db;create=true"
 
   private def tmp(slot: String): String =
-    Files.createTempDirectory(s"graft_jdbcsink_$slot").toString
+    tempDir(s"graft_jdbcsink_$slot")
 
   private def sql(statement: String, url: String = url): Unit = {
     val c = DriverManager.getConnection(url)

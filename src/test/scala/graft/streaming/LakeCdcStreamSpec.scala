@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -21,7 +20,7 @@ class LakeCdcStreamSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(slot: String): String =
-    Files.createTempDirectory(s"graft_cdcstream_$slot").toString
+    tempDir(s"graft_cdcstream_$slot")
 
   private val b1 = Seq(
     ("k1", "2025-01-01", 1L, 10.0),

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,7 +19,7 @@ class LakeStreamSinkSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmp(slot: String): String =
-    Files.createTempDirectory(s"graft_lakesink_$slot").toString
+    tempDir(s"graft_lakesink_$slot")
 
   private val schema = Seq(("k", "2025-01-01", 1L, 1.0))
     .toDF("key", "dt", "v", "price").schema

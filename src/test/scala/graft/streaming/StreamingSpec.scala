@@ -14,7 +14,7 @@ import graft.etl.SnapshotLake
   */
 class StreamingSpec extends SparkSuite {
 
-  private lazy val work = Files.createTempDirectory("graft_stream").toString
+  private lazy val work = tempDir("graft_stream")
 
   /** Stage events (ts converted to proper timestamps) as a landing dir. */
   private lazy val landing: String = {
